@@ -216,28 +216,88 @@ def entry(spark: SparkSession) -> DataFrame:
     return extract_tables(df).orderBy("conv_id", "turn_idx", "table_idx")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+ training-data
-    operators).  Every callable takes (spark, sf_dir) → DataFrame with
-    columns aliased identically to the oracle SQL."""
-    from tablestructurerec_spark.operators import (
-        bpe,
-        dedup,
-        hygiene,
-        profile,
-        relational,
-        retrieval,
-        sampling,
-        similarity,
-        temporal,
-        textstats,
-    )
+DRIVER_ROWS = (
+    # flagship / reference-pipeline rows first: the driver surfaces at most
+    # 50 correctness rows in this order (CORRECTNESS_r02.json cut entries
+    # 51-53), so the highest-signal rows must never be the ones past the cap
+    "flagship_extract",
+    "s1_clean_turns",
+    "flagship_cells",
+    "teds_eval",
+    "reocr_merge",
+    "flagship_overlay",
+    # operator rows, each registered by exactly one operators/* module
+    "a1_a10_user_stats",
+    "w1_reading_order",
+    "a5_gather",
+    "a6_grid_merge",
+    "a9_extents",
+    "j1_containment_join",
+    "d1_dedup_exact",
+    "w3_topk",
+    "p1_iou",
+    "m11_backfill",
+    "t_text_profile",
+    "t_token_count_bpe",
+    "t_corpus_filter",
+    "t_boilerplate_ngrams",
+    "t_dup_span_clusters",
+    "t_strip_repeated",
+    "t_adaptive_filter",
+    "t_stratified_sample",
+    "t_domain_mix",
+    "t_pipeline_e2e",
+    "dedup_minhash_lsh",
+    "dedup_incremental",
+    "dedup_simhash",
+    "dedup_ngram_jaccard",
+    "dedup_components",
+    "ann_ivf_kmeans_topk",
+    "dedup_embedding_cosine",
+    "t_triplet_mine",
+    "t_asof_join",
+    "t_event_rollup",
+    "t_event_funnel",
+    "t_unigram_logprob",
+    "t_hybrid_rrf",
+    "t_url_hygiene",
+    "t_source_health",
+    "t_sketch_audit",
+    "t_conv_audit",
+    "t_agent_trace_audit",
+    "t_emb_pipeline",
+    "t_pack_efficiency",
+    "t_selection_pipeline",
+    "t_ops_audit",
+    "t_char_integrity",
+    "t_semdedup",
+)
+# Operator queries with a module oracle that are NOT driver rows keep a
+# driver-identical parity test (tests/test_evicted_parity.py) and stay
+# bench-timed.  The registered oracle that still covers each one's kernel:
+#   ann_ivf_topk         - ann_ivf_kmeans_topk (shared _ivf_from_centroids)
+#   dedup_minhash_prod   - dedup_minhash_lsh (same generator, production params)
+#   t_dup_spans          - t_dup_span_clusters, t_strip_repeated (islands kernel)
+#   t_group_sample       - t_hybrid_rrf (salted_topk), t_stratified_sample
+#                          (_hash_uniform)
+#   t_bm25_topk          - t_hybrid_rrf (_bm25_scored_ctes verbatim)
+#   ann_lsh_bucket_topk  - t_triplet_mine (sign-LSH banding), t_emb_pipeline
+#                          (multi-probe), ann_ivf_kmeans_topk (cos top-k window)
+#   t_pack_sequences     - t_pipeline_e2e (greedy packer recursive CTE)
+#   ann_bruteforce_topk  - dedup_embedding_cosine, t_triplet_mine (cosine
+#                          kernel), ann_ivf_kmeans_topk (rank-over-cos window)
+#   t_split_assign       - t_emb_pipeline (split_label_col), t_stratified_sample
+#                          (_hash_uniform)
+#   dedup_decontaminate  - t_boilerplate_ngrams (_shingle5), dedup_incremental
+#                          (broadcast reference-side join)
+#   t_length_quantiles   - t_adaptive_filter (type-7 per-source percentile)
 
-    # Flagship / reference-pipeline queries are registered FIRST: the driver
-    # surfaces at most 50 correctness rows in registration order
-    # (CORRECTNESS_r02.json cut entries 51-53), so the highest-signal
-    # queries must never be the ones past the cap.
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The driver rows in ``DRIVER_ROWS`` order.  Every callable takes
+    (spark, sf_dir) → DataFrame with columns aliased identically to the
+    oracle SQL."""
+    from tablestructurerec_spark.operators import collect
 
     def flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ship_package(spark)
@@ -248,8 +308,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "conv_id", "turn_idx", "table_idx", "table_kind", "pred_html", "n_cells"
         ).orderBy("conv_id", "turn_idx", "table_idx")
 
-    out["flagship_extract"] = flagship_extract
-
     def clean_turns_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from tablestructurerec_spark.plans.extract import clean_turns
 
@@ -258,16 +316,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "conv_id", "turn_idx", "main_text", "n_tables"
         ).orderBy("conv_id", "turn_idx")
 
-    out["s1_clean_turns"] = clean_turns_q
-
     def flagship_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ship_package(spark)
         from tablestructurerec_spark.plans.extract import extract_cells
 
         df = _transcripts_from_documents(spark, sf_dir)
         return extract_cells(df).orderBy("conv_id", "turn_idx", "table_idx", "cell_id")
-
-    out["flagship_cells"] = flagship_cells
 
     def teds_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Distributed TEDS-structure evaluation (mirrors the reference's
@@ -349,8 +403,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .orderBy("tmpl")
         )
 
-    out["teds_eval"] = teds_eval
-
     def reocr_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         """apply_reocr merge-back semantics (rec replacement, fill-blank
         fallback, passthrough, multi-line cells) over a deterministic cell
@@ -358,8 +410,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from tablestructurerec_spark.plans.reocr import q_reocr_merge
 
         return q_reocr_merge(spark, sf_dir)
-
-    out["reocr_merge"] = reocr_merge
 
     def flagship_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
         """S4 visual-debug sink: per-table SVG overlay (rect + row/col
@@ -375,204 +425,47 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "conv_id", "turn_idx", "table_idx"
         )
 
-    out["flagship_overlay"] = flagship_overlay
-
-    out.update(relational.QUERIES)
-    out.update(profile.QUERIES)
-    out.update(textstats.QUERIES)
-    out.update(bpe.QUERIES)
-    out.update(hygiene.QUERIES)
-    out.update(sampling.QUERIES)
-    out.update(dedup.QUERIES)
-    out.update(similarity.QUERIES)
-    out.update(temporal.QUERIES)
-    out.update(retrieval.QUERIES)
-    # Round-4 registry rotation (VERDICT r3 #6): the cap is 50, so four
-    # rows whose logic stays covered elsewhere rotate OUT —
-    #   ann_ivf_topk        (strict subset of ann_ivf_kmeans_topk's shared
-    #                        _ivf_from_centroids plumbing),
-    #   dedup_minhash_prod  (same generator as dedup_minhash_lsh at
-    #                        production params; still bench-timed),
-    #   t_dup_spans         (the islands kernel rides inside the REGISTERED
-    #                        t_dup_span_clusters / t_strip_repeated oracles),
-    #   t_group_sample      (simple per-group window top-k) —
-    # each keeps a driver-identical standalone parity pytest
-    # (tests/test_evicted_parity.py), and four rows certifying MORE
-    # distinct operator logic rotate IN: the fused url-hygiene verdict
-    # (canonicalize + regdomain + stats + filter + dedup), the per-source
-    # health report (degen + Luhn + mojibake, composed transitive oracle),
-    # the fused sketch audit (KMV + HLL + CMS), and the fused conversation
-    # audit (role sequence + suffix pack).
-    for evicted in ("ann_ivf_topk", "dedup_minhash_prod", "t_dup_spans",
-                    "t_group_sample"):
-        del out[evicted]
-    from tablestructurerec_spark.operators import convschema, health, sketchaudit, urls
-
-    out["t_url_hygiene"] = urls.QUERIES["t_url_hygiene"]
-    out["t_source_health"] = health.QUERIES["t_source_health"]
-    out["t_sketch_audit"] = sketchaudit.QUERIES["t_sketch_audit"]
-    out["t_conv_audit"] = convschema.QUERIES["t_conv_audit"]
-    # Second round-4 rotation: t_bm25_topk rotates OUT — its scoring kernel
-    # is the `_bm25_scored_ctes` SQL the REGISTERED t_hybrid_rrf oracle
-    # recomputes verbatim (the ann_ivf_topk ⊂ ann_ivf_kmeans_topk
-    # precedent), and it keeps a driver-identical standalone parity pytest
-    # (tests/test_evicted_parity.py).  Rotating IN: the fused agent-trace
-    # audit (tool-chain sessionization + same-tool loop runs + call
-    # latency over the north-rule (conv_id, turn_idx, role, text, tool,
-    # ts) shape, one conv_id exchange).
-    del out["t_bm25_topk"]
-    from tablestructurerec_spark.operators import tooluse
-
-    out["t_agent_trace_audit"] = tooluse.QUERIES["t_agent_trace_audit"]
-    # Round-5 rotation (VERDICT r4 #3) — two rows whose kernels stay
-    # certified inside other REGISTERED oracles rotate OUT:
-    #   ann_lsh_bucket_topk  (sign-LSH banding recomputed verbatim in the
-    #                         registered t_triplet_mine oracle; the
-    #                         multi-probe explode in t_emb_pipeline below;
-    #                         the cosine top-k window in ann_bruteforce_topk
-    #                         and ann_ivf_kmeans_topk),
-    #   t_pack_sequences     (the greedy packer's recursive-CTE oracle is
-    #                         recomputed verbatim inside the registered
-    #                         t_pipeline_e2e oracle) —
-    # both keep driver-identical standalone parity pytests
-    # (tests/test_evicted_parity.py) and stay in the TIMED bench set.
-    # Rotating IN, certifying round-4 pytest-only logic with driver signal:
-    #   t_emb_pipeline    (JL ±1 projection → integer sign-LSH banding →
-    #                      multi-probe → split-leakage verdict, fused),
-    #   t_pack_efficiency (suffix packer fill-rate decile report — used/
-    #                      waste/dropped token mass over the packer's own
-    #                      kept flags).
-    for evicted in ("ann_lsh_bucket_topk", "t_pack_sequences"):
-        del out[evicted]
-    from tablestructurerec_spark.operators import convschema, embpipeline
-
-    out["t_emb_pipeline"] = embpipeline.QUERIES["t_emb_pipeline"]
-    out["t_pack_efficiency"] = convschema.QUERIES["t_pack_efficiency"]
-    # Round-5 rotation #2 (VERDICT r4 #3 continued) — three rows whose
-    # kernels stay certified inside other REGISTERED oracles rotate OUT:
-    #   ann_bruteforce_topk (the _cos_sql/_dot cosine kernel is recomputed
-    #                        verbatim in the registered dedup_embedding_cosine
-    #                        / t_triplet_mine / t_emb_pipeline oracles; the
-    #                        rank-over-cos top-k window in the registered
-    #                        ann_ivf_kmeans_topk),
-    #   t_split_assign      (split_label_col rides verbatim inside the
-    #                        registered t_emb_pipeline oracle; the
-    #                        _hash_uniform bucket kernel inside the
-    #                        registered t_stratified_sample),
-    #   dedup_decontaminate (its _shingle5 kernel is recomputed verbatim in
-    #                        the registered t_boilerplate_ngrams oracle; the
-    #                        broadcast-small-reference-side join discipline
-    #                        in the registered dedup_incremental) —
-    # each keeps a driver-identical standalone parity pytest
-    # (tests/test_evicted_parity.py) and stays in the TIMED bench set.
-    # Rotating IN, three fused rows certifying ELEVEN never-driver-signed
-    # kernels: the selection pipeline (CCNet buckets + distilled-NB quality
-    # + DSIR weights + curriculum order, per-doc join), the operational
-    # audit (drift + snapshot diff + skew audit + file balance +
-    # k-anonymity, tall reshape), and the char-integrity profile (script
-    # profile + NFC-normalization audit + lang/script consistency).
-    for evicted in ("ann_bruteforce_topk", "t_split_assign", "dedup_decontaminate"):
-        del out[evicted]
-    from tablestructurerec_spark.operators import integrity, opsaudit, selection
-
-    out["t_selection_pipeline"] = selection.QUERIES["t_selection_pipeline"]
-    out["t_ops_audit"] = opsaudit.QUERIES["t_ops_audit"]
-    out["t_char_integrity"] = integrity.QUERIES["t_char_integrity"]
-    # …and a fourth swap in the same rotation: t_length_quantiles rotates
-    # OUT (its exact type-7 per-source percentile kernel — the same
-    # F.percentile over the same tokens_col — is recomputed verbatim
-    # inside the registered t_adaptive_filter; parity pytest retained,
-    # still bench-timed); the SemDeDup verdict rotates IN, giving the
-    # round-4 semantic-dedup family its first driver signal (refit-literal
-    # oracle, the ann_ivf_kmeans_topk precedent).
-    del out["t_length_quantiles"]
-    from tablestructurerec_spark.operators import semdedup
-
-    out["t_semdedup"] = semdedup.QUERIES["t_semdedup"]
-    return out
+    flagship = {
+        "flagship_extract": flagship_extract,
+        "s1_clean_turns": clean_turns_q,
+        "flagship_cells": flagship_cells,
+        "teds_eval": teds_eval,
+        "reocr_merge": reocr_merge,
+        "flagship_overlay": flagship_overlay,
+    }
+    found = {**collect("QUERIES"), **flagship}
+    return {name: found[name] for name in DRIVER_ROWS}
 
 
 def oracle_sql() -> dict[str, str]:
-    from tablestructurerec_spark.operators import (
-        bpe,
-        dedup,
-        hygiene,
-        profile,
-        relational,
-        retrieval,
-        sampling,
-        similarity,
-        temporal,
-        textstats,
-    )
+    """The DuckDB oracle of every driver row, keyed and ordered like
+    :func:`queries`."""
+    from tablestructurerec_spark.operators import collect
+    from tablestructurerec_spark.operators.opsaudit import ops_audit_sql
+    from tablestructurerec_spark.operators.semdedup import semdedup_oracle
+    from tablestructurerec_spark.operators.similarity import ivf_kmeans_oracle
     from tablestructurerec_spark.plans.reocr import REOCR_MERGE_ORACLE
 
-    # same registration order as queries(): flagships first (50-row cap)
-    out: dict[str, str] = {}
-    out["flagship_extract"] = _flagship_extract_oracle()
-    out["s1_clean_turns"] = _clean_turns_oracle()
-    out["flagship_cells"] = _flagship_cells_oracle()
-    out["teds_eval"] = _teds_oracle()
-    out["reocr_merge"] = REOCR_MERGE_ORACLE
-    out["flagship_overlay"] = _overlay_oracle()
-    out.update(relational.ORACLE_SQL)
-    out.update(profile.ORACLE_SQL)
-    out.update(textstats.ORACLE_SQL)
-    out.update(bpe.ORACLE_SQL)
-    out.update(hygiene.ORACLE_SQL)
-    out.update(sampling.ORACLE_SQL)
-    out.update(dedup.ORACLE_SQL)
-    out.update(similarity.ORACLE_SQL)
-    out.update(temporal.ORACLE_SQL)
-    out.update(retrieval.ORACLE_SQL)
     # sf-specific oracles (refit/re-encode literals embedded in the SQL):
     # the driver compares at sf0.01; the in-repo parity mirror pins
     # TSR_TEST_SF_DIR to whatever sf it runs at.
     sf_dir = os.environ.get("TSR_TEST_SF_DIR", "/root/testdata/sf0.01")
-    out["ann_ivf_kmeans_topk"] = similarity.ivf_kmeans_oracle(sf_dir)
-    # Round-4 registry rotation — mirror of queries(): see the rationale
-    # comment there; the evicted four keep standalone parity pytests.
-    for evicted in ("ann_ivf_topk", "dedup_minhash_prod", "t_dup_spans",
-                    "t_group_sample"):
-        del out[evicted]
-    from tablestructurerec_spark.operators.convschema import conv_audit_sql
-    from tablestructurerec_spark.operators.health import health_sql
-    from tablestructurerec_spark.operators.sketchaudit import sketch_audit_sql
-    from tablestructurerec_spark.operators.urls import url_hygiene_sql
-
-    out["t_url_hygiene"] = url_hygiene_sql()
-    out["t_source_health"] = health_sql()
-    out["t_sketch_audit"] = sketch_audit_sql()
-    out["t_conv_audit"] = conv_audit_sql()
-    # second round-4 rotation — mirror of queries(): see rationale there
-    del out["t_bm25_topk"]
-    from tablestructurerec_spark.operators.tooluse import trace_audit_sql
-
-    out["t_agent_trace_audit"] = trace_audit_sql()
-    # round-5 rotation — mirror of queries(): see rationale there
-    for evicted in ("ann_lsh_bucket_topk", "t_pack_sequences"):
-        del out[evicted]
-    from tablestructurerec_spark.operators.convschema import pack_efficiency_sql
-    from tablestructurerec_spark.operators.embpipeline import emb_pipeline_sql
-
-    out["t_emb_pipeline"] = emb_pipeline_sql()
-    out["t_pack_efficiency"] = pack_efficiency_sql()
-    # round-5 rotation #2 — mirror of queries(): see rationale there
-    for evicted in ("ann_bruteforce_topk", "t_split_assign", "dedup_decontaminate"):
-        del out[evicted]
-    from tablestructurerec_spark.operators.integrity import char_integrity_sql
-    from tablestructurerec_spark.operators.opsaudit import ops_audit_sql
-    from tablestructurerec_spark.operators.selection import selection_sql
-
-    out["t_selection_pipeline"] = selection_sql()
-    out["t_ops_audit"] = ops_audit_sql(sf_dir)
-    out["t_char_integrity"] = char_integrity_sql()
-    # fourth swap — mirror of queries(): see rationale there
-    del out["t_length_quantiles"]
-    from tablestructurerec_spark.operators.semdedup import semdedup_oracle
-
-    out["t_semdedup"] = semdedup_oracle(sf_dir)
-    return out
+    builders = {
+        "flagship_extract": _flagship_extract_oracle,
+        "s1_clean_turns": _clean_turns_oracle,
+        "flagship_cells": _flagship_cells_oracle,
+        "teds_eval": _teds_oracle,
+        "reocr_merge": lambda: REOCR_MERGE_ORACLE,
+        "flagship_overlay": _overlay_oracle,
+        "ann_ivf_kmeans_topk": lambda: ivf_kmeans_oracle(sf_dir),
+        "t_ops_audit": lambda: ops_audit_sql(sf_dir),
+        "t_semdedup": lambda: semdedup_oracle(sf_dir),
+    }
+    static = collect("ORACLE_SQL")
+    return {
+        name: builders[name]() if name in builders else static[name]
+        for name in DRIVER_ROWS
+    }
 
 
 def _teds_oracle() -> str:

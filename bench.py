@@ -248,6 +248,20 @@ def _codegen_failures(f, saved) -> int:
     return n
 
 
+def _timed_queries() -> dict:
+    """Every timed query: the driver rows plus every operator module's
+    ``QUERIES``, including the non-driver ones (their oracle gate is the
+    pytest DuckDB parity in tests/; dropping them from the bench would hide
+    their perf regressions).  ``flagship_extract`` and ``s1_clean_turns``
+    are left out: the extraction pass times the flagship separately."""
+    import __spark_entry__ as entry_mod
+    from tablestructurerec_spark.operators import collect
+
+    timed = {**entry_mod.queries(), **collect("QUERIES")}
+    del timed["flagship_extract"], timed["s1_clean_turns"]
+    return timed
+
+
 def main() -> None:
     from tablestructurerec_spark.session import get_spark
 
@@ -290,100 +304,7 @@ def main() -> None:
         _codegen_failures(err_file, err_saved)
         return
 
-    import __spark_entry__ as entry_mod
-
-    queries = {
-        k: v
-        for k, v in entry_mod.queries().items()
-        if k not in ("flagship_extract", "s1_clean_turns")  # timed separately below
-    }
-    # operators implemented beyond the driver registry's 50-row correctness
-    # cap: benched here (timing and correctness are separate paths; their
-    # oracle gate is the pytest DuckDB parity in tests/)
-    from tablestructurerec_spark.operators import (
-        bloom,
-        bpe_factored,
-        bpe_train,
-        c4,
-        ccnet,
-        charprofile,
-        cms,
-        convdedup,
-        convschema,
-        curriculum,
-        datacard,
-        degen,
-        distill,
-        drift,
-        embcentroid,
-        filestats,
-        health,
-        hll,
-        integrity,
-        jl,
-        kanon,
-        kmv,
-        langscript,
-        leakage,
-        luhn,
-        mojibake,
-        normalize,
-        opsaudit,
-        paradedup,
-        pmi,
-        pq,
-        provenance,
-        quantiles,
-        selection,
-        semdedup,
-        sketchaudit,
-        skewaudit,
-        snapshot,
-        tooluse,
-        urls,
-        zipf,
-    )
-    from tablestructurerec_spark.operators.dedup import q_dedup_keep_best
-    from tablestructurerec_spark.operators.sampling import q_dsir_weights
-    from tablestructurerec_spark.operators.textstats import q_lang_id_ngram
-
-    for mod in (bloom, bpe_factored, bpe_train, c4, ccnet, charprofile, cms,
-                convdedup, convschema, curriculum, datacard, degen, distill,
-                drift, embcentroid, filestats, health, hll, integrity, jl,
-                kanon, kmv, langscript, leakage, luhn,
-                mojibake, normalize, opsaudit,
-                paradedup, pmi, pq, provenance, quantiles, selection, semdedup,
-                sketchaudit, skewaudit, snapshot, tooluse, urls, zipf):
-        queries.update(mod.QUERIES)  # modules' own keys — no name drift
-    queries["t_dsir_weights"] = q_dsir_weights
-    queries["t_lang_id_ngram"] = q_lang_id_ngram
-    queries["t_dedup_keep_best"] = q_dedup_keep_best
-    # registry-EVICTED queries stay in the TIMED set (VERDICT r4 #5: their
-    # correctness rides tests/test_evicted_parity.py, but dropping them from
-    # the bench made perf regressions invisible to the driver's hard signal)
-    from tablestructurerec_spark.operators import (
-        dedup as _dedup,
-        hygiene as _hygiene,
-        retrieval as _retrieval,
-        sampling as _sampling,
-        similarity as _similarity,
-        textstats as _textstats,
-    )
-
-    for _mod, _k in (
-        (_similarity, "ann_ivf_topk"),
-        (_similarity, "ann_lsh_bucket_topk"),
-        (_similarity, "ann_bruteforce_topk"),
-        (_dedup, "dedup_minhash_prod"),
-        (_hygiene, "dedup_decontaminate"),
-        (_hygiene, "t_dup_spans"),
-        (_sampling, "t_group_sample"),
-        (_sampling, "t_pack_sequences"),
-        (_sampling, "t_split_assign"),
-        (_retrieval, "t_bm25_topk"),
-        (_textstats, "t_length_quantiles"),
-    ):
-        queries[_k] = _mod.QUERIES[_k]
+    queries = _timed_queries()
 
     if "--queries" in sys.argv:
         # subset mode (the sf10 scaling point runs only the quadratic-prone

@@ -25,7 +25,6 @@ __all__ = [
     "gather_ocr_rows",
     "duplicate_box_indices",
     "match_ocr_to_cells",
-    "box_to_quad",
     "quad_to_box",
 ]
 
@@ -386,12 +385,6 @@ def match_ocr_to_cells(ocr_rows: list, cell_quads) -> Tuple[dict, list]:
         matched.setdefault(int(jj[k]), []).append(ocr_rows[int(ii[k])])
     unmatched = [ocr_rows[i] for i in np.nonzero(~any_hit)[0]]
     return matched, unmatched
-
-
-def box_to_quad(box: Sequence[float]) -> List[List[float]]:
-    """box_4_1 → clockwise 4x2 quad (ref utils_table_recover.py:308-310)."""
-    x0, y0, x1, y1 = box[0], box[1], box[2], box[3]
-    return [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]
 
 
 def quad_to_box(quad) -> List[float]:

@@ -22,7 +22,6 @@ __all__ = [
     "merge_grid_duplicates",
     "cell_records_from_match",
     "backfill_empty_cells",
-    "wrap_html_document",
 ]
 
 
@@ -172,36 +171,3 @@ def merge_grid_duplicates(records: List[dict]) -> List[dict]:
                     ]
     return [records[i] for i in range(len(records)) if i not in dropped]
 
-
-def wrap_html_document(table_html: str) -> str:
-    """Wrap a ``<table>`` fragment in a styled standalone document.
-
-    Contract: ref utils_table_recover.py:579-605 (same CSS knobs: collapsed
-    borders, centered 8px-padded cells, shaded headers).
-    """
-    return (
-        "\n    <!DOCTYPE html>\n"
-        '    <html lang="zh-CN">\n'
-        "    <head>\n"
-        '    <meta charset="UTF-8">\n'
-        "    <title>Complex Table Example</title>\n"
-        "    <style>\n"
-        "        table {\n"
-        "            border-collapse: collapse;\n"
-        "            width: 100%;\n"
-        "        }\n"
-        "        th, td {\n"
-        "            border: 1px solid black;\n"
-        "            padding: 8px;\n"
-        "            text-align: center;\n"
-        "        }\n"
-        "        th {\n"
-        "            background-color: #f2f2f2;\n"
-        "        }\n"
-        "    </style>\n"
-        "    </head>\n"
-        "    <body>\n"
-        f"    {table_html}\n"
-        "    </body>\n"
-        "    </html>\n    "
-    )

@@ -28,8 +28,6 @@ TABLE_PATTERN = r"(?is)<table\b[^>]*>.*?</table>"
 COMMENT_PATTERN = r"(?s)<!--.*?-->"
 _BLOCK_PATTERN = rf"(?is)<({'|'.join(BOILERPLATE_TAGS)})\b[^>]*>.*?</\1>"
 TAG_PATTERN = r"<[^>]+>"
-_COMMENT_PATTERN = COMMENT_PATTERN
-_TAG_PATTERN = TAG_PATTERN
 # \r included: CRLF/stray-CR text must clean identically to the python
 # twin's line.strip() behavior (all three faces — python kernel, this
 # chain, the DuckDB oracle — carry the same class)
@@ -60,9 +58,9 @@ def strip_boilerplate_col(text: Column) -> Column:
     blocks → remaining tags → horizontal-whitespace collapse → per-line trim
     and empty-line drop.
     """
-    t = F.regexp_replace(text, _COMMENT_PATTERN, "")
+    t = F.regexp_replace(text, COMMENT_PATTERN, "")
     t = F.regexp_replace(t, _BLOCK_PATTERN, "")
-    t = F.regexp_replace(t, _TAG_PATTERN, " ")
+    t = F.regexp_replace(t, TAG_PATTERN, " ")
     t = F.regexp_replace(t, _HSPACE_PATTERN, " ")
     # python: split('\n') → strip each line → drop empties → '\n'.join
     t = F.regexp_replace(t, r" *\n *", "\n")

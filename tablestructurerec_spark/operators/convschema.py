@@ -37,6 +37,7 @@ from tablestructurerec_spark.operators.textstats import tokens_col, tokens_sql
 
 __all__ = [
     "QUERIES",
+    "ORACLE_SQL",
     "q_role_sequence_audit",
     "q_conv_suffix_pack",
     "q_conv_audit",
@@ -337,4 +338,9 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_conv_suffix_pack": q_conv_suffix_pack,
     "t_conv_audit": q_conv_audit,
     "t_pack_efficiency": q_pack_efficiency,
+}
+
+ORACLE_SQL: Dict[str, str] = {
+    "t_conv_audit": conv_audit_sql(),
+    "t_pack_efficiency": pack_efficiency_sql(),
 }

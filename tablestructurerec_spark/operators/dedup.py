@@ -691,6 +691,7 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_simhash": q_dedup_simhash,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "dedup_components": q_dedup_components,
+    "t_dedup_keep_best": q_dedup_keep_best,
 }
 
 ORACLE_SQL: Dict[str, str] = {

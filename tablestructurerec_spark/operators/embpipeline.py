@@ -55,6 +55,7 @@ from tablestructurerec_spark.operators.sampling import (
 
 __all__ = [
     "QUERIES",
+    "ORACLE_SQL",
     "q_emb_pipeline",
     "emb_pipeline",
     "emb_pipeline_sql",
@@ -228,4 +229,8 @@ ORDER BY train_vec_id, eval_vec_id
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_emb_pipeline": q_emb_pipeline,
+}
+
+ORACLE_SQL: Dict[str, str] = {
+    "t_emb_pipeline": emb_pipeline_sql(),
 }

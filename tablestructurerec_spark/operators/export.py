@@ -75,8 +75,9 @@ def export_training_shards(
     """Pack the corpus and write every not-yet-done shard; returns the
     shards written this run.  ``fail_after`` caps the run at N shards (test
     hook simulating a crash between runs)."""
-    from tablestructurerec_spark.operators.sampling import _PACK_SHARDS, _pack_docs
     from tablestructurerec_spark.sources.read import read_table
+
+    from .sampling import _PACK_SHARDS, _pack_docs
 
     done = set(completed_shards(spark, out_dir))
     todo = [s for s in range(_PACK_SHARDS) if s not in done]

@@ -41,7 +41,7 @@ from tablestructurerec_spark.operators.mojibake import (
     is_damaged_col,
 )
 
-__all__ = ["QUERIES", "q_source_health", "source_health", "health_sql"]
+__all__ = ["QUERIES", "ORACLE_SQL", "q_source_health", "source_health", "health_sql"]
 
 
 def q_source_health(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,4 +133,8 @@ ORDER BY source
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_source_health": q_source_health,
+}
+
+ORACLE_SQL: Dict[str, str] = {
+    "t_source_health": health_sql(),
 }

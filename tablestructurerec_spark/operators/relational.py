@@ -46,10 +46,6 @@ def _a1_frame(ev: DataFrame) -> DataFrame:
     )
 
 
-def q_a1_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _a1_frame(_t(spark, sf_dir, "events")).orderBy("user_id")
-
-
 _A1_SQL = """
 SELECT user_id,
        CAST(SUM(new_sess) AS BIGINT) AS n_sessions

@@ -537,6 +537,7 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_pack_sequences": q_pack_sequences,
     "t_pipeline_e2e": q_pipeline_e2e,
     "t_group_sample": q_group_sample,
+    "t_dsir_weights": q_dsir_weights,
 }
 
 ORACLE_SQL: Dict[str, str] = {

@@ -34,7 +34,7 @@ from tablestructurerec_spark.operators.cms import cms_sql, q_heavy_hitters_cms
 from tablestructurerec_spark.operators.hll import hll_sql, q_distinct_hll
 from tablestructurerec_spark.operators.kmv import kmv_sql, q_distinct_kmv
 
-__all__ = ["QUERIES", "q_sketch_audit", "sketch_audit_sql"]
+__all__ = ["QUERIES", "ORACLE_SQL", "q_sketch_audit", "sketch_audit_sql"]
 
 
 def _tall(df: DataFrame, metrics: Dict[str, str], key: str) -> DataFrame:
@@ -108,4 +108,8 @@ ORDER BY metric, key
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_sketch_audit": q_sketch_audit,
+}
+
+ORACLE_SQL: Dict[str, str] = {
+    "t_sketch_audit": sketch_audit_sql(),
 }

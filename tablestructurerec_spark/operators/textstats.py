@@ -424,6 +424,7 @@ FROM agg ORDER BY source
 # q_* functions and SQL stay exported for tests and pipeline composition.
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_length_quantiles": q_length_quantiles,
+    "t_lang_id_ngram": q_lang_id_ngram,
 }
 
 ORACLE_SQL: Dict[str, str] = {

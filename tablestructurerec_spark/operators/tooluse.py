@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "QUERIES",
+    "ORACLE_SQL",
     "q_tool_chain_stats",
     "q_tool_latency",
     "q_agent_loop_audit",
@@ -525,4 +526,8 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_tool_latency": q_tool_latency,
     "t_agent_loop_audit": q_agent_loop_audit,
     "t_agent_trace_audit": q_agent_trace_audit,
+}
+
+ORACLE_SQL: Dict[str, str] = {
+    "t_agent_trace_audit": trace_audit_sql(),
 }

@@ -82,6 +82,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "QUERIES",
+    "ORACLE_SQL",
     "q_url_canonicalize",
     "q_domain_stats",
     "q_domain_filter",
@@ -599,4 +600,8 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_domain_filter": q_domain_filter,
     "t_domain_dedup": q_domain_dedup,
     "t_url_hygiene": q_url_hygiene,
+}
+
+ORACLE_SQL: Dict[str, str] = {
+    "t_url_hygiene": url_hygiene_sql(),
 }

@@ -22,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import has_table_col, n_tables_col
-from ..plans.extract import TABLES_SCHEMA, _extract_batch
+from ..functions.text import n_tables_col
+from ..plans.extract import extract_tables
 
 __all__ = [
     "stream_extract_tables",
@@ -53,11 +53,9 @@ def stream_dedup_turns(stream_df: DataFrame, watermark: str = "10 minutes") -> D
 
 
 def stream_extract_tables(stream_df: DataFrame) -> DataFrame:
-    """Streaming twin of :func:`plans.extract.extract_tables`."""
-    src = stream_df.where(has_table_col(F.col("text"))).select(
-        "conv_id", "turn_idx", "text"
-    )
-    return src.mapInPandas(_extract_batch, schema=TABLES_SCHEMA)
+    """Streaming twin of :func:`plans.extract.extract_tables`: the same
+    plan, since ``mapInPandas`` runs unchanged on a streaming DataFrame."""
+    return extract_tables(stream_df)
 
 
 def stream_turn_stats(stream_df: DataFrame, window: str = "10 minutes") -> DataFrame:

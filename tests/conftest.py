@@ -9,6 +9,14 @@ os.environ["PYTHONPATH"] = REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH",
 sys.path.insert(0, REPO_ROOT)
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "codegen: whole-stage-codegen health over every driver row "
+        "(the slowest test; run alone with -m codegen)",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

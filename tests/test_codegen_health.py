@@ -21,6 +21,7 @@ import pytest
 SF_DIR = os.environ.get("TSR_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+@pytest.mark.codegen
 @pytest.mark.skipif(
     not os.path.exists(f"{SF_DIR}/documents.parquet"), reason="testdata absent"
 )

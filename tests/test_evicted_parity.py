@@ -1,7 +1,8 @@
-"""Driver-identical DuckDB parity for the four queries rotated OUT of the
-50-row registry in round 4 (VERDICT r3 #6) — eviction must not lower their
-verification rigor, so this file pins exactly what the driver used to:
-row count, column names, and order-insensitive values at the test sf.
+"""Driver-identical DuckDB parity for the operator queries that have a
+module oracle but are not driver rows (``__spark_entry__.DRIVER_ROWS``).
+Leaving the 50-row registry must not lower their verification rigor, so
+this file pins exactly what the driver would: row count, column names, and
+order-insensitive values at the test sf.  The list is derived, not kept.
 """
 
 import math
@@ -10,53 +11,17 @@ import os
 import duckdb
 import pytest
 
-from tablestructurerec_spark.operators import (
-    dedup,
-    hygiene,
-    retrieval,
-    sampling,
-    similarity,
-    textstats,
-)
+import __spark_entry__ as entry
+from tablestructurerec_spark.operators import collect
 
 SF_DIR = os.environ.get("TSR_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-EVICTED = [
-    "ann_ivf_topk",
-    "dedup_minhash_prod",
-    "t_dup_spans",
-    "t_group_sample",
-    # second round-4 rotation: kernel rides inside the registered
-    # t_hybrid_rrf oracle (_bm25_scored_ctes shared verbatim)
-    "t_bm25_topk",
-    # round-5 rotation: banding ⊂ t_triplet_mine + multi-probe ⊂
-    # t_emb_pipeline + cos-topk window ⊂ ann_bruteforce/ivf_kmeans; the
-    # greedy packer's recursive-CTE oracle ⊂ t_pipeline_e2e
-    "ann_lsh_bucket_topk",
-    "t_pack_sequences",
-    # round-5 rotation #2: cosine kernel ⊂ dedup_embedding_cosine /
-    # t_triplet_mine / t_emb_pipeline + rank-over-cos window ⊂
-    # ann_ivf_kmeans_topk; split_label ⊂ t_emb_pipeline + hash-uniform
-    # bucket ⊂ t_stratified_sample; _shingle5 ⊂ t_boilerplate_ngrams +
-    # broadcast-reference-side join discipline ⊂ dedup_incremental
-    "ann_bruteforce_topk",
-    "t_split_assign",
-    "dedup_decontaminate",
-    # exact type-7 per-source percentile kernel ⊂ t_adaptive_filter
-    "t_length_quantiles",
-]
-
-
-def _pairs():
-    out = {}
-    for mod in (dedup, hygiene, retrieval, sampling, similarity, textstats):
-        for k in EVICTED:
-            if k in mod.QUERIES:
-                out[k] = (mod.QUERIES[k], mod.ORACLE_SQL[k])
-    return out
+QUERIES = collect("QUERIES")
+ORACLES = collect("ORACLE_SQL")
+EVICTED = [k for k in QUERIES if k in ORACLES and k not in entry.DRIVER_ROWS]
 
 
 def _duck(sql):
@@ -83,27 +48,31 @@ def _normalize(df):
     return sorted(rows, key=repr)
 
 
-def test_all_four_still_exist_as_operators():
-    assert sorted(_pairs()) == sorted(EVICTED)
+def test_every_module_oracle_has_a_query():
+    assert set(ORACLES) <= set(QUERIES)
 
 
 @pytest.mark.parametrize("name", EVICTED)
 def test_evicted_query_matches_oracle(spark, name):
-    q, sql = _pairs()[name]
-    got = q(spark, SF_DIR).toPandas()
-    want = _duck(sql)
+    got = QUERIES[name](spark, SF_DIR).toPandas()
+    want = _duck(ORACLES[name])
     assert list(got.columns) == list(want.columns), name
     assert len(got) == len(want), name
     assert _normalize(got) == _normalize(want), name
 
 
 def test_registry_is_exactly_at_cap_with_rotation_applied():
-    import __spark_entry__ as e
-
     os.environ["TSR_TEST_SF_DIR"] = SF_DIR
-    qs, osql = e.queries(), e.oracle_sql()
+    qs, osql = entry.queries(), entry.oracle_sql()
     assert len(qs) == 50  # the driver's observed cap
     for k in EVICTED:
         assert k not in qs
     for k in ("t_url_hygiene", "t_source_health", "t_sketch_audit", "t_conv_audit"):
         assert k in qs and k in osql
+
+
+def test_oracle_sql_order_equals_queries():
+    # Spark-free: both registries are derived from DRIVER_ROWS, so the
+    # driver pairs every row with its own oracle in one order
+    os.environ["TSR_TEST_SF_DIR"] = SF_DIR
+    assert list(entry.oracle_sql()) == list(entry.queries())

@@ -1,4 +1,4 @@
-"""Training-shard export sink (plans/export.py).
+"""Training-shard export sink (operators/export.py).
 
 Pins: crash → resume produces byte-identical output to a single clean run,
 only unfinished shards re-run, manifest totals agree with an independent
@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from tablestructurerec_spark.plans.export import (
+from tablestructurerec_spark.operators.export import (
     completed_shards,
     export_training_shards,
     read_manifest,
