@@ -34,11 +34,12 @@ def main() -> None:
 
     from tablestructurerec_spark.plans.lineage import run_with_lineage
     from tablestructurerec_spark.sources.synthetic import synth_transcripts
+    from tablestructurerec_spark.sources.transcripts import read_transcripts
 
     if args.synthetic_convs:
         transcripts = synth_transcripts(spark, args.synthetic_convs)
     else:
-        transcripts = spark.read.parquet(args.input)
+        transcripts = read_transcripts(spark, args.input)
 
     done = run_with_lineage(spark, transcripts, args.output, n_buckets=args.buckets)
     print(f"processed buckets: {done}")

@@ -22,7 +22,7 @@ unit tests without Spark.
 from __future__ import annotations
 
 import random
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Tuple
 
 import numpy as np
 
@@ -42,10 +42,27 @@ from .html_render import (
 from .lore_post import snap_and_round_logic
 from .recover import recover_logic_points
 
-__all__ = ["process_table_html", "classify_table_kind", "synth_ocr_fragments"]
+__all__ = [
+    "process_table_html",
+    "classify_table_kind",
+    "empty_table_result",
+    "synth_ocr_fragments",
+]
 
 _CHAR_W = 5.0
 _SPLIT_W = 40.0
+
+
+def empty_table_result(table_kind: str) -> Dict[str, object]:
+    """The output of a table with no cells (``"error"`` for a table the
+    kernel rejected)."""
+    return {
+        "pred_html": "<html><body><table></table></body></html>",
+        "cell_bboxes": [],
+        "logic_points": [],
+        "table_kind": table_kind,
+        "n_cells": 0,
+    }
 
 
 def classify_table_kind(logic_points: List[List[int]]) -> str:
@@ -61,22 +78,31 @@ def classify_table_kind(logic_points: List[List[int]]) -> str:
     classifier — deterministic and runtime-computable, since in this graft
     the quads derive from the parsed grid.
     """
-    return _classify_and_recover(logic_points)[0]
-
-
-def _classify_and_recover(logic_points: List[List[int]]):
-    """(kind, recovered logic or None) — recover computed at most once."""
     if not logic_points:
-        return "wireless", None
-    n_rows = max(lp[1] for lp in logic_points) + 1
-    n_cols = max(lp[3] for lp in logic_points) + 1
+        return "wireless"
+    n_rows, n_cols = _grid_extent(logic_points)
+    quads = quads_from_logic_points(logic_points)
+    return _classify_and_recover(logic_points, n_rows, n_cols, quads)[0]
+
+
+def _grid_extent(logic_points: List[List[int]]) -> Tuple[int, int]:
+    return (
+        max(lp[1] for lp in logic_points) + 1,
+        max(lp[3] for lp in logic_points) + 1,
+    )
+
+
+def _classify_and_recover(
+    logic_points: List[List[int]], n_rows: int, n_cols: int, ccw_quads: list
+):
+    """(kind, recovered logic or None) for a non-empty grid of ``n_rows`` x
+    ``n_cols`` whose detector quads are ``ccw_quads``."""
     if (
         len({lp[0] for lp in logic_points}) < n_rows
         or len({lp[2] for lp in logic_points}) < n_cols
     ):
         return "wireless", None
-    quads = np.asarray(quads_from_logic_points(logic_points), dtype=float)
-    recovered = recover_logic_points(quads)
+    recovered = recover_logic_points(np.asarray(ccw_quads, dtype=float))
     if recovered.tolist() != [list(map(int, lp)) for lp in logic_points]:
         return "wireless", None
     return "wired", recovered
@@ -144,37 +170,27 @@ def _sort_and_gather_cell(ocr_rows: list) -> list:
     return gather_ocr_rows(rows, threshold=0.3)
 
 
-def process_table_html(
-    html: str, table_seed: int = 0
-) -> Optional[Dict[str, object]]:
+def process_table_html(html: str, table_seed: int = 0) -> Dict[str, object]:
     """Full single-table reconstruction; returns the reference's output tuple.
 
     Returns dict with ``pred_html`` (str), ``cell_bboxes`` ((N,8) float list,
     clockwise flattened quads as in ref main.py:129), ``logic_points``
-    ((N,4) int list), ``table_kind``, ``n_cells``; or None when the fragment
-    parses to nothing (the reference degrades to an empty output,
-    ref main.py:132-134).
+    ((N,4) int list), ``table_kind``, ``n_cells``.  A fragment that parses to
+    nothing yields the empty table (the reference degrades to an empty
+    output, ref main.py:132-134).
     """
     parsed_logic, parsed_texts = parse_table_html(html)
-    if parsed_logic:
-        # grid fill / render are O(rows x cols): bound hostile span claims
-        # (the Spark stage degrades this to an error row, preserving the job)
-        n_rows = max(lp[1] for lp in parsed_logic) + 1
-        n_cols = max(lp[3] for lp in parsed_logic) + 1
-        if n_rows * n_cols > 250_000:
-            raise ValueError(f"table grid too large: {n_rows}x{n_cols}")
     if not parsed_logic:
-        return {
-            "pred_html": "<html><body><table></table></body></html>",
-            "cell_bboxes": [],
-            "logic_points": [],
-            "table_kind": "wireless",
-            "n_cells": 0,
-        }
+        return empty_table_result("wireless")
+    # grid fill / render are O(rows x cols): bound hostile span claims
+    # (the Spark stage degrades this to an error row, preserving the job)
+    n_rows, n_cols = _grid_extent(parsed_logic)
+    if n_rows * n_cols > 250_000:
+        raise ValueError(f"table grid too large: {n_rows}x{n_cols}")
 
     # detector stand-in: ccw physical quads from the logical grid
     ccw_quads = quads_from_logic_points(parsed_logic)
-    kind, recovered = _classify_and_recover(parsed_logic)
+    kind, recovered = _classify_and_recover(parsed_logic, n_rows, n_cols, ccw_quads)
     if kind == "wired":
         logic = recovered
     else:

@@ -73,8 +73,8 @@ def distribution_drift(
     the cache unreleasable except via ``spark.catalog.clearCache()``."""
     # persisted: the day-index collect below and the fan-out both read this
     # aggregate — without the persist Catalyst rebuilds it per consumer
-    # (differently-pruned subtrees defeat exchange reuse, the round-2 / pmi
-    # finding) and the corpus would be scanned three times (found in review)
+    # (differently-pruned subtrees defeat exchange reuse) and the corpus
+    # would be scanned three times
     counts = ingest_counts(events, cat_col).persist()
     keep = False
     try:

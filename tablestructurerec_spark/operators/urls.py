@@ -61,7 +61,7 @@ dotless host registers as itself, an unknown multi-label host as its last
 two labels.
 
 Spark shape, audited for 100 TB: canonicalize / registered-domain are
-MAP-ONLY (one scan, zero shuffles — the c4 pattern).  Domain stats is one
+MAP-ONLY (one scan, zero shuffles).  Domain stats is one
 ``groupBy(registered_domain)`` partial-agg shuffle (domains are bounded —
 ~10^7-10^8 at web scale — and the md5 dup projection happens AT THE SCAN,
 the snapshot.py discipline).  The domain filter broadcast-joins the

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.html_parse import find_table_fragments
-from ..core.pipeline import process_table_html
+from ..core.pipeline import empty_table_result, process_table_html
 from ..functions.text import (
     has_table_col,
     n_tables_col,
@@ -68,9 +68,6 @@ def _table_seed(conv_id: str, turn_idx: int, table_idx: int) -> int:
     return zlib.crc32(f"{conv_id}|{turn_idx}|{table_idx}".encode())
 
 
-_EMPTY_HTML = "<html><body><table></table></body></html>"
-
-
 def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     cols = {
         "conv_id": [], "turn_idx": [], "table_idx": [], "table_kind": [],
@@ -97,13 +94,7 @@ def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     res = process_table_html(html, _table_seed(conv_id, turn_idx, ti))
                     err = None
                 except Exception as exc:  # noqa: BLE001 - deliberate catch-all
-                    res = {
-                        "table_kind": "error",
-                        "pred_html": _EMPTY_HTML,
-                        "cell_bboxes": [],
-                        "logic_points": [],
-                        "n_cells": 0,
-                    }
+                    res = empty_table_result("error")
                     err = f"{type(exc).__name__}: {exc}"[:500]
                 cols["conv_id"].append(conv_id)
                 cols["turn_idx"].append(turn_idx)

@@ -19,11 +19,10 @@ and metrics tables".  Design (SURVEY.md §4):
   parquet committer stages to _temporary), leaves no ``ok`` rows, and the
   next run redoes exactly the unfinished buckets — exactly-once at bucket
   granularity;
-* metrics cost ~nothing extra at 100 TB: ``n_turns`` comes from a
-  ``groupBy(bucket).count()`` whose scan prunes to the ``conv_id`` column
-  only (a tiny fraction of the bytes of a text-heavy corpus), and
-  ``n_tables`` from the *written* files' parquet footers — the full-width
-  input is read exactly once, by the extraction job itself.
+* metrics ride the write job: ``n_turns`` and ``n_tables`` are two
+  ``DataFrame.observe`` observations (one ``count_if`` per todo bucket) on
+  the bucketed input and on the extract output, read after the write —
+  no second input scan and no re-read of the written files.
 
 Storage is either a directory (``out_dir`` = path: ``<dir>/tables`` +
 ``<dir>/_lineage`` parquet) or a catalog (``out_dir`` = ``catalog:<prefix>``:
@@ -38,10 +37,9 @@ here (tested), only the catalog config differs.
 from __future__ import annotations
 
 import time
-from typing import Iterable, List
+from typing import List, Tuple
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import extract_tables
@@ -66,36 +64,45 @@ def _names(out_dir: str):
     return False, f"{out_dir}/tables", f"{out_dir}/_lineage"
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> List[int]:
+def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The lineage table, or None when no run has written one yet."""
     is_cat, _tables, lin_t = _names(out_dir)
     if is_cat:
-        if not spark.catalog.tableExists(lin_t):
-            return []
-        lin = spark.table(lin_t)
-        ok = lin.where(F.col("status") == "ok").select("bucket").distinct()
-        return sorted(r.bucket for r in ok.collect())
-    return _completed_buckets_path(spark, out_dir)
-
-
-def _completed_buckets_path(spark: SparkSession, out_dir: str) -> List[int]:
+        return spark.table(lin_t) if spark.catalog.tableExists(lin_t) else None
     # existence pre-check via the Hadoop FS API where available (avoids the
     # JVM logging an alarming PATH_NOT_FOUND trace on every fresh run); the
     # read itself stays guarded so an unreadable _lineage dir (e.g. only a
     # _temporary left by a crash mid-append) or a Connect session without
     # the py4j bridge degrades to "no completed buckets" and re-runs them
     try:
-        path = spark._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/_lineage")
+        path = spark._jvm.org.apache.hadoop.fs.Path(lin_t)
         fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
         if not fs.exists(path):
-            return []
+            return None
     except Exception:
         pass
     try:
-        lin = spark.read.parquet(f"{out_dir}/_lineage")
+        return spark.read.parquet(lin_t)
     except Exception:
+        return None
+
+
+def completed_buckets(spark: SparkSession, out_dir: str) -> List[int]:
+    lin = _read_lineage(spark, out_dir)
+    if lin is None:
         return []
     ok = lin.where(F.col("status") == "ok").select("bucket").distinct()
     return sorted(r.bucket for r in ok.collect())
+
+
+def _per_bucket_counts(df: DataFrame, todo: List[int]) -> Tuple[DataFrame, Observation]:
+    """``df`` observed with one ``count_if`` per todo bucket, gathered in one
+    array metric ``n`` in ``todo`` order.  One SQL expression, not a Column
+    per bucket: each Column built in Python is a driver round trip (~0.3 s
+    for 64 buckets)."""
+    obs = Observation()
+    counts = ", ".join(f"count_if(bucket = {b})" for b in todo)
+    return df.observe(obs, F.expr(f"array({counts})").alias("n")), obs
 
 
 def run_with_lineage(
@@ -108,9 +115,9 @@ def run_with_lineage(
 ) -> List[int]:
     """Extract all buckets not yet marked ok; returns the buckets processed.
 
-    Single-pass: one distributed write job covers every todo bucket (the
-    input is never re-scanned per bucket).  ``wall_s`` is the run's wall
-    time, recorded on each of the run's lineage rows.
+    Single-pass: one distributed write job covers every todo bucket and
+    collects the lineage counts (the input is never re-scanned).  ``wall_s``
+    is the run's wall time, recorded on each of the run's lineage rows.
 
     ``fail_after`` caps the run at N buckets (test hook simulating a crash
     between runs).
@@ -125,9 +132,15 @@ def run_with_lineage(
     src = transcripts.withColumn("bucket", bucket_col(n_buckets)).where(
         F.col("bucket").isin(todo)
     )
+    # The counts are exactly-once only because both observed nodes sit in
+    # the write's single result stage (extract_tables is narrow, the
+    # partitioned write sorts locally): a shuffle between them and the write
+    # would let a retried or reused stage count its rows twice.
+    src, turns_obs = _per_bucket_counts(src, todo)
     # bucket is a pure function of conv_id, so the output re-derives it —
     # extract_tables keeps its narrow 3-column projection into mapInPandas
     tables = extract_tables(src).withColumn("bucket", bucket_col(n_buckets))
+    tables, tables_obs = _per_bucket_counts(tables, todo)
     is_cat, tables_t, lin_t = _names(out_dir)
     overwrite_key = "spark.sql.sources.partitionOverwriteMode"
     old_mode = spark.conf.get(overwrite_key, None)
@@ -150,21 +163,9 @@ def run_with_lineage(
         else:
             spark.conf.set(overwrite_key, old_mode)
     wall = time.perf_counter() - t0
-    # metrics: n_turns prunes the input scan to conv_id only; n_tables counts
-    # the freshly written partitions (parquet footer counts, no data read)
-    n_turns = {
-        r["bucket"]: r["count"] for r in src.groupBy("bucket").count().collect()
-    }
-    try:
-        written = read_output(spark, out_dir).where(F.col("bucket").isin(todo))
-        n_tables = {
-            r["bucket"]: r["count"]
-            for r in written.groupBy("bucket").count().collect()
-        }
-    except AnalysisException:  # no bucket produced any table → nothing written
-        n_tables = {}
     rows = [
-        (b, "ok", n_turns.get(b, 0), n_tables.get(b, 0), wall, run_id) for b in todo
+        (b, "ok", n_turns, n_tables, wall, run_id)
+        for b, n_turns, n_tables in zip(todo, turns_obs.get["n"], tables_obs.get["n"])
     ]
     lineage = spark.createDataFrame(rows, LINEAGE_SCHEMA)
     if is_cat:

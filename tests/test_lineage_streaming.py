@@ -2,9 +2,11 @@
 
 import pytest
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from tablestructurerec_spark.plans.lineage import (
+    bucket_col,
     completed_buckets,
     read_output,
     run_with_lineage,
@@ -58,23 +60,89 @@ def test_resume_is_noop_when_complete(spark, transcripts, tmp_path):
 
 
 def test_run_is_single_pass_regardless_of_bucket_count(spark, transcripts, tmp_path):
-    """Regression for the per-bucket full-input re-scan: the number of Spark
-    jobs a run launches must not scale with n_buckets (one write job + two
-    count jobs, not O(n_buckets) scans)."""
+    """With the input cached, a run into a fresh output launches at most two
+    Spark jobs in either storage mode, whatever the bucket count: the
+    extract write, which also observes the lineage counts, and the lineage
+    append.  No per-bucket scan, no second count scan of the input, no
+    re-read of the output."""
     sc = spark.sparkContext
+    transcripts.count()  # materialize the cache outside the measured runs
 
-    def jobs_for(n_buckets: int, out: str) -> int:
-        group = f"lineage-{n_buckets}"
+    def jobs_for(mode: str, n_buckets: int) -> int:
+        if mode == "path":
+            out = str(tmp_path / f"b{n_buckets}")
+        else:
+            out = f"catalog:tsr_test_pass{n_buckets}"
+            _drop_catalog(spark, out)
+        group = f"lineage-{mode}-{n_buckets}"
         sc.setJobGroup(group, "single-pass check")
         try:
             run_with_lineage(spark, transcripts, out, n_buckets=n_buckets)
         finally:
             sc.setJobGroup("", "")
+            if mode == "catalog":
+                _drop_catalog(spark, out)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    j_small = jobs_for(3, str(tmp_path / "s"))
-    j_large = jobs_for(12, str(tmp_path / "l"))
-    assert j_large <= j_small + 1, (j_small, j_large)
+    jobs = {(m, n): jobs_for(m, n) for m in ("path", "catalog") for n in (3, 12)}
+    assert max(jobs.values()) <= 2, jobs
+
+
+def _drop_catalog(spark, out):
+    prefix = out[len("catalog:"):]
+    for t in (f"{prefix}_tables", f"{prefix}_lineage"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _lineage_rows(spark, out):
+    if out.startswith("catalog:"):
+        lin = spark.table(f"{out[len('catalog:'):]}_lineage")
+    else:
+        lin = spark.read.parquet(f"{out}/_lineage")
+    return lin.select("bucket", "n_turns", "n_tables").collect()
+
+
+def _per_bucket(df):
+    return {r["bucket"]: r["count"] for r in df.groupBy("bucket").count().collect()}
+
+
+@pytest.mark.parametrize("mode", ["path", "catalog"])
+def test_lineage_counts_equal_input_and_written_rows(spark, transcripts, tmp_path, mode):
+    """Each bucket's ``n_turns`` is the input's turn count in that bucket and
+    its ``n_tables`` the rows written there, across a crash and a resume;
+    covers a bucket with turns but no tables and a run with no table at all.
+    More buckets than conversations leave some holding only table-free ones."""
+    n_buckets = 32
+    plain = spark.createDataFrame(
+        [(f"plain-{c}", t, "user", "no table here", None, None)
+         for c in range(8) for t in range(3)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    inputs = {"mixed": transcripts.unionByName(plain), "no_tables": plain}
+    for name, df in inputs.items():
+        if mode == "path":
+            out = str(tmp_path / name)
+        else:
+            out = f"catalog:tsr_test_counts_{name}"
+            _drop_catalog(spark, out)
+        run_with_lineage(spark, df, out, n_buckets=n_buckets, run_id="r1", fail_after=2)
+        run_with_lineage(spark, df, out, n_buckets=n_buckets, run_id="r2")
+
+        turns = _per_bucket(df.withColumn("bucket", bucket_col(n_buckets)))
+        try:
+            tables = _per_bucket(read_output(spark, out))
+        except AnalysisException:  # nothing written: no bucket yielded a table
+            tables = {}
+        want = {b: (turns.get(b, 0), tables.get(b, 0)) for b in range(n_buckets)}
+        got = {r.bucket: (r.n_turns, r.n_tables) for r in _lineage_rows(spark, out)}
+        if mode == "catalog":
+            _drop_catalog(spark, out)
+        assert got == want, name
+        if name == "mixed":
+            assert any(n_turns and not n_tables for n_turns, n_tables in want.values())
+            assert sum(t for _, t in want.values()) > 0
+        else:
+            assert tables == {}
 
 
 def test_streaming_extraction_matches_batch(spark, transcripts, tmp_path):
