@@ -2,8 +2,8 @@
 """Benchmark: headline queries + flagship extraction throughput.
 
 Default: runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE COMPACT JSON line as
-the last stdout line:
+local[$SPARK_GRAFT_CPUS] (default: the cores the process may use) and
+prints ONE COMPACT JSON line as the last stdout line:
   {"metric": ..., "value": <total sec>, "unit": "sec", "n_queries": ...,
    "queries": {"flagship_extract": sec}, "sf": ..., "turns_per_sec": ...,
    "detail_file": "BENCH/bench_detail_sf<sf>_cpus<n>.json"}
@@ -14,16 +14,11 @@ size).
 
 --scaling: additionally measures extraction throughput at local[N] and
 local[4N] in fresh subprocesses (the sandbox stand-in for N vs 4N executors,
-per BASELINE.json's north rule) and writes BENCH/BASELINE.md with the
-throughputs and the N→4N scaling efficiency.
+per BASELINE.json's north rule) and writes the throughputs and the N→4N
+scaling efficiency to BENCH/scaling_sf<sf>.json.  --scaling-only runs just
+that measurement.
 
 --extract-only: internal mode used by --scaling children.
-
---minhash-prod: times MinHash-LSH at production parameters (128
-permutations, 16 bands x 8 rows) on the same corpus, optionally scaled up
-N-fold with --mult N (deterministic doc_id-shifted replication of the sf
-documents table — no external data), and prints its own JSON line.  Shows
-the banded self-join shape holds when signatures are real-sized.
 
 --queries a,b,c: restrict the timed suite to the named queries (the sf10
 subset point for the quadratic-prone families); the detail file gets a
@@ -48,7 +43,9 @@ sys.path.insert(0, REPO_ROOT)
 os.environ["PYTHONPATH"] = REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from tablestructurerec_spark.session import default_cpus  # noqa: E402
+
+CPUS = default_cpus()
 
 
 def _sf_number(sf_dir: str) -> float:
@@ -298,12 +295,6 @@ def main() -> None:
                           "codegen_failures": nfail}))
         return
 
-    if "--minhash-prod" in sys.argv:
-        _minhash_prod(spark, sf)
-        spark.stop()
-        _codegen_failures(err_file, err_saved)
-        return
-
     queries = _timed_queries()
 
     if "--queries" in sys.argv:
@@ -400,60 +391,6 @@ def main() -> None:
         _scaling_report(sf)
 
 
-def _minhash_prod(spark, sf: float) -> None:
-    """Production-parameter MinHash (128 perms, 16 bands x 8 rows): the same
-    oracle-pinned plan, real-sized signatures.  --mult N replicates the
-    documents corpus N-fold (doc_id shifted per replica — deterministic, no
-    external data) to push the banded join harder."""
-    from pyspark.sql import functions as F
-
-    from tablestructurerec_spark.operators.dedup import q_dedup_minhash_lsh
-
-    mult = 1
-    if "--mult" in sys.argv:
-        i = sys.argv.index("--mult") + 1
-        try:
-            mult = int(sys.argv[i]) if i < len(sys.argv) else 0
-        except ValueError:
-            mult = 0
-        if mult < 1:
-            sys.exit("usage: bench.py --minhash-prod [--mult N]  (N a positive integer)")
-    n_hashes, band_rows = 128, 8
-    sf_dir = SF_DIR
-    if mult > 1:
-        from tablestructurerec_spark.sources.read import read_table
-
-        docs = read_table(spark, SF_DIR, "documents")
-        # shift by max(doc_id)+1, not count: sparse/offset id spaces must
-        # not collide across replicas
-        stride = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-        reps = spark.range(mult).withColumnRenamed("id", "rep")
-        big = docs.crossJoin(reps).select(
-            (F.col("doc_id") + F.col("rep") * stride).alias("doc_id"),
-            # perturb each replica's text so replicas are near- not exact
-            # duplicates of each other (realistic dup structure)
-            F.concat(F.col("text"), F.lit(" rep"), F.col("rep").cast("string")).alias("text"),
-            "lang", "source", "n_chars",
-        )
-        sf_dir = f"/tmp/tsr_minhash_prod_sf{sf}_x{mult}"
-        big.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _force(q_dedup_minhash_lsh(spark, sf_dir, n_hashes=n_hashes, band_rows=band_rows))
-        best = min(best, time.perf_counter() - t0)
-    # pair count OUTSIDE the timed window (count can't prune a join, but
-    # keep the timed metric purely the noop-sink execution)
-    n_pairs = q_dedup_minhash_lsh(
-        spark, sf_dir, n_hashes=n_hashes, band_rows=band_rows
-    ).count()
-    print(json.dumps({
-        "metric": "minhash_prod_seconds", "value": round(best, 3), "unit": "sec",
-        "n_hashes": n_hashes, "band_rows": band_rows, "mult": mult,
-        "candidate_pairs": n_pairs, "sf": sf, "cpus": CPUS,
-    }))
-
-
 def _mp_kernel_ceiling(levels: tuple[int, int]) -> float:
     """Hardware scaling ceiling: the same extraction kernel under plain
     multiprocessing (no Spark).  On one box, 4x the busy cores drops per-core
@@ -513,7 +450,8 @@ def _mp_work(args: tuple[int, int]) -> int:
 
 def _scaling_report(sf: float) -> None:
     """Same input, N vs 4N parallelism at two N choices, fresh JVMs;
-    efficiencies + single-box hardware ceilings to BENCH/BASELINE.md."""
+    efficiencies + single-box hardware ceilings, printed and written to
+    BENCH/scaling_sf<sf>.json."""
     pairs = ((4, 16), (8, 32))
     levels = sorted({c for p in pairs for c in p})
     # Three sweeps over all levels.  The shared box drifts through fast/slow
@@ -558,67 +496,17 @@ def _scaling_report(sf: float) -> None:
         for n in levels
     }
     ceilings = {p: _mp_kernel_ceiling(p) for p in pairs}
-    n_turns = results[pairs[0][0]]["turns"]
-    _render_scaling_md(sf, n_turns, results, effs, eff_min, ceilings, pairs)
-    print(json.dumps({
+    report = json.dumps({
         "pairs": {f"{a}->{b}": {"efficiency_median": round(effs[(a, b)], 3),
                                 "efficiency_min": round(eff_min[(a, b)], 3),
                                 "ceiling": round(ceilings[(a, b)], 3)}
                   for a, b in pairs},
-        "levels": {n: r for n, r in results.items()},
-    }))
-
-
-def _render_scaling_md(sf, n_turns, results, effs, eff_min, ceilings, pairs) -> None:
+        "levels": results,
+    })
     os.makedirs(os.path.join(REPO_ROOT, "BENCH"), exist_ok=True)
-    md = os.path.join(REPO_ROOT, "BENCH", "BASELINE.md")
-    ratio = {p: min(effs[p] / ceilings[p], 1.0) for p in pairs}
-    if all(r >= 0.97 for r in ratio.values()):
-        verdict = (
-            "Spark reaches the silicon ceiling in both pairs — the single "
-            "socket, not the engine, bounds the higher pair."
-        )
-    else:
-        worst = min(pairs, key=lambda p: ratio[p])
-        verdict = (
-            f"Spark reaches {ratio[worst]:.0%} of the silicon ceiling on the "
-            f"{worst[0]}→{worst[1]} pair this session (the shared box's "
-            "clock/bandwidth contention dominates at full-socket load and "
-            "varies between sessions — compare the Spark/ceiling column, "
-            "not the raw efficiency)."
-        )
-    with open(md, "w") as f:
-        f.write(
-            "# BENCH/BASELINE — measured extraction throughput & scaling\n\n"
-            f"Input: deterministic synthetic transcripts, seed=42, sf={sf} "
-            f"({n_turns} turns), identical at every parallelism level "
-            "(best-of-2 warm runs per level within a sweep to exclude "
-            "python-worker cold start; per-pair efficiency is the MEDIAN of "
-            "three time-adjacent sweeps, with the sweep minimum also shown "
-            "— see _scaling_report).\n\n"
-            "| parallelism | wall sec (median sweep) | turns/sec |\n|---|---|---|\n"
-            + "".join(
-                f"| local[{n}] | {r['sec']} | {r['turns_per_sec']} |\n"
-                for n, r in sorted(results.items())
-            )
-            + "\n| N→4N pair | Spark efficiency (median / min of 3) | single-box hw ceiling (no Spark) | Spark / ceiling |\n"
-            "|---|---|---|---|\n"
-            + "".join(
-                f"| {a}→{b} | **{effs[(a, b)]:.3f}** / {eff_min[(a, b)]:.3f} | "
-                f"{ceilings[(a, b)]:.3f} | "
-                f"{min(effs[(a, b)] / ceilings[(a, b)], 1.0):.3f} |\n"
-                for a, b in pairs
-            )
-            + "\nNorth-rule target: ≥ 0.8 across N→4N *executors*.  Both "
-            "pairs quadruple the core count on ONE socket, so the hardware "
-            "ceiling column (the same extraction kernel under plain "
-            "multiprocessing, no Spark) shows what the silicon allows under "
-            "shared turbo clocks and memory bandwidth.  " + verdict + "  On "
-            "a real N→4N executor cluster each executor keeps its own "
-            "clocks and page cache and the shuffle-free plan (per-turn "
-            "mapInPandas over input splits, no exchange anywhere) scales "
-            "with executor count.\n"
-        )
+    with open(os.path.join(REPO_ROOT, "BENCH", f"scaling_sf{sf}.json"), "w") as f:
+        f.write(report + "\n")
+    print(report)
 
 
 if __name__ == "__main__":

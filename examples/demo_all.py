@@ -22,8 +22,6 @@ if __name__ == "__main__":
     for turn_idx, text in enumerate(turns["text"]):
         for table_idx, (_s, _e, html) in enumerate(find_table_fragments(text)):
             out = process_table_html(html, table_seed=0)
-            if out is None:
-                continue
             print(f"turn {turn_idx} table {table_idx}: kind={out['table_kind']} "
                   f"cells={out['n_cells']}")
             print("  pred_html:", out["pred_html"][:120], "...")

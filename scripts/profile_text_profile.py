@@ -26,7 +26,9 @@ sys.path.insert(0, REPO_ROOT)
 os.environ["PYTHONPATH"] = REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from tablestructurerec_spark.session import default_cpus  # noqa: E402
+
+CPUS = default_cpus()
 
 
 def main() -> None:

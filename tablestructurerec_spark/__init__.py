@@ -16,7 +16,6 @@ functions/  column-expression helpers (geometry predicates, text stats, hashing)
 sources/    readers/sinks (transcripts parquet/iceberg-style, synthetic generator)
 plans/      end-to-end pipelines (the extraction "query plans")
 inference/  batched ONNX harness plumbing with deterministic stub backend
-streaming/  structured-streaming variants of the extraction stages
 
 Nothing here is a port of the reference's code; semantics parity is pinned by
 golden tests copied from the reference's own unit-test *literals*

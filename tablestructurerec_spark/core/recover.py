@@ -14,7 +14,8 @@ the cw swap at wired_table_rec/main.py:103-106.
 
 The span-assignment pass is inherently sequential per row (col_start depends
 on the running sum of previous spans, ref :157-159), so in Spark this kernel
-runs per-table inside ``applyInPandas``; the per-table cell counts are tiny.
+runs per-table inside the extraction ``mapInPandas``; the per-table cell
+counts are tiny.
 """
 
 from __future__ import annotations

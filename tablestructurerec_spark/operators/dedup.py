@@ -619,7 +619,9 @@ ORDER BY new_doc, dup_of
 def q_dedup_minhash_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME banded plan at production parameters (128 permutations x
     16 bands of 8) — driver-oracle-verified, so the production path is
-    correctness-checked, not just timed (bench --minhash-prod)."""
+    correctness-checked, not just timed.  At scale: ``bench.py --replicate N
+    --out D``, then ``SPARK_GRAFT_SF_DIR=D bench.py --queries
+    dedup_minhash_prod``."""
     return q_dedup_minhash_lsh(spark, sf_dir, n_hashes=128, band_rows=8)
 
 

@@ -63,9 +63,8 @@ def _feats(docs: DataFrame) -> DataFrame:
 def _fit_frames(
     spark: SparkSession, sf_dir: str, teacher: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """The shared fit: (≤_NB_BUCKETS-row ratio frame, 1-row prior frame).
-    Used by the batch scorer and collected by :func:`nb_model` for the
-    stateless streaming scorer.  ``teacher`` lets a composing caller
+    """The fit: (≤_NB_BUCKETS-row ratio frame, 1-row prior frame).
+    ``teacher`` lets a composing caller
     (``selection.q_selection_pipeline``) pass its OWN CCNet frame — the
     shared object gives both consumers identical expression IDs, the
     precondition for runtime exchange reuse of the CCNet aggregates
@@ -223,19 +222,6 @@ LEFT JOIN per_doc p ON d.doc_id = p.doc_id
 CROSS JOIN prior pr
 ORDER BY d.doc_id
 """
-
-
-def nb_model(spark: SparkSession, sf_dir: str) -> tuple[Dict[int, int], int]:
-    """Collect the fitted student as a plain ``({bucket: lr}, prior)`` pair
-    — O(_NB_BUCKETS) integers, the artifact a stateless streaming scorer
-    (``streaming.quality_stream.stream_quality_assign``) embeds as a map
-    literal.  Runs the exact same fit plan as :func:`q_quality_distill`
-    (one shared builder — zero drift); collecting ≤1024+1 rows is a
-    bounded small-side collect (the lineage-metadata rule)."""
-    ratio_df, prior_df = _fit_frames(spark, sf_dir)
-    ratio = {int(r.fb): int(r.lr) for r in ratio_df.collect()}
-    prior = int(prior_df.collect()[0].prior)
-    return ratio, prior
 
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -90,11 +90,7 @@ def distribution_drift(
 
 
 def ingest_counts(events: DataFrame, cat_col: str) -> DataFrame:
-    """The one corpus-scan stage: ``(day, et, c)`` partial-agg counts —
-    shared verbatim by the batch monitor and the streaming twin
-    (``streaming/audit_stream.py``), which maintains it as a bounded-key
-    complete-mode streaming aggregate and runs the (tiny) pairing step
-    per trigger."""
+    """The one corpus-scan stage: ``(day, et, c)`` partial-agg counts."""
     return (
         events.select(
             F.col("ts").cast("date").alias("day"), F.col(cat_col).alias("et")

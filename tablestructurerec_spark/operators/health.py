@@ -50,10 +50,8 @@ def q_source_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     return source_health(read_table(spark, sf_dir, "documents"))
 
 
-def doc_flags(docs: DataFrame) -> DataFrame:
-    """Per-doc STATELESS health flags — shared verbatim by the batch report
-    and the streaming twin (``streaming/audit_stream.py``), so the two
-    faces cannot drift.  Map-only: works on streaming frames as-is."""
+def source_health(docs: DataFrame) -> DataFrame:
+    """Per-doc row-local flags, then bounded-key per-source counters."""
     from tablestructurerec_spark.operators.textstats import tokens_col
 
     staged = docs.select(
@@ -62,7 +60,7 @@ def doc_flags(docs: DataFrame) -> DataFrame:
         tokens_col(F.col("text")).alias("toks"),
         *damage_count_cols(),
     )
-    return staged.select(
+    flags = staged.select(
         "source",
         (
             (F.expr(_RUN1) >= RUN_LIMIT) | (F.expr(_RUN2) >= CYCLE2_LIMIT)
@@ -72,11 +70,6 @@ def doc_flags(docs: DataFrame) -> DataFrame:
         ).alias("has_cc"),
         is_damaged_col(damage_score_col()).alias("is_damaged"),
     )
-
-
-def aggregate_flags(flags: DataFrame) -> DataFrame:
-    """Bounded-key per-source counters over :func:`doc_flags` output —
-    also shared by the streaming twin (complete-mode aggregate there)."""
     agg = flags.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count(F.when(F.col("is_degen"), 1)).cast("long").alias("n_degenerate"),
@@ -92,11 +85,7 @@ def aggregate_flags(flags: DataFrame) -> DataFrame:
         F.expr("n_degenerate * 1000000 DIV n_docs").alias("degen_ppm"),
         F.expr("n_cc_docs * 1000000 DIV n_docs").alias("cc_ppm"),
         F.expr("n_damaged * 1000000 DIV n_docs").alias("damaged_ppm"),
-    )
-
-
-def source_health(docs: DataFrame) -> DataFrame:
-    return aggregate_flags(doc_flags(docs)).orderBy("source")
+    ).orderBy("source")
 
 
 def health_sql() -> str:

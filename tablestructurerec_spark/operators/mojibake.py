@@ -80,11 +80,13 @@ def is_damaged_col(score):
     return (F.col("n_replacement") > 0) | (score > DAMAGE_PER_KCHAR)
 
 
-def encoding_damage(docs: DataFrame, ordered: bool = True) -> DataFrame:
-    """Per-document damage frame over any ``(doc_id, text)`` input —
-    MAP-ONLY, so the streaming twin (``streaming/audit_stream.py``) reuses
-    it verbatim with ``ordered=False`` (a global sort is a presentation
-    concern and is not allowed on an unaggregated stream)."""
+def q_encoding_damage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document ``(doc_id, n_chars, n_replacement, n_c1, n_double,
+    damage_per_kchar, is_damaged)`` — map-only up to the presentation sort
+    by ``doc_id``."""
+    from tablestructurerec_spark.sources.read import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
     staged = docs.select("doc_id", *damage_count_cols())
     score = damage_score_col()
     out = staged.select(
@@ -95,15 +97,7 @@ def encoding_damage(docs: DataFrame, ordered: bool = True) -> DataFrame:
         "n_double",
         score.alias("damage_per_kchar"),
     ).withColumn("is_damaged", is_damaged_col(F.col("damage_per_kchar")))
-    return out.orderBy("doc_id") if ordered else out
-
-
-def q_encoding_damage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document ``(doc_id, n_chars, n_replacement, n_c1, n_double,
-    damage_per_kchar, is_damaged)``."""
-    from tablestructurerec_spark.sources.read import read_table
-
-    return encoding_damage(read_table(spark, sf_dir, "documents"))
+    return out.orderBy("doc_id")
 
 
 _MOJIBAKE_SQL = f"""

@@ -14,12 +14,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "has_reliable_checkpoint", "ARROW_BATCH_ROWS"]
+__all__ = ["get_spark", "default_cpus", "has_reliable_checkpoint", "ARROW_BATCH_ROWS"]
 
 # Arrow batch size for mapInPandas stages: turns are ~1-10 KB of text, so
 # 2048 rows ≈ a few MB per batch — big enough to amortize Arrow/IPC, small
 # enough to keep worker memory flat.
 ARROW_BATCH_ROWS = 2048
+
+
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def get_spark(
@@ -35,7 +40,7 @@ def get_spark(
     mid-iteration then costs a re-read, not a job failure.  Local bench
     leaves it unset and keeps the cheaper ``localCheckpoint``."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus * 2, 8)
     if checkpoint_dir is None:

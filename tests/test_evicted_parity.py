@@ -2,7 +2,8 @@
 module oracle but are not driver rows (``__spark_entry__.DRIVER_ROWS``).
 Leaving the 50-row registry must not lower their verification rigor, so
 this file pins exactly what the driver would: row count, column names, and
-order-insensitive values at the test sf.  The list is derived, not kept.
+order-insensitive values at the test sf, with every generated stage
+compiled (no codegen fallback).  The list is derived, not kept.
 """
 
 import math
@@ -54,7 +55,14 @@ def test_every_module_oracle_has_a_query():
 
 @pytest.mark.parametrize("name", EVICTED)
 def test_evicted_query_matches_oracle(spark, name):
-    got = QUERIES[name](spark, SF_DIR).toPandas()
+    # codegen.fallback=false: a whole-stage-codegen compile failure raises
+    # instead of silently running interpreted (tests/test_codegen_health.py)
+    prev = spark.conf.get("spark.sql.codegen.fallback", "true")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        got = QUERIES[name](spark, SF_DIR).toPandas()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
     want = _duck(ORACLES[name])
     assert list(got.columns) == list(want.columns), name
     assert len(got) == len(want), name
