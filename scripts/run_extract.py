@@ -3,7 +3,7 @@
 
   spark-submit --py-files pkg.zip scripts/run_extract.py \
       --input /path/to/transcripts_parquet --output /path/to/out \
-      [--buckets 256] [--synthetic-convs N]
+      [--buckets 64] [--synthetic-convs N]
 """
 
 from __future__ import annotations

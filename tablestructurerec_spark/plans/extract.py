@@ -12,6 +12,10 @@ Shape of the plan (designed for 10^12 turns):
   skew cannot concentrate load: partitioning follows input splits, not
   conv_id.  Only an explicit final ``orderBy`` (optional, for stable output)
   shuffles, and AQE handles its skew.
+* ``extract_turns`` — the same stage and kernel loop without the pre-filter:
+  text that fails it is nulled instead, and each turn without a table
+  yields one row with a null ``table_idx``, so the lineage write can count
+  turns above its shuffle.
 
 Column pruning is done MANUALLY before the UDF (select exactly
 conv_id/turn_idx/text) because Catalyst cannot prune through an opaque
@@ -21,6 +25,7 @@ conv_id/turn_idx/text) because Catalyst cannot prune through an opaque
 from __future__ import annotations
 
 import zlib
+from functools import partial
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -39,6 +44,7 @@ from ..functions.text import (
 __all__ = [
     "clean_turns",
     "extract_tables",
+    "extract_turns",
     "extract_cells",
     "extract_transcripts",
     "TABLES_SCHEMA",
@@ -68,12 +74,28 @@ def _table_seed(conv_id: str, turn_idx: int, table_idx: int) -> int:
     return zlib.crc32(f"{conv_id}|{turn_idx}|{table_idx}".encode())
 
 
-def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+# the columns of a turn row: a turn that yields no table (null table_idx)
+_TURN_ROW = dict.fromkeys(("table_kind", "pred_html", "cell_bboxes", "logic_points", "n_cells"))
+
+
+def _extract_batch(
+    batches: Iterator[pd.DataFrame], turn_rows: bool = False
+) -> Iterator[pd.DataFrame]:
+    """Table rows of each turn; with ``turn_rows``, a turn without a table
+    fragment (null text included) yields one row with a null ``table_idx``."""
     cols = {
         "conv_id": [], "turn_idx": [], "table_idx": [], "table_kind": [],
         "pred_html": [], "cell_bboxes": [], "logic_points": [], "n_cells": [],
         "error": [],
     }
+
+    def add(conv_id, turn_idx, table_idx, res, err):
+        cols["conv_id"].append(conv_id)
+        cols["turn_idx"].append(turn_idx)
+        cols["table_idx"].append(table_idx)
+        for k in _TURN_ROW:
+            cols[k].append(res[k])
+        cols["error"].append(err)
 
     def flush():
         out = pd.DataFrame(cols)
@@ -85,7 +107,10 @@ def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for conv_id, turn_idx, text in zip(
             pdf["conv_id"], pdf["turn_idx"], pdf["text"]
         ):
-            for ti, (_, _, html) in enumerate(find_table_fragments(text)):
+            frags = find_table_fragments(text) if text is not None else []
+            if turn_rows and not frags:
+                add(conv_id, turn_idx, None, _TURN_ROW, None)
+            for ti, (_, _, html) in enumerate(frags):
                 # per-table degradation, as the reference degrades per image
                 # (ref lineless_table_rec/main.py:132-134) — one poisoned
                 # fragment must not fail a 10^12-turn job; the error column
@@ -96,15 +121,7 @@ def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 except Exception as exc:  # noqa: BLE001 - deliberate catch-all
                     res = empty_table_result("error")
                     err = f"{type(exc).__name__}: {exc}"[:500]
-                cols["conv_id"].append(conv_id)
-                cols["turn_idx"].append(turn_idx)
-                cols["table_idx"].append(ti)
-                cols["table_kind"].append(res["table_kind"])
-                cols["pred_html"].append(res["pred_html"])
-                cols["cell_bboxes"].append(res["cell_bboxes"])
-                cols["logic_points"].append(res["logic_points"])
-                cols["n_cells"].append(res["n_cells"])
-                cols["error"].append(err)
+                add(conv_id, turn_idx, ti, res, err)
         if cols["conv_id"]:
             yield flush()
 
@@ -113,6 +130,16 @@ def extract_tables(df: DataFrame) -> DataFrame:
     """One row per reconstructed table, keyed (conv_id, turn_idx, table_idx)."""
     src = df.where(has_table_col(F.col("text"))).select("conv_id", "turn_idx", "text")
     return src.mapInPandas(_extract_batch, schema=TABLES_SCHEMA)
+
+
+def extract_turns(df: DataFrame) -> DataFrame:
+    """``extract_tables`` plus one row with a null ``table_idx`` per turn that
+    yields no table, so every input turn is seen downstream.  No prefilter:
+    the text is nulled instead, and a table-free turn sends only its keys
+    through Arrow."""
+    text = F.when(has_table_col(F.col("text")), F.col("text")).alias("text")
+    src = df.select("conv_id", "turn_idx", text)
+    return src.mapInPandas(partial(_extract_batch, turn_rows=True), schema=TABLES_SCHEMA)
 
 
 def extract_cells(df: DataFrame) -> DataFrame:

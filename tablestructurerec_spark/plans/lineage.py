@@ -7,22 +7,29 @@ and metrics tables".  Design (SURVEY.md §4):
   a stable, data-independent partitioning that also *salts* skewed
   conversations across buckets at the granularity that matters (bucket
   count ≫ conversation count per bucket);
-* ONE distributed job per run covers every not-yet-done bucket: the input
-  is scanned ONCE, extraction output lands under
-  ``out_dir/tables/bucket=<b>/`` via ``write.partitionBy("bucket")`` with
-  dynamic partition overwrite (only this run's buckets are replaced, so
-  re-runs are idempotent), and a lineage row
-  (bucket, status, n_turns, n_tables, wall_s, run_id) is appended to
-  ``out_dir/_lineage/`` per bucket;
+* ONE input scan per run covers every not-yet-done bucket: the kernel runs
+  on the input splits, and its narrow output is hash-shuffled once on
+  ``bucket`` into ``P = defaultParallelism`` partitions (salted by
+  ``conv_id`` into ``k = ceil(P / n_buckets)`` parts when P exceeds the
+  bucket count), so each bucket is written by at most k tasks and a fresh
+  run writes at most ``n_buckets * k`` data files, not tasks × buckets.
+  Output lands under ``out_dir/tables/bucket=<b>/`` via
+  ``write.partitionBy("bucket")`` with dynamic partition overwrite (only
+  this run's buckets are replaced, so re-runs are idempotent), and a lineage
+  row (bucket, n_buckets, status, n_turns, n_tables, wall_s, run_id) is
+  appended to ``out_dir/_lineage/`` per bucket;
 * resume = anti-join: buckets whose latest lineage status is ``ok`` are
   skipped; everything else re-runs.  A crash mid-write commits nothing (the
   parquet committer stages to _temporary), leaves no ``ok`` rows, and the
   next run redoes exactly the unfinished buckets — exactly-once at bucket
-  granularity;
-* metrics ride the write job: ``n_turns`` and ``n_tables`` are two
-  ``DataFrame.observe`` observations (one ``count_if`` per todo bucket) on
-  the bucketed input and on the extract output, read after the write —
-  no second input scan and no re-read of the written files.
+  granularity.  Bucket ids mean nothing across bucket counts, so a resume
+  with another ``n_buckets`` than the ok rows record is refused;
+* metrics ride the write: ``n_turns`` and ``n_tables`` are one
+  ``DataFrame.observe`` observation (one ``count_if`` per todo bucket and
+  metric) above the shuffle, in the write's result stage, read after the
+  write — no second input scan and no re-read of the written files.  The
+  kernel emits a row with a null ``table_idx`` for each turn without a
+  table so that every turn reaches the observation.
 
 Storage is either a directory (``out_dir`` = path: ``<dir>/tables`` +
 ``<dir>/_lineage`` parquet) or a catalog (``out_dir`` = ``catalog:<prefix>``:
@@ -39,14 +46,17 @@ from __future__ import annotations
 import time
 from typing import List, Tuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import extract_tables
+from .extract import extract_turns
 
 __all__ = ["bucket_col", "completed_buckets", "run_with_lineage"]
 
-LINEAGE_SCHEMA = "bucket int, status string, n_turns long, n_tables long, wall_s double, run_id string"
+LINEAGE_SCHEMA = (
+    "bucket int, n_buckets int, status string, n_turns long, n_tables long, "
+    "wall_s double, run_id string"
+)
 
 
 def bucket_col(n_buckets: int):
@@ -87,22 +97,66 @@ def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> List[int]:
+def _ok_rows(spark: SparkSession, out_dir: str) -> List[Row]:
+    """Distinct ``(bucket, n_buckets)`` of the lineage rows marked ok."""
     lin = _read_lineage(spark, out_dir)
     if lin is None:
         return []
-    ok = lin.where(F.col("status") == "ok").select("bucket").distinct()
-    return sorted(r.bucket for r in ok.collect())
+    return lin.where(F.col("status") == "ok").select("bucket", "n_buckets").distinct().collect()
+
+
+def completed_buckets(spark: SparkSession, out_dir: str) -> List[int]:
+    return sorted({r.bucket for r in _ok_rows(spark, out_dir)})
 
 
 def _per_bucket_counts(df: DataFrame, todo: List[int]) -> Tuple[DataFrame, Observation]:
-    """``df`` observed with one ``count_if`` per todo bucket, gathered in one
-    array metric ``n`` in ``todo`` order.  One SQL expression, not a Column
-    per bucket: each Column built in Python is a driver round trip (~0.3 s
-    for 64 buckets)."""
+    """``df`` observed with two array metrics in ``todo`` order: ``n_turns``
+    counts a bucket's rows with ``table_idx`` null or 0 (one per turn) and
+    ``n_tables`` its rows with a ``table_idx``.  One SQL expression per
+    metric, not a Column per bucket: each Column built in Python is a driver
+    round trip (~0.3 s for 64 buckets)."""
+
+    def per_bucket(cond: str):
+        counts = ", ".join(f"count_if(bucket = {b} AND {cond})" for b in todo)
+        return F.expr(f"array({counts})")
+
     obs = Observation()
-    counts = ", ".join(f"count_if(bucket = {b})" for b in todo)
-    return df.observe(obs, F.expr(f"array({counts})").alias("n")), obs
+    return df.observe(
+        obs,
+        per_bucket("coalesce(table_idx, 0) = 0").alias("n_turns"),
+        per_bucket("table_idx IS NOT NULL").alias("n_tables"),
+    ), obs
+
+
+def _bucketed_tables(
+    spark: SparkSession, transcripts: DataFrame, todo: List[int], n_buckets: int
+) -> Tuple[DataFrame, Observation]:
+    """The table rows of the ``todo`` buckets, hash-shuffled so that each
+    bucket reaches at most ``ceil(P / n_buckets)`` writer tasks, with
+    ``P = defaultParallelism``, and the observation of their counts."""
+    src = transcripts.withColumn("bucket", bucket_col(n_buckets)).where(
+        F.col("bucket").isin(todo)
+    )
+    # the kernel stays on the input splits; bucket is a pure function of
+    # conv_id, so the output re-derives it — extract_turns keeps its narrow
+    # 3-column projection into mapInPandas
+    rows = extract_turns(src).withColumn("bucket", bucket_col(n_buckets))
+    p = spark.sparkContext.defaultParallelism
+    k = -(-p // n_buckets)
+    keys = [F.col("bucket")]
+    if k > 1:
+        # murmur3, not xxhash64: pmod(xxhash64(conv_id), k) is a function of
+        # the bucket whenever k shares a factor with n_buckets
+        keys.append(F.pmod(F.hash("conv_id"), F.lit(k)))
+    # an explicit partition count, which AQE does not coalesce
+    rows = rows.repartition(p, *keys)
+    # The counts are exactly-once only because the observed node sits in the
+    # write's result stage, above the only shuffle: a retried or reused map
+    # stage does not reach it, and the write sorts locally.  So the kernel
+    # emits a turn row for each turn without a table, and the turn rows are
+    # dropped only above the observation.
+    rows, obs = _per_bucket_counts(rows, todo)
+    return rows.where(F.col("table_idx").isNotNull()), obs
 
 
 def run_with_lineage(
@@ -115,32 +169,32 @@ def run_with_lineage(
 ) -> List[int]:
     """Extract all buckets not yet marked ok; returns the buckets processed.
 
-    Single-pass: one distributed write job covers every todo bucket and
-    collects the lineage counts (the input is never re-scanned).  ``wall_s``
-    is the run's wall time, recorded on each of the run's lineage rows.
+    Single-pass: one input scan feeds the write of every todo bucket, which
+    also collects the lineage counts (the input is never re-scanned).
+    ``wall_s`` is the run's wall time, recorded on each of the run's lineage
+    rows.
+
+    Raises ``ValueError`` before any write if ``out_dir`` holds ok buckets
+    of another bucket count: bucket ids do not carry over between counts.
 
     ``fail_after`` caps the run at N buckets (test hook simulating a crash
     between runs).
     """
-    done = set(completed_buckets(spark, out_dir))
+    ok = _ok_rows(spark, out_dir)
+    other = {r.n_buckets for r in ok} - {n_buckets}
+    if other:
+        raise ValueError(
+            f"{out_dir} holds buckets of a {other.pop()}-bucket run; "
+            f"cannot resume it with {n_buckets} buckets"
+        )
+    done = {r.bucket for r in ok}
     todo = [b for b in range(n_buckets) if b not in done]
     if fail_after is not None:
         todo = todo[:fail_after]
     if not todo:
         return []
     t0 = time.perf_counter()
-    src = transcripts.withColumn("bucket", bucket_col(n_buckets)).where(
-        F.col("bucket").isin(todo)
-    )
-    # The counts are exactly-once only because both observed nodes sit in
-    # the write's single result stage (extract_tables is narrow, the
-    # partitioned write sorts locally): a shuffle between them and the write
-    # would let a retried or reused stage count its rows twice.
-    src, turns_obs = _per_bucket_counts(src, todo)
-    # bucket is a pure function of conv_id, so the output re-derives it —
-    # extract_tables keeps its narrow 3-column projection into mapInPandas
-    tables = extract_tables(src).withColumn("bucket", bucket_col(n_buckets))
-    tables, tables_obs = _per_bucket_counts(tables, todo)
+    tables, obs = _bucketed_tables(spark, transcripts, todo, n_buckets)
     is_cat, tables_t, lin_t = _names(out_dir)
     overwrite_key = "spark.sql.sources.partitionOverwriteMode"
     old_mode = spark.conf.get(overwrite_key, None)
@@ -163,9 +217,10 @@ def run_with_lineage(
         else:
             spark.conf.set(overwrite_key, old_mode)
     wall = time.perf_counter() - t0
+    counts = obs.get
     rows = [
-        (b, "ok", n_turns, n_tables, wall, run_id)
-        for b, n_turns, n_tables in zip(todo, turns_obs.get["n"], tables_obs.get["n"])
+        (b, n_buckets, "ok", n_turns, n_tables, wall, run_id)
+        for b, n_turns, n_tables in zip(todo, counts["n_turns"], counts["n_tables"])
     ]
     lineage = spark.createDataFrame(rows, LINEAGE_SCHEMA)
     if is_cat:

@@ -60,11 +60,12 @@ def test_resume_is_noop_when_complete(spark, transcripts, tmp_path):
 
 
 def test_run_is_single_pass_regardless_of_bucket_count(spark, transcripts, tmp_path):
-    """With the input cached, a run into a fresh output launches at most two
-    Spark jobs in either storage mode, whatever the bucket count: the
-    extract write, which also observes the lineage counts, and the lineage
-    append.  No per-bucket scan, no second count scan of the input, no
-    re-read of the output."""
+    """With the input cached, a run into a fresh output launches exactly
+    three Spark jobs in either storage mode, whatever the bucket count: the
+    map stage of the bucket shuffle (its own job under AQE), the write,
+    which also observes the lineage counts, and the lineage append.  No
+    per-bucket scan, no second count scan of the input, no re-read of the
+    output."""
     sc = spark.sparkContext
     transcripts.count()  # materialize the cache outside the measured runs
 
@@ -85,7 +86,73 @@ def test_run_is_single_pass_regardless_of_bucket_count(spark, transcripts, tmp_p
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     jobs = {(m, n): jobs_for(m, n) for m in ("path", "catalog") for n in (3, 12)}
-    assert max(jobs.values()) <= 2, jobs
+    assert set(jobs.values()) == {3}, jobs
+
+
+def _plan_nodes(df):
+    """Node names of ``df``'s physical plan, top down."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    names = []
+    for line in plan.splitlines()[1:]:  # [0] is the AdaptiveSparkPlan root
+        node = line.lstrip(" +-:|")
+        if node.startswith("*("):  # whole-stage codegen id
+            node = node.split(" ", 1)[1]
+        names.append(node.split(" ", 1)[0])
+    return names
+
+
+def test_write_plan_scans_once_and_observes_above_the_shuffle(spark, transcripts, tmp_path):
+    """The write's plan reads the input with one scan, runs the kernel below
+    the only shuffle, and observes the counts above it, in the write's
+    result stage, where a retried map stage cannot count a row twice."""
+    from tablestructurerec_spark.plans.lineage import _bucketed_tables
+
+    src_dir = str(tmp_path / "src")
+    transcripts.repartition(3).write.parquet(src_dir)
+    tables, _obs = _bucketed_tables(spark, spark.read.parquet(src_dir), [0, 2, 5], N_BUCKETS)
+    nodes = _plan_nodes(tables)
+    assert sum("Scan" in n for n in nodes) == 1, nodes
+    assert nodes.count("Exchange") == 1, nodes
+    assert nodes.count("CollectMetrics") == 1, nodes
+    shuffle = nodes.index("Exchange")
+    assert nodes.index("CollectMetrics") < shuffle < nodes.index("MapInPandas"), nodes
+
+
+def test_fresh_run_file_count_is_bounded_by_buckets(spark, transcripts, tmp_path):
+    """Each bucket is written by at most ``ceil(P / n_buckets)`` tasks, so a
+    fresh run writes at most ``n_buckets * ceil(P / n_buckets)`` data files
+    under ``tables/``, however many partitions the input has."""
+    p = spark.sparkContext.defaultParallelism
+    src = transcripts.repartition(2 * p).cache()
+    try:
+        assert src.rdd.getNumPartitions() == 2 * p
+        for n_buckets in (3, 12):
+            out = tmp_path / f"b{n_buckets}"
+            run_with_lineage(spark, src, str(out), n_buckets=n_buckets)
+            files = list((out / "tables").glob("bucket=*/*.parquet"))
+            assert 0 < len(files) <= n_buckets * -(-p // n_buckets), (n_buckets, len(files))
+    finally:
+        src.unpersist()
+
+
+@pytest.mark.parametrize("mode", ["path", "catalog"])
+def test_resume_with_another_bucket_count_is_refused(spark, transcripts, tmp_path, mode):
+    """Bucket ids do not carry over between bucket counts: a resume with
+    another count would write some tables twice.  It is refused before any
+    write, naming both counts."""
+    out = str(tmp_path / "out") if mode == "path" else "catalog:tsr_test_refuse"
+    if mode == "catalog":
+        _drop_catalog(spark, out)
+    try:
+        run_with_lineage(spark, transcripts, out, n_buckets=4, run_id="r1", fail_after=2)
+        before = read_output(spark, out).count()
+        with pytest.raises(ValueError, match=r"4-bucket run.*with 8 buckets"):
+            run_with_lineage(spark, transcripts, out, n_buckets=8, run_id="r2")
+        assert read_output(spark, out).count() == before
+        assert completed_buckets(spark, out) == [0, 1]
+    finally:
+        if mode == "catalog":
+            _drop_catalog(spark, out)
 
 
 def _drop_catalog(spark, out):
@@ -111,11 +178,14 @@ def test_lineage_counts_equal_input_and_written_rows(spark, transcripts, tmp_pat
     """Each bucket's ``n_turns`` is the input's turn count in that bucket and
     its ``n_tables`` the rows written there, across a crash and a resume;
     covers a bucket with turns but no tables and a run with no table at all.
-    More buckets than conversations leave some holding only table-free ones."""
+    More buckets than conversations leave some holding only table-free ones.
+    The ``<tablet>`` and unclosed ``<table`` turns pass the prefilter but
+    yield no table; they still count as turns."""
     n_buckets = 32
+    texts = ["no table here", "a <tablet> b", "x <table"]
     plain = spark.createDataFrame(
-        [(f"plain-{c}", t, "user", "no table here", None, None)
-         for c in range(8) for t in range(3)],
+        [(f"plain-{c}", t, "user", text, None, None)
+         for c in range(8) for t, text in enumerate(texts)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
     inputs = {"mixed": transcripts.unionByName(plain), "no_tables": plain}
