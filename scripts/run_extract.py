@@ -2,8 +2,8 @@
 """spark-submit entry point: extract a transcripts table with lineage/resume.
 
   spark-submit --py-files pkg.zip scripts/run_extract.py \
-      --input /path/to/transcripts_parquet --output /path/to/out \
-      [--buckets 64] [--synthetic-convs N]
+      (--input /path/to/transcripts_parquet | --synthetic-convs N) \
+      --output /path/to/out [--buckets 64]
 """
 
 from __future__ import annotations
@@ -16,10 +16,11 @@ from pyspark.sql import SparkSession
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", default="")
+    src = ap.add_mutually_exclusive_group(required=True)
+    src.add_argument("--input", help="transcripts parquet path")
+    src.add_argument("--synthetic-convs", type=int, help="generate N synthetic conversations")
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--synthetic-convs", type=int, default=0)
     ap.add_argument(
         "--checkpoint-dir",
         default=os.environ.get("SPARK_GRAFT_CKPT_DIR", ""),
@@ -36,7 +37,7 @@ def main() -> None:
     from tablestructurerec_spark.sources.synthetic import synth_transcripts
     from tablestructurerec_spark.sources.transcripts import read_transcripts
 
-    if args.synthetic_convs:
+    if args.synthetic_convs is not None:
         transcripts = synth_transcripts(spark, args.synthetic_convs)
     else:
         transcripts = read_transcripts(spark, args.input)

@@ -13,18 +13,19 @@ Shape of the plan (designed for 10^12 turns):
   conv_id.  Only an explicit final ``orderBy`` (optional, for stable output)
   shuffles, and AQE handles its skew.
 * ``extract_turns`` — the same stage and kernel loop without the pre-filter:
-  text that fails it is nulled instead, and each turn without a table
-  yields one row with a null ``table_idx``, so the lineage write can count
-  turns above its shuffle.
+  text that fails it is nulled instead, and each task ends with one count
+  row ``(bucket, n_turns, n_tables)`` per bucket it read, so the lineage
+  write can count turns and tables above its shuffle.
 
 Column pruning is done MANUALLY before the UDF (select exactly
-conv_id/turn_idx/text) because Catalyst cannot prune through an opaque
+conv_id/turn_idx/text, plus bucket for ``extract_turns``) because Catalyst cannot prune through an opaque
 ``mapInPandas`` (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
 import zlib
+from collections import Counter
 from functools import partial
 from typing import Iterator, Tuple
 
@@ -74,56 +75,63 @@ def _table_seed(conv_id: str, turn_idx: int, table_idx: int) -> int:
     return zlib.crc32(f"{conv_id}|{turn_idx}|{table_idx}".encode())
 
 
-# the columns of a turn row: a turn that yields no table (null table_idx)
-_TURN_ROW = dict.fromkeys(("table_kind", "pred_html", "cell_bboxes", "logic_points", "n_cells"))
+# the kernel's per-table output columns
+_RESULT = ("table_kind", "pred_html", "cell_bboxes", "logic_points", "n_cells")
+# extract_turns' rows: table rows with their bucket, and count rows
+_COUNTED_SCHEMA = TABLES_SCHEMA + ", bucket int, n_turns long, n_tables long"
 
 
 def _extract_batch(
-    batches: Iterator[pd.DataFrame], turn_rows: bool = False
+    batches: Iterator[pd.DataFrame], counted: bool = False
 ) -> Iterator[pd.DataFrame]:
-    """Table rows of each turn; with ``turn_rows``, a turn without a table
-    fragment (null text included) yields one row with a null ``table_idx``."""
-    cols = {
-        "conv_id": [], "turn_idx": [], "table_idx": [], "table_kind": [],
-        "pred_html": [], "cell_bboxes": [], "logic_points": [], "n_cells": [],
-        "error": [],
-    }
+    """Table rows of each turn (a null text has none).  With ``counted``
+    the input and the table rows carry ``bucket``, and after the last batch
+    one count row per bucket seen follows: ``(bucket, n_turns, n_tables)``
+    with every other column null, counting the turns this task read and the
+    table rows it emitted."""
+    keys = ("conv_id", "turn_idx", "bucket") if counted else ("conv_id", "turn_idx")
+    table_names = [*keys, "table_idx", *_RESULT, "error"]
+    names = table_names + ["n_turns", "n_tables"] if counted else table_names
+    n_turns: Counter = Counter()
+    n_tables: Counter = Counter()
 
-    def add(conv_id, turn_idx, table_idx, res, err):
-        cols["conv_id"].append(conv_id)
-        cols["turn_idx"].append(turn_idx)
-        cols["table_idx"].append(table_idx)
-        for k in _TURN_ROW:
-            cols[k].append(res[k])
-        cols["error"].append(err)
-
-    def flush():
-        out = pd.DataFrame(cols)
-        for k in cols:
-            cols[k] = []
-        return out
+    def frame(cols):
+        n = len(next(iter(cols.values())))
+        return pd.DataFrame({k: cols[k] if k in cols else [None] * n for k in names})
 
     for pdf in batches:
-        for conv_id, turn_idx, text in zip(
-            pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-        ):
+        cols = {k: [] for k in table_names}
+        for *key, text in zip(*(pdf[k] for k in keys), pdf["text"]):
             frags = find_table_fragments(text) if text is not None else []
-            if turn_rows and not frags:
-                add(conv_id, turn_idx, None, _TURN_ROW, None)
+            if counted:
+                n_turns[key[2]] += 1
+                n_tables[key[2]] += len(frags)
             for ti, (_, _, html) in enumerate(frags):
                 # per-table degradation, as the reference degrades per image
                 # (ref lineless_table_rec/main.py:132-134) — one poisoned
                 # fragment must not fail a 10^12-turn job; the error column
                 # feeds the lineage/metrics tables
                 try:
-                    res = process_table_html(html, _table_seed(conv_id, turn_idx, ti))
+                    res = process_table_html(html, _table_seed(key[0], key[1], ti))
                     err = None
                 except Exception as exc:  # noqa: BLE001 - deliberate catch-all
                     res = empty_table_result("error")
                     err = f"{type(exc).__name__}: {exc}"[:500]
-                add(conv_id, turn_idx, ti, res, err)
-        if cols["conv_id"]:
-            yield flush()
+                for k, v in zip(keys, key):
+                    cols[k].append(v)
+                cols["table_idx"].append(ti)
+                for k in _RESULT:
+                    cols[k].append(res[k])
+                cols["error"].append(err)
+        if cols["table_idx"]:
+            yield frame(cols)
+    if n_turns:
+        buckets = list(n_turns)
+        yield frame({
+            "bucket": buckets,
+            "n_turns": [n_turns[b] for b in buckets],
+            "n_tables": [n_tables[b] for b in buckets],
+        })
 
 
 def extract_tables(df: DataFrame) -> DataFrame:
@@ -133,13 +141,17 @@ def extract_tables(df: DataFrame) -> DataFrame:
 
 
 def extract_turns(df: DataFrame) -> DataFrame:
-    """``extract_tables`` plus one row with a null ``table_idx`` per turn that
-    yields no table, so every input turn is seen downstream.  No prefilter:
-    the text is nulled instead, and a table-free turn sends only its keys
-    through Arrow."""
+    """The table rows of ``df``, which carries ``bucket``, each with its
+    bucket; then, from each task, one count row per bucket it read:
+    ``(bucket, n_turns, n_tables)`` with a null ``table_idx``, the task's
+    turns of that bucket and the table rows it emitted for them.  So the
+    count rows of a bucket sum to its input turns and its table rows, at
+    most one row per task and bucket, however many turns are table-free.
+    No prefilter: the text is nulled instead, so a table-free turn sends
+    only its keys through Arrow and still counts."""
     text = F.when(has_table_col(F.col("text")), F.col("text")).alias("text")
-    src = df.select("conv_id", "turn_idx", text)
-    return src.mapInPandas(partial(_extract_batch, turn_rows=True), schema=TABLES_SCHEMA)
+    src = df.select("conv_id", "turn_idx", text, "bucket")
+    return src.mapInPandas(partial(_extract_batch, counted=True), schema=_COUNTED_SCHEMA)
 
 
 def extract_cells(df: DataFrame) -> DataFrame:

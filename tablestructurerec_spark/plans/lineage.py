@@ -25,11 +25,15 @@ and metrics tables".  Design (SURVEY.md §4):
   granularity.  Bucket ids mean nothing across bucket counts, so a resume
   with another ``n_buckets`` than the ok rows record is refused;
 * metrics ride the write: ``n_turns`` and ``n_tables`` are one
-  ``DataFrame.observe`` observation (one ``count_if`` per todo bucket and
-  metric) above the shuffle, in the write's result stage, read after the
-  write — no second input scan and no re-read of the written files.  The
-  kernel emits a row with a null ``table_idx`` for each turn without a
-  table so that every turn reaches the observation.
+  ``DataFrame.observe`` aggregate above the shuffle, in the write's result
+  stage, read after the write — no second input scan and no re-read of the
+  written files.  Each kernel task ends with one count row
+  ``(bucket, n_turns, n_tables)`` per bucket it read, the observation
+  collects the count rows, and the driver sums them per bucket, so the
+  observation has one aggregate whatever the bucket count, and the driver
+  holds at most (map tasks × todo buckets) count rows;
+* the lineage rows are appended from an Arrow table, which the JVM decodes
+  without a Python worker.
 
 Storage is either a directory (``out_dir`` = path: ``<dir>/tables`` +
 ``<dir>/_lineage`` parquet) or a catalog (``out_dir`` = ``catalog:<prefix>``:
@@ -44,10 +48,12 @@ here (tested), only the catalog config differs.
 from __future__ import annotations
 
 import time
-from typing import List, Tuple
+from typing import Dict, List, Tuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .extract import extract_turns
 
@@ -109,38 +115,19 @@ def completed_buckets(spark: SparkSession, out_dir: str) -> List[int]:
     return sorted({r.bucket for r in _ok_rows(spark, out_dir)})
 
 
-def _per_bucket_counts(df: DataFrame, todo: List[int]) -> Tuple[DataFrame, Observation]:
-    """``df`` observed with two array metrics in ``todo`` order: ``n_turns``
-    counts a bucket's rows with ``table_idx`` null or 0 (one per turn) and
-    ``n_tables`` its rows with a ``table_idx``.  One SQL expression per
-    metric, not a Column per bucket: each Column built in Python is a driver
-    round trip (~0.3 s for 64 buckets)."""
-
-    def per_bucket(cond: str):
-        counts = ", ".join(f"count_if(bucket = {b} AND {cond})" for b in todo)
-        return F.expr(f"array({counts})")
-
-    obs = Observation()
-    return df.observe(
-        obs,
-        per_bucket("coalesce(table_idx, 0) = 0").alias("n_turns"),
-        per_bucket("table_idx IS NOT NULL").alias("n_tables"),
-    ), obs
-
-
 def _bucketed_tables(
     spark: SparkSession, transcripts: DataFrame, todo: List[int], n_buckets: int
 ) -> Tuple[DataFrame, Observation]:
     """The table rows of the ``todo`` buckets, hash-shuffled so that each
     bucket reaches at most ``ceil(P / n_buckets)`` writer tasks, with
-    ``P = defaultParallelism``, and the observation of their counts."""
+    ``P = defaultParallelism``, and the observation of their counts: one
+    ``counts`` list of ``(bucket, n_turns, n_tables)`` count rows, which
+    :func:`_bucket_counts` sums."""
     src = transcripts.withColumn("bucket", bucket_col(n_buckets)).where(
         F.col("bucket").isin(todo)
     )
-    # the kernel stays on the input splits; bucket is a pure function of
-    # conv_id, so the output re-derives it — extract_turns keeps its narrow
-    # 3-column projection into mapInPandas
-    rows = extract_turns(src).withColumn("bucket", bucket_col(n_buckets))
+    # the kernel stays on the input splits
+    rows = extract_turns(src)
     p = spark.sparkContext.defaultParallelism
     k = -(-p // n_buckets)
     keys = [F.col("bucket")]
@@ -151,12 +138,33 @@ def _bucketed_tables(
     # an explicit partition count, which AQE does not coalesce
     rows = rows.repartition(p, *keys)
     # The counts are exactly-once only because the observed node sits in the
-    # write's result stage, above the only shuffle: a retried or reused map
-    # stage does not reach it, and the write sorts locally.  So the kernel
-    # emits a turn row for each turn without a table, and the turn rows are
-    # dropped only above the observation.
-    rows, obs = _per_bucket_counts(rows, todo)
-    return rows.where(F.col("table_idx").isNotNull()), obs
+    # write's result stage, above the only shuffle: the count rows are map
+    # output, a retried map task regenerates the same ones, and a reducer
+    # reads one attempt's output; a retried or reused map stage does not
+    # reach the observation, and the write sorts locally.  One aggregate
+    # whatever the bucket count: observed metrics reject FILTER, but
+    # collect_list skips the nulls the CASE leaves for table rows.  The
+    # count rows are dropped only above the observation.
+    obs = Observation()
+    rows = rows.observe(
+        obs,
+        F.expr(
+            "collect_list(CASE WHEN n_turns IS NOT NULL "
+            "THEN struct(bucket, n_turns, n_tables) END)"
+        ).alias("counts"),
+    )
+    return rows.where(F.col("n_turns").isNull()).drop("n_turns", "n_tables"), obs
+
+
+def _bucket_counts(obs: Observation, todo: List[int]) -> Dict[int, List[int]]:
+    """``[n_turns, n_tables]`` per todo bucket: the sum of its count rows,
+    ``[0, 0]`` for a bucket without turns.  The driver holds at most
+    (map tasks × todo buckets) count rows."""
+    sums = {b: [0, 0] for b in todo}
+    for r in obs.get["counts"]:
+        sums[r.bucket][0] += r.n_turns
+        sums[r.bucket][1] += r.n_tables
+    return sums
 
 
 def run_with_lineage(
@@ -217,12 +225,12 @@ def run_with_lineage(
         else:
             spark.conf.set(overwrite_key, old_mode)
     wall = time.perf_counter() - t0
-    counts = obs.get
-    rows = [
-        (b, n_buckets, "ok", n_turns, n_tables, wall, run_id)
-        for b, n_turns, n_tables in zip(todo, counts["n_turns"], counts["n_tables"])
-    ]
-    lineage = spark.createDataFrame(rows, LINEAGE_SCHEMA)
+    counts = _bucket_counts(obs, todo)
+    rows = [(b, n_buckets, "ok", *counts[b], wall, run_id) for b in todo]
+    # an Arrow table, which the JVM decodes itself; a list of tuples would
+    # run a Python-worker job to build the rows
+    schema = StructType.fromDDL(LINEAGE_SCHEMA)
+    lineage = spark.createDataFrame(pa.table(dict(zip(schema.names, zip(*rows)))), schema)
     if is_cat:
         lineage.write.mode("append").saveAsTable(lin_t)
     else:

@@ -1,11 +1,17 @@
 """Checkpoint-resume lineage + streaming extraction tests."""
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tablestructurerec_spark.plans.lineage import (
+    LINEAGE_SCHEMA,
     bucket_col,
     completed_buckets,
     read_output,
@@ -116,6 +122,29 @@ def test_write_plan_scans_once_and_observes_above_the_shuffle(spark, transcripts
     assert nodes.count("CollectMetrics") == 1, nodes
     shuffle = nodes.index("Exchange")
     assert nodes.index("CollectMetrics") < shuffle < nodes.index("MapInPandas"), nodes
+    # the observation's width does not grow with the bucket count
+    widths = {
+        n: _observed_aggregates(_bucketed_tables(spark, transcripts, list(range(n)), n)[0])
+        for n in (3, 64)
+    }
+    assert widths[3] == widths[64] > 0, widths
+
+
+def _observed_aggregates(df):
+    """The number of aggregate expressions in ``df``'s ``CollectMetrics``
+    node."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "CollectMetrics":
+            exprs = node.metricExpressions()
+            agg = '"class":"org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression"'
+            return sum(exprs.apply(i).toJSON().count(agg) for i in range(exprs.size()))
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.inputPlan())
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    raise AssertionError("no CollectMetrics node")
 
 
 def test_fresh_run_file_count_is_bounded_by_buckets(spark, transcripts, tmp_path):
@@ -161,12 +190,10 @@ def _drop_catalog(spark, out):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def _lineage_rows(spark, out):
+def _lineage(spark, out):
     if out.startswith("catalog:"):
-        lin = spark.table(f"{out[len('catalog:'):]}_lineage")
-    else:
-        lin = spark.read.parquet(f"{out}/_lineage")
-    return lin.select("bucket", "n_turns", "n_tables").collect()
+        return spark.table(f"{out[len('catalog:'):]}_lineage")
+    return spark.read.parquet(f"{out}/_lineage")
 
 
 def _per_bucket(df):
@@ -180,16 +207,26 @@ def test_lineage_counts_equal_input_and_written_rows(spark, transcripts, tmp_pat
     covers a bucket with turns but no tables and a run with no table at all.
     More buckets than conversations leave some holding only table-free ones.
     The ``<tablet>`` and unclosed ``<table`` turns pass the prefilter but
-    yield no table; they still count as turns."""
-    n_buckets = 32
+    yield no table; they still count as turns.  With the input split into
+    ``2 * P`` parts and fewer buckets than ``P``, every bucket spans several
+    map tasks and, through the ``conv_id`` salt, several writer tasks.  The
+    lineage keeps ``LINEAGE_SCHEMA``'s types across the resume's append."""
     texts = ["no table here", "a <tablet> b", "x <table"]
     plain = spark.createDataFrame(
         [(f"plain-{c}", t, "user", text, None, None)
          for c in range(8) for t, text in enumerate(texts)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    inputs = {"mixed": transcripts.unionByName(plain), "no_tables": plain}
-    for name, df in inputs.items():
+    mixed = transcripts.unionByName(plain)
+    p = spark.sparkContext.defaultParallelism
+    inputs = [
+        ("mixed", mixed, 32),
+        ("no_tables", plain, 32),
+        ("mixed_64", mixed, 64),
+        ("split", mixed.repartition(2 * p), p - 1),
+    ]
+    lineage_schema = StructType.fromDDL(LINEAGE_SCHEMA).simpleString()
+    for name, df, n_buckets in inputs:
         if mode == "path":
             out = str(tmp_path / name)
         else:
@@ -204,15 +241,38 @@ def test_lineage_counts_equal_input_and_written_rows(spark, transcripts, tmp_pat
         except AnalysisException:  # nothing written: no bucket yielded a table
             tables = {}
         want = {b: (turns.get(b, 0), tables.get(b, 0)) for b in range(n_buckets)}
-        got = {r.bucket: (r.n_turns, r.n_tables) for r in _lineage_rows(spark, out)}
+        lin = _lineage(spark, out)
+        schema = lin.schema.simpleString()
+        got = {r.bucket: (r.n_turns, r.n_tables) for r in lin.collect()}
         if mode == "catalog":
             _drop_catalog(spark, out)
         assert got == want, name
+        assert schema == lineage_schema, name
+        if name == "no_tables":
+            assert tables == {}
+        else:
+            assert sum(t for _, t in want.values()) > 0
         if name == "mixed":
             assert any(n_turns and not n_tables for n_turns, n_tables in want.values())
-            assert sum(t for _, t in want.values()) > 0
-        else:
-            assert tables == {}
+
+
+@pytest.mark.parametrize(
+    "args, error",
+    [
+        ([], "one of the arguments --input --synthetic-convs is required"),
+        (["--input", "in", "--synthetic-convs", "3"], "not allowed with argument"),
+    ],
+    ids=["neither", "both"],
+)
+def test_run_extract_takes_exactly_one_input(tmp_path, args, error):
+    """``scripts/run_extract.py`` refuses a run without an input, or with
+    both a path and a synthetic count, before it starts Spark."""
+    script = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "run_extract.py")
+    res = subprocess.run(
+        [sys.executable, script, *args, "--output", str(tmp_path / "out")],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 2 and error in res.stderr, res.stderr
 
 
 def test_streaming_extraction_matches_batch(spark, transcripts, tmp_path):
