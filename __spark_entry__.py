@@ -272,25 +272,6 @@ DRIVER_ROWS = (
     "t_char_integrity",
     "t_semdedup",
 )
-# Operator queries with a module oracle that are NOT driver rows keep a
-# driver-identical parity test (tests/test_evicted_parity.py) and stay
-# bench-timed.  The registered oracle that still covers each one's kernel:
-#   ann_ivf_topk         - ann_ivf_kmeans_topk (shared _ivf_from_centroids)
-#   dedup_minhash_prod   - dedup_minhash_lsh (same generator, production params)
-#   t_dup_spans          - t_dup_span_clusters, t_strip_repeated (islands kernel)
-#   t_group_sample       - t_hybrid_rrf (salted_topk), t_stratified_sample
-#                          (_hash_uniform)
-#   t_bm25_topk          - t_hybrid_rrf (_bm25_scored_ctes verbatim)
-#   ann_lsh_bucket_topk  - t_triplet_mine (sign-LSH banding), t_emb_pipeline
-#                          (multi-probe), ann_ivf_kmeans_topk (cos top-k window)
-#   t_pack_sequences     - t_pipeline_e2e (greedy packer recursive CTE)
-#   ann_bruteforce_topk  - dedup_embedding_cosine, t_triplet_mine (cosine
-#                          kernel), ann_ivf_kmeans_topk (rank-over-cos window)
-#   t_split_assign       - t_emb_pipeline (split_label_col), t_stratified_sample
-#                          (_hash_uniform)
-#   dedup_decontaminate  - t_boilerplate_ngrams (_shingle5), dedup_incremental
-#                          (broadcast reference-side join)
-#   t_length_quantiles   - t_adaptive_filter (type-7 per-source percentile)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -247,10 +247,11 @@ def _codegen_failures(f, saved) -> int:
 
 def _timed_queries() -> dict:
     """Every timed query: the driver rows plus every operator module's
-    ``QUERIES``, including the non-driver ones (their oracle gate is the
-    pytest DuckDB parity in tests/; dropping them from the bench would hide
-    their perf regressions).  ``flagship_extract`` and ``s1_clean_turns``
-    are left out: the extraction pass times the flagship separately."""
+    ``QUERIES`` — the driver rows' operator faces and the few queries
+    registered beyond them, each named with its reason in
+    ``tests/test_operator_reach.py``.  The codegen pin compiles the same
+    set.  ``flagship_extract`` and ``s1_clean_turns`` are left out: the
+    extraction pass times the flagship separately."""
     import __spark_entry__ as entry_mod
     from tablestructurerec_spark.operators import collect
 

@@ -26,20 +26,17 @@ if __name__ == "__main__":
     pairs = dedup.QUERIES["dedup_minhash_lsh"](spark, sf_dir)
     print(f"candidate pairs: {pairs.count()}")
 
-    print("== repeated-substring coverage (top 5 by dup_frac) ==")
-    hygiene.QUERIES["t_dup_spans"](spark, sf_dir).orderBy(
-        "dup_frac", ascending=False
+    print("== repeated-substring clusters (5 largest) ==")
+    hygiene.QUERIES["t_dup_span_clusters"](spark, sf_dir).orderBy(
+        "n_members", ascending=False
     ).show(5)
 
     print("== boilerplate stripped (docs modified) ==")
     stripped = hygiene.QUERIES["t_strip_repeated"](spark, sf_dir)
     print(f"modified: {stripped.where('removed_chars > 0').count()}")
 
-    print("== exact 20-per-language sample ==")
-    sampling.QUERIES["t_group_sample"](spark, sf_dir).groupBy("lang").count().show()
-
-    print("== BM25 top-3 per query ==")
-    retrieval.QUERIES["t_bm25_topk"](spark, sf_dir).where("rank <= 3").show(12)
+    print("== per-language rate sample ==")
+    sampling.QUERIES["t_stratified_sample"](spark, sf_dir).groupBy("lang").count().show()
 
     print("== hybrid (BM25 + vector RRF) top-3 per query ==")
     retrieval.QUERIES["t_hybrid_rrf"](spark, sf_dir).where("rank <= 3").show(12)

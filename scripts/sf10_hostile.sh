@@ -10,15 +10,18 @@
 set -u
 cd "$(dirname "$0")/.."
 WALL=${WALL:-3000}
+SF_DIR=/tmp/sf10
+# the subset detail file bench.py writes, named the way bench.py names it
+DETAIL=$(SPARK_GRAFT_SF_DIR="$SF_DIR" python -c \
+  'import bench; print(f"BENCH/bench_detail_sf{bench._sf_number(bench.SF_DIR)}_cpus{bench.CPUS}_subset.json")')
 for q in dedup_ngram_jaccard t_triplet_mine t_split_leakage_emb dedup_components t_semdedup; do
   echo "=== $q (wall ${WALL}s) $(date +%T)"
-  timeout "$WALL" env SPARK_GRAFT_SF_DIR=/tmp/sf10 \
+  timeout "$WALL" env SPARK_GRAFT_SF_DIR="$SF_DIR" \
     python bench.py --queries "$q" --reps 1 > "/tmp/sf10_${q}.log" 2>&1
   rc=$?
   [ $rc -eq 124 ] && echo "WALL KILL after ${WALL}s" >> "/tmp/sf10_${q}.log"
   tail -1 "/tmp/sf10_${q}.log"
   # each run writes the same _subset detail file; keep a per-query copy
-  cp -f BENCH/bench_detail_sf10.0_cpus32_subset.json \
-        "/tmp/sf10_detail_${q}.json" 2>/dev/null || true
+  cp -f "$DETAIL" "/tmp/sf10_detail_${q}.json"
 done
 echo "=== all done $(date +%T)"

@@ -38,7 +38,7 @@ call :func:`learn_merges` on the same (word, count) rows):
 
 from __future__ import annotations
 
-from typing import Callable, Dict, List, Sequence, Tuple
+from typing import Dict, List, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,7 +53,6 @@ from tablestructurerec_spark.operators.bpe import (
 from tablestructurerec_spark.operators.textstats import tokens_col, tokens_sql
 
 __all__ = [
-    "QUERIES",
     "learn_merges",
     "q_bpe_learned_token_count",
     "bpe_learned_oracle",
@@ -183,8 +182,3 @@ SELECT doc_id,
 FROM enc
 ORDER BY doc_id
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_bpe_learned": q_bpe_learned_token_count,
-}

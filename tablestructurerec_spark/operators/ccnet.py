@@ -16,9 +16,9 @@ score.
 Spark shape, audited for 100 TB:
 
 * the LM is built from a BOUNDED slice (fixed id range — the same bounding
-  rule as ``hygiene._DECON_MAX_ID``): its vocabulary is O(slice), joined to
-  the corpus term frame as the small side (AQE broadcasts it; the corpus
-  side never shuffles for the join);
+  rule as ``similarity._KMEANS_SAMPLE_MAX_ID``): its vocabulary is
+  O(slice), joined to the corpus term frame as the small side (AQE
+  broadcasts it; the corpus side never shuffles for the join);
 * per-doc aggregation: explode → (doc_id, term) partial counts → one
   shuffle on doc_id with map-side combine (tokens of a doc are co-located
   off the scan, so partials collapse before the exchange);
@@ -33,14 +33,13 @@ Spark shape, audited for 100 TB:
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tablestructurerec_spark.operators.textstats import _TOKENS_SQL, tokens_col
 
-__all__ = ["QUERIES", "q_ccnet_buckets", "_CCNET_SQL"]
+__all__ = ["q_ccnet_buckets", "_CCNET_SQL"]
 
 _SCALE = 10_000  # 1e-4 per-token log10 resolution (= retrieval._SCALE_LM)
 _ALPHA = 0.5  # add-α smoothing; OOV mass = α / (total + α·(V+1))
@@ -203,8 +202,3 @@ SELECT s.doc_id, s.lang, s.n_tokens, s.ppl,
 FROM scored s LEFT JOIN thr t USING (lang)
 ORDER BY s.doc_id
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_ccnet_buckets": q_ccnet_buckets,
-}

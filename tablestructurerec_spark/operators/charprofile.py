@@ -20,13 +20,12 @@ any comparison (the repo-wide hash-exactness discipline).
 
 from __future__ import annotations
 
-from typing import Callable, Dict, List, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
-    "QUERIES",
     "q_char_profile",
     "_CHARPROFILE_SQL",
     "SCRIPT_CLASSES",
@@ -152,8 +151,3 @@ ORDER BY doc_id
 
 
 _CHARPROFILE_SQL = _sql()
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_char_profile": q_char_profile,
-}

@@ -28,7 +28,6 @@ ties broken lexicographically.
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,7 +35,6 @@ from pyspark.sql import functions as F
 from tablestructurerec_spark.operators.textstats import tokens_col, tokens_sql
 
 __all__ = [
-    "QUERIES",
     "q_heavy_hitters_cms",
     "cms_sketch",
     "cms_estimate",
@@ -169,8 +167,3 @@ SELECT tok, est_count FROM est
 ORDER BY est_count DESC, tok
 LIMIT {TOP_N}
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_heavy_hitters_cms": q_heavy_hitters_cms,
-}

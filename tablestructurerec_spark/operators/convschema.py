@@ -334,8 +334,6 @@ FROM per_conv GROUP BY fill_decile ORDER BY fill_decile
 
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_role_sequence_audit": q_role_sequence_audit,
-    "t_conv_suffix_pack": q_conv_suffix_pack,
     "t_conv_audit": q_conv_audit,
     "t_pack_efficiency": q_pack_efficiency,
 }

@@ -29,12 +29,11 @@ asserts the scale-shaped plan reproduces it exactly.
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["QUERIES", "q_curriculum_order", "_CURRICULUM_SQL", "SHARD_SIZE"]
+__all__ = ["q_curriculum_order", "_CURRICULUM_SQL", "SHARD_SIZE"]
 
 SHARD_SIZE = 1000
 N_BUCKETS = 16
@@ -103,8 +102,3 @@ SELECT doc_id, n_chars, CAST(order_idx AS BIGINT) AS order_idx,
 FROM ordered
 ORDER BY doc_id
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_curriculum_order": q_curriculum_order,
-}

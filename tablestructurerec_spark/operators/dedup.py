@@ -225,9 +225,10 @@ def q_dedup_minhash_lsh(
     return pairs.orderBy("doc_a", "doc_b")
 
 
-def _banded_cte(n_hashes: int = _N_HASHES, band_rows: int = _BAND_ROWS) -> str:
+def _banded_cte() -> str:
     """The shared DuckDB CTE body producing banded(doc_id, band, bucket) —
-    byte-equal to :func:`_banded_docs` — reused by every minhash oracle."""
+    byte-equal to :func:`_banded_docs` at the default widths — reused by
+    every minhash oracle."""
 
     def sig(i: int) -> str:
         a, b = _MINHASH_A[i], _MINHASH_B[i]
@@ -238,12 +239,12 @@ def _banded_cte(n_hashes: int = _N_HASHES, band_rows: int = _BAND_ROWS) -> str:
 
     def bucket(j: int) -> str:
         return "md5(" + " || '|' || ".join(
-            sig(i) for i in range(j * band_rows, (j + 1) * band_rows)
+            sig(i) for i in range(j * _BAND_ROWS, (j + 1) * _BAND_ROWS)
         ) + ")"
 
     band_selects = "\nUNION ALL\n".join(
         f"SELECT doc_id, {j} AS band, {bucket(j)} AS bucket FROM sh_docs"
-        for j in range(n_hashes // band_rows)
+        for j in range(_N_HASHES // _BAND_ROWS)
     )
     return f"""
 WITH sh_docs AS (
@@ -256,9 +257,9 @@ WITH sh_docs AS (
 )"""
 
 
-def _minhash_oracle(n_hashes: int = _N_HASHES, band_rows: int = _BAND_ROWS) -> str:
+def _minhash_oracle() -> str:
     return f"""
-{_banded_cte(n_hashes, band_rows)}
+{_banded_cte()}
 SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
 FROM banded x JOIN banded y
   ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
@@ -582,9 +583,9 @@ def q_dedup_incremental(
     is not recomputed at all — it is read pre-banded from a table bucketed
     by (band, bucket), so the 100 TB side joins with ZERO exchange and only
     the increment shuffles (``tests/test_dedup_incremental.py`` pins that
-    plan differentially against the unbucketed layout).  Unlike
-    decontamination's fixed-size broadcast set, a crawl increment is
-    unbounded, so this is an equi-join, never a forced broadcast.
+    plan differentially against the unbucketed layout).  Unlike a
+    fixed-size benchmark set, a crawl increment is unbounded, so this is
+    an equi-join, never a forced broadcast.
     """
     hv = _hv_docs(spark, sf_dir)
     is_new = (F.col("doc_id") % _INCR_MOD) == _INCR_REM
@@ -614,15 +615,6 @@ WHERE y.doc_id % {_INCR_MOD} = {_INCR_REM}
   AND x.doc_id % {_INCR_MOD} <> {_INCR_REM}
 ORDER BY new_doc, dup_of
 """
-
-
-def q_dedup_minhash_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME banded plan at production parameters (128 permutations x
-    16 bands of 8) — driver-oracle-verified, so the production path is
-    correctness-checked, not just timed.  At scale: ``bench.py --replicate N
-    --out D``, then ``SPARK_GRAFT_SF_DIR=D bench.py --queries
-    dedup_minhash_prod``."""
-    return q_dedup_minhash_lsh(spark, sf_dir, n_hashes=128, band_rows=8)
 
 
 # ---------------------------------------------------------------------------
@@ -688,17 +680,14 @@ ORDER BY c.doc_id
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_minhash_prod": q_dedup_minhash_prod,
     "dedup_incremental": q_dedup_incremental,
     "dedup_simhash": q_dedup_simhash,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "dedup_components": q_dedup_components,
-    "t_dedup_keep_best": q_dedup_keep_best,
 }
 
 ORACLE_SQL: Dict[str, str] = {
     "dedup_minhash_lsh": _minhash_oracle(),
-    "dedup_minhash_prod": _minhash_oracle(n_hashes=128, band_rows=8),
     "dedup_incremental": _incremental_oracle(),
     "dedup_simhash": _simhash_oracle(),
     "dedup_ngram_jaccard": _JACCARD_SQL,

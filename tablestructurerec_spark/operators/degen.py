@@ -6,7 +6,7 @@ cycles ("yes no yes no ..."), which the corpus-level repetition filters
 those measure repeated CONTENT, this measures repeated STRUCTURE inside a
 single sequence.
 
-Spark shape, audited for 100 TB: the whole operator is MAP-ONLY — one scan,
+Spark shape, audited for 100 TB: the signal is MAP-ONLY — one scan,
 two ``aggregate()`` higher-order functions over the token array computing
 the longest identical-adjacent run and the longest period-2 cycle streak in
 a single left fold each, no explode, no shuffle, nothing leaves the row.
@@ -20,31 +20,19 @@ SCALING.md §2).
 All-integer outputs; the DuckDB twin computes the same runs the NAIVE way
 (unnest + lag + gaps-and-islands windows), so parity proves the folds.
 
-Returns one row per document: ``(doc_id, n_tok, max_run, max_cycle2,
-is_degenerate)`` where ``max_run`` is the longest immediate-repeat run
-(k identical adjacent tokens → k), ``max_cycle2`` the longest streak of
-positions satisfying ``t[i] = t[i-2]``, and ``is_degenerate`` flags
-``max_run >= 5 OR max_cycle2 >= 8``.  Standalone operator with a pytest
-DuckDB-parity oracle (the driver registry sits at its 50-row cap).
+The twin returns one row per document: ``(doc_id, n_tok, max_run,
+max_cycle2, is_degenerate)`` where ``max_run`` is the longest
+immediate-repeat run (k identical adjacent tokens → k), ``max_cycle2`` the
+longest streak of positions satisfying ``t[i] = t[i-2]``, and
+``is_degenerate`` flags ``max_run >= 5 OR max_cycle2 >= 8``.  The folds
+and the twin feed the per-source health report (``operators/health.py``).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict
+from tablestructurerec_spark.operators.textstats import tokens_sql
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from tablestructurerec_spark.operators.textstats import tokens_col, tokens_sql
-
-__all__ = [
-    "QUERIES",
-    "q_degen_loops",
-    "degen_loops",
-    "degen_sql",
-    "RUN_LIMIT",
-    "CYCLE2_LIMIT",
-]
+__all__ = ["degen_sql", "RUN_LIMIT", "CYCLE2_LIMIT"]
 
 RUN_LIMIT = 5
 CYCLE2_LIMIT = 8
@@ -77,35 +65,9 @@ aggregate(
 """
 
 
-def q_degen_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tablestructurerec_spark.sources.read import read_table
-
-    return degen_loops(read_table(spark, sf_dir, "documents"))
-
-
-def degen_loops(docs: DataFrame) -> DataFrame:
-    # Stage the token array as its own projection (SCALING.md §4d): both
-    # folds and the size() reference it; inline, the tokenizer tree would
-    # re-embed once per consumer.
-    staged = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
-    return (
-        staged.select(
-            "doc_id",
-            F.size("toks").cast("long").alias("n_tok"),
-            F.expr(_RUN1).alias("max_run"),
-            F.expr(_RUN2).alias("max_cycle2"),
-        )
-        .withColumn(
-            "is_degenerate",
-            (F.col("max_run") >= RUN_LIMIT) | (F.col("max_cycle2") >= CYCLE2_LIMIT),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def degen_sql() -> str:
-    """DuckDB twin of :func:`q_degen_loops` — the naive unnest + lag +
-    gaps-and-islands computation, value-exact."""
+    """DuckDB twin of the ``_RUN1``/``_RUN2`` folds — the naive unnest +
+    lag + gaps-and-islands computation, value-exact."""
     return f"""
 WITH base AS (
   SELECT doc_id, {tokens_sql()} AS toks FROM documents
@@ -145,8 +107,3 @@ LEFT JOIN runs1 r1 USING (doc_id)
 LEFT JOIN runs2 r2 USING (doc_id)
 ORDER BY doc_id
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_degen_loops": q_degen_loops,
-}

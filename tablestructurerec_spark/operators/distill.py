@@ -25,7 +25,6 @@ Spark shape, audited for 100 TB:
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +32,7 @@ from pyspark.sql import functions as F
 from tablestructurerec_spark.operators.ccnet import _CCNET_SQL, q_ccnet_buckets
 from tablestructurerec_spark.operators.textstats import _TOKENS_SQL, tokens_col
 
-__all__ = ["QUERIES", "q_quality_distill", "_DISTILL_SQL"]
+__all__ = ["q_quality_distill", "_DISTILL_SQL"]
 
 _NB_BUCKETS = 1024
 _NB_ALPHA = 0.5
@@ -222,8 +221,3 @@ LEFT JOIN per_doc p ON d.doc_id = p.doc_id
 CROSS JOIN prior pr
 ORDER BY d.doc_id
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_quality_distill": q_quality_distill,
-}

@@ -37,13 +37,11 @@ a pytest DuckDB-parity oracle (the driver registry sits at its 50-row cap).
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = [
-    "QUERIES",
     "q_distribution_drift",
     "distribution_drift",
     "drift_from_counts",
@@ -210,8 +208,3 @@ JOIN days d1 ON d1.idx = t.pair
 JOIN days d2 ON d2.idx = t.pair + 1
 ORDER BY day_from
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_distribution_drift": q_distribution_drift,
-}

@@ -3,8 +3,8 @@ certifies for the JL / banding / leakage trio (round-5 rotation, the
 ``t_url_hygiene`` / ``t_agent_trace_audit`` precedent): project the corpus
 with the PRODUCTION Johnson–Lindenstrauss ±1 matrix (``operators/jl.py``),
 band the PROJECTED vectors with an integer sign-LSH, multi-probe the eval
-side (Hamming radius 1 — the recall lever of ``similarity.q_ann_lsh_bucket``
-and ``leakage.q_split_leakage_emb``), and emit the split-leakage verdict:
+side (Hamming radius 1 — the recall lever ``leakage.q_split_leakage_emb``
+also pulls), and emit the split-leakage verdict:
 train/eval pairs whose projected-space cosine clears the threshold.
 
 One oracle row certifies every stage, because the composed DuckDB SQL
@@ -17,9 +17,8 @@ projection (map-only, one scan) shrinks every byte the banding shuffles by
 ``D_IN/D_OUT = 4×``, and the leakage audit then runs entirely in the small
 space — banding, probing, and the candidate cosines all touch 16 BIGINTs
 per vector instead of 64 floats.  The verdict differs from auditing the
-original space only through the JL distortion (1±ε), which is exactly what
-``jl.q_jl_recall`` measures — run that diagnostic first, then trust this
-audit.
+original space only through the JL distortion (1±ε), which preserves
+neighbourhoods only when neighbours are separated from non-neighbours.
 
 Cross-engine discipline: the projection is the SINGLE-SOURCED
 ``jl._proj_spark`` / ``jl._proj_duck`` micro-unit BIGINT fold (bit-exact);

@@ -21,13 +21,11 @@ write) and the single-file bench tables.
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
-    "QUERIES",
     "q_file_balance",
     "file_balance_audit",
     "file_balance_sql",
@@ -98,8 +96,3 @@ SELECT file,
        ((n_rows + {TARGET_ROWS_PER_TASK} - 1) // {TARGET_ROWS_PER_TASK})::BIGINT AS split_factor
 FROM per_file, totals ORDER BY file
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_file_balance": q_file_balance,
-}

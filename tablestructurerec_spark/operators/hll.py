@@ -45,7 +45,6 @@ sits at its 50-row cap).
 from __future__ import annotations
 
 import math
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,7 +52,6 @@ from pyspark.sql import functions as F
 from tablestructurerec_spark.operators.textstats import tokens_col, tokens_sql
 
 __all__ = [
-    "QUERIES",
     "q_distinct_hll",
     "distinct_hll",
     "hll_sql",
@@ -178,8 +176,3 @@ SELECT source, v_zero, z_scaled,
 FROM est
 ORDER BY source
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_distinct_hll": q_distinct_hll,
-}

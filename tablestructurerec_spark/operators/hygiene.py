@@ -1,7 +1,7 @@
 """Corpus-hygiene operators for training-data pipelines over ``documents``.
 
-Three operators a large-scale (100 TB) pretraining-data pipeline needs on
-top of the dedup/similarity/textstats suite:
+Operators a large-scale (100 TB) pretraining-data pipeline needs on top
+of the dedup/similarity/textstats suite, among them:
 
 * **PII redaction** (``t_pii_scrub``) — regex scrub of emails, IPv4
   addresses and phone numbers, with per-category match counts.  Pure
@@ -13,15 +13,6 @@ top of the dedup/similarity/textstats suite:
   fraction, most-common-word fraction, most-common-bigram fraction).
   Pure scan+project; the per-row distinct×occurrence count is O(u·n) in
   array sizes, all inside whole-stage codegen.
-* **Benchmark decontamination** (``dedup_decontaminate``) — 5-token-shingle
-  overlap between the training corpus and a benchmark set (here derived
-  deterministically: every ``doc_id % 11 == 0`` document under a FIXED id
-  cap contributes its 200-char prefix as a leaked eval prompt, so the bench
-  set is bounded at any corpus size — like a real external benchmark
-  table).  The 100 TB shape: the benchmark shingle set is *small and
-  fixed-size*, explicitly ``broadcast()``; the training side streams
-  through a map-side hash join — no shuffle of the big side, then one
-  partial-agg shuffle on ``doc_id`` for the per-doc rollup.
 
 Each query has an ANSI-SQL DuckDB oracle over the same parquet.
 """
@@ -33,7 +24,7 @@ from typing import Callable, Dict
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .textstats import _TOKENS_SQL, tokens_col, tokens_sql
+from .textstats import _TOKENS_SQL, tokens_col
 
 __all__ = ["QUERIES", "ORACLE_SQL"]
 
@@ -301,111 +292,6 @@ ORDER BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# benchmark decontamination
-# ---------------------------------------------------------------------------
-_DECON_K = 5  # shingle width (tokens)
-_DECON_MOD = 11  # every doc_id % 11 == 0 contributes a benchmark prompt
-_DECON_PREFIX = 200  # chars of the doc used as the leaked prompt
-_DECON_MIN_OVERLAP = 3  # shingle hits to flag contamination
-# The bench set must be FIXED-SIZE for the broadcast claim to hold at any
-# corpus scale (a real benchmark is an external table of a few thousand
-# prompts).  Capping the id range bounds it to <= _DECON_MAX_ID/_DECON_MOD
-# rows no matter how big `documents` grows; a pure fraction-of-corpus
-# selection would make the broadcast side O(corpus) — a driver OOM at 100 TB.
-_DECON_MAX_ID = 100_000
-
-
-def _shingle5(toks: Column, hashed: bool = True) -> Column:
-    """Sliding 5-gram shingles; ``hashed`` md5s each gram (decontamination
-    keys), ``hashed=False`` keeps the phrase text (boilerplate mining)."""
-    n = F.size(toks) - (_DECON_K - 1)
-
-    def gram(i: Column) -> Column:
-        g = F.concat_ws(" ", F.slice(toks, i, _DECON_K))
-        return F.md5(g) if hashed else g
-
-    seq = F.transform(F.sequence(F.lit(1), n), gram)
-    # sequence(1, 0) is the DESCENDING [1, 0] in Spark, not empty — guard.
-    return F.when(n >= 1, seq).otherwise(F.array().cast("array<string>"))
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    train_sh = (
-        docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
-        .select("doc_id", F.explode(F.array_distinct(_shingle5(F.col("toks")))).alias("sh"))
-    )
-    bench_sh = (
-        docs.where((F.col("doc_id") % _DECON_MOD == 0) & (F.col("doc_id") < _DECON_MAX_ID))
-        .select(
-            F.col("doc_id").alias("bench_id"),
-            tokens_col(F.substring("text", 1, _DECON_PREFIX)).alias("toks"),
-        )
-        .select("bench_id", F.explode(F.array_distinct(_shingle5(F.col("toks")))).alias("sh"))
-    )
-    # benchmark side is small by construction — broadcast it so the training
-    # corpus never shuffles (the 100 TB-safe decontamination shape)
-    overlap = (
-        train_sh.join(F.broadcast(bench_sh), "sh")
-        .groupBy("doc_id", "bench_id")
-        .agg(F.count("*").alias("overlap"))
-    )
-    per_doc = overlap.groupBy("doc_id").agg(
-        F.count("*").cast("int").alias("n_bench_partners"),
-        F.max("overlap").cast("int").alias("max_overlap"),
-    )
-    # plain read for the join side: it carries only doc_id and is about to
-    # be hash-shuffled by the join anyway — spreading it first would be a
-    # redundant exchange (the relational-style opt-out case)
-    all_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return (
-        all_docs
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_bench_partners", F.lit(0)).cast("int").alias("n_bench_partners"),
-            F.coalesce("max_overlap", F.lit(0)).cast("int").alias("max_overlap"),
-            (F.coalesce("max_overlap", F.lit(0)) >= _DECON_MIN_OVERLAP)
-            .cast("int")
-            .alias("contaminated"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-_DECON_SH_SQL = (
-    "list_distinct(list_transform(range(1, greatest(len(toks) - {km1}, 0) + 1),"
-    " i -> md5(array_to_string(toks[i:i + {km1}], ' '))))"
-).format(km1=_DECON_K - 1)
-
-_DECONTAMINATE_SQL = f"""
-WITH train AS (
-  SELECT doc_id, unnest({_DECON_SH_SQL}) AS sh
-  FROM (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents)
-), bench AS (
-  SELECT bench_id, unnest({_DECON_SH_SQL}) AS sh
-  FROM (SELECT doc_id AS bench_id,
-               {tokens_sql(f'substr(text, 1, {_DECON_PREFIX})')} AS toks
-        FROM documents
-        WHERE doc_id % {_DECON_MOD} = 0 AND doc_id < {_DECON_MAX_ID})
-), overlap AS (
-  SELECT t.doc_id, b.bench_id, count(*) AS overlap
-  FROM train t JOIN bench b USING (sh)
-  GROUP BY t.doc_id, b.bench_id
-), per_doc AS (
-  SELECT doc_id, count(*) AS n_bench_partners, max(overlap) AS max_overlap
-  FROM overlap GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(p.n_bench_partners, 0) AS INT) AS n_bench_partners,
-       CAST(coalesce(p.max_overlap, 0) AS INT) AS max_overlap,
-       CAST(coalesce(p.max_overlap, 0) >= {_DECON_MIN_OVERLAP} AS INT) AS contaminated
-FROM documents d LEFT JOIN per_doc p USING (doc_id)
-ORDER BY d.doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # composite corpus filter — the keep/drop decision a pipeline actually runs
 # ---------------------------------------------------------------------------
 _MIN_TOKENS = 10
@@ -528,6 +414,18 @@ ORDER BY doc_id
 _BP_MIN_DOCS = 3
 _BP_TOPN = 20
 _BP_SENTINEL = "this message was generated by an automated assistant"
+_GRAM_K = 5  # shingle width (tokens)
+
+
+def _shingle5(toks: Column) -> Column:
+    """Sliding 5-gram phrase shingles."""
+    n = F.size(toks) - (_GRAM_K - 1)
+    seq = F.transform(
+        F.sequence(F.lit(1), n),
+        lambda i: F.concat_ws(" ", F.slice(toks, i, _GRAM_K)),
+    )
+    # sequence(1, 0) is the DESCENDING [1, 0] in Spark, not empty — guard.
+    return F.when(n >= 1, seq).otherwise(F.array().cast("array<string>"))
 
 
 def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,7 +445,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("text")),
     )
     toks = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
-    grams = _shingle5(F.col("toks"), hashed=False)
+    grams = _shingle5(F.col("toks"))
     return (
         toks.select("doc_id", F.explode(F.array_distinct(grams)).alias("gram"))
         .groupBy("gram")
@@ -570,8 +468,8 @@ WITH aug AS (
 ), grams AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
-             range(1, greatest(len(toks) - {_DECON_K - 1}, 0) + 1),
-             i -> array_to_string(toks[i:i + {_DECON_K - 1}], ' ')))) AS gram
+             range(1, greatest(len(toks) - {_GRAM_K - 1}, 0) + 1),
+             i -> array_to_string(toks[i:i + {_GRAM_K - 1}], ' ')))) AS gram
   FROM toks
 )
 SELECT gram, CAST(count(*) AS INT) AS n_docs
@@ -608,8 +506,15 @@ _ANCHOR_MOD = 11
 
 def _dup_islands(docs: DataFrame) -> DataFrame:
     """``(doc_id, island, s0, e1)`` — maximal merged char spans whose
-    ``_SPAN_W``-char windows recur corpus-wide (shared by ``q_dup_spans``
-    and ``q_strip_repeated``; see ``q_dup_spans`` for the plan shape).
+    ``_SPAN_W``-char windows recur corpus-wide (shared by
+    ``q_dup_span_clusters`` and ``q_strip_repeated``).
+
+    Distributed shape (all integers — hash-exact under any partitioning):
+    one scan explodes each doc into anchored ``(doc_id, start, hash)``
+    windows, repeats are detected as below, and surviving windows merge per
+    doc into maximal spans with the gaps-and-islands pattern (an island
+    opens where ``start`` exceeds the running max of previous ends) — a
+    doc-partitioned window (doc_id is high-cardinality; no skew pivot).
 
     Window starts are CONTENT-DEFINED, not position-strided: a window
     opens at every space character, at every char of the ``_ANCHOR_MOD``
@@ -682,56 +587,6 @@ def _dup_islands(docs: DataFrame) -> DataFrame:
     )
 
 
-def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per document: merged spans of text whose ``_SPAN_W``-char windows
-    occur more than once corpus-wide, plus the duplicated-char fraction.
-
-    Distributed shape (all integers — hash-exact under any partitioning):
-
-    1. one scan explodes each doc into space-anchored ``_SPAN_W``-char
-       windows ``(doc_id, start, xxhash64(window))`` — ~one row per word
-       (see ``_dup_islands`` for why anchoring is content-defined and why
-       the hash choice is engine-local);
-    2. repeats are detected with a partial-agg ``groupBy(hash)`` count +
-       left-semi join back — hot hashes combine map-side and the join is
-       AQE-skew-splittable (the suffix-array step of the reference paper,
-       re-expressed in the shapes Spark scales);
-    3. surviving windows merge per doc into maximal spans with the
-       gaps-and-islands pattern (island opens where ``start`` exceeds the
-       running max of previous ends) — a doc-partitioned window (doc_id
-       is high-cardinality; no skew pivot);
-    4. a left join back to ``documents`` keeps zero-duplication docs in
-       the output (corpus-stats complete).
-    """
-    docs = _t(spark, sf_dir, "documents")
-    per_doc = (
-        _dup_islands(docs)
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_dup_spans"),
-            F.sum(F.col("e1") - F.col("s0")).cast("long").alias("dup_chars"),
-        )
-    )
-    return (
-        docs.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_dup_spans", F.lit(0)).alias("n_dup_spans"),
-            F.coalesce("dup_chars", F.lit(0)).alias("dup_chars"),
-            # zero-length guard: Spark's non-ANSI x/0 is NULL while the
-            # oracle's would be a div-by-zero — both sides pin empty docs
-            # to 0.0 so parity cannot hinge on the corpus never shrinking
-            F.when(
-                F.length("text") > 0,
-                F.round(F.coalesce("dup_chars", F.lit(0)) / F.length("text"), 6),
-            )
-            .otherwise(0.0)
-            .alias("dup_frac"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 # shared CTE chain ending in merged(doc_id, island, s0, e1) — the SQL twin
 # of _dup_islands
 _ISLANDS_CTES = f"""wins AS (
@@ -763,25 +618,9 @@ _ISLANDS_CTES = f"""wins AS (
   FROM islands GROUP BY doc_id, island
 )"""
 
-_DUP_SPANS_SQL = f"""
-WITH {_ISLANDS_CTES}, agg AS (
-  SELECT doc_id, CAST(COUNT(*) AS INT) AS n_dup_spans,
-         CAST(SUM(e1 - s0) AS BIGINT) AS dup_chars
-  FROM merged GROUP BY doc_id
-)
-SELECT d.doc_id,
-       COALESCE(a.n_dup_spans, 0) AS n_dup_spans,
-       COALESCE(a.dup_chars, 0) AS dup_chars,
-       CASE WHEN length(d.text) > 0
-            THEN ROUND(COALESCE(a.dup_chars, 0) * 1.0 / length(d.text), 6)
-            ELSE 0.0 END AS dup_frac
-FROM documents d LEFT JOIN agg a USING (doc_id)
-ORDER BY d.doc_id
-"""
-
 
 def _span_clusters(docs: DataFrame) -> DataFrame:
-    """``t_dup_spans`` islands, attributed to cross-document clusters.
+    """``_dup_islands`` spans, attributed to cross-document clusters.
 
     Cluster key = md5 of the island's own text: two documents carrying the
     SAME repeated block yield byte-identical islands, so content hashing
@@ -843,10 +682,9 @@ ORDER BY s.doc_id, s.s0
 
 
 def q_strip_repeated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The transform ``t_dup_spans`` is the report for: rebuild each
-    document's text with every corpus-repeated span cut out (boilerplate
-    removal — headers, disclaimers, templated blocks recur across docs and
-    their windows trip the corpus-wide repeat count).
+    """Rebuild each document's text with every corpus-repeated span cut out
+    (boilerplate removal — headers, disclaimers, templated blocks recur
+    across docs and their windows trip the corpus-wide repeat count).
 
     The reassembly is row-based and all-integer: each island contributes
     the KEEP segment that precedes it (``lag(e1) … s0``), the LAST island
@@ -1003,8 +841,6 @@ ORDER BY b.doc_id
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_corpus_filter": q_corpus_filter,
     "t_boilerplate_ngrams": q_boilerplate_ngrams,
-    "dedup_decontaminate": q_decontaminate,
-    "t_dup_spans": q_dup_spans,
     "t_dup_span_clusters": q_dup_span_clusters,
     "t_strip_repeated": q_strip_repeated,
     "t_adaptive_filter": q_adaptive_length_filter,
@@ -1013,8 +849,6 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
 ORACLE_SQL: Dict[str, str] = {
     "t_corpus_filter": _CORPUS_FILTER_SQL,
     "t_boilerplate_ngrams": _BOILERPLATE_SQL,
-    "dedup_decontaminate": _DECONTAMINATE_SQL,
-    "t_dup_spans": _DUP_SPANS_SQL,
     "t_dup_span_clusters": _SPAN_CLUSTERS_SQL,
     "t_strip_repeated": _STRIP_REPEATED_SQL,
     "t_adaptive_filter": _ADAPTIVE_FILTER_SQL,

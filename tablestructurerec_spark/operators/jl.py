@@ -1,70 +1,37 @@
 """Johnson–Lindenstrauss random projection — the dimensionality-reduction
 step a 100 TB embedding pipeline runs BEFORE clustering / ANN so every
-downstream shuffle carries 4× fewer bytes.
+downstream shuffle carries 4× fewer bytes (``operators/embpipeline.py``
+projects with it).
 
-* **q_jl_project** — project ``embedding: array<float>[64]`` to 16
-  dimensions with a deterministic ±1 sign matrix (Achlioptas 2003,
-  "Database-friendly random projections": entries in {±1} preserve the JL
-  guarantee while needing only adds — no gaussian draws, no float matrix).
-  The matrix derives from md5 of the (row, col) index pair at import time
-  (python hashlib == the same bytes everywhere) and is embedded as a plan
-  LITERAL on both engines — the refit-literal oracle pattern
-  (``operators/pq.py`` precedent).  Embedding elements are integer-scaled
-  map-side (``floor(v*1e6 + 0.5)`` micro-units, the SCALING.md §2 float
-  discipline), so the projection is an all-BIGINT ``zip_with``/``aggregate``
-  fold — bit-exact across engines, no float-sum ordering hazard.  MAP-ONLY:
-  zero shuffles, zero UDFs; the one ``orderBy`` is the presentation sort
-  for oracle determinism (production face drops it).
+The projection maps ``embedding: array<float>[64]`` to 16 dimensions with
+a deterministic ±1 sign matrix (Achlioptas 2003, "Database-friendly random
+projections": entries in {±1} preserve the JL guarantee while needing only
+adds — no gaussian draws, no float matrix).  The matrix derives from md5 of
+the (row, col) index pair at import time (python hashlib == the same bytes
+everywhere) and is embedded as a plan LITERAL on both engines — the
+refit-literal oracle pattern (``operators/pq.py`` precedent).  Embedding
+elements are integer-scaled map-side (``floor(v*1e6 + 0.5)`` micro-units,
+the SCALING.md §2 float discipline), so the projection is an all-BIGINT
+``zip_with``/``aggregate`` fold — bit-exact across engines, no float-sum
+ordering hazard, zero shuffles, zero UDFs.
 
-* **q_jl_recall** — the MEASUREMENT face: for a deterministic query set,
-  top-k neighbours by exact squared L2 in the ORIGINAL micro-unit space vs
-  the PROJECTED space, reporting ``recall@k`` per query.  Rank ties break
-  on ``(dist, vec_id)``, so the top-k sets are deterministic in both
-  engines and the oracle is value-exact.  This is a diagnostic you RUN
-  before trusting a projection on a given corpus, not a guarantee: JL
-  preserves distances to (1±ε), so it preserves neighbourhoods exactly
-  when neighbours are separated from non-neighbours — on the isotropic
-  synthetic test corpus (top-10 same-label purity ≈ chance) it honestly
-  reports low recall, while on planted-cluster data the pytest pins
-  recall = 1.0.  It self-joins a bounded query sample (``N_QUERIES``
-  broadcast rows × corpus), never corpus × corpus; the production ANN
-  path feeds the PROJECTED vectors to the existing IVF/PQ operators
-  (``operators/similarity.py``, ``operators/pq.py``).
-
-At 10^12 rows the projection costs one scan and shrinks every byte the
-ANN/SemDeDup family shuffles or broadcasts by ``D/d = 4×``; the sign
-matrix is ~1k literal ints in the plan — nothing is fit, nothing is
-collected.  Standalone operators with pytest DuckDB parity (the driver
-registry sits at its 50-row cap).
+JL preserves distances to (1±ε), so it preserves neighbourhoods exactly
+when neighbours are separated from non-neighbours; on isotropic data it
+does not.  At 10^12 rows the projection costs one scan and shrinks every
+byte the ANN/SemDeDup family shuffles or broadcasts by ``D/d = 4×``; the
+sign matrix is ~1k literal ints in the plan — nothing is fit, nothing is
+collected.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Dict, List
+from typing import List
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-__all__ = [
-    "QUERIES",
-    "q_jl_project",
-    "q_jl_recall",
-    "jl_project",
-    "jl_recall",
-    "jl_project_sql",
-    "jl_recall_sql",
-    "sign_matrix",
-    "D_IN",
-    "D_OUT",
-    "TOP_K",
-    "N_QUERIES",
-]
+__all__ = ["sign_matrix", "D_IN", "D_OUT"]
 
 D_IN = 64
 D_OUT = 16
-TOP_K = 10
-N_QUERIES = 8
 _SCALE = 1_000_000
 
 
@@ -100,9 +67,8 @@ _US_DUCK = f"list_transform(embedding, v -> CAST(floor(v::DOUBLE * {_SCALE} + 0.
 
 
 def _proj_spark() -> str:
-    """The one projection expression (SINGLE-SOURCED: the recall diagnostic
-    must measure exactly the projection jl_project ships — found in
-    review)."""
+    """The projection as a Spark SQL expression over ``embedding``:
+    ``array<bigint>[D_OUT]`` in micro-units."""
     return (
         f"transform(sequence(0, {D_OUT - 1}), j -> "
         f"aggregate(zip_with({_US_SPARK}, element_at({_signs_spark()}, j + 1), "
@@ -111,160 +77,9 @@ def _proj_spark() -> str:
 
 
 def _proj_duck() -> str:
-    """SQL twin of :func:`_proj_spark` — shared by both oracles."""
+    """DuckDB twin of :func:`_proj_spark`."""
     return (
         f"list_transform(range(1, {D_OUT + 1}), j -> "
         f"list_sum(list_transform(list_zip({_US_DUCK}, ({_signs_duck()})[j]), "
         f"p -> p[1] * p[2])))"
     )
-
-
-def q_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tablestructurerec_spark.sources.read import read_table
-
-    return jl_project(read_table(spark, sf_dir, "embeddings"))
-
-
-def jl_project(emb: DataFrame) -> DataFrame:
-    """``(vec_id, proj: array<bigint>[D_OUT])`` in micro-units — map-only."""
-    return emb.select(
-        "vec_id", F.expr(_proj_spark()).alias("proj")
-    ).orderBy("vec_id")
-
-
-def jl_project_sql() -> str:
-    """DuckDB twin of :func:`q_jl_project` — value-exact."""
-    return f"""
-SELECT vec_id, {_proj_duck()} AS proj
-FROM embeddings ORDER BY vec_id
-"""
-
-
-def q_jl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tablestructurerec_spark.sources.read import read_table
-
-    return jl_recall(read_table(spark, sf_dir, "embeddings"))
-
-
-def jl_recall(emb: DataFrame) -> DataFrame:
-    """recall@``TOP_K`` of projected-space neighbours vs original-space
-    ground truth for queries ``vec_id < N_QUERIES``.  Both spaces use
-    exact integer squared-L2; ranks tie-break on vec_id."""
-    # ONE staged (vec_id, u, p) frame, persisted: the four consumers below
-    # (corpus + query side, both spaces) would otherwise be four
-    # differently-pruned corpus scans (the drift.py persist lesson; found
-    # in review).  The result is bounded by N_QUERIES, so it is eagerly
-    # materialized and the cache released in `finally` — no caller-owned
-    # persist lifetime (the skewaudit discipline).
-    base = emb.select(
-        "vec_id",
-        F.expr(_US_SPARK).alias("u"),
-        F.expr(_proj_spark()).alias("p"),
-    ).persist()
-    try:
-        result = _recall_from(base)
-        rows = result.collect()
-        schema = result.schema
-    finally:
-        base.unpersist()
-    return emb.sparkSession.createDataFrame(rows, schema)
-
-
-def _recall_from(base: DataFrame) -> DataFrame:
-    from pyspark.sql import Window
-
-    us = base.select("vec_id", "u")
-    proj = base.select("vec_id", "p")
-    q_u = us.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("u").alias("qu")
-    )
-    q_p = proj.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("p").alias("qp")
-    )
-    d_orig = (
-        us.join(F.broadcast(q_u), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.expr(
-                "aggregate(zip_with(u, qu, (a, b) -> (a - b) * (a - b)), 0L, (a, x) -> a + x)"
-            ).alias("dist"),
-        )
-    )
-    d_proj = (
-        proj.join(F.broadcast(q_p), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.expr(
-                "aggregate(zip_with(p, qp, (a, b) -> (a - b) * (a - b)), 0L, (a, x) -> a + x)"
-            ).alias("dist"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy("dist", "vec_id")
-    top_o = d_orig.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= TOP_K
-    )
-    top_p = d_proj.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= TOP_K
-    )
-    hits = top_o.join(top_p, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hits")
-    )
-    return (
-        q_u.select("qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            # TOP_K divides 1e6, so ppm is a pure integer multiply — no
-            # double division (Spark casts truncate, DuckDB casts round)
-            (F.coalesce("n_hits", F.lit(0)) * F.lit(1_000_000 // TOP_K))
-            .cast("long")
-            .alias("recall_ppm"),
-        )
-        .orderBy("qid")
-    )
-
-
-def jl_recall_sql() -> str:
-    """DuckDB twin of :func:`q_jl_recall` — value-exact."""
-    return f"""
-WITH us AS (
-  SELECT vec_id, {_US_DUCK} AS u FROM embeddings
-), proj AS (
-  SELECT vec_id, {_proj_duck()} AS p FROM embeddings
-), d_orig AS (
-  SELECT q.vec_id AS qid, c.vec_id,
-         list_sum(list_transform(list_zip(c.u, q.u), z -> (z[1] - z[2]) * (z[1] - z[2]))) AS dist
-  FROM us c JOIN us q ON q.vec_id < {N_QUERIES} AND c.vec_id <> q.vec_id
-), d_proj AS (
-  SELECT q.vec_id AS qid, c.vec_id,
-         list_sum(list_transform(list_zip(c.p, q.p), z -> (z[1] - z[2]) * (z[1] - z[2]))) AS dist
-  FROM proj c JOIN proj q ON q.vec_id < {N_QUERIES} AND c.vec_id <> q.vec_id
-), top_o AS (
-  SELECT qid, vec_id FROM (
-    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-    FROM d_orig) WHERE rn <= {TOP_K}
-), top_p AS (
-  SELECT qid, vec_id FROM (
-    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id) AS rn
-    FROM d_proj) WHERE rn <= {TOP_K}
-), hits AS (
-  SELECT o.qid, COUNT(*)::BIGINT AS n_hits
-  FROM top_o o JOIN top_p p ON o.qid = p.qid AND o.vec_id = p.vec_id
-  GROUP BY o.qid
-)
-SELECT q.vec_id AS qid,
-       COALESCE(h.n_hits, 0)::BIGINT AS n_hits,
-       (COALESCE(h.n_hits, 0) * {1_000_000 // TOP_K})::BIGINT AS recall_ppm
-FROM (SELECT vec_id FROM embeddings WHERE vec_id < {N_QUERIES}) q
-LEFT JOIN hits h ON h.qid = q.vec_id
-ORDER BY qid
-"""
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_jl_project": q_jl_project,
-    "t_jl_recall": q_jl_recall,
-}

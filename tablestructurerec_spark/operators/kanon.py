@@ -19,17 +19,16 @@ Spark shape, audited for 100 TB: ONE groupBy shuffle with map-side
 combine onto the equivalence-class frame (bounded by the quasi-id
 cross-product, not the row count).  The bucket floor-division is integer
 → the operator is reduction-order-free and carries a full value-exact
-DuckDB oracle (standalone; the driver registry sits at its 50-row cap).
+DuckDB oracle; the ``t_ops_audit`` driver row composes it.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["QUERIES", "q_k_anonymity", "_KANON_SQL", "K_THRESHOLD", "BAL_BUCKET"]
+__all__ = ["q_k_anonymity", "_KANON_SQL", "K_THRESHOLD", "BAL_BUCKET"]
 
 K_THRESHOLD = 5
 BAL_BUCKET = 1000
@@ -63,8 +62,3 @@ FROM customer
 GROUP BY 1, 2, 3
 ORDER BY c_nationkey, c_mktsegment, bal_bucket
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_k_anonymity": q_k_anonymity,
-}

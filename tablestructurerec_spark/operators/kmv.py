@@ -30,7 +30,6 @@ distinct set and ``est_distinct = n_kept`` exactly.
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,7 +37,6 @@ from pyspark.sql import functions as F
 from tablestructurerec_spark.operators.textstats import tokens_col, tokens_sql
 
 __all__ = [
-    "QUERIES",
     "q_distinct_kmv",
     "distinct_kmv",
     "kmv_sql",
@@ -118,8 +116,3 @@ FROM kept
 GROUP BY source
 ORDER BY source
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_distinct_kmv": q_distinct_kmv,
-}

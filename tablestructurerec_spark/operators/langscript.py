@@ -27,7 +27,7 @@ DuckDB-parity oracle (the driver registry sits at its 50-row cap).
 
 from __future__ import annotations
 
-from typing import Callable, Dict
+from typing import Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +40,6 @@ from tablestructurerec_spark.operators.charprofile import (
 )
 
 __all__ = [
-    "QUERIES",
     "q_lang_script_consistency",
     "lang_script_consistency",
     "langscript_sql",
@@ -129,8 +128,3 @@ SELECT lang, dominant_script, n_docs,
 FROM agg
 ORDER BY lang, dominant_script
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_lang_script_consistency": q_lang_script_consistency,
-}

@@ -1,25 +1,15 @@
-"""Split-leakage audit — exact-duplicate document content straddling the
+"""Embedding-space split-leakage audit — paraphrased copies straddling the
 train / val / test boundary.
 
-Why this audit exists: the content-stable split (``sampling.q_split_assign``)
-hashes the document KEY, so two documents with different ids but identical
-TEXT can land on opposite sides of the split — the textbook eval-set
-contamination that silently inflates benchmark numbers.  Dedup
-(``operators/dedup.py``) and splitting each exist; this operator composes
-them into the check a training pipeline must run before shipping an eval
-set.  (Near-duplicate leakage is the same audit with the content key swapped
-for a MinHash band or paragraph hash — the grouping shape below is
-unchanged; exact-hash is the oracle-exact base case.)
+Why this audit exists: the content-stable split (``sampling.split_label_col``)
+hashes the document KEY, so two records with different ids but the same
+meaning can land on opposite sides of the split — the eval-set
+contamination that silently inflates benchmark numbers.  Paraphrases share
+no shingles (translations, rewrites, code ports), so exact-hash and MinHash
+audits miss them; their embeddings stay cosine-near.
 
-Shape, audited for 100 TB: ONE scan computes the codegen'd content hash +
-split expressions, then a single partial-agg shuffle on the content hash
-carrying three conditional counts per group — never text, never a self-join.
-Leaky groups (train AND eval presence) are a filter over the aggregate.
-
-Returns one row per leaky content group: ``(content_md5, n_docs, n_train,
-n_val, n_test, exemplar_doc_id)``, ordered by content hash.  Standalone
-operator with a pytest DuckDB-parity oracle (the driver registry sits at
-its 50-row cap).
+Returns ``(train_vec_id, eval_vec_id, eval_split, cos)``.  Standalone
+operator with a pytest DuckDB-parity oracle.
 """
 
 from __future__ import annotations
@@ -34,133 +24,7 @@ from tablestructurerec_spark.operators.sampling import (
     split_label_sql,
 )
 
-__all__ = [
-    "QUERIES",
-    "q_split_leakage",
-    "split_leakage",
-    "leakage_sql",
-    "q_split_leakage_near",
-    "near_leakage_sql",
-    "q_split_leakage_emb",
-    "emb_leakage_sql",
-]
-
-
-# the split label comes from sampling.split_label_col / split_label_sql —
-# THE single definition of the 8/1/1 split, so audit and split cannot drift
-_split_expr = split_label_col
-_split_case_sql = split_label_sql
-
-
-def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tablestructurerec_spark.sources.read import read_table
-
-    return split_leakage(read_table(spark, sf_dir, "documents"))
-
-
-def split_leakage(docs: DataFrame) -> DataFrame:
-    tagged = docs.select(
-        F.md5("text").alias("content_md5"),
-        F.col("doc_id"),
-        _split_expr(F.col("doc_id")).alias("split"),
-    )
-    grouped = tagged.groupBy("content_md5").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count(F.when(F.col("split") == "train", 1)).alias("n_train"),
-        F.count(F.when(F.col("split") == "val", 1)).alias("n_val"),
-        F.count(F.when(F.col("split") == "test", 1)).alias("n_test"),
-        F.min("doc_id").alias("exemplar_doc_id"),
-    )
-    return (
-        grouped.where(
-            (F.col("n_train") > 0) & (F.col("n_val") + F.col("n_test") > 0)
-        )
-        .orderBy("content_md5")
-    )
-
-
-def leakage_sql() -> str:
-    """DuckDB twin of :func:`q_split_leakage` — value-exact."""
-    return f"""
-WITH tagged AS (
-  SELECT md5(text) AS content_md5, doc_id,
-         {_split_case_sql('doc_id')} AS split
-  FROM documents
-), grouped AS (
-  SELECT content_md5,
-         count(*) AS n_docs,
-         count(CASE WHEN split = 'train' THEN 1 END) AS n_train,
-         count(CASE WHEN split = 'val' THEN 1 END) AS n_val,
-         count(CASE WHEN split = 'test' THEN 1 END) AS n_test,
-         min(doc_id) AS exemplar_doc_id
-  FROM tagged GROUP BY content_md5
-)
-SELECT * FROM grouped
-WHERE n_train > 0 AND n_val + n_test > 0
-ORDER BY content_md5
-"""
-
-
-def q_split_leakage_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEAR-duplicate leakage: MinHash-LSH candidate pairs straddling the
-    boundary — catches the paraphrased/perturbed copies the exact-hash
-    audit cannot.  Same banding as ``dedup.q_dedup_minhash_lsh`` (shared
-    helpers on both engines, so the audit can never drift from the dedup it
-    complements); the self-join runs on (band, bucket) — tiny groups — with
-    the split label attached to each banded row BEFORE the join (a pure
-    doc_id projection, no extra join; the expensive-predicate rule §4b
-    keeps only the cheap split equality in the post-join filter).
-
-    Returns distinct ``(train_doc_id, eval_doc_id, eval_split)``."""
-    from tablestructurerec_spark.operators.dedup import (
-        _BAND_ROWS,
-        _N_HASHES,
-        _banded_docs,
-        _hv_docs,
-    )
-
-    banded = _banded_docs(_hv_docs(spark, sf_dir), _N_HASHES, _BAND_ROWS)
-    banded = banded.withColumn("split", _split_expr(F.col("doc_id"))).repartition(
-        "band", "bucket"
-    )
-    pairs = (
-        banded.alias("x")
-        .join(
-            banded.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") != F.col("y.doc_id")),
-        )
-        .where(
-            (F.col("x.split") == "train") & (F.col("y.split") != "train")
-        )
-        .select(
-            F.col("x.doc_id").alias("train_doc_id"),
-            F.col("y.doc_id").alias("eval_doc_id"),
-            F.col("y.split").alias("eval_split"),
-        )
-        .distinct()
-    )
-    return pairs.orderBy("train_doc_id", "eval_doc_id")
-
-
-def near_leakage_sql() -> str:
-    """DuckDB twin of :func:`q_split_leakage_near` — value-exact (reuses the
-    minhash banding CTE)."""
-    from tablestructurerec_spark.operators.dedup import _banded_cte
-
-    return f"""
-{_banded_cte()},
-tagged AS (
-  SELECT doc_id, band, bucket, {_split_case_sql('doc_id')} AS split FROM banded
-)
-SELECT DISTINCT x.doc_id AS train_doc_id, y.doc_id AS eval_doc_id,
-       y.split AS eval_split
-FROM tagged x JOIN tagged y
-  ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id <> y.doc_id
-WHERE x.split = 'train' AND y.split <> 'train'
-ORDER BY train_doc_id, eval_doc_id
-"""
+__all__ = ["QUERIES", "q_split_leakage_emb", "emb_leakage_sql"]
 
 
 # cosine floor for an embedding-space leak candidate: well below the
@@ -173,14 +37,10 @@ _EMB_COS_THRESH = 0.8
 def q_split_leakage_emb(
     spark: SparkSession, sf_dir: str, thresh: float = _EMB_COS_THRESH
 ) -> DataFrame:
-    """EMBEDDING-space leakage: the third modality of this audit family —
-    exact hash (verbatim copies), MinHash bands (edited copies), and now
-    cosine-near vectors (PARAPHRASED copies that share no shingles at
-    all: translations, rewrites, code ports).
+    """Cosine-near train/eval pairs (PARAPHRASED copies).
 
-    Same discipline as the near face: reuses the PRODUCTION sign-LSH
-    banding of ``similarity.q_ann_lsh_bucket`` (shared bucket expressions
-    on both engines — the audit cannot drift from the ANN index it
+    Reuses the sign-LSH bucket expressions of ``operators/similarity.py``
+    on both engines (the audit cannot drift from the ANN index it
     complements), split labels attached pre-join as a pure vec_id
     projection, candidates only where train and eval collide in a bucket
     (multi-probe Hamming-1 on the eval side, the recall lever), norms
@@ -208,7 +68,7 @@ def q_split_leakage_emb(
     bucketed = emb.select(
         "vec_id",
         "embedding",
-        _split_expr(F.col("vec_id")).alias("split"),
+        split_label_col(F.col("vec_id")).alias("split"),
         _bucket_bits(F.col("embedding")).alias("bucket"),
         _norm(F.col("embedding")).alias("nrm"),
     )
@@ -256,7 +116,7 @@ def emb_leakage_sql(thresh: float = _EMB_COS_THRESH) -> str:
     )
     return f"""
 WITH bucketed AS (
-  SELECT vec_id, embedding, {_split_case_sql('vec_id')} AS split,
+  SELECT vec_id, embedding, {split_label_sql('vec_id')} AS split,
          CAST({_bits_sql()} AS INT) AS bucket
   FROM embeddings
 ), train AS (
@@ -278,7 +138,5 @@ ORDER BY train_vec_id, eval_vec_id
 
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_split_leakage": q_split_leakage,
-    "t_split_leakage_near": q_split_leakage_near,
     "t_split_leakage_emb": q_split_leakage_emb,
 }

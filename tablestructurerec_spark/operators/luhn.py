@@ -54,21 +54,15 @@ no UDF:
   doubling needs — summed and tested mod 10.  DuckDB mirrors with
   list_zip(range) + list_sum.
 
-MAP-ONLY: one scan, nothing leaves the row; the audit aggregate is one
-partial-agg count per source.  Returns per-doc rows for docs with at least
-one candidate: ``(doc_id, n_candidates, n_valid, has_valid_cc)``.
-Standalone operator with a pytest DuckDB-parity oracle (the driver
-registry sits at its 50-row cap).
+MAP-ONLY: one scan, nothing leaves the row.  The per-source health report
+(``operators/health.py``) flags a document by its ``_SPARK_VALID`` verdicts;
+:func:`cc_sql` is the DuckDB twin, per doc with at least one candidate:
+``(doc_id, n_candidates, n_valid, has_valid_cc)``.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-__all__ = ["QUERIES", "q_cc_audit", "cc_audit", "cc_sql", "CAND_RE"]
+__all__ = ["cc_sql", "CAND_RE"]
 
 CAND_RE = (
     "[0-9]{4}(?: [0-9]{4}){2} [0-9]{1,7}(?: [0-9]{1,7})?"
@@ -109,30 +103,6 @@ transform(
 """
 
 
-def q_cc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tablestructurerec_spark.sources.read import read_table
-
-    return cc_audit(read_table(spark, sf_dir, "documents"))
-
-
-def cc_audit(docs: DataFrame) -> DataFrame:
-    staged = docs.select(
-        "doc_id", F.expr(_SPARK_VALID).alias("valid_flags")
-    )
-    return (
-        staged.select(
-            "doc_id",
-            F.size("valid_flags").cast("long").alias("n_candidates"),
-            F.expr(
-                "CAST(aggregate(valid_flags, 0, (a, x) -> a + x) AS BIGINT)"
-            ).alias("n_valid"),
-        )
-        .where(F.col("n_candidates") > 0)
-        .withColumn("has_valid_cc", F.col("n_valid") > 0)
-        .orderBy("doc_id")
-    )
-
-
 def _luhn_duck(s: str) -> str:
     """DuckDB 1/0 Luhn verdict over a digit-string expression ``s``."""
     return (
@@ -146,7 +116,7 @@ def _luhn_duck(s: str) -> str:
 
 
 def cc_sql() -> str:
-    """DuckDB twin of :func:`q_cc_audit` — value-exact."""
+    """DuckDB twin of the ``_SPARK_VALID`` verdicts — value-exact."""
     d = "regexp_replace(m, '[ -]', '', 'g')"
     lastg = "regexp_extract(m, '[ -]([0-9]+)$', 1)"
     prefix = f"substring({d}, 1, length({d}) - length({lastg}))"
@@ -173,8 +143,3 @@ FROM flags
 WHERE len(valid_flags) > 0
 ORDER BY doc_id
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_cc_audit": q_cc_audit,
-}

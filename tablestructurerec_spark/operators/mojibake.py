@@ -14,25 +14,22 @@ text.  Three independent, cheap, high-precision signals:
   sequence re-interpreted as latin-1 and re-encoded.
 
 Counts come from ``size(regexp_extract_all(...))`` — identical builtin in
-Spark and DuckDB, so the operator carries a full value-exact oracle.
+Spark and DuckDB, so the per-source health report (``operators/health.py``)
+that consumes these columns carries a full value-exact oracle
+(``_MOJIBAKE_SQL``, per document).
 
-Spark shape, audited for 100 TB: map-only, zero shuffles (presentation
-sort only) — three regexp scans per document inside whole-stage codegen,
-no Python anywhere.  The score is integer-scaled per kilochar and rounded
-to 6dp BEFORE the flag comparison, keeping both engines' floats identical
+Spark shape, audited for 100 TB: map-only, zero shuffles — three regexp
+scans per document inside whole-stage codegen, no Python anywhere.  The
+score is integer-scaled per kilochar and rounded to 6dp BEFORE the flag
+comparison, keeping both engines' floats identical
 (the repo-wide hash-exactness discipline).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
-    "QUERIES",
-    "q_encoding_damage",
     "_MOJIBAKE_SQL",
     "DAMAGE_PER_KCHAR",
     "damage_count_cols",
@@ -80,26 +77,6 @@ def is_damaged_col(score):
     return (F.col("n_replacement") > 0) | (score > DAMAGE_PER_KCHAR)
 
 
-def q_encoding_damage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document ``(doc_id, n_chars, n_replacement, n_c1, n_double,
-    damage_per_kchar, is_damaged)`` — map-only up to the presentation sort
-    by ``doc_id``."""
-    from tablestructurerec_spark.sources.read import read_table
-
-    docs = read_table(spark, sf_dir, "documents")
-    staged = docs.select("doc_id", *damage_count_cols())
-    score = damage_score_col()
-    out = staged.select(
-        "doc_id",
-        "n_chars",
-        "n_replacement",
-        "n_c1",
-        "n_double",
-        score.alias("damage_per_kchar"),
-    ).withColumn("is_damaged", is_damaged_col(F.col("damage_per_kchar")))
-    return out.orderBy("doc_id")
-
-
 _MOJIBAKE_SQL = f"""
 WITH staged AS (
   SELECT doc_id,
@@ -125,8 +102,3 @@ SELECT doc_id,
 FROM scored
 ORDER BY doc_id
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_encoding_damage": q_encoding_damage,
-}

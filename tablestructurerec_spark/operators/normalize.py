@@ -31,13 +31,12 @@ before a Python stage, as everywhere else in this repo.
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["QUERIES", "q_normalize_text", "_NORMALIZE_SQL"]
+__all__ = ["q_normalize_text", "_NORMALIZE_SQL"]
 
 # identical byte-for-byte in Java regex and RE2
 _CTRL = r"[\x00-\x08\x0B-\x1F\x7F\x{200B}-\x{200D}\x{FEFF}]"
@@ -107,8 +106,3 @@ SELECT doc_id,
 FROM staged
 ORDER BY doc_id
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_normalize_text": q_normalize_text,
-}

@@ -27,7 +27,7 @@ scoring without ever touching the original vector.
 
 from __future__ import annotations
 
-from typing import Callable, Dict, List, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,7 +41,7 @@ from tablestructurerec_spark.operators.similarity import (
     _SQDIST_SQL,
 )
 
-__all__ = ["QUERIES", "q_ann_pq_topk", "pq_oracle"]
+__all__ = ["q_ann_pq_topk", "pq_oracle"]
 
 _PQ_M = 8  # subspaces
 _PQ_KSUB = 16  # centroids per subspace (codes fit a nibble here, a byte at 256)
@@ -219,8 +219,3 @@ FROM scored
 ORDER BY cos DESC, vec_id ASC
 LIMIT {_TOPK}
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ann_pq_topk": q_ann_pq_topk,
-}

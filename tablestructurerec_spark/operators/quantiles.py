@@ -1,14 +1,13 @@
 """EXACT distributed quantiles by histogram refinement — no per-group sort,
 no per-group value buffering, a constant number of cheap scans.
 
-The gap this fills (stated in ``textstats.q_length_quantiles``'s scale
-note): Spark's exact ``percentile`` buffers every value of a group in one
+Spark's exact ``percentile`` buffers every value of a group in one
 aggregation buffer — fine for bounded groups, melts on a 10^11-row group —
 while ``approx_percentile`` (t-digest) is bounded but NOT exact, so it can
-never carry a value-equality oracle.  This operator is BOTH: exact answers
-with bounded memory, via the classic iterative histogram bisection
-(the BigQuery/Hive "exact median at scale" shape; Munro-Paterson style
-multi-pass selection):
+never carry a value-equality oracle.  :func:`refine_quantiles` is BOTH:
+exact answers with bounded memory, via the classic iterative histogram
+bisection (the BigQuery/Hive "exact median at scale" shape; Munro-Paterson
+style multi-pass selection):
 
 * pass 0: per-source ``(count, min, max)`` — one partial-agg scan;
 * each refinement pass splits every still-active ``(source, prob)`` target's
@@ -25,69 +24,23 @@ multi-pass selection):
 
 Rank convention is all-integer (house rule — no float crosses an engine
 boundary): the p = num/den quantile is the ``k = max(1, ceil(num*n/den))``-th
-smallest value, computed as ``(num*n + den - 1) DIV den``.  The DuckDB twin
-selects the same rank with ``row_number()`` over a per-source sort — the
-naive exact algorithm — so parity proves the refinement loop end-to-end.
+smallest value, computed as ``(num*n + den - 1) DIV den``.
 
-Value column: ``length(text)`` (char length) — chosen so each refinement
-pass re-scans only a pruned 2-column projection; the loop never caches and
-never carries text.  Driver-coordinated iteration follows the k-means /
-BPE-train precedent.
-
-Returns one row per (source, prob): ``(source, p, n_docs, value)``.
-Standalone operator with a pytest DuckDB-parity oracle (the driver registry
-sits at its 50-row cap).
+Driver-coordinated iteration follows the k-means / BPE-train precedent.
+The skew audit (``operators/skewaudit.py``) runs it over per-key row counts.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict, List, Optional, Tuple
+from typing import Dict, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = [
-    "QUERIES",
-    "q_exact_quantiles",
-    "exact_quantiles",
-    "exact_quantiles_with_stats",
-    "refine_quantiles",
-    "quantiles_sql",
-    "PROBS",
-    "N_BUCKETS",
-]
+__all__ = ["refine_quantiles", "N_BUCKETS"]
 
-# (numerator, denominator, label) — rank k = max(1, ceil(num*n/den)).
-PROBS: List[Tuple[int, int, str]] = [(1, 2, "p50"), (9, 10, "p90"), (99, 100, "p99")]
 N_BUCKETS = 256
 _MAX_PASSES = 9  # 256^9 covers any BIGINT range; the loop converges long before
-
-
-def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-source char-length quantiles of ``documents`` by histogram
-    refinement."""
-    from tablestructurerec_spark.sources.read import read_table
-
-    return exact_quantiles(spark, read_table(spark, sf_dir, "documents"))
-
-
-def exact_quantiles(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    return exact_quantiles_with_stats(spark, docs)[0]
-
-
-def exact_quantiles_with_stats(
-    spark: SparkSession, docs: DataFrame
-) -> Tuple[DataFrame, int]:
-    """Returns (result frame, number of refinement passes run) — the pass
-    count is part of the operator's contract (ceil(log_256(range))) and is
-    asserted in tests."""
-    vals = docs.select("source", F.length("text").cast("long").alias("v"))
-    targets, n_passes = refine_quantiles(spark, vals, PROBS)
-    out = [(t["source"], t["label"], t["n"], t["lo"]) for t in targets]
-    df = spark.createDataFrame(
-        out, "source STRING, p STRING, n_docs BIGINT, value BIGINT"
-    )
-    return df.orderBy("source", "p"), n_passes
 
 
 def refine_quantiles(
@@ -95,9 +48,8 @@ def refine_quantiles(
     vals: DataFrame,
     probs: List[Tuple[int, int, str]],
 ) -> Tuple[List[dict], int]:
-    """The histogram-refinement kernel over any ``(source, v)`` frame —
-    reused by the skew audit (``operators/skewaudit.py``) over per-key row
-    counts.  Returns (resolved targets, pass count); each target dict
+    """The histogram-refinement kernel over any ``(source, v)`` frame.
+    Returns (resolved targets, pass count); each target dict
     carries source/label/n and the exact value in ``lo``.
 
     NULL handling (review-hardened): NULL values are excluded from both the
@@ -165,29 +117,3 @@ def refine_quantiles(
                 cum += c
 
     return targets, n_passes
-
-
-def quantiles_sql() -> str:
-    """DuckDB twin — the NAIVE exact algorithm (full per-source sort +
-    row_number rank selection), value-identical to the refinement loop."""
-    probs = ", ".join(f"({num}, {den}, '{label}')" for num, den, label in PROBS)
-    return f"""
-WITH base AS (
-  SELECT source, CAST(length(text) AS BIGINT) AS v FROM documents
-  WHERE source IS NOT NULL AND text IS NOT NULL
-), ranked AS (
-  SELECT source, v,
-         row_number() OVER (PARTITION BY source ORDER BY v) AS rn,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM base
-), probs(num, den, label) AS (VALUES {probs})
-SELECT r.source, p.label AS p, r.n AS n_docs, r.v AS value
-FROM ranked r CROSS JOIN probs p
-WHERE r.rn = greatest(1, (p.num * r.n + p.den - 1) // p.den)
-ORDER BY source, p
-"""
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_exact_quantiles": q_exact_quantiles,
-}

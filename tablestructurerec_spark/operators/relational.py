@@ -492,10 +492,6 @@ def _a10_frame(ev: DataFrame) -> DataFrame:
     )
 
 
-def q_salted_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _a10_frame(_t(spark, sf_dir, "events")).orderBy("user_id")
-
-
 def q_a1_a10_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged driver entry (A1 + A10): per-user sessionization joined to the
     salted two-stage aggregate.  Both legs keep their documented plan shapes

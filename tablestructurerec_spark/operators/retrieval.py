@@ -3,13 +3,14 @@
 The retrieval side of a training-data pipeline — the pieces used to mine a
 web-scale corpus for targeted subsets (seed expansion, quality proxies):
 
-* **BM25 top-k** (``t_bm25_topk``) — full distributed BM25 (Okapi, Lucene
-  positive-idf variant) against a fixed query set.  Tokens are pruned to
-  the query vocabulary BEFORE any explode and tf is counted inside the
-  token array, so the only corpus-wide shuffle carries the hit list (one
-  row per doc × matching distinct term, doc length riding along) — the
-  posting lists a retrieval engine would read, not the raw token stream.
-  Ranking is a TWO-STAGE salted top-k so no single "query" partition ever
+* **BM25 scoring** (the lexical side of ``t_hybrid_rrf``) — full
+  distributed BM25 (Okapi, Lucene positive-idf variant) against a fixed
+  query set.  Tokens are pruned to the query vocabulary BEFORE any
+  explode and tf is counted inside the token array, so the only
+  corpus-wide shuffle carries the hit list (one row per doc × matching
+  distinct term, doc length riding along) — the posting lists a retrieval
+  engine would read, not the raw token stream.  Ranking (in the hybrid
+  fusion) is a TWO-STAGE salted top-k so no single "query" partition ever
   has to sort all its candidates: stage 1 keeps the per-(query, salt)
   top-k (32-way), stage 2 reduces 32·k survivors per query.  A common term
   at 100 TB matches billions of docs — a naive ``row_number() OVER
@@ -105,7 +106,7 @@ def salted_topk(df: DataFrame, group: str, order, k: int, salt_col: str, n_salts
 
 
 # ---------------------------------------------------------------------------
-# BM25 top-k retrieval
+# BM25 scoring
 # ---------------------------------------------------------------------------
 def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 candidate scores (query_id, doc_id, s) BEFORE any top-k
@@ -185,24 +186,9 @@ def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_doc = _bm25_per_doc(spark, sf_dir)
-    order = [F.col("s").desc(), F.col("doc_id").asc()]
-    return (
-        salted_topk(per_doc, "query_id", order, _TOPK, salt_col="doc_id")
-        .select(
-            "query_id",
-            "rank",
-            "doc_id",
-            F.round(F.col("s") / _SCALE_BM25, 6).alias("score"),
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
 def _bm25_scored_ctes() -> str:
     """CTE chain ending in scored(query_id, doc_id, s) — the SQL twin of
-    :func:`_bm25_per_doc`, shared by the BM25 and hybrid oracles."""
+    :func:`_bm25_per_doc`, used by the hybrid oracle."""
     qvals = ", ".join(
         f"({qid}, '{t}')" for qid, terms in _BM25_QUERIES for t in terms
     )
@@ -233,20 +219,6 @@ cand AS (
 ), scored AS (
   SELECT query_id, doc_id, SUM(c) AS s FROM contrib GROUP BY query_id, doc_id
 )"""
-
-
-def _bm25_sql() -> str:
-    return f"""
-WITH {_bm25_scored_ctes()}, ranked AS (
-  SELECT query_id, doc_id, s,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, doc_id) AS rank
-  FROM scored
-)
-SELECT query_id, CAST(rank AS INT) AS rank, doc_id,
-       ROUND(s / {_SCALE_BM25}.0, 6) AS score
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -442,13 +414,11 @@ ORDER BY query_id, rank
 
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_bm25_topk": q_bm25_topk,
     "t_unigram_logprob": q_unigram_logprob,
     "t_hybrid_rrf": q_hybrid_rrf,
 }
 
 ORACLE_SQL: Dict[str, str] = {
-    "t_bm25_topk": _bm25_sql(),
     "t_unigram_logprob": _UNIGRAM_SQL,
     "t_hybrid_rrf": _hybrid_sql(),
 }

@@ -3,8 +3,8 @@
 The selection side of a training-data pipeline: once hygiene and dedup have
 flagged what is *eligible*, these decide what is *used* —
 
-* **Split assignment** (``t_split_assign``) — content-stable train/val/test
-  split from an md5 bucket of the document key (8/1/1).  Hash-based, not
+* **Split labels** (``split_label_col``/``split_label_sql``) — content-stable
+  train/val/test split from an md5 bucket of the document key (8/1/1).  Hash-based, not
   ``rand()``: re-running the pipeline (or re-running it on a grown corpus)
   never migrates a document across splits, which is what keeps eval sets
   uncontaminated across pipeline versions.  Single scan, zero shuffle.
@@ -64,8 +64,9 @@ _N_BUCKETS = 10  # buckets 0-7 train, 8 val, 9 test
 
 def split_bucket_col(key) -> Column:
     """The 0-9 split bucket of a key column — THE single definition; the
-    leakage audits import these two helpers so audit and split can never
-    drift (review finding: the CASE had been copied in four places)."""
+    leakage audit and the embedding pipeline import these helpers so they
+    can never drift (review finding: the CASE had been copied in four
+    places)."""
     return F.floor(_hash_uniform(_SPLIT_SALT, key) * _N_BUCKETS).cast("int")
 
 
@@ -86,25 +87,6 @@ def split_label_sql(key: str) -> str:
         f"CASE WHEN {b} <= 7 THEN 'train' WHEN {b} = 8 THEN 'val'"
         " ELSE 'test' END"
     )
-
-
-def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        split_bucket_col(F.col("doc_id")).alias("bucket"),
-        split_label_col(F.col("doc_id")).alias("split"),
-    ).orderBy("doc_id")
-
-
-_SPLIT_ASSIGN_SQL = f"""
-SELECT doc_id,
-       CAST(floor({_hash_uniform_sql(_SPLIT_SALT, 'doc_id')} * {_N_BUCKETS}) AS INT)
-           AS bucket,
-       {split_label_sql('doc_id')} AS split
-FROM documents
-ORDER BY doc_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -210,11 +192,12 @@ _PACK_BUDGET = 2048  # tokens per packed training sequence
 _PACK_SHARDS = 8  # parallel unit; real pipelines pack per output file
 
 
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy first-fit-in-order sequence packing: documents are laid into
-    fixed ``_PACK_BUDGET``-token bins in doc_id order within their shard —
-    the batch-construction step that turns a filtered corpus into
-    constant-length training sequences with minimal padding.
+def _pack_docs(docs: DataFrame, budget_col: str | None = None) -> DataFrame:
+    """Greedy first-fit-in-order sequence packing over any (doc_id, text,
+    ...) frame: documents are laid into fixed ``_PACK_BUDGET``-token bins in
+    doc_id order within their shard — the batch-construction step that
+    turns a filtered corpus into constant-length training sequences with
+    minimal padding.
 
     Packing is inherently sequential *within* an output shard (each doc's
     bin depends on every earlier fill decision) and embarrassingly parallel
@@ -224,14 +207,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever corpus-sized; the shuffle is one partial pass carrying
     (doc_id, n_tokens), never text.  A doc longer than the budget gets a
     bin of its own (truncation is the tokenizer's job, not the packer's).
-    """
-    docs = _t(spark, sf_dir, "documents")
-    return _pack_docs(docs)
-
-
-def _pack_docs(docs: DataFrame, budget_col: str | None = None) -> DataFrame:
-    """The packing fold over any (doc_id, text, ...) frame — shared by the
-    standalone query and the end-to-end pipeline composition.
 
     ``budget_col`` selects the size column the fold consumes: default is the
     regex token count; pass e.g. a BPE count column (operators/bpe.py) to
@@ -263,32 +238,6 @@ def _pack_docs(docs: DataFrame, budget_col: str | None = None) -> DataFrame:
         pack, "doc_id long, shard int, n_tokens int, bin_idx int"
     )
     return out.select("doc_id", "shard", "n_tokens", "bin_idx").orderBy("doc_id")
-
-
-# the same fold as a recursive CTE: state = (bin, fill) threaded row-by-row
-# within each shard in doc_id order
-_PACK_SQL = f"""
-WITH RECURSIVE t AS (
-  SELECT doc_id,
-         CAST(doc_id % {_PACK_SHARDS} AS INT) AS shard,
-         CAST(len({_TOKENS_SQL}) AS INT) AS n_tokens,
-         row_number() OVER (PARTITION BY doc_id % {_PACK_SHARDS} ORDER BY doc_id) AS rn
-  FROM documents
-), packed AS (
-  SELECT shard, doc_id, n_tokens, rn, 0 AS bin_idx, n_tokens AS fill
-  FROM t WHERE rn = 1
-  UNION ALL
-  SELECT t.shard, t.doc_id, t.n_tokens, t.rn,
-         CASE WHEN p.fill > 0 AND p.fill + t.n_tokens > {_PACK_BUDGET}
-              THEN p.bin_idx + 1 ELSE p.bin_idx END,
-         CASE WHEN p.fill > 0 AND p.fill + t.n_tokens > {_PACK_BUDGET}
-              THEN t.n_tokens ELSE p.fill + t.n_tokens END
-  FROM t JOIN packed p ON t.shard = p.shard AND t.rn = p.rn + 1
-)
-SELECT doc_id, shard, n_tokens, CAST(bin_idx AS INT) AS bin_idx
-FROM packed
-ORDER BY doc_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -357,55 +306,6 @@ def _CORPUS_FILTER_SQL_REF() -> str:
 
 
 # ---------------------------------------------------------------------------
-# exact k-per-group sampling — "give me exactly 20 eval examples per language"
-# ---------------------------------------------------------------------------
-_GROUP_K = 20
-_GROUP_SALT = "grpsamp-v1"
-
-
-def q_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly ``k`` documents per language, chosen by a salted content
-    hash: deterministic (re-runs and retries pick the same docs), uniform
-    within the group, and content-stable under corpus growth in the same
-    sense as ``t_split_assign`` — a doc's draw never changes, so the
-    selected set only changes where new docs out-rank old ones.
-
-    Rate-based sampling (``t_stratified_sample``) cannot hit an exact
-    count; per-group ORDER BY hash LIMIT k funnels each group through one
-    task.  This is :func:`retrieval.salted_topk` applied to sampling:
-    32-way parallel rank within (group, salt slice), then a final rank over
-    ≤ 32·k survivors — exact, and no corpus-sized sort anywhere.
-    """
-    from .retrieval import salted_topk
-
-    docs = _t(spark, sf_dir, "documents")
-    u = _hash_uniform(_GROUP_SALT, F.col("doc_id"))
-    base = docs.select("doc_id", "lang", "source", u.alias("u"))
-    order = [F.col("u").asc(), F.col("doc_id").asc()]
-    return (
-        salted_topk(base, "lang", order, _GROUP_K, salt_col="doc_id")
-        .select("lang", "rank", "doc_id", "source", F.round("u", 6).alias("sample_u"))
-        .orderBy("lang", "rank")
-    )
-
-
-_GROUP_SAMPLE_SQL = f"""
-WITH b AS (
-  SELECT doc_id, lang, source,
-         {_hash_uniform_sql(_GROUP_SALT, 'doc_id')} AS u
-  FROM documents
-), ranked AS (
-  SELECT lang, doc_id, source, u,
-         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY u, doc_id) AS rank
-  FROM b
-)
-SELECT lang, CAST(rank AS INT) AS rank, doc_id, source, ROUND(u, 6) AS sample_u
-FROM ranked WHERE rank <= {_GROUP_K}
-ORDER BY lang, rank
-"""
-
-
-# ---------------------------------------------------------------------------
 # DSIR-style importance resampling weights (hashed n-gram importance weights)
 # ---------------------------------------------------------------------------
 _DSIR_BUCKETS = 2048
@@ -433,8 +333,8 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-count table — target and raw counts in the SAME aggregation
     (conditional count), so the corpus is not scanned twice for the two
     distributions; the totals window then runs over ≤2048 rows.  Pass 2
-    re-explodes and equi-joins the broadcast ratio table (fixed-size side,
-    like decontamination) and partial-aggregates per doc — the corpus
+    re-explodes and equi-joins the broadcast ratio table (a fixed-size
+    side) and partial-aggregates per doc — the corpus
     never shuffles whole-text rows, only (doc_id) key partials.
     """
     docs = _t(spark, sf_dir, "documents")
@@ -531,20 +431,13 @@ ORDER BY d.doc_id
 
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_split_assign": q_split_assign,
     "t_stratified_sample": q_stratified_sample,
     "t_domain_mix": q_domain_mix,
-    "t_pack_sequences": q_pack_sequences,
     "t_pipeline_e2e": q_pipeline_e2e,
-    "t_group_sample": q_group_sample,
-    "t_dsir_weights": q_dsir_weights,
 }
 
 ORACLE_SQL: Dict[str, str] = {
-    "t_split_assign": _SPLIT_ASSIGN_SQL,
     "t_stratified_sample": _STRATIFIED_SAMPLE_SQL,
     "t_domain_mix": _DOMAIN_MIX_SQL,
-    "t_pack_sequences": _PACK_SQL,
     "t_pipeline_e2e": _pipeline_e2e_sql(),
-    "t_group_sample": _GROUP_SAMPLE_SQL,
 }

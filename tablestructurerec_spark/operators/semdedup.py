@@ -14,46 +14,29 @@ to ANY earlier-ranked cluster member reaches ``tau`` — the same greedy
 upper-triangular rule as the paper's released implementation (the earlier
 member's own dup status does not matter).
 
-TWO faces share one verdict tail (``_rank_members`` + ``_verdict`` — the
-greedy rule cannot drift between them); they differ only in how the
-quantizer is fit and how big k may grow:
-
-* :func:`q_semdedup` — the ORACLE face.  k is small and fixed, the fit is
-  the driver-side deterministic Lloyd on a BOUNDED id-range sample
-  (identical bounding rule and determinism contract as
-  ``similarity.q_ann_ivf_kmeans_topk``), which is what makes a full
-  value-hash DuckDB oracle possible: :func:`semdedup_oracle` refits
-  bit-identical centers in its own process and replays everything in SQL.
-* :func:`q_semdedup_scale` — the 100 TB face (VERDICT r3 #1).  k is
-  DERIVED from the corpus (``k = ceil(N / target_cluster_size)``, so
-  |cluster| stays ≈ constant as N grows — the knob the paper turns), and
-  the fit is DISTRIBUTED MLlib k-means (seeded k-means||) once k or N
-  outgrows the bounded-sample regime — a driver-side fit on a ≤131k-row
-  sample cannot deliver the ~10⁵-10⁶ clusters a 100 TB corpus needs.
-  MLlib's fit is seeded but not replayable outside the JVM, so this face
-  carries pytest invariants (planted twins, k derivation, plan pins,
-  small-regime agreement with the oracle face) instead of a SQL oracle —
-  the same honesty split as ``core/kmeans.py`` documents.
+The quantizer is fit by the driver-side deterministic Lloyd on a BOUNDED
+id-range sample (identical bounding rule and determinism contract as
+``similarity.q_ann_ivf_kmeans_topk``), which is what makes a full
+value-hash DuckDB oracle possible: :func:`semdedup_oracle` refits
+bit-identical centers in its own process and replays everything in SQL.
+k is small and fixed; a corpus that needs ~10⁵-10⁶ clusters needs a
+distributed fit, which this module does not provide.
 
 Spark shape, audited for 100 TB:
 
-* assignment is MAP-ONLY on both faces — ONE generated row per input row,
-  never the old ``crossJoin(broadcast(cents))`` N·k row expansion (VERDICT
-  r3 #1: a k-fold scan inflation exactly when k must grow).  The oracle
-  face folds a LITERAL centers array per row (``transform`` → struct
-  distances → ``array_min``, value-identical to the old
-  ``min(struct(round(sqdist,6), cid))`` including ties); the scale face
-  uses MLlib ``KMeansModel.transform`` (JVM-side nearest-center over the
-  broadcast centers) and recovers the centroid distance with a k-row
-  broadcast equi-join — one sqdist per row, not per (row, center).
-  Dropping the crossJoin also dropped two shuffles: no ``groupBy(vec_id)``
-  re-aggregation and no join-back of assignments onto the corpus;
+* assignment is MAP-ONLY — ONE generated row per input row, never the old
+  ``crossJoin(broadcast(cents))`` N·k row expansion (VERDICT r3 #1: a
+  k-fold scan inflation exactly when k must grow).  It folds a LITERAL
+  centers array per row (``transform`` → struct distances →
+  ``array_min``, value-identical to the old ``min(struct(round(sqdist,6),
+  cid))`` including ties).  Dropping the crossJoin also dropped two
+  shuffles: no ``groupBy(vec_id)`` re-aggregation and no join-back of
+  assignments onto the corpus;
 * the ONLY corpus-sized shuffle is the intra-cluster self-join on
   ``cluster_id`` (equi key → SortMergeJoin, AQE-skew-splittable; the
   ``rk_a < rk_b`` rank predicate rides as a post-join filter).  Per-cluster
-  work is quadratic in cluster size, which corpus-derived k holds bounded;
-* never all-pairs, never a corpus-side broadcast, no Python in the oracle
-  face's plan.
+  work is quadratic in cluster size;
+* never all-pairs, never a corpus-side broadcast, no Python in the plan.
 
 Reference surface: this is a training-data operator beyond the reference
 repo (which has no embedding pipeline); the clustering/oracle determinism
@@ -76,25 +59,14 @@ from tablestructurerec_spark.operators.similarity import (
     _SQDIST_SQL,
 )
 
-__all__ = [
-    "QUERIES",
-    "q_semdedup",
-    "q_semdedup_scale",
-    "semdedup_oracle",
-    "auto_k",
-]
+__all__ = ["QUERIES", "q_semdedup", "semdedup_oracle"]
 
-_SEM_K = 16  # oracle face: clusters fit on the bounded sample
+_SEM_K = 16  # clusters fit on the bounded sample
 _SEM_TAU = 0.4  # dup threshold; testdata embeddings are isotropic (max
 # pairwise cos ≈ 0.48 at sf0.001), so the default sits where a meaningful
 # dup set exists — production text embeddings use 0.95+ (paper table 1)
 _SEM_ITERS = 8
 _SAMPLE_MAX_ID = 131_072  # same bounded-sample rule as similarity.py
-# scale face: target |cluster|; k = ceil(N / this).  The paper's regime is
-# |cluster| in the low tens of thousands; the default keeps the bench sf
-# exercising k > 1 while the DERIVATION, not the constant, is the contract.
-_SEM_TARGET_CLUSTER = 500
-_MLLIB_SEED = 42
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -103,13 +75,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
 
 
-def auto_k(n_rows: int, target_cluster_size: int = _SEM_TARGET_CLUSTER) -> int:
-    """Corpus-derived cluster count: |cluster| ≈ target as N grows."""
-    return max(2, -(-int(n_rows) // int(target_cluster_size)))
-
-
 def _fit_centers_bounded(emb: DataFrame, k: int) -> List[List[float]]:
-    """Bounded-sample deterministic Lloyd fit (the oracle face's quantizer)."""
+    """Bounded-sample deterministic Lloyd fit."""
     from tablestructurerec_spark.core.kmeans import lloyd
 
     sample = (
@@ -131,8 +98,7 @@ def _argmin_center(centers: Sequence[Sequence[float]], emb_col: Column) -> Colum
     ``min(struct(round(sqdist,6), cid))`` byte-for-byte (struct ordering:
     minimal rounded distance, tie → lowest cid) — but generates ONE row
     per input row instead of N·k.  Literal-array size is O(k·dim), the
-    same budget the old broadcast carried; past a few thousand centers use
-    the scale face instead.
+    same budget the old broadcast carried.
     """
     cents_arr = F.array(*[
         F.struct(
@@ -171,21 +137,8 @@ def _rank_members(assigned: DataFrame) -> DataFrame:
     )
 
 
-def _verdict(member: DataFrame, tau: float, salt: int = 1) -> DataFrame:
-    """The paper's greedy upper-triangular rule over ranked members —
-    shared by both faces so the semantics cannot drift.
-
-    ``salt > 1`` additionally SALTS the pair join's key: the probe side
-    gets a deterministic ``pmod(xxhash64(bid), salt)`` bucket and the
-    build side is replicated once per bucket, so the join key becomes
-    ``(cluster_id, salt_id)`` and a hot cluster's quadratic work spreads
-    over ``salt`` tasks EVEN when the build side is too big to broadcast
-    and Spark plans a SortMergeJoin (whose re-exchange by join key would
-    otherwise put the whole hot cluster back on one task — ADVICE r4).
-    Results are salt-invariant (each probe row still meets each build row
-    of its cluster exactly once); the identity is pinned in
-    tests/test_semdedup.py.  Default 1 keeps the broadcast-regime plan
-    byte-identical."""
+def _verdict(member: DataFrame, tau: float) -> DataFrame:
+    """The paper's greedy upper-triangular rule over ranked members."""
     a = member.select(
         F.col("cluster_id").alias("c"),
         F.col("rk").alias("rk_a"),
@@ -201,9 +154,8 @@ def _verdict(member: DataFrame, tau: float, salt: int = 1) -> DataFrame:
     # a hot cluster's quadratic work across tasks, because the build side
     # reaches every task.  It does NOT survive a SortMergeJoin fallback —
     # SMJ re-exchanges the probe by cluster_id hash, re-serializing the hot
-    # cluster on one task and reducing this line to a pure extra shuffle;
-    # real skew-splitting at SMJ scale is the ``salt`` knob above (ADVICE
-    # r4 corrected the earlier comment's overclaim here).
+    # cluster on one task and reducing this line to a pure extra shuffle
+    # (ADVICE r4 corrected the earlier comment's overclaim here).
     n_part = int(member.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     b = member.select(
         "cluster_id",
@@ -213,14 +165,6 @@ def _verdict(member: DataFrame, tau: float, salt: int = 1) -> DataFrame:
         F.col("nrm").alias("nrm_b"),
     ).repartition(n_part)
     cond = (a["c"] == b["cluster_id"]) & (a["rk_a"] < b["rk_b"])
-    if salt > 1:
-        a = a.withColumn(
-            "salt_a", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-        )
-        b = b.withColumn(
-            "salt_b", F.pmod(F.xxhash64("bid"), F.lit(salt)).cast("int")
-        )
-        cond = cond & (a["salt_a"] == b["salt_b"])
     prior = (
         b.join(a, cond)
         .groupBy("bid")
@@ -255,7 +199,7 @@ def q_semdedup(
     n_clusters: int = _SEM_K,
     tau: float = _SEM_TAU,
 ) -> DataFrame:
-    """Per-vector SemDeDup verdict (ORACLE face): ``(vec_id, cluster_id,
+    """Per-vector SemDeDup verdict: ``(vec_id, cluster_id,
     rk, max_prior_cos, is_dup)``.
 
     ``rk`` is the greedy order inside the cluster (1 = farthest from the
@@ -276,56 +220,6 @@ def q_semdedup(
         F.col("best.d").alias("cdist"),
     )
     return _verdict(_rank_members(assigned), tau)
-
-
-def q_semdedup_scale(
-    spark: SparkSession,
-    sf_dir: str,
-    tau: float = _SEM_TAU,
-    target_cluster_size: int = _SEM_TARGET_CLUSTER,
-    salt: int = 1,
-) -> DataFrame:
-    """Per-vector SemDeDup verdict (SCALE face): corpus-derived k,
-    distributed MLlib k-means fit, map-only JVM assignment.
-
-    Same output contract as :func:`q_semdedup`.  No SQL oracle (MLlib's
-    k-means|| is seeded but not replayable outside the JVM — see module
-    docstring); pytest pins planted-twin recovery, the k derivation, the
-    no-N·k plan shape, and small-regime agreement with the oracle face.
-    ``salt`` is the production skew knob for the pair join (see
-    :func:`_verdict`): results are salt-invariant, so the default 1 keeps
-    the small-regime plan identical.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    k = auto_k(n, target_cluster_size)
-    feats = emb.withColumn(
-        "features", array_to_vector(F.col("embedding").cast("array<double>"))
-    )
-    model = KMeans(
-        k=k, seed=_MLLIB_SEED, maxIter=_SEM_ITERS, featuresCol="features",
-        predictionCol="cluster_id",
-    ).fit(feats)
-    # KMeansModel.transform is the map-only argmin: JVM-side nearest-center
-    # over broadcast centers, one output row per input row
-    pred = model.transform(feats).select(
-        "vec_id", "embedding", F.col("cluster_id").cast("int").alias("cluster_id")
-    )
-    cents = spark.createDataFrame(
-        [(int(i), [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())],
-        "cluster_id INT, cv ARRAY<DOUBLE>",
-    )
-    # centroid distance via a k-row broadcast equi-join: ONE sqdist per row
-    assigned = pred.join(F.broadcast(cents), "cluster_id").select(
-        "vec_id",
-        "embedding",
-        "cluster_id",
-        F.round(_sqdist(F.col("embedding"), F.col("cv")), 6).alias("cdist"),
-    )
-    return _verdict(_rank_members(assigned), tau, salt=salt)
 
 
 def semdedup_oracle(
@@ -389,5 +283,4 @@ ORDER BY m.vec_id
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_semdedup": q_semdedup,
-    "t_semdedup_scale": q_semdedup_scale,
 }

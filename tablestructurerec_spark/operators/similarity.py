@@ -4,19 +4,16 @@
   vector, one scan, TakeOrderedAndProject.  At 100 TB this is the
   one-query-vector case; the dot product is a sequential ``zip_with`` +
   ``aggregate`` in doubles (JVM codegen, no Python).
-* sign-LSH bucketed top-k — a scale path: hash every vector to a bucket by
-  the sign pattern of dot products with deterministic pseudo-hyperplanes;
-  multi-probe (Hamming radius 1) over the query's bucket + one-flip
-  neighbors.  Oracle reproduces the identical hyperplanes, so results match
-  exactly.
-* IVF bucketed top-k — the other scale path: inverted lists under a coarse
-  quantizer (deterministic seed vectors; a trained k-means quantizer drops
-  into the same shape), nprobe nearest lists exactly re-ranked.
-  On clustered data both bucketed paths reach ≥0.8 recall@10
+* IVF top-k — the scale path: inverted lists under a coarse quantizer
+  trained by deterministic k-means on a bounded sample, nprobe nearest
+  lists exactly re-ranked.  On clustered data it reaches ≥0.8 recall@10
   (tests/test_similarity_quality.py); on the driver's isotropic random
   embeddings recall is necessarily ≈ the probed fraction — there is no
   neighborhood structure to exploit, only the exact brute-force path can do
   better.
+* sign-LSH buckets — every vector hashed to a bucket by the sign pattern of
+  dot products with deterministic pseudo-hyperplanes; the triplet miner and
+  the embedding leakage audit join on them.
 * embedding cosine near-dup pairs — sorted-neighborhood blocking by label +
   vec_id window, exact cosine on candidates (the embedding face of dedup).
 """
@@ -121,7 +118,7 @@ LIMIT {_TOPK}
 
 
 # ---------------------------------------------------------------------------
-# sign-LSH bucketed top-k (the IVF/LSH scale path)
+# sign-LSH buckets
 # ---------------------------------------------------------------------------
 _N_PLANES = 4
 _DIM = 64
@@ -134,10 +131,10 @@ def _plane_weight(p: int, d: int) -> float:
     return v / 32768.0 - 1.0
 
 
-def _bucket_bits(col: Column, n_planes: int = _N_PLANES) -> Column:
+def _bucket_bits(col: Column) -> Column:
     """Sign-LSH bucket id from the deterministic pseudo-hyperplanes."""
     bits = []
-    for p in range(n_planes):
+    for p in range(_N_PLANES):
         proj = F.aggregate(
             F.zip_with(
                 col,
@@ -149,55 +146,6 @@ def _bucket_bits(col: Column, n_planes: int = _N_PLANES) -> Column:
         )
         bits.append(F.when(proj >= 0, 1).otherwise(0) * (1 << p))
     return sum(bits).cast("int")
-
-
-def q_ann_lsh_bucket(
-    spark: SparkSession, sf_dir: str, n_planes: int = _N_PLANES
-) -> DataFrame:
-    # ``n_planes`` is the production knob (16-24 planes in real indexes;
-    # the default is bench-sized and pinned by the DuckDB oracle) — the
-    # bucketed plan shape is size-independent.
-    emb = _t(spark, sf_dir, "embeddings")
-    bucketed = emb.select(
-        "vec_id", "label", "embedding",
-        _bucket_bits(F.col("embedding"), n_planes).alias("bucket"),
-    )
-    # multi-probe (Hamming radius 1): the query probes its own bucket plus
-    # the _N_PLANES buckets one sign-flip away — the standard recall lever;
-    # candidates are (1 + planes) / 2^planes of the data instead of 2^-planes
-    qrow = (
-        bucketed.where(F.col("vec_id") == 0)
-        .select(
-            F.col("embedding").alias("qv"),
-            F.explode(
-                F.array(
-                    F.col("bucket"),
-                    *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)],
-                )
-            ).alias("qbucket"),
-        )
-    )
-    scored = (
-        bucketed.where(F.col("vec_id") != 0)
-        .join(F.broadcast(qrow), F.col("bucket") == F.col("qbucket"))
-        .select(
-            "vec_id",
-            "label",
-            "bucket",
-            F.round(
-                _dot(F.col("embedding"), F.col("qv"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qv"))),
-                6,
-            ).alias("cos"),
-        )
-    )
-    w = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(_TOPK)
-        .select("vec_id", "label", "bucket", "cos", F.row_number().over(w).cast("int").alias("rk"))
-        .orderBy("rk")
-    )
 
 
 def _plane_sql(p: int) -> str:
@@ -219,35 +167,10 @@ def _bits_sql() -> str:
     )
 
 
-def _lsh_oracle() -> str:
-    bits = _bits_sql()
-    probe_list = ", ".join(["bucket"] + [f"xor(bucket, {1 << p})" for p in range(_N_PLANES)])
-    return f"""
-WITH bucketed AS (
-  SELECT vec_id, label, embedding, CAST({bits} AS INT) AS bucket
-  FROM embeddings
-), q AS (
-  SELECT embedding AS qv, CAST(p.qbucket AS INT) AS qbucket
-  FROM bucketed, UNNEST([{probe_list}]) AS p(qbucket)
-  WHERE vec_id = 0
-), scored AS (
-  SELECT b.vec_id, b.label, b.bucket,
-         ROUND({_cos_sql('b.embedding', 'qv')}, 6) AS cos
-  FROM bucketed b JOIN q ON b.bucket = q.qbucket
-  WHERE b.vec_id <> 0
-)
-SELECT vec_id, label, bucket, cos,
-       CAST(ROW_NUMBER() OVER (ORDER BY cos DESC, vec_id ASC) AS INT) AS rk
-FROM scored
-ORDER BY cos DESC, vec_id ASC
-LIMIT {_TOPK}
-"""
-
-
 # ---------------------------------------------------------------------------
 # IVF bucketed top-k (inverted-file coarse quantizer + probed exact re-rank)
 # ---------------------------------------------------------------------------
-_IVF_LISTS = 16  # coarse centroids = embeddings of vec_id 1.._IVF_LISTS
+_IVF_LISTS = 16  # coarse centroids
 _IVF_NPROBE = 2
 # trained-quantizer sample bound: fixed id RANGE so the k-means training set
 # stays O(1) as the corpus grows (never a fraction of the corpus)
@@ -262,29 +185,12 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def q_ann_ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_lists: int = _IVF_LISTS,
-    nprobe: int = _IVF_NPROBE,
-) -> DataFrame:
-    """IVF ANN: assign every vector to its nearest coarse centroid (the
-    deterministic seed vectors vec_id 1..L — k-means-init-style; a trained
-    quantizer drops in the same shape), probe the query's nprobe nearest
-    lists, exact-cosine re-rank only those lists.  At scale the centroid
-    table is O(L) → broadcast; assignment is a map-side argmin (partial-agg
-    min of (dist, cid) structs); the probed-list filter is a broadcast
-    semi-join, so the exact work touches ~nprobe/L of the data."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = emb.where((F.col("vec_id") >= 1) & (F.col("vec_id") <= n_lists)).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    return _ivf_from_centroids(emb, cents, nprobe)
-
-
 def _ivf_from_centroids(emb: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
-    """Shared IVF plumbing: assignment, probing, exact re-rank — identical
-    for seed-vector and trained quantizers."""
+    """IVF plumbing over a centroid table ``(cid, cv)``: assignment,
+    probing, exact re-rank.  At scale the centroid table is O(L) →
+    broadcast; assignment is a map-side argmin (partial-agg min of
+    (dist, cid) structs); the probed-list filter is a broadcast semi-join,
+    so the exact work touches ~nprobe/L of the data."""
     # nearest list per vector: broadcast x centroids, min struct(dist, cid)
     assigned = (
         emb.crossJoin(F.broadcast(cents))
@@ -356,17 +262,15 @@ def q_ann_ivf_kmeans_topk(
 ) -> DataFrame:
     """IVF with a TRAINED coarse quantizer: deterministic Lloyd k-means
     (``core/kmeans.py``) fits the list centroids on a bounded sample, then
-    the exact same assignment/probe/re-rank plumbing as
-    :func:`q_ann_ivf_topk` runs over them.
+    :func:`_ivf_from_centroids` assigns, probes and re-ranks over them.
 
     At 100 TB the quantizer trains on a deterministic BOUNDED sample
     (k-means cost is per-training-row; a fixed id range caps it — a few
-    hundred thousand rows fix 2^10-2^16 centroids, same bounding rule as
-    hygiene._DECON_MAX_ID).  The sample is collected to the driver (≤131k
-    rows — a bounded small-side collect, like lineage metadata), fit in
-    numpy, and the fitted centers — O(n_lists · dim) — broadcast exactly
-    like the seed-vector table; assignment stays a distributed map-side
-    argmin.  Because the fit is a pure function of the sample (no RNG, no
+    hundred thousand rows fix 2^10-2^16 centroids).  The sample is
+    collected to the driver (≤131k rows — a bounded small-side collect,
+    like lineage metadata), fit in numpy, and the fitted centers —
+    O(n_lists · dim) — are broadcast; assignment stays a distributed
+    map-side argmin.  Because the fit is a pure function of the sample (no RNG, no
     k-means||), :func:`ivf_kmeans_oracle` refits the identical centers in
     an independent process and replays assignment + probe + re-rank in
     ANSI SQL — the full value-hash oracle round 2 couldn't have.
@@ -393,8 +297,7 @@ def ivf_kmeans_oracle(sf_dir: str) -> str:
     ``sf_dir``: refit the quantizer with the same :func:`lloyd` kernel on
     the same bounded sample read straight off the parquet, embed the
     centers as DOUBLE[] literals (17 significant digits — exact float64
-    round-trip), and express assignment/probe/re-rank in SQL exactly as
-    ``_ANN_IVF_SQL`` does over seed-vector centroids.
+    round-trip), and express assignment/probe/re-rank in SQL.
 
     The centers are sf-specific, so the SQL string is built per sf_dir
     (the driver runs oracles at sf0.01; ``__spark_entry__.oracle_sql``
@@ -414,15 +317,7 @@ def ivf_kmeans_oracle(sf_dir: str) -> str:
         f"({i}, [{', '.join(f'{v:.17g}' for v in c)}]::DOUBLE[])"
         for i, c in enumerate(centers)
     )
-    return _ivf_sql(f"SELECT * FROM (VALUES\n    {vals}\n  ) AS t(cid, cv)")
-
-
-_SQDIST_SQL = "round(list_sum(list_transform(list_zip({a}, {b}), p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) ** 2)), 6)"
-
-def _ivf_sql(cents_body: str) -> str:
-    """The IVF oracle, parameterized on where the centroid table comes from
-    (seed vectors for ``ann_ivf_topk``, refit-literal VALUES for
-    ``ann_ivf_kmeans_topk``) — one template, zero drift between the two."""
+    cents_body = f"SELECT * FROM (VALUES\n    {vals}\n  ) AS t(cid, cv)"
     return f"""
 WITH cents AS (
   {cents_body}
@@ -456,10 +351,7 @@ LIMIT {_TOPK}
 """
 
 
-_ANN_IVF_SQL = _ivf_sql(
-    f"SELECT vec_id AS cid, embedding AS cv FROM embeddings\n"
-    f"  WHERE vec_id BETWEEN 1 AND {_IVF_LISTS}"
-)
+_SQDIST_SQL = "round(list_sum(list_transform(list_zip({a}, {b}), p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) ** 2)), 6)"
 
 
 # ---------------------------------------------------------------------------
@@ -630,8 +522,6 @@ ORDER BY p.anchor
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_bruteforce_topk": q_ann_bruteforce,
-    "ann_lsh_bucket_topk": q_ann_lsh_bucket,
-    "ann_ivf_topk": q_ann_ivf_topk,
     "ann_ivf_kmeans_topk": q_ann_ivf_kmeans_topk,
     "dedup_embedding_cosine": q_dedup_embedding_cosine,
     "t_triplet_mine": q_triplet_mine,
@@ -639,8 +529,6 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 ORACLE_SQL: Dict[str, str] = {
     "ann_bruteforce_topk": _ANN_BRUTE_SQL,
-    "ann_lsh_bucket_topk": _lsh_oracle(),
-    "ann_ivf_topk": _ANN_IVF_SQL,
     "dedup_embedding_cosine": _EMB_PAIRS_SQL,
     "t_triplet_mine": _triplet_oracle(),
 }

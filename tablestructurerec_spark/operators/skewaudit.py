@@ -33,7 +33,7 @@ pytest DuckDB-parity oracle (the driver registry sits at its 50-row cap).
 
 from __future__ import annotations
 
-from typing import Callable, Dict, List, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from tablestructurerec_spark.operators.quantiles import refine_quantiles
 
 __all__ = [
-    "QUERIES",
     "q_skew_audit",
     "skew_audit",
     "skew_audit_sql",
@@ -122,8 +121,3 @@ SELECT '{key_col}' AS key_col, s.n_rows, CAST(s.n_keys AS BIGINT) AS n_keys,
        greatest(1, (s.mx + {TARGET_ROWS_PER_TASK} - 1) // {TARGET_ROWS_PER_TASK}) AS salt_factor
 FROM s
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_skew_audit": q_skew_audit,
-}

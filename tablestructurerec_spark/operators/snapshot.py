@@ -23,13 +23,11 @@ pytest DuckDB-parity oracle (the driver registry sits at its 50-row cap).
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
-    "QUERIES",
     "q_snapshot_diff",
     "snapshot_diff",
     "snapshot_sql",
@@ -113,8 +111,3 @@ SELECT CASE WHEN h_a IS NULL THEN 'added'
        count(*) AS n_docs
 FROM j GROUP BY 1 ORDER BY status
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_snapshot_diff": q_snapshot_diff,
-}

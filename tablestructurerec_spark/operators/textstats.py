@@ -9,12 +9,11 @@ scan+project (no shuffle except the final presentation sort).
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["QUERIES", "ORACLE_SQL", "tokens_col"]
+__all__ = ["tokens_col"]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -374,59 +373,7 @@ ORDER BY doc_id
 """
 
 
-# ---------------------------------------------------------------------------
-# per-source length distribution — the corpus report every build prints
-# ---------------------------------------------------------------------------
-_QUANTS = (0.25, 0.5, 0.75, 0.95)
-
-
-def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact token-count quantiles per source (linear interpolation, the
-    same type-7 formula Spark's ``percentile`` and DuckDB's
-    ``quantile_cont`` both implement; token counts are small ints, so the
-    interpolation arithmetic is bit-identical across engines).
-
-    Scale note: exact ``percentile`` buffers each group's values, which is
-    fine while groups are few and bounded (sources here); at 100 TB with
-    heavy groups swap in ``approx_percentile`` (t-digest, mergeable
-    partial agg) — same call shape, bounded memory, no oracle equality.
-    """
-    docs = _t(spark, sf_dir, "documents")
-    n_tok = F.size(tokens_col(F.col("text")))
-    q = F.percentile(n_tok, F.array(*[F.lit(p) for p in _QUANTS]))
-    agg = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"), q.alias("q")
-    )
-    cols = [
-        F.round(F.col("q")[i], 6).alias(f"p{int(p * 100)}")
-        for i, p in enumerate(_QUANTS)
-    ]
-    return agg.select("source", "n_docs", *cols).orderBy("source")
-
-
-_LENGTH_QUANTILES_SQL = f"""
-WITH base AS (
-  SELECT source, len({_TOKENS_SQL}) AS n_tok FROM documents
-), agg AS (
-  SELECT source, COUNT(*) AS n_docs,
-         quantile_cont(n_tok, [{', '.join(str(p) for p in _QUANTS)}]) AS q
-  FROM base GROUP BY source
-)
-SELECT source, n_docs,
-       {', '.join(f'ROUND(q[{i + 1}], 6) AS p{int(p * 100)}' for i, p in enumerate(_QUANTS))}
-FROM agg ORDER BY source
-"""
-
-
 # t_token_count / t_lang_id / t_quality_score / t_fingerprint are driver-
 # surfaced through operators.profile.q_text_profile (one scan, all columns;
 # the driver caps correctness rows at 50 — see profile.py).  The standalone
 # q_* functions and SQL stay exported for tests and pipeline composition.
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_length_quantiles": q_length_quantiles,
-    "t_lang_id_ngram": q_lang_id_ngram,
-}
-
-ORACLE_SQL: Dict[str, str] = {
-    "t_length_quantiles": _LENGTH_QUANTILES_SQL,
-}

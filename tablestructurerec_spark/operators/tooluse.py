@@ -4,45 +4,40 @@ agent-data pipeline runs over the ``tool``/``ts`` columns of the
 rule's input hint) that the role-sequence audit (``convschema``) does not
 touch.
 
-Three operators over a transcript frame:
+One fused per-conversation audit (``q_agent_trace_audit``) over a
+transcript frame, covering three signals:
 
-* **q_tool_chain_stats** — sessionize consecutive ``role='tool'`` turns
-  into CHAINS (gaps-and-islands: a chain starts at a tool turn whose
-  predecessor is not a tool turn) and report per conversation: tool-turn
-  count, chain count, longest chain, and the widest chain's distinct-tool
-  count.  Long chains are the signature of multi-step agent work; a
-  corpus whose chains are all length 1 trains no planning behavior.
+* **tool chains** — consecutive ``role='tool'`` turns sessionized into
+  CHAINS (gaps-and-islands: a chain starts at a tool turn whose
+  predecessor is not a tool turn): tool-turn count, chain count, longest
+  chain, and the widest chain's distinct-tool count.  Long chains are the
+  signature of multi-step agent work; a corpus whose chains are all
+  length 1 trains no planning behavior.
 
-* **q_tool_latency** — per-tool call latency: for every assistant→tool
-  adjacent pair, the ``ts`` delta in whole seconds, aggregated per tool
-  as call count / total / max / integer mean-milliseconds.  All-integer
+* **call latency** — for every assistant→tool adjacent pair, the ``ts``
+  delta in whole seconds, summed and maxed per conversation.  All-integer
   (``timestampdiff(SECOND)`` ↔ DuckDB ``date_diff('second')``), so the
   oracle is value-exact — no float drift (SCALING.md §2 discipline).
 
-* **q_agent_loop_audit** — degenerate agent loops: maximal runs of
-  CONSECUTIVE tool turns invoking the SAME tool (null-safe ``<=>`` /
-  ``IS NOT DISTINCT FROM`` comparison), flagging conversations with any
-  run of ``LOOP_LIMIT``+ identical calls.  The agent-trace analogue of
-  ``degen``'s intra-document text loops: an assistant stuck re-issuing
-  the same call is the most common agent-data pathology and must be
-  filtered before training.
+* **agent loops** — maximal runs of CONSECUTIVE tool turns invoking the
+  SAME tool (null-safe ``<=>`` / ``IS NOT DISTINCT FROM`` comparison),
+  flagging conversations with any run of ``LOOP_LIMIT``+ identical calls.
+  The agent-trace analogue of ``degen``'s intra-document text loops: an
+  assistant stuck re-issuing the same call is the most common agent-data
+  pathology and must be filtered before training.
 
 Shuffle shape (the ``convschema`` discipline, plan-pinned): the lag
 window partitions by ``conv_id``; every downstream groupBy key set
-(``conv_id, chain_id`` / ``conv_id, run_id`` / ``conv_id``) CONTAINS
-``conv_id``, and Spark's ``ClusteredDistribution`` is satisfied by a
-hash partitioning on any subset of the grouping keys — so the chain and
-loop audits run on a SINGLE hash exchange end-to-end.  At 10^12 turns
-the Zipf-hot conversations cost one task's sort each (``skewaudit``'s
-salt_factor measures exactly this frame).  The latency face adds one
-bounded-key exchange (|tools| rows).
+CONTAINS ``conv_id``, and Spark's ``ClusteredDistribution`` is satisfied
+by a hash partitioning on any subset of the grouping keys — so the audit
+runs on a SINGLE hash exchange end-to-end.  At 10^12 turns the Zipf-hot
+conversations cost one task's sort each (``skewaudit``'s salt_factor
+measures exactly this frame).
 
-The q_ wrappers derive a deterministic agent-trace view from
+The q_ wrapper derives a deterministic agent-trace view from
 ``documents`` (md5-projected roles/tools, arithmetic ``ts`` — the
 ``_transcripts_from_documents`` / ``convschema._conv_view`` precedent),
-so all three carry full DuckDB value-exact oracles.  Standalone
-operators with pytest parity (the driver registry sits at its 50-row
-cap).
+so it carries a full DuckDB value-exact oracle.
 """
 
 from __future__ import annotations
@@ -55,17 +50,8 @@ from pyspark.sql import functions as F
 __all__ = [
     "QUERIES",
     "ORACLE_SQL",
-    "q_tool_chain_stats",
-    "q_tool_latency",
-    "q_agent_loop_audit",
     "q_agent_trace_audit",
-    "tool_chain_stats",
-    "tool_latency",
-    "agent_loop_audit",
     "agent_trace_audit",
-    "chain_stats_sql",
-    "latency_sql",
-    "loop_audit_sql",
     "trace_audit_sql",
     "LOOP_LIMIT",
     "TOOLS",
@@ -123,10 +109,7 @@ _AGENT_VIEW_SQL = f"""
 
 
 def _new_chain_col():
-    """Chain-start flag over staged ``(role, prev_role)`` columns — shared
-    by the standalone face and the fused audit (found in review: the fused
-    row is the registry's only certification of the family, so the flag
-    expressions must be single-sourced)."""
+    """Chain-start flag over staged ``(role, prev_role)`` columns."""
     return (
         F.when(
             (F.col("role") == "tool")
@@ -140,7 +123,7 @@ def _new_chain_col():
 
 def _new_run_col():
     """Run-start flag over staged ``(role, tool, prev_role, prev_tool)``
-    columns — null-safe tool comparison; shared like :func:`_new_chain_col`."""
+    columns — null-safe tool comparison."""
     return (
         F.when(
             (F.col("role") == "tool")
@@ -157,7 +140,7 @@ def _new_run_col():
 
 def _lat_col():
     """Assistant→tool latency over staged ``(role, prev_role, ts, prev_ts)``
-    columns, whole seconds — shared like :func:`_new_chain_col`."""
+    columns, whole seconds."""
     return (
         F.when(
             (F.col("role") == "tool") & (F.col("prev_role") == "assistant"),
@@ -169,216 +152,7 @@ def _lat_col():
 
 
 # ---------------------------------------------------------------------------
-# 1. tool-chain sessionization
-# ---------------------------------------------------------------------------
-
-def q_tool_chain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tablestructurerec_spark.sources.read import read_table
-
-    return tool_chain_stats(_agent_view(read_table(spark, sf_dir, "documents")))
-
-
-def tool_chain_stats(turns: DataFrame) -> DataFrame:
-    """Per-conversation tool-chain stats over ``(conv_id, turn_idx, role,
-    tool)``: gaps-and-islands chain ids from one lag window, then two
-    subset-key aggregations on the SAME conv_id partitioning (one exchange
-    total, plan-pinned in tests)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    flagged = turns.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        F.lag("role").over(w).alias("prev_role"),
-    ).select(
-        "conv_id", "turn_idx", "role", "tool", _new_chain_col()
-    ).withColumn("chain_id", F.sum("new_chain").over(w))
-    chains = (
-        flagged.where(F.col("role") == "tool")
-        .groupBy("conv_id", "chain_id")
-        .agg(
-            F.count(F.lit(1)).alias("chain_len"),
-            F.countDistinct("tool").alias("chain_tools"),
-        )
-    )
-    return (
-        chains.groupBy("conv_id")
-        .agg(
-            F.sum("chain_len").cast("long").alias("n_tool_turns"),
-            F.count(F.lit(1)).cast("long").alias("n_chains"),
-            F.max("chain_len").cast("long").alias("max_chain_len"),
-            F.max("chain_tools").cast("long").alias("max_chain_tools"),
-        )
-        .orderBy("conv_id")
-    )
-
-
-def chain_stats_sql() -> str:
-    """DuckDB twin of :func:`q_tool_chain_stats` — value-exact."""
-    return f"""
-WITH turns AS ({_AGENT_VIEW_SQL}),
-flagged AS (
-  SELECT conv_id, turn_idx, role, tool,
-         CASE WHEN role = 'tool'
-                   AND COALESCE(lag(role) OVER w, '') <> 'tool'
-              THEN 1 ELSE 0 END AS new_chain
-  FROM turns
-  WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-), numbered AS (
-  SELECT *, SUM(new_chain) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS chain_id
-  FROM flagged
-), chains AS (
-  SELECT conv_id, chain_id,
-         COUNT(*) AS chain_len,
-         COUNT(DISTINCT tool) AS chain_tools
-  FROM numbered WHERE role = 'tool'
-  GROUP BY conv_id, chain_id
-)
-SELECT conv_id,
-       SUM(chain_len)::BIGINT AS n_tool_turns,
-       COUNT(*)::BIGINT AS n_chains,
-       MAX(chain_len)::BIGINT AS max_chain_len,
-       MAX(chain_tools)::BIGINT AS max_chain_tools
-FROM chains GROUP BY conv_id ORDER BY conv_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# 2. per-tool call latency
-# ---------------------------------------------------------------------------
-
-def q_tool_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tablestructurerec_spark.sources.read import read_table
-
-    return tool_latency(_agent_view(read_table(spark, sf_dir, "documents")))
-
-
-def tool_latency(turns: DataFrame) -> DataFrame:
-    """Per-tool latency of assistant→tool adjacent pairs, whole seconds.
-    Mean surfaces as integer milliseconds (``total*1000 DIV n`` — DuckDB
-    ``//`` matches Spark ``DIV`` exactly, including truncation)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    calls = (
-        turns.select(
-            "conv_id",
-            "tool",
-            "role",
-            "ts",
-            F.lag("role").over(w).alias("prev_role"),
-            F.lag("ts").over(w).alias("prev_ts"),
-        )
-        .select("tool", _lat_col())
-        .where(F.col("lat_s").isNotNull())
-    )
-    return (
-        calls.groupBy("tool")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_calls"),
-            F.sum("lat_s").cast("long").alias("total_latency_s"),
-            F.max("lat_s").cast("long").alias("max_latency_s"),
-        )
-        .withColumn(
-            "mean_latency_ms", F.expr("total_latency_s * 1000 DIV n_calls")
-        )
-        .orderBy("tool")
-    )
-
-
-def latency_sql() -> str:
-    """DuckDB twin of :func:`q_tool_latency` — value-exact."""
-    return f"""
-WITH turns AS ({_AGENT_VIEW_SQL}),
-paired AS (
-  SELECT conv_id, tool, role, ts,
-         lag(role) OVER w AS prev_role,
-         lag(ts) OVER w AS prev_ts
-  FROM turns
-  WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-), calls AS (
-  SELECT tool, date_diff('second', prev_ts, ts)::BIGINT AS lat_s
-  FROM paired WHERE role = 'tool' AND prev_role = 'assistant'
-)
-SELECT tool,
-       COUNT(*)::BIGINT AS n_calls,
-       SUM(lat_s)::BIGINT AS total_latency_s,
-       MAX(lat_s)::BIGINT AS max_latency_s,
-       (SUM(lat_s)::BIGINT * 1000) // COUNT(*)::BIGINT AS mean_latency_ms
-FROM calls GROUP BY tool ORDER BY tool
-"""
-
-
-# ---------------------------------------------------------------------------
-# 3. degenerate agent-loop audit
-# ---------------------------------------------------------------------------
-
-def q_agent_loop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tablestructurerec_spark.sources.read import read_table
-
-    return agent_loop_audit(_agent_view(read_table(spark, sf_dir, "documents")))
-
-
-def agent_loop_audit(turns: DataFrame) -> DataFrame:
-    """Per-conversation maximal runs of consecutive SAME-tool calls; a run
-    of :data:`LOOP_LIMIT`+ flags the conversation as looping.  Null-safe
-    tool comparison (``<=>``) so an unnamed tool still forms runs."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    flagged = turns.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        F.lag("role").over(w).alias("prev_role"),
-        F.lag("tool").over(w).alias("prev_tool"),
-    ).select("conv_id", "turn_idx", "role", "tool", _new_run_col())
-    runs = (
-        flagged.withColumn("run_id", F.sum("new_run").over(w))
-        .where(F.col("role") == "tool")
-        .groupBy("conv_id", "run_id")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-    )
-    return (
-        runs.groupBy("conv_id")
-        .agg(
-            F.max("run_len").cast("long").alias("max_run_len"),
-            F.count(F.when(F.col("run_len") >= LOOP_LIMIT, 1))
-            .cast("long")
-            .alias("n_loop_runs"),
-        )
-        .withColumn("is_looping", F.col("n_loop_runs") > 0)
-        .orderBy("conv_id")
-    )
-
-
-def loop_audit_sql() -> str:
-    """DuckDB twin of :func:`q_agent_loop_audit` — value-exact."""
-    return f"""
-WITH turns AS ({_AGENT_VIEW_SQL}),
-flagged AS (
-  SELECT conv_id, turn_idx, role, tool,
-         CASE WHEN role = 'tool'
-                   AND NOT (COALESCE(lag(role) OVER w, '') = 'tool'
-                            AND lag(tool) OVER w IS NOT DISTINCT FROM tool)
-              THEN 1 ELSE 0 END AS new_run
-  FROM turns
-  WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
-), numbered AS (
-  SELECT *, SUM(new_run) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS run_id
-  FROM flagged
-), runs AS (
-  SELECT conv_id, run_id, COUNT(*) AS run_len
-  FROM numbered WHERE role = 'tool'
-  GROUP BY conv_id, run_id
-)
-SELECT conv_id,
-       MAX(run_len)::BIGINT AS max_run_len,
-       COUNT(*) FILTER (WHERE run_len >= {LOOP_LIMIT})::BIGINT AS n_loop_runs,
-       COUNT(*) FILTER (WHERE run_len >= {LOOP_LIMIT}) > 0 AS is_looping
-FROM runs GROUP BY conv_id ORDER BY conv_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# 4. fused agent-trace audit (the registry face)
+# fused agent-trace audit
 # ---------------------------------------------------------------------------
 
 def q_agent_trace_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -388,9 +162,8 @@ def q_agent_trace_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def agent_trace_audit(turns: DataFrame) -> DataFrame:
-    """All three tool-use kernels fused into ONE per-conversation verdict —
-    the composed registry row certifying the whole family through a single
-    oracle (the ``t_text_profile`` / ``t_conv_audit`` pattern).
+    """All three tool-use signals fused into ONE per-conversation verdict
+    (the ``t_text_profile`` / ``t_conv_audit`` pattern).
 
     Key structural fact: a chain boundary is also a run boundary (a new
     chain starts where the predecessor is not a tool turn, which also
@@ -398,9 +171,9 @@ def agent_trace_audit(turns: DataFrame) -> DataFrame:
     audit is a three-level rollup ``(conv_id, chain_id, run_id)`` →
     ``(conv_id, chain_id)`` → ``conv_id``.  Every level's grouping keys
     contain ``conv_id``, so all three aggregations reuse the lag window's
-    hash partitioning — ONE exchange end-to-end (plan-pinned), same cost
-    as any single face.  Latency sums ride the same rollup (pair rows are
-    tool rows, level-1 partial sums upward)."""
+    hash partitioning — ONE exchange end-to-end (plan-pinned).  Latency
+    sums ride the same rollup (pair rows are tool rows, level-1 partial
+    sums upward)."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     flagged = turns.select(
         "conv_id",
@@ -522,9 +295,6 @@ FROM chains GROUP BY conv_id ORDER BY conv_id
 
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_tool_chain_stats": q_tool_chain_stats,
-    "t_tool_latency": q_tool_latency,
-    "t_agent_loop_audit": q_agent_loop_audit,
     "t_agent_trace_audit": q_agent_trace_audit,
 }
 

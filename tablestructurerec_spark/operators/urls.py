@@ -11,7 +11,7 @@ corpus would), so the family ships a DETERMINISTIC url synthesizer keyed by
 VERBATIM by both engines — that exercises every canonicalization rule
 (mixed-case schemes and hosts, default and non-default ports, trailing
 host dots, tracking params, fragments, multi-label public suffixes, a
-dotless host).  Every operator body consumes a plain ``url`` column, so a
+dotless host).  The operator body consumes a plain ``url`` column, so a
 corpus with real URLs drops in by skipping the synthesizer.
 
 Cross-engine discipline (the langscript/charprofile shared-expression
@@ -61,16 +61,15 @@ dotless host registers as itself, an unknown multi-label host as its last
 two labels.
 
 Spark shape, audited for 100 TB: canonicalize / registered-domain are
-MAP-ONLY (one scan, zero shuffles).  Domain stats is one
-``groupBy(registered_domain)`` partial-agg shuffle (domains are bounded —
-~10^7-10^8 at web scale — and the md5 dup projection happens AT THE SCAN,
-the snapshot.py discipline).  The domain filter broadcast-joins the
-bounded stats frame back onto the corpus.  Domain dedup shuffles on
-``md5(text)`` (the exact-dedup shape) with the bounded stats broadcast
-into the group ranking — never all-pairs.
+map-side expressions.  Domain stats is one ``groupBy(registered_domain)``
+partial-agg shuffle (domains are bounded — ~10^7-10^8 at web scale — and
+the md5 dup projection happens AT THE SCAN, the snapshot.py discipline),
+broadcast back into the per-doc verdict.  Dedup shuffles on ``md5(text)``
+(the exact-dedup shape) with the bounded stats broadcast into the group
+ranking — never all-pairs.
 
-Returns are all ordered by doc_id / domain for oracle determinism; a
-production face would drop the presentation sort (the flagship-plan note).
+Output is ordered by doc_id for oracle determinism; a production face
+would drop the presentation sort (the flagship-plan note).
 """
 
 from __future__ import annotations
@@ -83,16 +82,8 @@ from pyspark.sql import functions as F
 __all__ = [
     "QUERIES",
     "ORACLE_SQL",
-    "q_url_canonicalize",
-    "q_domain_stats",
-    "q_domain_filter",
-    "q_domain_dedup",
     "q_url_hygiene",
     "url_hygiene_sql",
-    "url_canonicalize_sql",
-    "domain_stats_sql",
-    "domain_filter_sql",
-    "domain_dedup_sql",
     "synth_url_sql",
     "PUBLIC_SUFFIX_SNAPSHOT",
     "DOMAIN_BLOCKLIST",
@@ -293,36 +284,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- operators -------------------------------------------------------------
 
 
-def url_canonicalize(docs: DataFrame) -> DataFrame:
-    """(doc_id, url, canonical_url, registered_domain) — MAP-ONLY."""
-    staged = _with_url_parts(docs)
-    return staged.select(
-        "doc_id",
-        "url",
-        F.expr(_CANON_ASSEMBLE).alias("canonical_url"),
-        F.expr(regdomain_sql("host")).alias("registered_domain"),
-    ).orderBy("doc_id")
-
-
-def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return url_canonicalize(_docs(spark, sf_dir))
-
-
-def url_canonicalize_sql() -> str:
-    return f"""
-WITH staged AS (
-  SELECT doc_id, {synth_url_sql('doc_id')} AS url FROM documents
-), parts AS (
-  SELECT doc_id, url, {_duck_parts_cte('url')} FROM staged
-)
-SELECT doc_id, url,
-       {_CANON_ASSEMBLE} AS canonical_url,
-       {regdomain_sql('host')} AS registered_domain
-FROM parts
-ORDER BY doc_id
-"""
-
-
 def domain_stats(docs: DataFrame) -> DataFrame:
     """Per registered domain: doc count, exact-dup rate (md5 at the scan —
     the snapshot.py projection discipline), language count."""
@@ -351,168 +312,14 @@ def domain_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return domain_stats(_docs(spark, sf_dir))
-
-
-def domain_stats_sql() -> str:
-    return f"""
-WITH staged AS (
-  SELECT doc_id, text, lang, {synth_url_sql('doc_id')} AS url FROM documents
-), parts AS (
-  SELECT doc_id, text, lang, {_duck_parts_cte('url')} FROM staged
-), tagged AS (
-  SELECT {regdomain_sql('host')} AS registered_domain, md5(text) AS h, lang
-  FROM parts
-), agg AS (
-  SELECT registered_domain, count(*) AS n_docs,
-         count(DISTINCT h) AS n_distinct_texts,
-         count(DISTINCT lang) AS n_langs
-  FROM tagged GROUP BY registered_domain
-)
-SELECT registered_domain, CAST(n_docs AS BIGINT) AS n_docs,
-       CAST(n_distinct_texts AS BIGINT) AS n_distinct_texts,
-       CAST((n_docs - n_distinct_texts) * 1000000 // n_docs AS BIGINT) AS dup_ppm,
-       CAST(n_langs AS BIGINT) AS n_langs
-FROM agg
-ORDER BY registered_domain
-"""
-
-
-def domain_filter(docs: DataFrame) -> DataFrame:
-    """Per-doc keep verdict: blocklisted domain OR domain dup rate above
-    ``DUP_PPM_MAX`` drops the doc.  The bounded stats frame broadcasts."""
-    staged = _with_url_parts(docs).select(
-        "doc_id", F.expr(regdomain_sql("host")).alias("registered_domain")
-    )
-    stats = domain_stats(docs).select("registered_domain", "dup_ppm")
-    block = F.col("registered_domain").isin(DOMAIN_BLOCKLIST)
-    dupy = F.col("dup_ppm") > DUP_PPM_MAX
-    return (
-        staged.join(F.broadcast(stats), "registered_domain")
-        .select(
-            "doc_id",
-            "registered_domain",
-            "dup_ppm",
-            block.alias("is_blocked"),
-            (~block & ~dupy).alias("keep"),
-            F.when(block, "blocklist")
-            .when(dupy, "dup_rate")
-            .otherwise("ok")
-            .alias("reason"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def q_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return domain_filter(_docs(spark, sf_dir))
-
-
-def domain_filter_sql() -> str:
-    block_list = ", ".join(f"'{d}'" for d in DOMAIN_BLOCKLIST)
-    return f"""
-WITH staged AS (
-  SELECT doc_id, text, lang, {synth_url_sql('doc_id')} AS url FROM documents
-), parts AS (
-  SELECT doc_id, text, lang, {_duck_parts_cte('url')} FROM staged
-), tagged AS (
-  SELECT doc_id, {regdomain_sql('host')} AS registered_domain, md5(text) AS h
-  FROM parts
-), stats AS (
-  SELECT registered_domain,
-         CAST((count(*) - count(DISTINCT h)) * 1000000 // count(*) AS BIGINT) AS dup_ppm
-  FROM tagged GROUP BY registered_domain
-)
-SELECT t.doc_id, t.registered_domain, s.dup_ppm,
-       t.registered_domain IN ({block_list}) AS is_blocked,
-       (t.registered_domain NOT IN ({block_list}) AND s.dup_ppm <= {DUP_PPM_MAX}) AS keep,
-       CASE WHEN t.registered_domain IN ({block_list}) THEN 'blocklist'
-            WHEN s.dup_ppm > {DUP_PPM_MAX} THEN 'dup_rate'
-            ELSE 'ok' END AS reason
-FROM tagged t JOIN stats s USING (registered_domain)
-ORDER BY t.doc_id
-"""
-
-
-def domain_dedup(docs: DataFrame) -> DataFrame:
-    """Cross-domain exact-text dedup with a canonical-source policy: inside
-    each md5(text) group keep the doc from the domain with the most docs
-    (tie → lexically-first domain, then smallest doc_id).  Emits a verdict
-    per doc: ``(doc_id, registered_domain, canonical_doc_id, is_canonical)``.
-
-    Shape: one shuffle on md5 (the exact-dedup shape); the bounded domain
-    stats broadcast into the ranking — never all-pairs.
-    """
-    from pyspark.sql import Window
-
-    staged = _with_url_parts(docs).select(
-        "doc_id",
-        F.expr(regdomain_sql("host")).alias("registered_domain"),
-        F.md5(F.col("text")).alias("h"),
-    )
-    stats = domain_stats(docs).select("registered_domain", "n_docs")
-    ranked = staged.join(F.broadcast(stats), "registered_domain").withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("h").orderBy(
-                F.desc("n_docs"), F.asc("registered_domain"), F.asc("doc_id")
-            )
-        ),
-    )
-    w = Window.partitionBy("h")
-    return (
-        ranked.select(
-            "doc_id",
-            "registered_domain",
-            F.min(F.when(F.col("rk") == 1, F.col("doc_id"))).over(w).alias(
-                "canonical_doc_id"
-            ),
-            (F.col("rk") == 1).alias("is_canonical"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def q_domain_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return domain_dedup(_docs(spark, sf_dir))
-
-
-def domain_dedup_sql() -> str:
-    return f"""
-WITH staged AS (
-  SELECT doc_id, text, {synth_url_sql('doc_id')} AS url FROM documents
-), parts AS (
-  SELECT doc_id, text, {_duck_parts_cte('url')} FROM staged
-), tagged AS (
-  SELECT doc_id, {regdomain_sql('host')} AS registered_domain, md5(text) AS h
-  FROM parts
-), stats AS (
-  SELECT registered_domain, count(*) AS n_docs FROM tagged GROUP BY registered_domain
-), ranked AS (
-  SELECT t.doc_id, t.registered_domain, t.h,
-         row_number() OVER (
-           PARTITION BY t.h
-           ORDER BY s.n_docs DESC, t.registered_domain ASC, t.doc_id ASC
-         ) AS rk
-  FROM tagged t JOIN stats s USING (registered_domain)
-)
-SELECT doc_id, registered_domain,
-       min(CASE WHEN rk = 1 THEN doc_id END) OVER (PARTITION BY h) AS canonical_doc_id,
-       rk = 1 AS is_canonical
-FROM ranked
-ORDER BY doc_id
-"""
-
-
 def url_hygiene(docs: DataFrame) -> DataFrame:
-    """FUSED per-doc verdict registered with the driver (the
-    ``t_text_profile`` consolidation pattern — VERDICT r3 #6): one row
-    certifies canonicalization, registered-domain extraction, domain
-    stats, the blocklist/dup-rate filter policy, AND the canonical-source
-    dedup, because the composed oracle recomputes every stage.  Columns:
-    ``(doc_id, canonical_url, registered_domain, dup_ppm, keep, reason,
-    canonical_doc_id, is_canonical)``."""
+    """FUSED per-doc verdict (the ``t_text_profile`` consolidation
+    pattern — VERDICT r3 #6): one row certifies canonicalization,
+    registered-domain extraction, domain stats, the blocklist/dup-rate
+    filter policy, AND the canonical-source dedup, because the composed
+    oracle recomputes every stage.  Columns: ``(doc_id, canonical_url,
+    registered_domain, dup_ppm, keep, reason, canonical_doc_id,
+    is_canonical)``."""
     from pyspark.sql import Window
 
     staged = _with_url_parts(docs).select(
@@ -595,10 +402,6 @@ ORDER BY doc_id
 
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_url_canonicalize": q_url_canonicalize,
-    "t_domain_stats": q_domain_stats,
-    "t_domain_filter": q_domain_filter,
-    "t_domain_dedup": q_domain_dedup,
     "t_url_hygiene": q_url_hygiene,
 }
 

@@ -21,14 +21,13 @@ Spark shape, audited for 100 TB:
 
 from __future__ import annotations
 
-from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tablestructurerec_spark.operators.textstats import _TOKENS_SQL, tokens_col
 
-__all__ = ["QUERIES", "q_zipf_stats", "_ZIPF_SQL"]
+__all__ = ["q_zipf_stats", "_ZIPF_SQL"]
 
 _TOP_N = 50
 _LOG_SCALE = 1_000_000  # 1e-6 log10 resolution; products stay << 2^63
@@ -137,8 +136,3 @@ SELECT s.rank, s.term, s.cnt,
 FROM scaled s CROSS JOIN total t CROSS JOIN fit f
 ORDER BY s.rank
 """
-
-
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "t_zipf_stats": q_zipf_stats,
-}

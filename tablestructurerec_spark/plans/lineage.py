@@ -23,7 +23,10 @@ and metrics tables".  Design (SURVEY.md §4):
   parquet committer stages to _temporary), leaves no ``ok`` rows, and the
   next run redoes exactly the unfinished buckets — exactly-once at bucket
   granularity.  Bucket ids mean nothing across bucket counts, so a resume
-  with another ``n_buckets`` than the ok rows record is refused;
+  with another ``n_buckets`` than the ok rows record is refused, and so is
+  one over tables that no ok row records (a crash between the table commit
+  and the lineage append) when their rows hash to other buckets under the
+  new count;
 * metrics ride the write: ``n_turns`` and ``n_tables`` are one
   ``DataFrame.observe`` aggregate above the shuffle, in the write's result
   stage, read after the write — no second input scan and no re-read of the
@@ -80,27 +83,51 @@ def _names(out_dir: str):
     return False, f"{out_dir}/tables", f"{out_dir}/_lineage"
 
 
-def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The lineage table, or None when no run has written one yet."""
-    is_cat, _tables, lin_t = _names(out_dir)
+def _read(spark: SparkSession, is_cat: bool, target: str) -> DataFrame | None:
+    """The table or parquet directory ``target``, or None when no run has
+    written it yet."""
     if is_cat:
-        return spark.table(lin_t) if spark.catalog.tableExists(lin_t) else None
+        return spark.table(target) if spark.catalog.tableExists(target) else None
     # existence pre-check via the Hadoop FS API where available (avoids the
     # JVM logging an alarming PATH_NOT_FOUND trace on every fresh run); the
-    # read itself stays guarded so an unreadable _lineage dir (e.g. only a
+    # read itself stays guarded so an unreadable dir (e.g. only a
     # _temporary left by a crash mid-append) or a Connect session without
-    # the py4j bridge degrades to "no completed buckets" and re-runs them
+    # the py4j bridge degrades to "not written" (for _lineage: no completed
+    # buckets, so they re-run)
     try:
-        path = spark._jvm.org.apache.hadoop.fs.Path(lin_t)
+        path = spark._jvm.org.apache.hadoop.fs.Path(target)
         fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
         if not fs.exists(path):
             return None
     except Exception:
         pass
     try:
-        return spark.read.parquet(lin_t)
+        return spark.read.parquet(target)
     except Exception:
         return None
+
+
+def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The lineage table, or None when no run has written one yet."""
+    is_cat, _tables, lin_t = _names(out_dir)
+    return _read(spark, is_cat, lin_t)
+
+
+def _foreign_buckets(
+    spark: SparkSession, out_dir: str, done: set, n_buckets: int
+) -> List[int]:
+    """Written buckets that no ok lineage row records and that hold a row
+    an ``n_buckets`` run puts in another bucket: a run with another bucket
+    count wrote them, and its lineage append was lost.  A resume would
+    rewrite their tables into other buckets and leave these in place."""
+    is_cat, tables_t, _lin = _names(out_dir)
+    tables = _read(spark, is_cat, tables_t)
+    if tables is None:
+        return []
+    stray = bucket_col(n_buckets) != F.col("bucket")
+    if done:
+        stray &= ~F.col("bucket").isin(sorted(done))
+    return sorted(r.bucket for r in tables.where(stray).select("bucket").distinct().collect())
 
 
 def _ok_rows(spark: SparkSession, out_dir: str) -> List[Row]:
@@ -183,7 +210,10 @@ def run_with_lineage(
     rows.
 
     Raises ``ValueError`` before any write if ``out_dir`` holds ok buckets
-    of another bucket count: bucket ids do not carry over between counts.
+    of another bucket count, or tables that no ok lineage row records and
+    whose rows an ``n_buckets`` run puts in other buckets (a run with
+    another count whose lineage append was lost): bucket ids do not carry
+    over between counts.
 
     ``fail_after`` caps the run at N buckets (test hook simulating a crash
     between runs).
@@ -196,6 +226,14 @@ def run_with_lineage(
             f"cannot resume it with {n_buckets} buckets"
         )
     done = {r.bucket for r in ok}
+    foreign = _foreign_buckets(spark, out_dir, done, n_buckets)
+    if foreign:
+        raise ValueError(
+            f"{out_dir} holds unrecorded tables in bucket(s) {foreign} that "
+            f"a {n_buckets}-bucket run does not put there; they come from a "
+            f"run with another bucket count, so it cannot be resumed with "
+            f"{n_buckets} buckets"
+        )
     todo = [b for b in range(n_buckets) if b not in done]
     if fail_after is not None:
         todo = todo[:fail_after]

@@ -1,19 +1,22 @@
-"""Degenerate-loop detection (degen.q_degen_loops) — hand-built loop
-fixtures, map-only plan pin (no exchange), and DuckDB value parity of the
-standalone SQL vs the naive islands oracle (registry at the driver's
-50-row cap).
+"""Degenerate-loop folds (degen._RUN1/_RUN2, the per-doc signal the source
+health report flags) — hand-built loop fixtures and DuckDB value parity of
+the folds vs the naive islands oracle (``degen_sql``).
 """
 
 import os
 import random
 
 import duckdb
+from pyspark.sql import functions as F
 
 from tablestructurerec_spark.operators.degen import (
-    degen_loops,
+    _RUN1,
+    _RUN2,
+    CYCLE2_LIMIT,
+    RUN_LIMIT,
     degen_sql,
-    q_degen_loops,
 )
+from tablestructurerec_spark.operators.textstats import tokens_col
 
 SF_DIR = os.environ.get("TSR_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -25,6 +28,34 @@ def _write(tmp_path, rows):
     return str(tmp_path)
 
 
+def _folds(spark, d):
+    """``degen_sql``'s columns, computed by the Spark folds."""
+    staged = spark.read.parquet(d + "/documents.parquet").select(
+        "doc_id", tokens_col(F.col("text")).alias("toks")
+    )
+    return [
+        tuple(r)
+        for r in staged.select(
+            "doc_id",
+            F.size("toks").cast("long").alias("n_tok"),
+            F.expr(_RUN1).alias("max_run"),
+            F.expr(_RUN2).alias("max_cycle2"),
+        )
+        .withColumn(
+            "is_degenerate",
+            (F.col("max_run") >= RUN_LIMIT) | (F.col("max_cycle2") >= CYCLE2_LIMIT),
+        )
+        .orderBy("doc_id")
+        .collect()
+    ]
+
+
+def _oracle(d):
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
+    return [tuple(r) for r in con.execute(degen_sql()).fetchall()]
+
+
 def test_loop_fixtures(spark, tmp_path):
     rows = [
         {"doc_id": 0, "text": "normal text with no repeats at all", "source": "s"},
@@ -33,42 +64,19 @@ def test_loop_fixtures(spark, tmp_path):
         {"doc_id": 3, "text": "one", "source": "s"},
         {"doc_id": 4, "text": "a a b b a a", "source": "s"},  # short runs only
     ]
-    d = _write(tmp_path, rows)
-    got = {r["doc_id"]: r for r in q_degen_loops(spark, d).collect()}
-    assert got[0]["max_run"] == 1 and not got[0]["is_degenerate"]
-    assert got[1]["max_run"] == 5 and got[1]["is_degenerate"]
+    got = {r[0]: r for r in _folds(spark, _write(tmp_path, rows))}
+    # (doc_id, n_tok, max_run, max_cycle2, is_degenerate)
+    assert got[0][2] == 1 and not got[0][4]
+    assert got[1][2] == 5 and got[1][4]
     # doc 2: yes/no alternation of 10 tokens → 8 positions satisfy t[i]=t[i-2]
-    assert got[2]["max_cycle2"] == 8 and got[2]["is_degenerate"]
-    assert got[3]["n_tok"] == 1 and got[3]["max_run"] == 1
-    assert got[4]["max_run"] == 2 and not got[4]["is_degenerate"]
-    # "a a b b a a": t[i]=t[i-2] holds at positions 3 and 5..6? ground truth
-    # from the oracle below keeps this pinned; here just the flag matters
-
-
-def test_map_only_plan(spark, tmp_path):
-    rows = [{"doc_id": i, "text": "x y z", "source": "s"} for i in range(10)]
-    d = _write(tmp_path, rows)
-    out = degen_loops(spark.read.parquet(d + "/documents.parquet"))
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    runtime = plan.split("== Initial Plan ==")[0]
-    # only the presentation orderBy's range exchange; no hash exchange, no
-    # aggregation node — the folds run inside the row projection
-    assert "Exchange hashpartitioning" not in runtime
-    assert "Generate explode" not in runtime
+    assert got[2][3] == 8 and got[2][4]
+    assert got[3][1] == 1 and got[3][2] == 1
+    assert got[4][2] == 2 and not got[4][4]
 
 
 def test_duckdb_parity_sf(spark):
-    got = [
-        tuple(r)
-        for r in q_degen_loops(spark, SF_DIR).toPandas().itertuples(index=False)
-    ]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
-    )
-    want = [tuple(r) for r in con.execute(degen_sql()).fetchall()]
-    assert got == want
+    got = _folds(spark, SF_DIR)
+    assert got == _oracle(SF_DIR)
     assert len(got) > 0
 
 
@@ -86,12 +94,6 @@ def test_duckdb_parity_planted_loops(spark, tmp_path):
             words[p:p + 12] = ["ping", "pong"] * 6
         rows.append({"doc_id": i, "text": " ".join(words), "source": "s"})
     d = _write(tmp_path, rows)
-    got = [
-        tuple(r)
-        for r in q_degen_loops(spark, d).toPandas().itertuples(index=False)
-    ]
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
-    want = [tuple(r) for r in con.execute(degen_sql()).fetchall()]
-    assert got == want
+    got = _folds(spark, d)
+    assert got == _oracle(d)
     assert any(r[4] for r in got) and any(not r[4] for r in got)

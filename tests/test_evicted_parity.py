@@ -1,9 +1,9 @@
-"""Driver-identical DuckDB parity for the operator queries that have a
-module oracle but are not driver rows (``__spark_entry__.DRIVER_ROWS``).
-Leaving the 50-row registry must not lower their verification rigor, so
-this file pins exactly what the driver would: row count, column names, and
-order-insensitive values at the test sf, with every generated stage
-compiled (no codegen fallback).  The list is derived, not kept.
+"""Driver-identical DuckDB parity for the registered operator queries that
+have a module oracle but are not driver rows (``__spark_entry__.DRIVER_ROWS``;
+the named exceptions of ``tests/test_operator_reach.py``).  This file pins
+exactly what the driver would: row count, column names, and order-insensitive
+values at the test sf, with every generated stage compiled (no codegen
+fallback).  The list is derived, not kept.
 """
 
 import math

@@ -1,186 +1,12 @@
-"""Split-leakage audit (leakage.q_split_leakage) — planted cross-split
-duplicate detection, clean-corpus negative, split-assignment consistency
-with sampling.q_split_assign, and DuckDB value parity (registry at the
-driver's 50-row cap).
+"""Embedding-space split-leakage audit (leakage.q_split_leakage_emb) —
+DuckDB value parity (also at a low threshold where rows exist), a planted
+paraphrase pair caught across the split, and the bucket-join plan pin.
 """
 
 import os
 
-import duckdb
-
-from tablestructurerec_spark.operators.leakage import (
-    leakage_sql,
-    near_leakage_sql,
-    q_split_leakage,
-    q_split_leakage_near,
-    split_leakage,
-)
-from tablestructurerec_spark.operators.sampling import q_split_assign
-
 SF_DIR = os.environ.get("TSR_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-
-def _write(tmp_path, rows):
-    import pandas as pd
-
-    pd.DataFrame(rows).to_parquet(str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
-
-
-def _splits(spark, d, doc_ids):
-    rows = q_split_assign(spark, d).collect()
-    return {r["doc_id"]: r["split"] for r in rows if r["doc_id"] in doc_ids}
-
-
-def test_planted_cross_split_dup_found(spark, tmp_path):
-    # Copy one text onto MANY doc_ids: with an 8/1/1 id-hash split, some
-    # copies land in train and some in eval; the audit must surface exactly
-    # that group with the right per-split counts.
-    rows = [{"doc_id": i, "text": f"unique text {i}", "source": "s"} for i in range(50)]
-    rows += [
-        {"doc_id": 1000 + i, "text": "the copied document body", "source": "s"}
-        for i in range(40)
-    ]
-    d = _write(tmp_path, rows)
-    got = q_split_leakage(spark, d).collect()
-    assert len(got) == 1
-    grp = got[0]
-    sp = _splits(spark, d, set(range(1000, 1040)))
-    n_train = sum(1 for s in sp.values() if s == "train")
-    assert grp["n_docs"] == 40
-    assert grp["n_train"] == n_train
-    assert grp["n_val"] == sum(1 for s in sp.values() if s == "val")
-    assert grp["n_test"] == sum(1 for s in sp.values() if s == "test")
-    assert grp["exemplar_doc_id"] == 1000
-
-
-def test_train_only_dups_are_not_leaks(spark, tmp_path):
-    # Duplicates confined to one side of the boundary are a dedup concern,
-    # not a leakage concern — pick two ids that both hash to train.
-    rows = [{"doc_id": i, "text": f"unique text {i}", "source": "s"} for i in range(20)]
-    d0 = _write(tmp_path, rows)
-    sp = _splits(spark, d0, set(range(20)))
-    train_ids = [i for i, s in sp.items() if s == "train"][:2]
-    assert len(train_ids) == 2
-    for i in train_ids:
-        rows[i] = {"doc_id": i, "text": "same train-side body", "source": "s"}
-    d = _write(tmp_path, rows)
-    assert q_split_leakage(spark, d).count() == 0
-
-
-def test_duckdb_parity_planted(spark, tmp_path):
-    rows = [{"doc_id": i, "text": f"unique {i}", "source": "s"} for i in range(30)]
-    rows += [
-        {"doc_id": 500 + i, "text": "dup body A", "source": "s"} for i in range(25)
-    ]
-    rows += [
-        {"doc_id": 900 + i, "text": "dup body B", "source": "s"} for i in range(25)
-    ]
-    d = _write(tmp_path, rows)
-    got = [
-        tuple(r)
-        for r in q_split_leakage(spark, d).toPandas().itertuples(index=False)
-    ]
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
-    want = [tuple(r) for r in con.execute(leakage_sql()).fetchall()]
-    assert got == want
-    assert len(got) >= 1
-
-
-def test_duckdb_parity_sf(spark):
-    # The sf fixture has no exact text dups — both engines must agree on
-    # the (empty or not) result identically.
-    got = [
-        tuple(r)
-        for r in q_split_leakage(spark, SF_DIR).toPandas().itertuples(index=False)
-    ]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
-    )
-    want = [tuple(r) for r in con.execute(leakage_sql()).fetchall()]
-    assert got == want
-
-
-def test_near_dup_leak_found_where_exact_misses(spark, tmp_path):
-    # A perturbed copy (one token changed out of 120) across the boundary:
-    # invisible to the exact-hash audit, caught by the banded audit.
-    base = " ".join(f"w{i} common token stream" for i in range(30))
-    rows = [{"doc_id": i, "text": f"unique {i} " * 30, "source": "s"} for i in range(20)]
-    d0 = _write(tmp_path, rows)
-    sp = _splits(spark, d0, set(range(20)))
-    train_id = next(i for i, s in sp.items() if s == "train")
-    eval_id = next(i for i, s in sp.items() if s in ("val", "test"))
-    rows[train_id] = {"doc_id": train_id, "text": base, "source": "s"}
-    rows[eval_id] = {"doc_id": eval_id, "text": base + " tail", "source": "s"}
-    d = _write(tmp_path, rows)
-    assert q_split_leakage(spark, d).count() == 0  # exact audit blind
-    near = q_split_leakage_near(spark, d).collect()
-    assert (train_id, eval_id) in {(r["train_doc_id"], r["eval_doc_id"]) for r in near}
-    for r in near:
-        assert r["eval_split"] in ("val", "test")
-
-
-def test_near_dup_parity(spark, tmp_path):
-    import random
-
-    rng = random.Random(31)
-    vocab = [f"tok{i}" for i in range(25)]
-    rows = []
-    for i in range(40):
-        words = [vocab[rng.randrange(25)] for _ in range(60)]
-        rows.append({"doc_id": i, "text": " ".join(words), "source": "s"})
-        if i % 4 == 0:  # sprinkle perturbed copies to make buckets collide
-            rows.append(
-                {
-                    "doc_id": 100 + i,
-                    "text": " ".join(words[:-1] + ["tail"]),
-                    "source": "s",
-                }
-            )
-    d = _write(tmp_path, rows)
-    got = [
-        tuple(r)
-        for r in q_split_leakage_near(spark, d).toPandas().itertuples(index=False)
-    ]
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
-    want = [tuple(r) for r in con.execute(near_leakage_sql()).fetchall()]
-    assert got == want
-
-
-def test_near_dup_parity_sf(spark):
-    got = [
-        tuple(r)
-        for r in q_split_leakage_near(spark, SF_DIR)
-        .toPandas()
-        .itertuples(index=False)
-    ]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
-    )
-    want = [tuple(r) for r in con.execute(near_leakage_sql()).fetchall()]
-    assert got == want
-
-
-def test_single_shuffle_plan(spark, tmp_path):
-    rows = [{"doc_id": i, "text": f"t {i % 5}", "source": "s"} for i in range(40)]
-    d = _write(tmp_path, rows)
-    out = split_leakage(spark.read.parquet(d + "/documents.parquet"))
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    runtime = plan.split("== Initial Plan ==")[0]
-    # one hash-partitioning exchange (the content-hash groupBy) + the final
-    # presentation sort's range exchange; no join anywhere
-    assert runtime.count("Exchange hashpartitioning") == 1
-    assert "Join" not in runtime
-
-
-# ---------------------------------------------------------------------------
-# embedding-space leakage (third modality)
-# ---------------------------------------------------------------------------
 
 def test_emb_leakage_duckdb_parity(spark):
     import duckdb

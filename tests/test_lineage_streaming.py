@@ -184,6 +184,50 @@ def test_resume_with_another_bucket_count_is_refused(spark, transcripts, tmp_pat
             _drop_catalog(spark, out)
 
 
+@pytest.mark.parametrize("mode", ["path", "catalog"])
+def test_resume_after_a_lost_lineage_append_checks_the_bucket_count(
+    spark, transcripts, tmp_path, mode
+):
+    """A crash between the table commit and the lineage append leaves
+    tables that no lineage row records.  A resume with another bucket count
+    would rewrite their rows into other buckets beside them, so it is
+    refused before any write; a resume with the same count rewrites every
+    bucket and equals the one-shot output."""
+    import shutil
+
+    out = str(tmp_path / "out") if mode == "path" else "catalog:tsr_test_lost"
+    ref = str(tmp_path / "ref")
+
+    def lose_lineage():
+        if mode == "path":
+            shutil.rmtree(f"{out}/_lineage")
+        else:
+            spark.sql(f"DROP TABLE {out[len('catalog:'):]}_lineage")
+
+    def rows(o):
+        keys = ("conv_id", "turn_idx", "table_idx", "pred_html", "bucket")
+        return sorted(tuple(r) for r in read_output(spark, o).select(*keys).collect())
+
+    if mode == "catalog":
+        _drop_catalog(spark, out)
+    try:
+        run_with_lineage(spark, transcripts, ref, n_buckets=8, run_id="ref")
+        run_with_lineage(spark, transcripts, out, n_buckets=8, run_id="r1")
+        lose_lineage()
+        before = rows(out)
+        with pytest.raises(ValueError, match=r"another bucket count.*with 4 buckets"):
+            run_with_lineage(spark, transcripts, out, n_buckets=4, run_id="r2")
+        assert rows(out) == before
+        assert completed_buckets(spark, out) == []
+        assert run_with_lineage(spark, transcripts, out, n_buckets=8, run_id="r3") == list(
+            range(8)
+        )
+        assert rows(out) == rows(ref)
+    finally:
+        if mode == "catalog":
+            _drop_catalog(spark, out)
+
+
 def _drop_catalog(spark, out):
     prefix = out[len("catalog:"):]
     for t in (f"{prefix}_tables", f"{prefix}_lineage"):

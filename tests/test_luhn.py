@@ -1,14 +1,16 @@
-"""Luhn credit-card audit (luhn.q_cc_audit) — known valid/invalid PANs,
-separator handling, length-window rejection, python-Luhn random ground
-truth, and DuckDB value parity (registry at the driver's 50-row cap).
+"""Luhn credit-card verdicts (luhn._SPARK_VALID, the per-doc signal the
+source health report flags) — known valid/invalid PANs, separator
+handling, length-window rejection, python-Luhn random ground truth, and
+DuckDB value parity against ``cc_sql``.
 """
 
 import os
 import random
 
 import duckdb
+from pyspark.sql import functions as F
 
-from tablestructurerec_spark.operators.luhn import cc_sql, q_cc_audit
+from tablestructurerec_spark.operators.luhn import _SPARK_VALID, cc_sql
 
 SF_DIR = os.environ.get("TSR_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -18,6 +20,23 @@ def _write(tmp_path, rows):
 
     pd.DataFrame(rows).to_parquet(str(tmp_path / "documents.parquet"))
     return str(tmp_path)
+
+
+def _audit(spark, d):
+    """``cc_sql``'s rows — ``(doc_id, n_candidates, n_valid,
+    has_valid_cc)`` for docs with a candidate — from the Spark verdicts."""
+    docs = spark.read.parquet(d + "/documents.parquet")
+    flags = docs.select("doc_id", F.expr(_SPARK_VALID).alias("v")).orderBy("doc_id")
+    return [
+        (r["doc_id"], len(r["v"]), sum(r["v"]), sum(r["v"]) > 0)
+        for r in flags.collect()
+        if r["v"]
+    ]
+
+
+def _by_doc(spark, d):
+    keys = ("doc_id", "n_candidates", "n_valid", "has_valid_cc")
+    return {row[0]: dict(zip(keys, row)) for row in _audit(spark, d)}
 
 
 def _luhn_ok(digits: str) -> bool:
@@ -49,7 +68,7 @@ def test_known_pans(spark, tmp_path):
         {"doc_id": 4, "text": "amex 378282246310005 works", "source": "s"},  # valid 15
     ]
     d = _write(tmp_path, rows)
-    got = {r["doc_id"]: r for r in q_cc_audit(spark, d).collect()}
+    got = _by_doc(spark, d)
     assert got[0]["n_valid"] == 1 and got[0]["has_valid_cc"]
     assert got[1]["n_candidates"] == 1 and got[1]["n_valid"] == 0
     assert 2 not in got and 3 not in got  # no candidate rows at all
@@ -77,16 +96,14 @@ def test_adjacent_digit_groups_do_not_mask_cards(spark, tmp_path):
         {"doc_id": 6, "text": "2023 4111 1111 1111 1111", "source": "s"},
     ]
     d = _write(tmp_path, rows)
-    got = {r["doc_id"]: r for r in q_cc_audit(spark, d).collect()}
+    got = _by_doc(spark, d)
     for i in (0, 1, 2, 3):
         assert got[i]["has_valid_cc"], (i, got.get(i))
     for i in (4, 5, 6):
         assert not got[i]["has_valid_cc"], (i, got.get(i))
     # and the adversarial set agrees byte-for-byte across engines (the
     # alternation-order / leftmost-first pin for Java regex vs RE2)
-    got_rows = [
-        tuple(r) for r in q_cc_audit(spark, d).toPandas().itertuples(index=False)
-    ]
+    got_rows = _audit(spark, d)
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
     want = [tuple(r) for r in con.execute(cc_sql()).fetchall()]
@@ -103,7 +120,7 @@ def test_long_ids_not_truncated_to_cards(spark, tmp_path):
         {"doc_id": 1, "text": "id 12345678901234567 x", "source": "s"},  # 17 digits
     ]
     d = _write(tmp_path, rows)
-    got = {r["doc_id"]: r for r in q_cc_audit(spark, d).collect()}
+    got = _by_doc(spark, d)
     for i in (0, 1):
         assert got[i]["n_candidates"] == 1
         assert got[i]["n_valid"] == 0 and not got[i]["has_valid_cc"]
@@ -129,16 +146,14 @@ def test_grouped_long_ids_not_truncated(spark, tmp_path):
         {"doc_id": 4, "text": "pay 4111 1111 1111 1111 now", "source": "s"},
     ]
     d = _write(tmp_path, rows)
-    got = {r["doc_id"]: r for r in q_cc_audit(spark, d).collect()}
+    got = _by_doc(spark, d)
     for i in (0, 1, 2):
         assert got[i]["n_candidates"] == 1, (i, got.get(i))
         assert not got[i]["has_valid_cc"], (i, got.get(i))
     for i in (3, 4):
         assert got[i]["has_valid_cc"], (i, got.get(i))
     # cross-engine agreement on the new alternation (leftmost-first pin)
-    got_rows = [
-        tuple(r) for r in q_cc_audit(spark, d).toPandas().itertuples(index=False)
-    ]
+    got_rows = _audit(spark, d)
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
     want = [tuple(r) for r in con.execute(cc_sql()).fetchall()]
@@ -158,7 +173,7 @@ def test_random_ground_truth(spark, tmp_path):
         rows.append({"doc_id": i, "text": f"ref {pan} end", "source": "s"})
         truth[i] = valid
     d = _write(tmp_path, rows)
-    got = {r["doc_id"]: r for r in q_cc_audit(spark, d).collect()}
+    got = _by_doc(spark, d)
     for i, valid in truth.items():
         assert got[i]["has_valid_cc"] == valid, (i, got[i])
 
@@ -174,9 +189,7 @@ def test_duckdb_parity(spark, tmp_path):
         shown = sep.join(pan[j:j + 4] for j in range(0, len(pan), 4))
         rows.append({"doc_id": i, "text": f"x {shown} y {i}", "source": "s"})
     d = _write(tmp_path, rows)
-    got = [
-        tuple(r) for r in q_cc_audit(spark, d).toPandas().itertuples(index=False)
-    ]
+    got = _audit(spark, d)
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
     want = [tuple(r) for r in con.execute(cc_sql()).fetchall()]
@@ -185,10 +198,7 @@ def test_duckdb_parity(spark, tmp_path):
 
 
 def test_duckdb_parity_sf(spark):
-    got = [
-        tuple(r)
-        for r in q_cc_audit(spark, SF_DIR).toPandas().itertuples(index=False)
-    ]
+    got = _audit(spark, SF_DIR)
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"

@@ -1,20 +1,41 @@
-"""Encoding-damage detection (mojibake.q_encoding_damage) — planted damage
-per signal (U+FFFD, C1 controls, double-encoded UTF-8), clean-text and
-legit-Latin-1 non-flagging, threshold behaviour, map-only plan, and DuckDB
-value parity of the standalone SQL (registry at the driver's 50-row cap).
+"""Encoding-damage columns (mojibake.damage_count_cols / damage_score_col /
+is_damaged_col, the per-doc signal the source health report flags) —
+planted damage per signal (U+FFFD, C1 controls, double-encoded UTF-8),
+clean-text and legit-Latin-1 non-flagging, threshold behaviour, and DuckDB
+value parity against ``_MOJIBAKE_SQL``.
 """
 
 import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from tablestructurerec_spark.operators.mojibake import (
     _MOJIBAKE_SQL,
-    q_encoding_damage,
+    damage_count_cols,
+    damage_score_col,
+    is_damaged_col,
 )
 
 SF_DIR = os.environ.get("TSR_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def _damage(spark, sf_dir):
+    """``_MOJIBAKE_SQL``'s columns from the Spark column builders."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    staged = docs.select("doc_id", *damage_count_cols())
+    scored = staged.select(
+        "doc_id",
+        "n_chars",
+        "n_replacement",
+        "n_c1",
+        "n_double",
+        damage_score_col().alias("damage_per_kchar"),
+    )
+    return scored.withColumn(
+        "is_damaged", is_damaged_col(F.col("damage_per_kchar"))
+    ).orderBy("doc_id")
 
 
 def _run(spark, tmp_path, texts):
@@ -23,8 +44,7 @@ def _run(spark, tmp_path, texts):
     pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
         str(tmp_path / "documents.parquet")
     )
-    out = q_encoding_damage(spark, str(tmp_path)).collect()
-    return {r["doc_id"]: r for r in out}
+    return {r["doc_id"]: r for r in _damage(spark, str(tmp_path)).collect()}
 
 
 def test_replacement_char_always_flags(spark, tmp_path):
@@ -70,7 +90,7 @@ def test_rate_threshold(spark, tmp_path):
     not os.path.exists(f"{SF_DIR}/documents.parquet"), reason="testdata absent"
 )
 def test_duckdb_parity(spark):
-    sdf = q_encoding_damage(spark, SF_DIR).toPandas()
+    sdf = _damage(spark, SF_DIR).toPandas()
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF_DIR}/documents.parquet')"
@@ -79,21 +99,3 @@ def test_duckdb_parity(spark):
     assert len(sdf) == len(odf)
     for col in sdf.columns:
         assert sdf[col].tolist() == odf[col].tolist(), col
-
-
-def test_map_only_plan(spark, tmp_path):
-    import pandas as pd
-
-    pd.DataFrame({"doc_id": [0], "text": ["x"]}).to_parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    df = q_encoding_damage(spark, str(tmp_path))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    key_exchanges = [
-        l
-        for l in plan.splitlines()
-        if "Exchange" in l
-        and "RoundRobinPartitioning" not in l
-        and "rangepartitioning" not in l  # presentation orderBy only
-    ]
-    assert not key_exchanges, plan

@@ -1,19 +1,22 @@
-"""Sequence-packing invariants beyond the exact-match oracle."""
+"""Sequence-packing invariants (the fold is also oracle-pinned inside
+t_pipeline_e2e)."""
 
 from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from tablestructurerec_spark.operators.sampling import (
-    _PACK_BUDGET,
-    q_pack_sequences,
-)
+from tablestructurerec_spark.operators.sampling import _PACK_BUDGET, _pack_docs
+from tablestructurerec_spark.sources.read import read_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _packed(spark):
+    return _pack_docs(read_table(spark, SF_DIR, "documents"))
+
+
 def test_packing_invariants(spark):
-    rows = q_pack_sequences(spark, SF_DIR).collect()
+    rows = _packed(spark).collect()
     assert rows
     fills: dict = defaultdict(int)
     docs_in_bin: dict = defaultdict(int)
@@ -33,11 +36,11 @@ def test_packing_invariants(spark):
 
 
 def test_packing_is_deterministic_and_shard_parallel(spark):
-    a = q_pack_sequences(spark, SF_DIR).collect()
-    b = q_pack_sequences(spark, SF_DIR).collect()
+    a = _packed(spark).collect()
+    b = _packed(spark).collect()
     assert a == b
     # the only wide stage is the shard shuffle feeding applyInPandas: the
     # exchange carries (doc_id, shard, n_tokens) — never text
-    plan = q_pack_sequences(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = _packed(spark)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
     assert "text" not in plan.split("Exchange hashpartitioning")[1].split("\n")[0]

@@ -22,11 +22,10 @@ def test_containment_join_broadcasts_dim(spark):
 
 
 def test_relational_queries_have_no_python_stage(spark):
-    # dedup_minhash_prod is the ONE deliberate exception: at k=128 the
-    # signature stage is measurably 2x faster as a vectorized Arrow/numpy
-    # kernel than as 128 interpreted higher-order-function passes (see
-    # dedup._VECTORIZE_MIN_HASHES); its Arrow stage is asserted positively
-    # below and its values stay oracle-pinned.
+    # registered queries run the native paths; only production-width
+    # MinHash (k >= dedup._VECTORIZE_MIN_HASHES, no registered query) runs
+    # a vectorized Arrow/numpy signature stage, asserted positively below
+    # and pinned byte-equal to the native banding.
     from tablestructurerec_spark.operators import (
         dedup,
         hygiene,
@@ -38,12 +37,15 @@ def test_relational_queries_have_no_python_stage(spark):
         textstats,
     )
 
-    for mod in (relational, textstats, hygiene, sampling, dedup, similarity, temporal, retrieval):
-        for name, fn in mod.QUERIES.items():
-            if name == "dedup_minhash_prod":
-                continue
-            plan = _plan(fn(spark, SF))
-            assert "EvalPython" not in plan and "MapInPandas" not in plan, name
+    queries = {}
+    for mod in (relational, hygiene, sampling, dedup, similarity, temporal, retrieval):
+        queries.update(mod.QUERIES)
+    # these modules' components that no longer hold a registry slot
+    for fn in (textstats.q_lang_id_ngram, sampling.q_dsir_weights, dedup.q_dedup_keep_best):
+        queries[fn.__name__] = fn
+    for name, fn in queries.items():
+        plan = _plan(fn(spark, SF))
+        assert "EvalPython" not in plan and "MapInPandas" not in plan, name
 
 
 def test_minhash_prod_uses_vectorized_signature_stage(spark):
@@ -57,9 +59,9 @@ def test_minhash_prod_uses_vectorized_signature_stage(spark):
     shuffle join, so there is no double-execution cost to pin); what this
     asserts is only that the kernel IS the vectorized stage and nothing
     degraded to MapInPandas."""
-    from tablestructurerec_spark.operators.dedup import q_dedup_minhash_prod
+    from tablestructurerec_spark.operators.dedup import q_dedup_minhash_lsh
 
-    plan = _plan(q_dedup_minhash_prod(spark, SF))
+    plan = _plan(q_dedup_minhash_lsh(spark, SF, n_hashes=128, band_rows=8))
     assert plan.count("ArrowEvalPython") in (1, 2)  # per printed join side
     assert "MapInPandas" not in plan
 
@@ -79,20 +81,6 @@ def test_minhash_vectorized_matches_native_banding(spark):
     assert [tuple(r) for r in native] == [tuple(r) for r in vec]
 
 
-def test_decontaminate_broadcasts_bench_side(spark):
-    """The benchmark shingle set is small by construction; the training
-    corpus must stream through a broadcast hash join (no shuffle of the big
-    side) — the 100 TB-safe decontamination shape."""
-    from tablestructurerec_spark.operators.hygiene import q_decontaminate
-
-    plan = _plan(q_decontaminate(spark, SF))
-    # the SHINGLE join specifically must be the broadcast one (keyed on sh);
-    # a BroadcastHashJoin elsewhere (e.g. AQE broadcasting the tiny per-doc
-    # rollup in the final left join) must not satisfy this test
-    bhj_lines = [l for l in plan.splitlines() if "BroadcastHashJoin" in l]
-    assert any("[sh#" in l for l in bhj_lines), bhj_lines
-
-
 def test_filter_pushdown_reaches_scan(spark):
     from pyspark.sql import functions as F
 
@@ -108,9 +96,10 @@ def test_filter_pushdown_reaches_scan(spark):
 
 
 def test_salted_agg_is_two_stage(spark):
-    from tablestructurerec_spark.operators.relational import q_salted_conv_stats
+    from tablestructurerec_spark.operators.relational import _a10_frame
+    from tablestructurerec_spark.sources.read import read_table
 
-    plan = _plan(q_salted_conv_stats(spark, SF))
+    plan = _plan(_a10_frame(read_table(spark, SF, "events")))
     # two distinct hash aggregates with an exchange between them
     assert plan.count("HashAggregate") >= 4  # partial+final for each stage
     assert "xxhash64" in plan.lower()
@@ -233,9 +222,9 @@ def test_bm25_hit_list_scans_corpus_once(spark):
     a ReusedExchange — this is also the regression canary for the
     tautology guard in dfreq that keeps both subtrees byte-identical
     under column pruning."""
-    from tablestructurerec_spark.operators.retrieval import q_bm25_topk
+    from tablestructurerec_spark.operators.retrieval import _bm25_per_doc
 
-    df = q_bm25_topk(spark, SF)
+    df = _bm25_per_doc(spark, SF)
     df.collect()
     plan = _plan(df)
     assert any(
@@ -248,9 +237,10 @@ def test_dup_spans_repeat_count_is_not_a_window_funnel(spark):
     """Repeats must be counted via partial-agg groupBy + semi join — a
     count() OVER (PARTITION BY hash) funnels every occurrence of a hot
     window hash through one un-splittable sort task."""
-    from tablestructurerec_spark.operators.hygiene import q_dup_spans
+    from tablestructurerec_spark.operators.hygiene import _dup_islands
+    from tablestructurerec_spark.sources.read import read_table
 
-    plan = _plan(q_dup_spans(spark, SF))
+    plan = _plan(_dup_islands(read_table(spark, SF, "documents")))
     assert "LeftSemi" in plan
     # the bound is deliberately tight at 2: the doc-partitioned islands
     # merge legitimately plans as two Window ops (max-over-preceding and
@@ -259,10 +249,15 @@ def test_dup_spans_repeat_count_is_not_a_window_funnel(spark):
     assert plan.count("Window") <= 2
 
 
-def test_group_sample_is_two_stage(spark):
+def test_salted_topk_is_two_stage(spark):
     """salted_topk: a per-(group, salt) rank must precede the final
     per-group rank, so no group funnels through one task unranked."""
-    from tablestructurerec_spark.operators.sampling import q_group_sample
+    from pyspark.sql import functions as F
 
-    plan = _plan(q_group_sample(spark, SF))
+    from tablestructurerec_spark.operators.retrieval import salted_topk
+    from tablestructurerec_spark.sources.read import read_table
+
+    docs = read_table(spark, SF, "documents").select("doc_id", "lang")
+    order = [F.col("doc_id").asc()]
+    plan = _plan(salted_topk(docs, "lang", order, 20, salt_col="doc_id"))
     assert plan.count("row_number()") >= 2

@@ -16,7 +16,7 @@ from tablestructurerec_spark.operators.retrieval import (
     _BM25_QUERIES,
     _K1,
     _SCALE_BM25,
-    q_bm25_topk,
+    _bm25_per_doc,
     q_unigram_logprob,
     salted_topk,
 )
@@ -86,16 +86,11 @@ def test_bm25_scores_match_local_recompute(spark):
                 s += math.floor(contrib * _SCALE_BM25 + 0.5)
             if s:
                 scores[(qid, d)] = round(s / _SCALE_BM25, 6)
-    got = q_bm25_topk(spark, SF_DIR).collect()
-    assert len(got) == 4 * 10
-    for r in got:
-        assert scores[(r.query_id, r.doc_id)] == pytest.approx(r.score, abs=1e-9)
-    # ranks are dense 1..10 per query and ordered by (score desc, doc_id)
-    for qid in range(4):
-        rows = sorted((r for r in got if r.query_id == qid), key=lambda r: r.rank)
-        assert [r.rank for r in rows] == list(range(1, 11))
-        keys = [(-r.score, r.doc_id) for r in rows]
-        assert keys == sorted(keys)
+    got = {
+        (r.query_id, r.doc_id): round(r.s / _SCALE_BM25, 6)
+        for r in _bm25_per_doc(spark, SF_DIR).collect()
+    }
+    assert got == scores
 
 
 def test_unigram_logprob_bounds(spark):

@@ -1,5 +1,5 @@
-"""ANN quality: on clustered embeddings the bucketed methods recover the
-true neighbors.  The driver testdata's embeddings are isotropic random, so
+"""ANN quality: on clustered embeddings the IVF index recovers the true
+neighbors.  The driver testdata's embeddings are isotropic random, so
 there recall necessarily ≈ probed fraction (no neighborhood structure to
 exploit); this test builds deterministic *clustered* vectors with the same
 schema and asserts the algorithms deliver when structure exists."""
@@ -44,23 +44,6 @@ def _top_ids(df):
     return [r.vec_id for r in df.collect()]
 
 
-def test_bucketed_ann_recall_on_clustered_data(spark, clustered_dir):
-    from tablestructurerec_spark.operators.similarity import (
-        q_ann_bruteforce,
-        q_ann_ivf_topk,
-        q_ann_lsh_bucket,
-    )
-
-    brute = set(_top_ids(q_ann_bruteforce(spark, clustered_dir)))
-    assert len(brute) == 10
-    lsh = set(_top_ids(q_ann_lsh_bucket(spark, clustered_dir)))
-    ivf = set(_top_ids(q_ann_ivf_topk(spark, clustered_dir)))
-    lsh_recall = len(brute & lsh) / 10
-    ivf_recall = len(brute & ivf) / 10
-    assert lsh_recall >= 0.8, lsh_recall
-    assert ivf_recall >= 0.8, ivf_recall
-
-
 def test_kmeans_ivf_recall_and_determinism(spark, clustered_dir):
     from tablestructurerec_spark.operators.similarity import (
         q_ann_bruteforce,
@@ -70,8 +53,8 @@ def test_kmeans_ivf_recall_and_determinism(spark, clustered_dir):
     brute = set(_top_ids(q_ann_bruteforce(spark, clustered_dir)))
     run1 = q_ann_ivf_kmeans_topk(spark, clustered_dir).collect()
     recall = len(brute & {r.vec_id for r in run1}) / 10
-    # a trained quantizer on genuinely clustered data should be no worse
-    # than the seed-vector quantizer's bar
+    # a trained quantizer on genuinely clustered data recovers the true
+    # neighbours
     assert recall >= 0.8, recall
     # fixed seed + deterministic sample => repeat runs agree exactly
     run2 = q_ann_ivf_kmeans_topk(spark, clustered_dir).collect()

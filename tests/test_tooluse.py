@@ -1,8 +1,7 @@
 """Agent-trace tool-use analytics (operators/tooluse.py) — hand-built
 conversation ground truths (chain sessionization, latency arithmetic,
-null-safe loop runs), the single-exchange plan pin, and DuckDB value
-parity for all three faces on the md5-derived agent view (registry at the
-driver's 50-row cap).
+null-safe loop runs) through the fused audit, its single-exchange plan
+pin, and DuckDB value parity on the md5-derived agent view.
 """
 
 import datetime
@@ -11,17 +10,8 @@ import os
 import duckdb
 
 from tablestructurerec_spark.operators.tooluse import (
-    agent_loop_audit,
     agent_trace_audit,
-    chain_stats_sql,
-    latency_sql,
-    loop_audit_sql,
-    q_agent_loop_audit,
     q_agent_trace_audit,
-    q_tool_chain_stats,
-    q_tool_latency,
-    tool_chain_stats,
-    tool_latency,
     trace_audit_sql,
 )
 
@@ -54,7 +44,7 @@ def test_chain_sessionization_truth(spark):
         # no tool turns at all -> absent from output
         1: [("user", None, 0), ("assistant", None, 3)],
     }
-    got = {r["conv_id"]: r for r in tool_chain_stats(_turns(spark, convs)).collect()}
+    got = {r["conv_id"]: r for r in agent_trace_audit(_turns(spark, convs)).collect()}
     assert set(got) == {0}
     r = got[0]
     assert r["n_tool_turns"] == 3
@@ -79,13 +69,13 @@ def test_latency_truth(spark):
             ("tool", "search", 10),  # 2s
         ],
     }
-    got = {r["tool"]: r for r in tool_latency(_turns(spark, convs)).collect()}
-    assert got["search"]["n_calls"] == 2
-    assert got["search"]["total_latency_s"] == 9
-    assert got["search"]["max_latency_s"] == 7
-    assert got["search"]["mean_latency_ms"] == 4500
-    assert got["python"]["n_calls"] == 1
-    assert got["python"]["mean_latency_ms"] == 3000
+    got = {r["conv_id"]: r for r in agent_trace_audit(_turns(spark, convs)).collect()}
+    assert got[0]["n_timed_calls"] == 2
+    assert got[0]["total_latency_s"] == 10
+    assert got[0]["max_latency_s"] == 7
+    assert got[1]["n_timed_calls"] == 1
+    assert got[1]["total_latency_s"] == 2
+    assert got[1]["max_latency_s"] == 2
 
 
 def test_loop_runs_truth_and_null_safety(spark):
@@ -112,27 +102,11 @@ def test_loop_runs_truth_and_null_safety(spark):
             ("tool", "search", 4),
         ],
     }
-    got = {r["conv_id"]: r for r in agent_loop_audit(_turns(spark, convs)).collect()}
+    got = {r["conv_id"]: r for r in agent_trace_audit(_turns(spark, convs)).collect()}
     assert got[0]["max_run_len"] == 3 and got[0]["n_loop_runs"] == 1
     assert got[0]["is_looping"]
     assert got[1]["max_run_len"] == 3 and got[1]["is_looping"]
     assert got[2]["max_run_len"] == 1 and not got[2]["is_looping"]
-
-
-def test_single_exchange_plan(spark):
-    convs = {
-        i: [("assistant", None, 0), ("tool", "search", 5), ("tool", "search", 9)]
-        for i in range(30)
-    }
-    for op in (tool_chain_stats, agent_loop_audit):
-        out = op(_turns(spark, convs))
-        out.collect()
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        runtime = plan.split("== Initial Plan ==")[0]
-        # lag window + both subset-key groupBys share the conv_id hash
-        # partitioning: exactly one hash exchange (plus the presentation
-        # sort's range exchange)
-        assert runtime.count("Exchange hashpartitioning") == 1, op.__name__
 
 
 def _oracle(sql):
@@ -141,55 +115,6 @@ def _oracle(sql):
         f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
     )
     return [tuple(r) for r in con.execute(sql).fetchall()]
-
-
-def test_duckdb_parity_chain_stats(spark):
-    got = [
-        tuple(r)
-        for r in q_tool_chain_stats(spark, SF_DIR).toPandas().itertuples(index=False)
-    ]
-    want = _oracle(chain_stats_sql())
-    assert got == want
-    assert len(got) > 0
-    # the md5 mix must actually produce multi-turn chains somewhere
-    assert any(r[3] >= 2 for r in got)
-
-
-def test_duckdb_parity_latency(spark):
-    got = [
-        tuple(r)
-        for r in q_tool_latency(spark, SF_DIR).toPandas().itertuples(index=False)
-    ]
-    want = _oracle(latency_sql())
-    assert got == want
-    assert len(got) == 3  # all three tools called at least once
-
-
-def test_fused_audit_matches_faces(spark):
-    """The composed registry row must agree column-for-column with the
-    three standalone faces on the sf corpus — the composition cannot
-    drift from what it certifies."""
-    from tablestructurerec_spark.sources.read import read_table
-    from tablestructurerec_spark.operators.tooluse import _agent_view
-
-    turns = _agent_view(read_table(spark, SF_DIR, "documents"))
-    fused = {r["conv_id"]: r for r in agent_trace_audit(turns).collect()}
-    chains = {r["conv_id"]: r for r in tool_chain_stats(turns).collect()}
-    loops = {r["conv_id"]: r for r in agent_loop_audit(turns).collect()}
-    assert set(fused) == set(chains) == set(loops)
-    for cid, f in fused.items():
-        for col in ("n_tool_turns", "n_chains", "max_chain_len", "max_chain_tools"):
-            assert f[col] == chains[cid][col], (cid, col)
-        for col in ("max_run_len", "n_loop_runs", "is_looping"):
-            assert f[col] == loops[cid][col], (cid, col)
-    # latency totals: fused per-conv sums must reconcile with the per-tool face
-    lat = tool_latency(turns).collect()
-    assert sum(f["n_timed_calls"] for f in fused.values()) == sum(
-        r["n_calls"] for r in lat
-    )
-    assert sum(f["total_latency_s"] for f in fused.values()) == sum(
-        r["total_latency_s"] for r in lat
-    )
 
 
 def test_fused_audit_single_exchange_plan(spark):
@@ -217,15 +142,5 @@ def test_duckdb_parity_fused_audit(spark):
         for r in q_agent_trace_audit(spark, SF_DIR).toPandas().itertuples(index=False)
     ]
     want = _oracle(trace_audit_sql())
-    assert got == want
-    assert len(got) > 0
-
-
-def test_duckdb_parity_loop_audit(spark):
-    got = [
-        tuple(r)
-        for r in q_agent_loop_audit(spark, SF_DIR).toPandas().itertuples(index=False)
-    ]
-    want = _oracle(loop_audit_sql())
     assert got == want
     assert len(got) > 0

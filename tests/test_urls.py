@@ -1,18 +1,13 @@
-"""URL / domain hygiene family (operators/urls.py) — canonicalization rule
-goldens per host-pool case, idempotence, registered-domain extraction vs
-the public-suffix snapshot, map-only plan pin, domain filter/dedup policy
-invariants, and DuckDB value parity for all four operators (registry at
-the driver's 50-row cap).
+"""URL / domain hygiene (operators/urls.py) — canonicalization rule goldens
+per host-pool case, idempotence, registered-domain extraction vs the
+public-suffix snapshot, domain filter/dedup policy invariants, and DuckDB
+value parity of the fused verdict on a planted fixture (the sf parity is
+the driver row's).
 """
 
-import os
-
 import duckdb
-import pytest
 
 from tablestructurerec_spark.operators import urls
-
-SF_DIR = os.environ.get("TSR_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 def _con(sf_dir):
@@ -30,21 +25,13 @@ def _write(tmp_path, rows):
     return str(tmp_path)
 
 
-@pytest.mark.parametrize(
-    "q,sql",
-    [
-        (urls.q_url_canonicalize, urls.url_canonicalize_sql),
-        (urls.q_domain_stats, urls.domain_stats_sql),
-        (urls.q_domain_filter, urls.domain_filter_sql),
-        (urls.q_domain_dedup, urls.domain_dedup_sql),
-    ],
-    ids=["canon", "stats", "filter", "dedup"],
-)
-def test_duckdb_parity_sf(spark, q, sql):
-    got = [tuple(r) for r in q(spark, SF_DIR).toPandas().itertuples(index=False)]
-    want = [tuple(r) for r in _con(SF_DIR).execute(sql()).fetchall()]
-    assert got == want
-    assert len(got) > 0
+def _canonicalize(df):
+    """(doc_id, url) → the verdict's (canonical_url, registered_domain)."""
+    from pyspark.sql import functions as F
+
+    return urls.url_hygiene(
+        df.select("doc_id", "url", F.lit("t").alias("text"), F.lit("en").alias("lang"))
+    )
 
 
 def test_canonicalization_rule_goldens(spark, tmp_path):
@@ -57,7 +44,7 @@ def test_canonicalization_rule_goldens(spark, tmp_path):
     d = _write(tmp_path, rows)
     got = {
         r["doc_id"]: (r["canonical_url"], r["registered_domain"])
-        for r in urls.q_url_canonicalize(spark, d).collect()
+        for r in urls.q_url_hygiene(spark, d).collect()
     }
     assert got[0] == ("https://example.com/?id=0", "example.com")  # www+case strip
     assert got[1] == (
@@ -97,10 +84,10 @@ def test_canonicalization_idempotent(spark, tmp_path):
         for i in range(24)
     ]
     d = _write(tmp_path, rows)
-    once = urls.q_url_canonicalize(spark, d).select(
+    once = urls.q_url_hygiene(spark, d).select(
         "doc_id", F.col("canonical_url").alias("url")
     )
-    twice = urls.url_canonicalize(once).select("doc_id", "canonical_url")
+    twice = _canonicalize(once).select("doc_id", "canonical_url")
     j = once.join(twice, "doc_id")
     assert j.where(F.col("url") != F.col("canonical_url")).count() == 0
 
@@ -143,7 +130,7 @@ def test_adversarial_url_classes(spark):
     )
     got = {
         r["doc_id"]: (r["canonical_url"], r["registered_domain"])
-        for r in urls.url_canonicalize(df).collect()
+        for r in _canonicalize(df).collect()
     }
     for k, (_, canon, dom) in cases.items():
         assert got[k] == (canon, dom), (k, got[k])
@@ -160,24 +147,12 @@ FROM parts ORDER BY doc_id
 """).fetchall()
     assert {r[0]: (r[1], r[2]) for r in duck} == got
     # idempotence holds on the adversarial classes too
-    once = urls.url_canonicalize(df).select(
+    once = _canonicalize(df).select(
         "doc_id", F.col("canonical_url").alias("url")
     )
-    twice = urls.url_canonicalize(once).select("doc_id", "canonical_url")
+    twice = _canonicalize(once).select("doc_id", "canonical_url")
     j = once.join(twice, "doc_id")
     assert j.where(F.col("url") != F.col("canonical_url")).count() == 0
-
-
-def test_canonicalize_is_map_only(spark):
-    plan = (
-        urls.q_url_canonicalize(spark, SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # one scan, zero shuffles before the presentation sort's range exchange
-    assert plan.count("Exchange hashpartitioning") == 0
-    assert "Scan parquet" in plan or "FileScan" in plan
 
 
 def test_domain_filter_policy(spark, tmp_path):
@@ -192,10 +167,9 @@ def test_domain_filter_policy(spark, tmp_path):
         text = "same text" if i % 12 == 7 else f"unique {i}"
         rows.append({"doc_id": i, "text": text, "lang": "en", "source": "s"})
     d = _write(tmp_path, rows)
-    got = {r["doc_id"]: r for r in urls.q_domain_filter(spark, d).collect()}
+    got = {r["doc_id"]: r for r in urls.q_url_hygiene(spark, d).collect()}
     for i in (4, 16, 8, 20):
         assert not got[i]["keep"] and got[i]["reason"] == "blocklist"
-        assert got[i]["is_blocked"]
     for i in (7, 19):  # the all-dup domain: 2 docs, 1 distinct -> 500000 ppm
         assert got[i]["registered_domain"] == "example.org"
         # 500000 is NOT > DUP_PPM_MAX (inclusive boundary keeps) — pin the
@@ -217,7 +191,7 @@ def test_domain_dedup_keep_policy(spark, tmp_path):
     rows.append({"doc_id": 11, "text": "x11", "lang": "en", "source": "s"})
     rows.append({"doc_id": 13, "text": "x13", "lang": "en", "source": "s"})
     d = _write(tmp_path, rows)
-    pdf = urls.q_domain_dedup(spark, d).toPandas().set_index("doc_id")
+    pdf = urls.q_url_hygiene(spark, d).toPandas().set_index("doc_id")
     # example.com has docs {0,12,23,11} = 4 docs; example.co.uk {1,13} = 2
     assert pdf.loc[0, "registered_domain"] == "example.com"
     assert pdf.loc[1, "registered_domain"] == "example.co.uk"
@@ -239,7 +213,7 @@ def test_domain_dedup_parity_planted(spark, tmp_path):
     d = _write(tmp_path, rows)
     got = [
         tuple(r)
-        for r in urls.q_domain_dedup(spark, d).toPandas().itertuples(index=False)
+        for r in urls.q_url_hygiene(spark, d).toPandas().itertuples(index=False)
     ]
-    want = [tuple(r) for r in _con(d).execute(urls.domain_dedup_sql()).fetchall()]
+    want = [tuple(r) for r in _con(d).execute(urls.url_hygiene_sql()).fetchall()]
     assert got == want
