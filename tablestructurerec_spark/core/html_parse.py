@@ -18,8 +18,10 @@ Everything here is stdlib-only (html.parser) and runs inside Arrow-batched
 from __future__ import annotations
 
 import re
+from bisect import bisect_left, bisect_right
+from heapq import heappop, heappush
 from html.parser import HTMLParser
-from typing import Dict, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 __all__ = [
     "find_table_fragments",
@@ -71,13 +73,36 @@ def find_table_fragments(text: str) -> List[Tuple[int, int, str]]:
     return out
 
 
+def _span(v) -> int:
+    try:
+        return min(max(int(v), 1), 1 << 12)  # clamp hostile spans
+    except (TypeError, ValueError):
+        return 1
+
+
 class _TableParser(HTMLParser):
-    """Standard HTML-table grid placement with rowspan/colspan occupancy."""
+    """Standard HTML-table grid placement with rowspan/colspan occupancy.
+
+    Occupancy is kept as column intervals, never per grid slot, so a cell
+    costs the same whatever grid its spans claim.  Every cell placed in the
+    current row sits left of the cursor, so only rowspans reaching down
+    from earlier rows can block it.  ``live`` is a heap of those spans as
+    ``(end_row, c0, c1)`` (half-open), and ``occ_lo``/``occ_hi`` hold their
+    union over the current row as sorted, disjoint, non-touching
+    ``[lo, hi)`` runs.  Rowspans placed in the current row wait in ``born``
+    until the next ``<tr>``.  While no two live spans overlap, a span that
+    ends is cut out of its run; once some do, the runs are rebuilt from
+    ``live`` on each row where a span ends.
+    """
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.cells: List[dict] = []  # {r0, rspan, c0, cspan, texts, explicit}
-        self.occupied: Dict[Tuple[int, int], bool] = {}
+        self.cells: List[dict] = []  # {r0, rspan, c0, cspan, texts}
+        self.live: List[Tuple[int, int, int]] = []
+        self.born: List[Tuple[int, int, int]] = []
+        self.occ_lo: List[int] = []
+        self.occ_hi: List[int] = []
+        self.overlap = False  # some live spans may share a slot
         self.row = -1
         self.cursor = 0
         self.in_cell = False
@@ -94,8 +119,7 @@ class _TableParser(HTMLParser):
             return
         if tag == "tr":
             self._close_cell()  # implied </td> (valid HTML omits it)
-            self.row += 1
-            self.cursor = 0
+            self._next_row()
         elif tag in ("td", "th"):
             self._close_cell()
             self.in_cell = True
@@ -132,6 +156,57 @@ class _TableParser(HTMLParser):
         super().close()
         self._close_cell()  # unterminated fragment: flush the open cell
 
+    def _next_row(self) -> None:
+        self.row += 1
+        self.cursor = 0
+        ended = False
+        while self.live and self.live[0][0] <= self.row:
+            _, c0, c1 = heappop(self.live)
+            ended = True
+            if not self.overlap:
+                self._release(c0, c1)
+        if ended and self.overlap:
+            self._rebuild()
+        for span in self.born:
+            heappush(self.live, span)
+            self._occupy(span[1], span[2])
+        self.born = []
+
+    def _occupy(self, c0: int, c1: int) -> None:
+        """Merge ``[c0, c1)`` into the current row's occupied runs."""
+        lo, hi = self.occ_lo, self.occ_hi
+        i = bisect_left(hi, c0)  # first run touching c0 or right of it
+        j = bisect_right(lo, c1)  # past the last run touching c1
+        if i < j:
+            # only the end runs can merely touch [c0, c1); the rest overlap it
+            if j - i > (hi[i] == c0) + (lo[j - 1] == c1):
+                self.overlap = True
+            c0 = min(c0, lo[i])
+            c1 = max(c1, hi[j - 1])
+        lo[i:j] = [c0]
+        hi[i:j] = [c1]
+
+    def _release(self, c0: int, c1: int) -> None:
+        """Cut an ended span out of its run (no other live span covers it)."""
+        k = bisect_right(self.occ_lo, c0) - 1
+        pieces = [(a, b) for a, b in ((self.occ_lo[k], c0), (c1, self.occ_hi[k])) if a < b]
+        self.occ_lo[k : k + 1] = [a for a, _ in pieces]
+        self.occ_hi[k : k + 1] = [b for _, b in pieces]
+
+    def _rebuild(self) -> None:
+        """Recompute the runs (and whether live spans overlap) from ``live``."""
+        lo: List[int] = []
+        hi: List[int] = []
+        self.overlap = False
+        for c0, c1 in sorted((c0, c1) for _, c0, c1 in self.live):
+            if hi and c0 <= hi[-1]:
+                self.overlap = self.overlap or c0 < hi[-1]
+                hi[-1] = max(hi[-1], c1)
+            else:
+                lo.append(c0)
+                hi.append(c1)
+        self.occ_lo, self.occ_hi = lo, hi
+
     def _close_cell(self) -> None:
         if not self.in_cell:
             return
@@ -139,22 +214,16 @@ class _TableParser(HTMLParser):
         if self.row < 0:  # hostile html: <td> before any <tr>
             self.row = 0
         attrs = self.cur_attrs
-        while self.occupied.get((self.row, self.cursor)):
-            self.cursor += 1
-
-        def span(v) -> int:
-            try:
-                return min(max(int(v), 1), 1 << 12)  # clamp hostile spans
-            except (TypeError, ValueError):
-                return 1
-
-        rspan = span(attrs.get("rowspan", 1))
-        cspan = span(attrs.get("colspan", 1))
+        if self.occ_lo:
+            k = bisect_right(self.occ_lo, self.cursor) - 1
+            if k >= 0 and self.cursor < self.occ_hi[k]:
+                self.cursor = self.occ_hi[k]  # runs never touch: this slot is free
+        rspan = _span(attrs.get("rowspan", 1))
+        cspan = _span(attrs.get("colspan", 1))
         explicit = "rowspan" in attrs or "colspan" in attrs
         texts = self.cell_lines
         if not explicit and "".join(texts) == "":
             # bare <td></td> — the renderer's empty *grid slot*, not a cell
-            self.occupied[(self.row, self.cursor)] = True
             self.cursor += 1
             return
         self.cells.append(
@@ -166,9 +235,8 @@ class _TableParser(HTMLParser):
                 "texts": texts,
             }
         )
-        for r in range(self.row, self.row + rspan):
-            for c in range(self.cursor, self.cursor + cspan):
-                self.occupied[(r, c)] = True
+        if rspan > 1:
+            self.born.append((self.row + rspan, self.cursor, self.cursor + cspan))
         self.cursor += cspan
 
 

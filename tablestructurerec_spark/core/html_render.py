@@ -13,6 +13,7 @@ tests/test_lineless_table_rec.py:197-256 (twin test_wired_table_rec.py:247-306).
 
 from __future__ import annotations
 
+from itertools import groupby
 from typing import Dict, List, Optional, Sequence
 
 from .geometry import quad_to_box
@@ -44,50 +45,91 @@ def render_table_html(
     """
     n_rows = 0
     n_cols = 0
-    for lp in logic_points:
-        n_rows = max(n_rows, lp[1] + 1)
-        n_cols = max(n_cols, lp[3] + 1)
-
-    grid: List[List[Optional[tuple]]] = [[None] * n_cols for _ in range(n_rows)]
     first_valid_row = (1 << 16) - 1
     first_valid_col = (1 << 16) - 1
     last_valid_col = 0
-    for idx, lp in enumerate(logic_points):
-        r0, r1, c0, c1 = lp[0], lp[1], lp[2], lp[3]
+    for idx, (r0, r1, c0, c1) in enumerate(logic_points):
+        if r1 >= n_rows:
+            n_rows = r1 + 1
+        if c1 >= n_cols:
+            n_cols = c1 + 1
         texts = cell_texts.get(idx)
         if texts and "".join(texts):
-            first_valid_row = min(r0, first_valid_row)
-            first_valid_col = min(c0, first_valid_col)
-            last_valid_col = max(c1, last_valid_col)
-        for r in range(r0, r1 + 1):
-            for c in range(c0, c1 + 1):
-                grid[r][c] = (idx, r0, r1, c0, c1)
+            if r0 < first_valid_row:
+                first_valid_row = r0
+            if c0 < first_valid_col:
+                first_valid_col = c0
+            if c1 > last_valid_col:
+                last_valid_col = c1
+
+    # A cell is (a, b, idx, r0, r1, td): its columns clipped to the window
+    # as half-open offsets, its index (the overwrite order), its rows, and
+    # the tag its origin slot renders ("" when it renders nothing: no text
+    # entry, or its origin left of the window).  Each row walks the cells
+    # covering it in column order and emits a gap or a cell's whole run in
+    # one step, so the Python work is per cell, not per slot.
+    lo = first_valid_col
+    width = last_valid_col - lo + 1
+    active: List[tuple] = []  # cells covering the current row, by column
+    opening: Dict[int, List[tuple]] = {}
+    for idx, (r0, r1, c0, c1) in enumerate(logic_points):
+        a = c0 - lo if c0 > lo else 0
+        b = c1 - lo + 1 if c1 - lo < width else width
+        if r1 < first_valid_row or a >= b:
+            continue
+        texts = cell_texts.get(idx)
+        td = ""
+        if texts and c0 >= lo:
+            body = "<br>".join(texts)
+            td = f"<td rowspan={r1 - r0 + 1} colspan={c1 - c0 + 1}>{body}</td>"
+        cell = (a, b, idx, r0, r1, td)
+        if r0 <= first_valid_row:
+            active.append(cell)
+        else:
+            opening.setdefault(r0, []).append(cell)
 
     out = ["<html><body><table>"]
-    for r in range(n_rows):
-        if r < first_valid_row:
-            continue
+    active.sort()
+    for r in range(first_valid_row, n_rows):
+        if r in opening:
+            active = sorted(active + opening[r])
         row_frag = ["<tr>"]
-        for c in range(n_cols):
-            if c < first_valid_col or c > last_valid_col:
-                continue
-            slot = grid[r][c]
-            if not slot:
-                row_frag.append("<td></td>")
-                continue
-            idx, r0, r1, c0, c1 = slot
-            texts = cell_texts.get(idx)
-            if not texts:
-                continue
-            if r == r0 and c == c0:
-                body = "<br>".join(texts)
-                row_frag.append(
-                    f"<td rowspan={r1 - r0 + 1} colspan={c1 - c0 + 1}>{body}</td>"
-                )
+        c = 0
+        for a, b, _, r0, _, td in active:
+            if a < c:  # overlapping cells: the later one owns shared slots
+                row_frag = _overlapped_row(active, width, r)
+                break
+            if a > c:
+                row_frag.append("<td></td>" * (a - c))
+            if r == r0:
+                row_frag.append(td)
+            c = b
+        else:
+            row_frag.append("<td></td>" * (width - c))
         row_frag.append("</tr>")
         out.append("".join(row_frag))
+        active = [cell for cell in active if cell[4] > r]
     out.append("</table></body></html>")
     return "".join(out)
+
+
+def _overlapped_row(active: List[tuple], width: int, r: int) -> List[str]:
+    """Row ``r`` of :func:`render_table_html` when cells overlap: paint the
+    slots by slice in overwrite order, then emit one run of equal slots at
+    a time (a cell renders only if it still owns its origin slot)."""
+    line: List[Optional[tuple]] = [None] * width
+    for cell in sorted(active, key=lambda cell: cell[2]):
+        line[cell[0] : cell[1]] = [cell] * (cell[1] - cell[0])
+    row_frag = ["<tr>"]
+    c = 0
+    for cell, run in groupby(line):
+        n = len(list(run))
+        if cell is None:
+            row_frag.append("<td></td>" * n)
+        elif r == cell[3] and c == cell[0]:
+            row_frag.append(cell[5])
+        c += n
+    return row_frag
 
 
 def cell_records_from_match(
@@ -139,7 +181,16 @@ def merge_grid_duplicates(records: List[dict]) -> List[dict]:
     the *same* logical box, fold the newcomer into it (concat OCR rows, union
     envelope) and delete the newcomer; records overlapping a *different*
     logical box leave the earlier occupant in place.
+
+    A record folds only into a holder with its own box, so when no two
+    records share a box nothing folds, and the grid is not filled.
     """
+    if len({tuple(rec["t_logic_box"]) for rec in records}) == len(records):
+        return list(records)
+    return _merge_on_grid(records)
+
+
+def _merge_on_grid(records: List[dict]) -> List[dict]:
     n_rows, n_cols = 0, 0
     for rec in records:
         n_rows = max(n_rows, rec["t_logic_box"][1] + 1)

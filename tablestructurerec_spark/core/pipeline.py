@@ -213,7 +213,9 @@ def process_table_html(html: str, table_seed: int = 0) -> Dict[str, object]:
     for rec in records:
         rec["t_ocr_res"] = _sort_and_gather_cell(rec["t_ocr_res"])
 
-    logic_out = [rec["t_logic_box"] for rec in records]
+    # plain ints: the recovered boxes hold numpy scalars, whose arithmetic
+    # in the render costs several times an int's
+    logic_out = [list(map(int, rec["t_logic_box"])) for rec in records]
     texts_out = {i: [r[1] for r in rec["t_ocr_res"]] for i, rec in enumerate(records)}
     pred_html = render_table_html(logic_out, texts_out)
 
@@ -224,7 +226,7 @@ def process_table_html(html: str, table_seed: int = 0) -> Dict[str, object]:
     return {
         "pred_html": pred_html,
         "cell_bboxes": bboxes,
-        "logic_points": [list(map(int, lp)) for lp in logic_out],
+        "logic_points": logic_out,
         "table_kind": kind,
         "n_cells": len(records),
     }

@@ -21,8 +21,8 @@ Two-part plan, audited for 100 TB:
   never shuffles the full vocabulary.
 
 Everything is md5-derived integer arithmetic, so the operator carries a
-full value-exact DuckDB oracle (standalone; the driver registry sits at
-its 50-row cap).  Output: top-N ``(token, est_count)`` by estimate, token
+full value-exact DuckDB oracle (a component of the ``t_sketch_audit``
+driver row, not registered on its own).  Output: top-N ``(token, est_count)`` by estimate, token
 ties broken lexicographically.
 """
 

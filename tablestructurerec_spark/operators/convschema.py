@@ -22,8 +22,9 @@ Two operators over ``(conv_id, turn_idx, role, text)``:
 The q_ wrappers derive a deterministic transcript view from ``documents``
 (conv/turn/role as pure md5-based projections — the
 ``_transcripts_from_documents`` precedent in ``__spark_entry__``), so both
-operators carry full DuckDB value-exact oracles.  Standalone operators with
-pytest parity (the driver registry sits at its 50-row cap).
+operators carry full DuckDB value-exact oracles.  Neither is registered on
+its own: the ``t_conv_audit`` driver row (:func:`q_conv_audit`) runs both,
+and pytest pins each against its oracle.
 """
 
 from __future__ import annotations

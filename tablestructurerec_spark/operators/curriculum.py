@@ -22,8 +22,9 @@ bucket, ...)``, never an empty partition spec.  Shards are contiguous
 curriculum slices (``order_idx DIV shard_size``) so shard k is strictly
 easier than shard k+1 — the property a curriculum loader needs.
 
-Carries a full value-exact DuckDB oracle (standalone; the driver registry
-sits at its 50-row cap): the oracle IS the naive global window — the test
+Carries a full value-exact DuckDB oracle (a component of the
+``t_selection_pipeline`` driver row, not registered on its own): the
+oracle IS the naive global window — the test
 asserts the scale-shaped plan reproduces it exactly.
 """
 

@@ -31,8 +31,9 @@ Spark shape, audited for 100 TB — JOIN-FREE day pairing:
   to the caller).
 
 Returns one row per consecutive-day pair: ``(day_from, day_to, n_from,
-n_to, n_types, drift_ppm)``, ordered by day_from.  Standalone operator with
-a pytest DuckDB-parity oracle (the driver registry sits at its 50-row cap).
+n_to, n_types, drift_ppm)``, ordered by day_from.  A component of the
+``t_ops_audit`` driver row, not registered on its own, with a pytest
+DuckDB-parity oracle.
 """
 
 from __future__ import annotations

@@ -16,8 +16,8 @@ re-checks the three component oracles against their Spark expressions in
 one statement.
 
 Returns one row per source: ``(source, n_docs, n_degenerate, n_cc_docs,
-n_damaged, degen_ppm, cc_ppm, damaged_ppm)``.  Standalone operator with a
-pytest DuckDB-parity oracle (the driver registry sits at its 50-row cap).
+n_damaged, degen_ppm, cc_ppm, damaged_ppm)``.  Registered as the
+``t_source_health`` driver row, with a pytest DuckDB-parity oracle.
 """
 
 from __future__ import annotations

@@ -38,8 +38,8 @@ large-range correction of the original paper is unnecessary in a 2^52 hash
 space at any realistic cardinality.
 
 Returns one row per source: ``(source, v_zero, z_scaled, est_distinct)``.
-Standalone operator with a pytest DuckDB-parity oracle (the driver registry
-sits at its 50-row cap).
+A component of the ``t_sketch_audit`` driver row, not registered on its
+own, with a pytest DuckDB-parity oracle.
 """
 
 from __future__ import annotations

@@ -20,8 +20,8 @@ Spark shape, audited for 100 TB:
   the vocabulary.  That partial limit IS the distributed sketch merge.
 * the estimator is ALL-INTEGER: ``(k-1) * 2^52 DIV kth_hash`` — identical
   under any reduction order and in any engine, so the operator carries a
-  full value-exact DuckDB oracle (standalone; the driver registry sits at
-  its 50-row cap).
+  full value-exact DuckDB oracle (a component of the ``t_sketch_audit``
+  driver row, not registered on its own).
 
 Returns one row per source: ``(source, n_kept, kth_hv, est_distinct)``.
 When a source has fewer than k distinct hashes the sketch IS the exact

@@ -21,8 +21,9 @@ Latin-dominant and surface as inconsistent — the oracle's positive path is
 covered by the shipped test data itself.
 
 Returns ``(lang, dominant_script, n_docs, expected_script, is_consistent)``
-ordered by (lang, dominant_script).  Standalone operator with a pytest
-DuckDB-parity oracle (the driver registry sits at its 50-row cap).
+ordered by (lang, dominant_script).  A component of the
+``t_char_integrity`` driver row, not registered on its own, with a pytest
+DuckDB-parity oracle.
 """
 
 from __future__ import annotations

@@ -137,17 +137,12 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _domain_mix(docs)
 
 
-def _domain_mix(docs: DataFrame, budget_col: str | None = None) -> DataFrame:
-    """Temperature mix over any (lang, text, ...) frame.  ``budget_col``
-    picks the token-budget column (default: regex token count; pass a BPE
-    count column from operators/bpe.py to mix in tokenizer tokens —
-    same knob as ``_pack_docs``)."""
-    size = (
-        F.col(budget_col) if budget_col else F.size(tokens_col(F.col("text")))
-    )
+def _domain_mix(docs: DataFrame) -> DataFrame:
+    """Temperature mix over any (lang, text, ...) frame, budgeted in regex
+    tokens."""
     per_lang = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(size).cast("long").alias("n_tokens"),
+        F.sum(F.size(tokens_col(F.col("text")))).cast("long").alias("n_tokens"),
     )
     # post-agg frame has #langs rows: the unpartitioned window is safe
     w = Window.partitionBy()
@@ -192,7 +187,7 @@ _PACK_BUDGET = 2048  # tokens per packed training sequence
 _PACK_SHARDS = 8  # parallel unit; real pipelines pack per output file
 
 
-def _pack_docs(docs: DataFrame, budget_col: str | None = None) -> DataFrame:
+def _pack_docs(docs: DataFrame) -> DataFrame:
     """Greedy first-fit-in-order sequence packing over any (doc_id, text,
     ...) frame: documents are laid into fixed ``_PACK_BUDGET``-token bins in
     doc_id order within their shard — the batch-construction step that
@@ -207,20 +202,13 @@ def _pack_docs(docs: DataFrame, budget_col: str | None = None) -> DataFrame:
     ever corpus-sized; the shuffle is one partial pass carrying
     (doc_id, n_tokens), never text.  A doc longer than the budget gets a
     bin of its own (truncation is the tokenizer's job, not the packer's).
-
-    ``budget_col`` selects the size column the fold consumes: default is the
-    regex token count; pass e.g. a BPE count column (operators/bpe.py) to
-    budget in tokenizer tokens — real pipelines do (the fold itself is
-    size-agnostic)."""
+    Sizes are regex token counts."""
     import pandas as pd
 
-    size = (
-        F.col(budget_col) if budget_col else F.size(tokens_col(F.col("text")))
-    )
     sized = docs.select(
         "doc_id",
         F.pmod(F.col("doc_id"), F.lit(_PACK_SHARDS)).cast("int").alias("shard"),
-        size.alias("n_tokens"),
+        F.size(tokens_col(F.col("text"))).alias("n_tokens"),
     )
 
     def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -323,8 +311,8 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (additive ``_DSIR_ALPHA`` smoothing).  ``keep_target=true`` marks docs
     that look more target-like than corpus-average — the resampling set.
 
-    Standalone (driver registry is at its 50-row cap); hash-exact DuckDB
-    parity is pinned by ``tests/test_dsir.py`` with the same rigor.
+    Not registered on its own: a component of the ``t_selection_pipeline``
+    driver row; hash-exact DuckDB parity is pinned by ``tests/test_dsir.py``.
 
     Determinism / 100 TB shape: per-feature log-ratios are integer-scaled
     (×``_SCALE_DSIR``) before the per-doc sum, so the reduction order can

@@ -27,8 +27,9 @@ Shape, audited for 100 TB:
   single (key, salt) task at ~100k rows; 1 means no salting needed.
 
 Returns ONE row: ``(key_col, n_rows, n_keys, max_key_rows, p50_key_rows,
-p99_key_rows, top1_share_ppm, salt_factor)``.  Standalone operator with a
-pytest DuckDB-parity oracle (the driver registry sits at its 50-row cap).
+p99_key_rows, top1_share_ppm, salt_factor)``.  A component of the
+``t_ops_audit`` driver row, not registered on its own, with a pytest
+DuckDB-parity oracle.
 """
 
 from __future__ import annotations

@@ -17,8 +17,9 @@ Spark shape, audited for 100 TB:
 * the result is the bounded 4-row status summary — per-doc detail stays
   distributed (filter the joined frame by status instead of collecting).
 
-Returns ``(status, n_docs)`` ordered by status.  Standalone operator with a
-pytest DuckDB-parity oracle (the driver registry sits at its 50-row cap).
+Returns ``(status, n_docs)`` ordered by status.  A component of the
+``t_ops_audit`` driver row, not registered on its own, with a pytest
+DuckDB-parity oracle.
 """
 
 from __future__ import annotations

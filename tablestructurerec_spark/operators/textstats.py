@@ -221,9 +221,10 @@ def lang_ngram_pred_col() -> Column:
 
 
 def q_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone face of the n-gram scorer (kept OUT of the driver registry
-    -- the 50-row cap is full; the consolidated ``t_text_profile`` carries
-    these columns into the hard signal instead)."""
+    """Standalone face of the n-gram scorer, called by
+    ``examples/demo_corpus_pipeline.py``.  Not registered: the
+    ``t_text_profile`` driver row carries the same columns into the hard
+    signal."""
     docs = _t(spark, sf_dir, "documents")
     # stage p: inlining it would re-embed the normalize regex into every
     # count term (1000 regexp_replace instances in the plan, measured ~4 s

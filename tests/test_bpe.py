@@ -90,60 +90,3 @@ def test_pandas_udf_twin_equals_native(spark):
     udf = bpe_tokens_pandas(docs).select("doc_id", "n_bpe_tokens")
     joined = native.join(udf, "doc_id").toPandas()
     assert (joined["n_native"] == joined["n_bpe_tokens"]).all()
-
-
-@pytest.mark.skipif(
-    not os.path.exists(f"{SF_DIR}/documents.parquet"), reason="testdata absent"
-)
-def test_pack_sequences_accepts_bpe_budget(spark):
-    """Packing budgets in BPE tokens: same fold, different size column."""
-    from pyspark.sql import functions as F
-
-    from tablestructurerec_spark.operators.bpe import (
-        bpe_encode_col,
-        bpe_token_count_col,
-    )
-    from tablestructurerec_spark.operators.sampling import _PACK_BUDGET, _pack_docs
-    from tablestructurerec_spark.sources.read import read_table
-
-    docs = read_table(spark, SF_DIR, "documents")
-    sized = docs.select(
-        "doc_id", "text", bpe_encode_col(F.col("text")).alias("enc")
-    ).withColumn("n_bpe", bpe_token_count_col(F.col("enc")))
-    packed = _pack_docs(sized, budget_col="n_bpe").toPandas()
-    # every bin respects the budget unless it holds a single oversized doc
-    for (_, _), grp in packed.groupby(["shard", "bin_idx"]):
-        if len(grp) > 1:
-            assert grp["n_tokens"].sum() <= _PACK_BUDGET
-    # fold consumed the BPE counts, not the regex counts
-    bpe_counts = dict(zip(sized.toPandas()["doc_id"], sized.toPandas()["n_bpe"]))
-    assert all(bpe_counts[d] == n for d, n in zip(packed["doc_id"], packed["n_tokens"]))
-
-
-@pytest.mark.skipif(
-    not os.path.exists(f"{SF_DIR}/documents.parquet"), reason="testdata absent"
-)
-def test_domain_mix_accepts_bpe_budget(spark):
-    """Temperature mixing budgets in BPE tokens: per-lang n_tokens must be
-    the sum of the BPE counts, and shares must renormalize accordingly."""
-    from pyspark.sql import functions as F
-
-    from tablestructurerec_spark.operators.bpe import (
-        bpe_encode_col,
-        bpe_token_count_col,
-    )
-    from tablestructurerec_spark.operators.sampling import _domain_mix
-    from tablestructurerec_spark.sources.read import read_table
-
-    docs = read_table(spark, SF_DIR, "documents")
-    sized = docs.select(
-        "lang", "text", bpe_encode_col(F.col("text")).alias("enc")
-    ).withColumn("n_bpe", bpe_token_count_col(F.col("enc")))
-    out = _domain_mix(sized, budget_col="n_bpe").toPandas()
-    want = (
-        sized.groupBy("lang").agg(F.sum("n_bpe").alias("s")).toPandas()
-        .set_index("lang")["s"]
-    )
-    got = out.set_index("lang")["n_tokens"]
-    assert all(int(want[l]) == int(got[l]) for l in want.index)
-    assert abs(out["q_temperature"].sum() - 1.0) < 1e-4

@@ -1,8 +1,8 @@
 """BPE merge-table training (operators/bpe_train.py).
 
 Pins: hash-exact DuckDB parity via the relearn-literal oracle (the operator
-is unregistered — the driver registry sits at its 50-row cap — so this test
-IS its oracle gate), hand-computed merges on a planted corpus, the
+is a deregistered component that ``examples/demo_corpus_pipeline.py`` calls,
+so this test IS its oracle gate), hand-computed merges on a planted corpus, the
 structural invariant the regexp-chain equivalence proof needs (components
 are chars or earlier outputs), and chain ≡ classic-encode equivalence under
 LEARNED tables on random corpora.

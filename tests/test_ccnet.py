@@ -1,7 +1,8 @@
 """CCNet perplexity buckets (operators/ccnet.py).
 
-Pins: hash-exact DuckDB parity (the operator is unregistered — the driver
-registry sits at its 50-row cap — so this test IS its oracle gate), the
+Pins: hash-exact DuckDB parity (the operator is a component of the
+``t_selection_pipeline`` driver row, not registered on its own, so this test
+IS its oracle gate), the
 semantic contract (target-vocabulary text scores head, OOV junk scores
 tail, within the SAME language group), tertile balance, and zero-token
 routing.

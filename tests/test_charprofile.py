@@ -1,7 +1,7 @@
 """Unicode script profile (charprofile.q_char_profile) — per-script planted
 texts, mixed-script dominance, fixed-priority tie-break, empty text,
-map-only plan, and DuckDB value parity of the standalone SQL (registry at
-the driver's 50-row cap).
+map-only plan, and DuckDB value parity of its SQL (a component of the
+``t_char_integrity`` driver row, not registered on its own).
 """
 
 import os

@@ -1,7 +1,8 @@
 """Count-min sketch heavy hitters (cms.q_heavy_hitters_cms) — one-sided
 estimate guarantee vs exact counts, planted-heavy-hitter recovery, sketch
 size bound, merge/partitioning invariance, broadcast plan pin, and DuckDB
-value parity of the standalone SQL (registry at the driver's 50-row cap).
+value parity of its SQL (a component of the ``t_sketch_audit`` driver row,
+not registered on its own).
 """
 
 import os

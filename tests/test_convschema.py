@@ -1,7 +1,8 @@
 """Conversation-schema operators (convschema) — hand-built violation
 fixtures for the role audit, suffix-budget ground truth for the packer,
-single-exchange plan pin, and DuckDB value parity of both standalone SQLs
-(registry at the driver's 50-row cap).
+single-exchange plan pin, and DuckDB value parity of both operators' SQL
+(neither is registered on its own; the ``t_conv_audit`` driver row runs
+both).
 """
 
 import os

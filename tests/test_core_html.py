@@ -222,3 +222,218 @@ def test_mixed_case_table_tags_found():
     frs = find_table_fragments("<Table><TR><TD>x</TD></TR></Table>")
     assert len(frs) == 1
     assert parse_table_html(frs[0][2])[1] == [["x"]]
+
+
+# --- differential fuzz: interval occupancy and run rendering vs slot grids ---
+#
+# References for the parser's placement and the renderer, written the direct
+# way: every grid slot a span covers is marked one by one.  They cost
+# O(claimed grid) and exist only to pin the production code's output.
+
+from tablestructurerec_spark.core.html_parse import _TableParser, _fast_feed  # noqa: E402
+
+
+class _SlotDictParser(_TableParser):
+    """Placement with a ``{(row, col): True}`` slot map."""
+
+    def __init__(self):
+        super().__init__()
+        self.occupied = {}
+
+    def _next_row(self):
+        self.row += 1
+        self.cursor = 0
+
+    def _close_cell(self):
+        if not self.in_cell:
+            return
+        self.in_cell = False
+        if self.row < 0:
+            self.row = 0
+        while self.occupied.get((self.row, self.cursor)):
+            self.cursor += 1
+
+        def span(v):
+            try:
+                return min(max(int(v), 1), 1 << 12)
+            except (TypeError, ValueError):
+                return 1
+
+        attrs = self.cur_attrs
+        rspan, cspan = span(attrs.get("rowspan", 1)), span(attrs.get("colspan", 1))
+        if "rowspan" not in attrs and "colspan" not in attrs and not "".join(self.cell_lines):
+            self.occupied[(self.row, self.cursor)] = True
+            self.cursor += 1
+            return
+        self.cells.append(
+            {"r0": self.row, "rspan": rspan, "c0": self.cursor, "cspan": cspan,
+             "texts": self.cell_lines}
+        )
+        for r in range(self.row, self.row + rspan):
+            for c in range(self.cursor, self.cursor + cspan):
+                self.occupied[(r, c)] = True
+        self.cursor += cspan
+
+
+def _slot_grid_render(logic_points, cell_texts):
+    """The renderer over a rows x cols grid of slot tuples."""
+    n_rows = max((lp[1] + 1 for lp in logic_points), default=0)
+    n_cols = max((lp[3] + 1 for lp in logic_points), default=0)
+    grid = [[None] * n_cols for _ in range(n_rows)]
+    fvr = fvc = (1 << 16) - 1
+    lvc = 0
+    for idx, (r0, r1, c0, c1) in enumerate(logic_points):
+        texts = cell_texts.get(idx)
+        if texts and "".join(texts):
+            fvr, fvc, lvc = min(r0, fvr), min(c0, fvc), max(c1, lvc)
+        for r in range(r0, r1 + 1):
+            for c in range(c0, c1 + 1):
+                grid[r][c] = (idx, r0, r1, c0, c1)
+    out = ["<html><body><table>"]
+    for r in range(fvr, n_rows):
+        out.append("<tr>")
+        for c in range(max(fvc, 0), min(lvc, n_cols - 1) + 1):
+            slot = grid[r][c]
+            if not slot:
+                out.append("<td></td>")
+                continue
+            idx, r0, r1, c0, c1 = slot
+            texts = cell_texts.get(idx)
+            if texts and r == r0 and c == c0:
+                out.append(f"<td rowspan={r1 - r0 + 1} colspan={c1 - c0 + 1}>{'<br>'.join(texts)}</td>")
+        out.append("</tr>")
+    out.append("</table></body></html>")
+    return "".join(out)
+
+
+def _placed(parser_cls, html, fast):
+    p = parser_cls()
+    if fast:
+        return p.cells if _fast_feed(p, html) else None
+    p.feed(html)
+    p.close()
+    return p.cells
+
+
+def _fuzz_fragment(rng):
+    """A random table fragment: spans that are absent, 0, negative, garbage,
+    quoted or huge (one axis at a time, so the slot-map reference stays
+    cheap), implied end tags, bare and textless cells, fully covered rows,
+    stray cells before any <tr>, and overlapping spans."""
+    values = ["0", "1", "2", "3", "-2", "x", "''", '"2"', "'3'", "2.5", "", "7"]
+
+    def attrs():
+        out = ""
+        huge = rng.random() < 0.92  # True: no huge value in this tag
+        for name in rng.sample(["rowspan", "colspan", "ROWSPAN", "nowrap"], rng.randint(0, 2)):
+            v = rng.choice(values)
+            if not huge:
+                v, huge = rng.choice(["4095", "4096", "5000", "999999999"]), True
+            out += f" {name}={v}" if v else f" {name}"
+        return out
+
+    parts = ["<table>"]
+    if rng.random() < 0.1:
+        parts.append("<td>stray</td>")
+    for _ in range(rng.randint(0, 8)):
+        parts.append("<tr>")
+        if rng.random() < 0.1:
+            parts.append("</tr>")  # a row only carried spans cover
+            continue
+        for _ in range(rng.randint(0, 6)):
+            tag = rng.choice(["td", "td", "th"])
+            body = rng.choice(["", "", "x", "a b", "l1<br>l2", "<br>", "<b>q</b>", "x &amp; y", "c 1 2"])
+            parts.append(f"<{tag}{attrs()}>{body}")
+            if rng.random() < 0.8:
+                parts.append(f"</{tag}>")
+        if rng.random() < 0.7:
+            parts.append("</tr>")
+    parts.append("</table>")
+    return "".join(parts)
+
+
+def _reference_parse(html):
+    cells = _placed(_SlotDictParser, html, True)
+    if cells is None:
+        cells = _placed(_SlotDictParser, html, False)
+    logic = [[c["r0"], c["r0"] + c["rspan"] - 1, c["c0"], c["c0"] + c["cspan"] - 1] for c in cells]
+    return logic, [c["texts"] for c in cells]
+
+
+# B overlaps A, then C ends while they still overlap, then B ends under A:
+# s must skip the columns A still covers
+_LASTING_OVERLAP = (
+    "<table><tr><td>p</td><td rowspan=6 colspan=3>A</td><td rowspan=3>C</td></tr>"
+    "<tr><td rowspan=3 colspan=2>B</td></tr><tr><td>q</td></tr><tr><td>t</td></tr>"
+    "<tr><td>r</td><td>s</td></tr></table>"
+)
+
+
+def test_parse_matches_slot_map_reference_on_fuzzed_fragments():
+    import random
+
+    rng = random.Random(20261019)
+    n_fast = n_overlap = n_huge = 0
+    for k in range(1501):
+        h = _fuzz_fragment(rng) if k else _LASTING_OVERLAP
+        for fast in (True, False):
+            got = _placed(_TableParser, h, fast)
+            assert got == _placed(_SlotDictParser, h, fast), (fast, h)
+            n_fast += fast and got is not None
+        logic, texts = parse_table_html(h)
+        assert (logic, texts) == _reference_parse(h), h
+        slots = [(r, c) for r0, r1, c0, c1 in logic if r1 - r0 < 8 and c1 - c0 < 8
+                 for r in range(r0, r1 + 1) for c in range(c0, c1 + 1)]
+        n_overlap += len(slots) != len(set(slots))
+        n_huge += any(max(lp[1] - lp[0], lp[3] - lp[2]) >= 4094 for lp in logic)
+    # the corpus reaches both tokenizers, overlapping spans and the clamp
+    assert n_fast >= 500 and n_overlap >= 50 and n_huge >= 50, (n_fast, n_overlap, n_huge)
+
+
+def test_render_matches_slot_grid_reference():
+    import random
+
+    rng = random.Random(7)
+    cases = []
+    for _ in range(800):  # parser output, texts kept, dropped or emptied
+        logic, texts = parse_table_html(_fuzz_fragment(rng))
+        logic = [lp for lp in logic if lp[1] - lp[0] < 64 and lp[3] - lp[2] < 64]
+        cases.append((logic, dict(enumerate(texts))))
+        cases.append((logic, {i: rng.choice([t, t, [], [""], ["", ""]])
+                              for i, t in enumerate(texts) if rng.random() < 0.7}))
+    for _ in range(800):  # arbitrary boxes: overlaps, gaps, clipped windows
+        logic = []
+        for _ in range(rng.randint(0, 8)):
+            r0, c0 = rng.randint(0, 6), rng.randint(0, 6)
+            logic.append([r0, r0 + rng.randint(0, 3), c0, c0 + rng.randint(0, 3)])
+        texts = {i: rng.choice([["a"], ["b", "c"], [""], [], ["", "d"]])
+                 for i in range(len(logic)) if rng.random() < 0.8}
+        cases.append((logic, texts))
+    for logic, texts in cases:
+        assert render_table_html(logic, texts) == _slot_grid_render(logic, texts), (logic, texts)
+
+
+def test_merge_skips_the_grid_only_when_no_box_repeats():
+    """Distinct boxes never fold, even overlapping ones: the shortcut returns
+    what the slot-grid merge returns."""
+    import copy
+    import random
+
+    from tablestructurerec_spark.core.html_render import _merge_on_grid, merge_grid_duplicates
+
+    rng = random.Random(5)
+    n_folded = 0
+    for _ in range(600):
+        recs = []
+        for i in range(rng.randint(0, 10)):
+            r0, c0 = rng.randint(0, 3), rng.randint(0, 3)
+            x, y = rng.randint(0, 50), rng.randint(0, 50)
+            recs.append({
+                "t_logic_box": [r0, r0 + rng.randint(0, 1), c0, c0 + rng.randint(0, 1)],
+                "t_box": [x, y, x + rng.randint(1, 40), y + rng.randint(1, 40)],
+                "t_ocr_res": [[[x, y, x + 5, y + 5], f"t{i}"]],
+            })
+        want = _merge_on_grid(copy.deepcopy(recs))
+        assert merge_grid_duplicates(copy.deepcopy(recs)) == want, recs
+        n_folded += len(want) < len(recs)
+    assert n_folded >= 100, n_folded

@@ -1,8 +1,8 @@
 """Curriculum ordering (curriculum.q_curriculum_order) — dense contiguous
 global index, easy→hard monotonicity, contiguous shards, partitioning
 invariance, bucket-partitioned (not global) window plan pin, and DuckDB
-value parity vs the naive global-window SQL (registry at the driver's
-50-row cap).
+value parity vs the naive global-window SQL (a component of the
+``t_selection_pipeline`` driver row, not registered on its own).
 """
 
 import os

@@ -1,8 +1,8 @@
 """Hashed-NB filter distillation (operators/distill.py).
 
 Pins: hash-exact DuckDB parity through the nested CCNet-teacher oracle
-(the operator is unregistered — the driver registry sits at its 50-row cap
-— so this test IS its oracle gate), the student actually learning the
+(the operator is a component of the ``t_selection_pipeline`` driver row,
+not registered on its own, so this test IS its oracle gate), the student actually learning the
 teacher (agreement on head/tail docs well above chance), and planted
 semantics (target-vocabulary probe scores positive, junk negative).
 """

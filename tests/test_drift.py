@@ -1,7 +1,8 @@
 """Distribution drift (drift.q_distribution_drift) — python ground truth on
 hand-built day mixes (identical → 0, disjoint → 2e6, known shift), missing-
 category handling, and DuckDB value parity of the join-free fan-out vs the
-naive full-outer oracle (registry at the driver's 50-row cap).
+naive full-outer oracle (a component of the ``t_ops_audit`` driver row, not
+registered on its own).
 """
 
 import datetime

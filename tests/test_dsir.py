@@ -1,7 +1,8 @@
 """DSIR importance-resampling weights (sampling.q_dsir_weights).
 
-Pins: hash-exact DuckDB parity (the operator is unregistered — the driver
-registry sits at its 50-row cap — so this test IS its oracle gate), the
+Pins: hash-exact DuckDB parity (the operator is a component of the
+``t_selection_pipeline`` driver row, not registered on its own, so this test
+IS its oracle gate), the
 semantic contract (target-vocabulary docs weigh above off-target docs,
 regardless of their own lang label), empty-doc inclusion, and the plan
 shape (bounded ratio table broadcast, corpus side never broadcast).

@@ -1,7 +1,8 @@
 """HyperLogLog sketch (hll.q_distinct_hll) — estimator accuracy vs known
 vocabulary sizes, linear-counting small-range regime, merge invariance under
 repartitioning, partial-aggregate plan shape, and DuckDB value parity of the
-standalone SQL (registry at the driver's 50-row cap).
+SQL (a component of the ``t_sketch_audit`` driver row, not registered on
+its own).
 """
 
 import os

@@ -1,7 +1,7 @@
 """k-anonymity audit (kanon.q_k_anonymity) — planted small/large
 equivalence classes, negative-balance bucketing (floor, not truncate),
-single-shuffle plan, and DuckDB value parity of the standalone SQL
-(registry at the driver's 50-row cap).
+single-shuffle plan, and DuckDB value parity of its SQL (a component of
+the ``t_ops_audit`` driver row, not registered on its own).
 """
 
 import os

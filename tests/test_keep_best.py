@@ -1,8 +1,9 @@
 """Quality-policy dedup representative selection (dedup.q_dedup_keep_best).
 
 Pins: hash-exact DuckDB parity through the recursive-CTE components oracle
-composed with the quality oracle (the operator is unregistered — the driver
-registry sits at its 50-row cap — so this test IS its oracle gate), and the
+composed with the quality oracle (the operator is a deregistered component
+that ``examples/demo_corpus_pipeline.py`` calls, so this test IS its oracle
+gate), and the
 policy contract recomputed from scratch in pandas: exactly one keeper per
 component, and the keeper is the quality-argmax (doc_id tiebreak), which on
 the testdata genuinely DIVERGES from components' keep-first policy.

@@ -1,7 +1,8 @@
 """KMV distinct-count sketch (kmv.q_distinct_kmv) — exact-below-k regime,
 estimator accuracy vs true distinct counts, partitioning invariance (the
 merge property), pre-shuffle WindowGroupLimit pruning, and DuckDB value
-parity of the standalone SQL (registry at the driver's 50-row cap).
+parity of its SQL (a component of the ``t_sketch_audit`` driver row, not
+registered on its own).
 """
 
 import os

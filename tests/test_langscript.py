@@ -1,7 +1,8 @@
 """Lang-script consistency audit (langscript.q_lang_script_consistency) —
 planted matched/mismatched/unknown-lang fixtures and DuckDB value parity,
 incl. the sf fixture where zh-labeled Latin word-soup must surface as
-inconsistent (registry at the driver's 50-row cap).
+inconsistent (a component of the ``t_char_integrity`` driver row, not
+registered on its own).
 """
 
 import os

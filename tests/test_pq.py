@@ -1,8 +1,8 @@
 """Product-quantization ANN (operators/pq.py).
 
 Pins: hash-exact DuckDB parity via the refit-literal codebook oracle (the
-operator is unregistered — the driver registry sits at its 50-row cap — so
-this test IS its oracle gate), recall ≥ 0.8 against brute force on
+operator is a deregistered component that ``examples/demo_corpus_pipeline.py``
+calls, so this test IS its oracle gate), recall ≥ 0.8 against brute force on
 clustered data (the compressed codes must still find the true neighbors),
 and determinism across runs.
 """

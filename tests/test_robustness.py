@@ -5,9 +5,14 @@ The reference degrades per image to an empty output
 with an error column for the lineage metrics.
 """
 
+import time
+import tracemalloc
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from perfbench.workloads import HOSTILE_FRAGMENTS
 from tablestructurerec_spark.core.html_parse import extract_turn, parse_table_html
 from tablestructurerec_spark.core.pipeline import process_table_html
 
@@ -42,6 +47,49 @@ def test_hostile_fragments_do_not_crash():
             assert res["pred_html"].startswith("<html><body><table>")
 
 
+# (fragment, seconds): rejection costs what the fragment's cells cost, not
+# what its span claims would fill
+BOUNDED_COST = [
+    ("<table><tr><td rowspan=999999999 colspan=999999999>x</td></tr></table>", 0.05),
+    *((frag, 0.05) for frag in HOSTILE_FRAGMENTS),
+    # 2,000 tall cells in one 46 KB row
+    ("<table><tr>" + "<td rowspan=4096>x</td>" * 2000 + "</tr></table>", 0.1),
+    # 300 tall cells, then 4,000 rows that each skip past all of them
+    (
+        "<table><tr>" + "<td rowspan=4096>x</td>" * 300 + "</tr>"
+        + "<tr><td>x</td>" * 4000 + "</table>",
+        0.1,
+    ),
+    # 1,000 cells whose spans end one row apart, under 1,000 one-cell rows
+    (
+        "<table><tr>" + "".join(f"<td rowspan={i + 2}>x</td>" for i in range(1000))
+        + "</tr>" + "<tr><td>x</td>" * 1000 + "</table>",
+        0.1,
+    ),
+]
+
+
+@pytest.mark.parametrize("frag, bound_s", BOUNDED_COST, ids=range(len(BOUNDED_COST)))
+def test_hostile_span_claims_are_rejected_at_bounded_cost(frag, bound_s):
+    def run():
+        with pytest.raises(ValueError, match=r"table grid too large: \d+x\d+"):
+            process_table_html(frag, 0)
+
+    best = float("inf")
+    for _ in range(3):  # best of 3: a shared box's stalls are not the kernel's
+        t0 = time.perf_counter()
+        run()
+        best = min(best, time.perf_counter() - t0)
+    assert best < bound_s, f"{best:.3f} s"
+    tracemalloc.start()
+    try:
+        run()
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 10_000_000, f"{peak / 1e6:.1f} MB"
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.text(alphabet="<>trd= aAbB/139\"'&;#\n", max_size=300))
 def test_parser_never_crashes_on_garbage(garbage):
@@ -57,8 +105,8 @@ def test_poisoned_fragment_degrades_in_spark_stage(spark):
 
     rows = [
         ("c0", 0, "ok <table><tr><td rowspan=1 colspan=1>fine</td></tr></table>", None),
-        # a fragment the kernel cannot process end-to-end still yields an
-        # error row, not a job failure (huge spans exhaust the grid fill)
+        # a fragment the kernel rejects (its spans claim a grid over the
+        # 250k-slot guard) still yields an error row, not a job failure
         ("c0", 1, "bad <table><tr><td rowspan=4000 colspan=4000>boom</td></tr></table>", None),
     ]
     df = spark.createDataFrame(

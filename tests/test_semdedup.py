@@ -1,8 +1,8 @@
 """SemDeDup (operators/semdedup.py).
 
-Pins: hash-exact DuckDB parity via the refit-literal oracle (the operator
-is unregistered — the driver registry sits at its 50-row cap — so this test
-IS its oracle gate), the semantic contract on a planted fixture (exactly
+Pins: hash-exact DuckDB parity via the refit-literal oracle (the same
+``semdedup_oracle`` the ``t_semdedup`` driver row is checked against), the
+semantic contract on a planted fixture (exactly
 one member of each near-identical twin pair is pruned, everything else
 survives), and the plan shape (no corpus-wide cartesian pair join — the
 only allowed nested-loop is the broadcast of the O(k·dim) center table).

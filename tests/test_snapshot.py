@@ -1,6 +1,7 @@
 """Snapshot diff (snapshot.q_snapshot_diff) — planted add/remove/change
 ground truth, bucketed co-located-join plan pin (zero Exchange), and DuckDB
-value parity (registry at the driver's 50-row cap).
+value parity (a component of the ``t_ops_audit`` driver row, not
+registered on its own).
 """
 
 import os

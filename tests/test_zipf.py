@@ -1,7 +1,8 @@
 """Zipf corpus diagnostics (operators/zipf.py).
 
-Pins: hash-exact DuckDB parity (the operator is unregistered — the driver
-registry sits at its 50-row cap — so this test IS its oracle gate), the
+Pins: hash-exact DuckDB parity (the operator is a deregistered component
+that ``examples/demo_corpus_pipeline.py`` calls, so this test IS its oracle
+gate), the
 integer-scaled slope's semantic contract on planted corpora (uniform → 0,
 1/rank frequencies → ≈ −1), and coverage monotonicity.
 """
