@@ -12,11 +12,7 @@ Exact-hash dedup lives in :mod:`.relational` (d1_dedup_exact).  Here:
 
 All queries run Catalyst-native (higher-order array functions) at default
 bench-sized parameters, each with a DuckDB oracle built from the same hash
-(md5) so values match exactly.  One deliberate exception: MinHash at
-production signature widths (k >= _VECTORIZE_MIN_HASHES) swaps the k
-interpreted HOF passes for a single Arrow-batched pandas_udf signature
-kernel (see _banded_buckets_udf) — byte-equal output, regression-pinned by
-tests/test_plan_shapes.py.
+(md5) so values match exactly.
 """
 
 from __future__ import annotations
@@ -81,60 +77,9 @@ _SHINGLES_SQL = (
 # ---------------------------------------------------------------------------
 # MinHash + LSH banded candidate pairs
 # ---------------------------------------------------------------------------
-# At production signature widths the k per-permutation array traversals
-# dominate: Catalyst higher-order functions (transform/array_min) evaluate
-# interpreted, outside whole-stage codegen, so their cost is per-element
-# interpreter overhead x k.  An Arrow-batched numpy kernel does the same
-# (a*h+b) mod p / min in one vectorized (k x S) op per doc — measured at
-# sf0.1: 1.4 s vs 2.8 s for the k=128 signature stage (2x, and the gap grows
-# with k and shingle count).  At k=8 the fused codegen'd pipeline wins (one
-# pass over the scan, no Arrow hop), so small signatures keep the native path.
-_VECTORIZE_MIN_HASHES = 32
-
-
-def _banded_buckets_udf(n_hashes: int, band_rows: int):
-    """pandas_udf: hv(array<long>) -> per-band bucket md5 strings, byte-equal
-    to the native path (str(long) join '|' then md5; all-null sigs of an
-    empty shingle set collapse to md5('') exactly as concat_ws does)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    mul = np.array(_MINHASH_A[:n_hashes], dtype=np.int64)[:, None]
-    add = np.array(_MINHASH_B[:n_hashes], dtype=np.int64)[:, None]
-    n_bands = n_hashes // band_rows
-    empty_buckets = [hashlib.md5(b"").hexdigest()] * n_bands
-
-    # no type hints: `from __future__ import annotations` stringifies them
-    # and pyspark's hint resolver can't see this scope — wrap explicitly
-    def buckets(hvs):
-        out = []
-        for h in hvs:
-            if h is None or len(h) == 0:
-                out.append(empty_buckets)
-                continue
-            # h < 2^31 and A < 2^31 keep a*h+b under 2^63: exact in int64,
-            # the same bound that keeps the Catalyst/DuckDB faces exact
-            ha = np.asarray(h, dtype=np.int64)[None, :]
-            sig = ((ha * mul + add) % _MINHASH_P).min(axis=1)
-            ss = [str(v) for v in sig]
-            out.append(
-                [
-                    hashlib.md5(
-                        "|".join(ss[j * band_rows : (j + 1) * band_rows]).encode()
-                    ).hexdigest()
-                    for j in range(n_bands)
-                ]
-            )
-        return pd.Series(out)
-
-    return F.pandas_udf(buckets, "array<string>")
-
-
 def _hv_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hv): ONE md5 per shingle, folded to 31 bits — the shared
-    input of every minhash face (batch LSH, production widths, incremental)."""
+    input of every minhash face (batch LSH, incremental)."""
     hv = F.transform(
         shingles_col(tokens_col(F.col("text"))),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
@@ -143,67 +88,47 @@ def _hv_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "documents").select("doc_id", hv.alias("hv"))
 
 
-def _banded_docs(docs: DataFrame, n_hashes: int, band_rows: int) -> DataFrame:
+def _banded_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) from (doc_id, hv) — the k permutations are pure
     integer affine transforms (universal hashing)."""
-    if n_hashes >= _VECTORIZE_MIN_HASHES:
-        # production-width signatures: one Arrow-batched numpy kernel per
-        # batch computes all k mins at once (see _VECTORIZE_MIN_HASHES note).
-        # NO exchange barrier here: the opaque UDF references hv exactly
-        # once, so there is nothing to re-inline — and the barrier below is
-        # a full-corpus shuffle of shingle-hash arrays (nearly text-sized)
-        # that a 10^12-turn job cannot afford; partitioning follows input
-        # splits straight into the signature stage.
-        bk = _banded_buckets_udf(n_hashes, band_rows)
-        banded = docs.select("doc_id", F.posexplode(bk("hv")).alias("band", "bucket"))
-    else:
-        # exchange barrier right after shingling, for the HOF path only:
-        # each of the k signature expressions below references hv, and
-        # without the barrier Catalyst inlines (and re-executes) the whole
-        # tokenizer + shingler + md5 tree per signature — measured 5x
-        # slower at bench SF.
-        docs = docs.repartition("doc_id")
+    # exchange barrier right after shingling: each of the k signature
+    # expressions below references hv, and without the barrier Catalyst
+    # inlines (and re-executes) the whole tokenizer + shingler + md5 tree per
+    # signature — measured 5x slower at bench SF.
+    docs = docs.repartition("doc_id")
 
-        def sig(i: int):
-            a, b = _MINHASH_A[i], _MINHASH_B[i]
-            # NB: single-arg lambda — a 2-arg transform lambda receives (elem, idx)
-            return F.array_min(
-                F.transform(
-                    F.col("hv"),
-                    lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P),
-                )
-            ).cast("string")
+    def sig(i: int):
+        a, b = _MINHASH_A[i], _MINHASH_B[i]
+        # NB: single-arg lambda — a 2-arg transform lambda receives (elem, idx)
+        return F.array_min(
+            F.transform(
+                F.col("hv"),
+                lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P),
+            )
+        ).cast("string")
 
-        sigs = [sig(i) for i in range(n_hashes)]
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("band"),
-                    F.md5(
-                        F.concat_ws("|", *sigs[j * band_rows : (j + 1) * band_rows])
-                    ).alias("bucket"),
-                )
-                for j in range(n_hashes // band_rows)
-            ]
-        )
-        banded = docs.select("doc_id", F.explode(bands).alias("b")).select(
-            "doc_id", F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket")
-        )
-    return banded
+    sigs = [sig(i) for i in range(_N_HASHES)]
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("band"),
+                F.md5(
+                    F.concat_ws("|", *sigs[j * _BAND_ROWS : (j + 1) * _BAND_ROWS])
+                ).alias("bucket"),
+            )
+            for j in range(_N_HASHES // _BAND_ROWS)
+        ]
+    )
+    return docs.select("doc_id", F.explode(bands).alias("b")).select(
+        "doc_id", F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket")
+    )
 
 
-def q_dedup_minhash_lsh(
-    spark: SparkSession,
-    sf_dir: str,
-    n_hashes: int = _N_HASHES,
-    band_rows: int = _BAND_ROWS,
-) -> DataFrame:
-    # ``n_hashes``/``band_rows`` are the production knobs (128 permutations,
-    # 4-8 rows per band in real pipelines; the defaults are bench-sized and
-    # pinned by the DuckDB oracle).  The plan SHAPE is identical at any
-    # size: signatures stay map-side on the scan, the self-join is on
+def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # bench-sized signatures (``_N_HASHES`` permutations in bands of
+    # ``_BAND_ROWS``), pinned by the DuckDB oracle; the self-join is on
     # (band, bucket).
-    banded = _banded_docs(_hv_docs(spark, sf_dir), n_hashes, band_rows)
+    banded = _banded_docs(_hv_docs(spark, sf_dir))
     # exchange barrier: materialize the signatures ONCE per row before the
     # self-join — otherwise Catalyst inlines the whole signature tree into
     # both join sides and recomputes it per candidate pair.  The hash
@@ -227,8 +152,7 @@ def q_dedup_minhash_lsh(
 
 def _banded_cte() -> str:
     """The shared DuckDB CTE body producing banded(doc_id, band, bucket) —
-    byte-equal to :func:`_banded_docs` at the default widths — reused by
-    every minhash oracle."""
+    byte-equal to :func:`_banded_docs` — reused by every minhash oracle."""
 
     def sig(i: int) -> str:
         a, b = _MINHASH_A[i], _MINHASH_B[i]
@@ -567,12 +491,7 @@ _INCR_MOD = 10
 _INCR_REM = 7
 
 
-def q_dedup_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    n_hashes: int = _N_HASHES,
-    band_rows: int = _BAND_ROWS,
-) -> DataFrame:
+def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup matches of a NEW batch against an existing corpus index:
     (new_doc, dup_of) for every band-bucket collision between a new document
     and an indexed one.  New docs with no row here are genuinely new.
@@ -589,8 +508,8 @@ def q_dedup_incremental(
     """
     hv = _hv_docs(spark, sf_dir)
     is_new = (F.col("doc_id") % _INCR_MOD) == _INCR_REM
-    new_b = _banded_docs(hv.where(is_new), n_hashes, band_rows).alias("n")
-    idx_b = _banded_docs(hv.where(~is_new), n_hashes, band_rows).alias("i")
+    new_b = _banded_docs(hv.where(is_new)).alias("n")
+    idx_b = _banded_docs(hv.where(~is_new)).alias("i")
     return (
         new_b.join(
             idx_b,

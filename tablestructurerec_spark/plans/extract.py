@@ -15,7 +15,7 @@ Shape of the plan (designed for 10^12 turns):
 * ``extract_turns`` — the same stage and kernel loop without the pre-filter:
   text that fails it is nulled instead, and each task ends with one count
   row ``(bucket, n_turns, n_tables)`` per bucket it read, so the lineage
-  write can count turns and tables above its shuffle.
+  write can count turns and tables in its only stage.
 
 Column pruning is done MANUALLY before the UDF (select exactly
 conv_id/turn_idx/text, plus bucket for ``extract_turns``) because Catalyst cannot prune through an opaque

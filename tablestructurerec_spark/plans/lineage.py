@@ -6,51 +6,57 @@ and metrics tables".  Design (SURVEY.md §4):
 * the input keyspace is bucketed by ``pmod(xxhash64(conv_id), n_buckets)`` —
   a stable, data-independent partitioning that also *salts* skewed
   conversations across buckets at the granularity that matters (bucket
-  count ≫ conversation count per bucket);
-* ONE input scan per run covers every not-yet-done bucket: the kernel runs
-  on the input splits, and its narrow output is hash-shuffled once on
-  ``bucket`` into ``P = defaultParallelism`` partitions (salted by
-  ``conv_id`` into ``k = ceil(P / n_buckets)`` parts when P exceeds the
-  bucket count), so each bucket is written by at most k tasks and a fresh
-  run writes at most ``n_buckets * k`` data files, not tasks × buckets.
-  Output lands under ``out_dir/tables/bucket=<b>/`` via
-  ``write.partitionBy("bucket")`` with dynamic partition overwrite (only
-  this run's buckets are replaced, so re-runs are idempotent), and a lineage
-  row (bucket, n_buckets, status, n_turns, n_tables, wall_s, run_id) is
-  appended to ``out_dir/_lineage/`` per bucket;
-* resume = anti-join: buckets whose latest lineage status is ``ok`` are
-  skipped; everything else re-runs.  A crash mid-write commits nothing (the
-  parquet committer stages to _temporary), leaves no ``ok`` rows, and the
-  next run redoes exactly the unfinished buckets — exactly-once at bucket
-  granularity.  Bucket ids mean nothing across bucket counts, so a resume
-  with another ``n_buckets`` than the ok rows record is refused, and so is
-  one over tables that no ok row records (a crash between the table commit
-  and the lineage append) when their rows hash to other buckets under the
-  new count;
+  count ≫ conversation count per bucket).  The bucket is the unit of
+  *resume*, not of file layout;
+* one run is one commit.  ONE input scan per run covers every not-yet-done
+  bucket, and the kernel's output is written where it runs, with no
+  shuffle, as one flat file set per run: ``out_dir/tables/commit=<id>/``,
+  with ``bucket`` an ordinary column.  ``<id>`` is generated per run
+  (a letter, the start time in ns and a random suffix), so ids never repeat
+  and partition inference keeps them strings.  A fresh run writes at most
+  one data file per kernel task, i.e. per input split, whatever the bucket
+  count.  Then one lineage row (bucket, n_buckets, status, n_turns,
+  n_tables, wall_s, run_id, commit) per bucket is appended to
+  ``out_dir/_lineage/``;
+* the lineage rows marked ok are the commit record that readers go by:
+  :func:`read_output` returns, for each bucket, the rows of exactly one ok
+  commit (the smallest id, i.e. the earliest) through a semi-join on
+  ``(bucket, commit)``.  A crash before the table commit commits nothing
+  (the parquet committer stages to _temporary); a crash between the table
+  commit and the lineage append leaves an orphan commit that no ok row
+  names, which readers ignore.  Orphans are not vacuumed; deleting one by
+  hand is safe while no run is in flight;
+* resume = anti-join: buckets with an ok lineage row are skipped;
+  everything else re-runs — exactly-once at bucket granularity.  Bucket ids
+  mean nothing across bucket counts, so a resume with another ``n_buckets``
+  than the ok rows record is refused.  An orphan commit is invisible, so a
+  resume after a lost lineage append is correct with any bucket count.  An
+  ``out_dir`` of the older per-bucket partition layout (lineage without
+  ``commit``) is refused by both the run and the reader;
 * metrics ride the write: ``n_turns`` and ``n_tables`` are one
-  ``DataFrame.observe`` aggregate above the shuffle, in the write's result
-  stage, read after the write — no second input scan and no re-read of the
-  written files.  Each kernel task ends with one count row
+  ``DataFrame.observe`` aggregate in the write's only stage, which is its
+  result stage, read after the write — no second input scan and no re-read
+  of the written files.  Each kernel task ends with one count row
   ``(bucket, n_turns, n_tables)`` per bucket it read, the observation
   collects the count rows, and the driver sums them per bucket, so the
   observation has one aggregate whatever the bucket count, and the driver
-  holds at most (map tasks × todo buckets) count rows;
+  holds at most (tasks × todo buckets) count rows;
 * the lineage rows are appended from an Arrow table, which the JVM decodes
   without a Python worker.
 
 Storage is either a directory (``out_dir`` = path: ``<dir>/tables`` +
 ``<dir>/_lineage`` parquet) or a catalog (``out_dir`` = ``catalog:<prefix>``:
-tables ``<prefix>_tables`` + ``<prefix>_lineage`` resolved through the
-session catalog).  The catalog mode is the Iceberg path on a real cluster —
-``INSERT OVERWRITE`` with dynamic partition overwrite maps to an Iceberg
-replace-partitions snapshot commit, and the lineage append to an
-append-files commit; the same code runs against the plain session catalog
-here (tested), only the catalog config differs.
+tables ``<prefix>_tables``, partitioned by ``commit``, + ``<prefix>_lineage``
+resolved through the session catalog).  The catalog mode is the Iceberg path
+on a real cluster — the table write and the lineage append are each an
+append-files snapshot commit; the same code runs against the plain session
+catalog here (tested), only the catalog config differs.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
 from typing import Dict, List, Tuple
 
 import pyarrow as pa
@@ -60,11 +66,11 @@ from pyspark.sql.types import StructType
 
 from .extract import extract_turns
 
-__all__ = ["bucket_col", "completed_buckets", "run_with_lineage"]
+__all__ = ["bucket_col", "completed_buckets", "read_output", "run_with_lineage"]
 
 LINEAGE_SCHEMA = (
     "bucket int, n_buckets int, status string, n_turns long, n_tables long, "
-    "wall_s double, run_id string"
+    "wall_s double, run_id string, commit string"
 )
 
 
@@ -107,35 +113,22 @@ def _read(spark: SparkSession, is_cat: bool, target: str) -> DataFrame | None:
         return None
 
 
-def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The lineage table, or None when no run has written one yet."""
-    is_cat, _tables, lin_t = _names(out_dir)
-    return _read(spark, is_cat, lin_t)
-
-
-def _foreign_buckets(
-    spark: SparkSession, out_dir: str, done: set, n_buckets: int
-) -> List[int]:
-    """Written buckets that no ok lineage row records and that hold a row
-    an ``n_buckets`` run puts in another bucket: a run with another bucket
-    count wrote them, and its lineage append was lost.  A resume would
-    rewrite their tables into other buckets and leave these in place."""
-    is_cat, tables_t, _lin = _names(out_dir)
-    tables = _read(spark, is_cat, tables_t)
-    if tables is None:
-        return []
-    stray = bucket_col(n_buckets) != F.col("bucket")
-    if done:
-        stray &= ~F.col("bucket").isin(sorted(done))
-    return sorted(r.bucket for r in tables.where(stray).select("bucket").distinct().collect())
-
-
 def _ok_rows(spark: SparkSession, out_dir: str) -> List[Row]:
-    """Distinct ``(bucket, n_buckets)`` of the lineage rows marked ok."""
-    lin = _read_lineage(spark, out_dir)
+    """Distinct ``(bucket, n_buckets, commit)`` of the lineage rows marked
+    ok.  Raises ``ValueError`` on a lineage without ``commit``: the older
+    per-bucket partition layout, which neither a run nor a reader can use."""
+    is_cat, _tables, lin_t = _names(out_dir)
+    lin = _read(spark, is_cat, lin_t)
     if lin is None:
         return []
-    return lin.where(F.col("status") == "ok").select("bucket", "n_buckets").distinct().collect()
+    if "commit" not in lin.columns:
+        raise ValueError(
+            f"{out_dir} holds the old per-bucket partition layout (tables "
+            f"under bucket=<b>, lineage without a commit column); write to a "
+            f"fresh out_dir"
+        )
+    ok = lin.where(F.col("status") == "ok")
+    return ok.select("bucket", "n_buckets", "commit").distinct().collect()
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> List[int]:
@@ -143,35 +136,25 @@ def completed_buckets(spark: SparkSession, out_dir: str) -> List[int]:
 
 
 def _bucketed_tables(
-    spark: SparkSession, transcripts: DataFrame, todo: List[int], n_buckets: int
+    transcripts: DataFrame, todo: List[int], n_buckets: int
 ) -> Tuple[DataFrame, Observation]:
-    """The table rows of the ``todo`` buckets, hash-shuffled so that each
-    bucket reaches at most ``ceil(P / n_buckets)`` writer tasks, with
-    ``P = defaultParallelism``, and the observation of their counts: one
-    ``counts`` list of ``(bucket, n_turns, n_tables)`` count rows, which
+    """The table rows of the ``todo`` buckets, each with its bucket, on the
+    input's splits, and the observation of their counts: one ``counts`` list
+    of ``(bucket, n_turns, n_tables)`` count rows, which
     :func:`_bucket_counts` sums."""
     src = transcripts.withColumn("bucket", bucket_col(n_buckets)).where(
         F.col("bucket").isin(todo)
     )
-    # the kernel stays on the input splits
     rows = extract_turns(src)
-    p = spark.sparkContext.defaultParallelism
-    k = -(-p // n_buckets)
-    keys = [F.col("bucket")]
-    if k > 1:
-        # murmur3, not xxhash64: pmod(xxhash64(conv_id), k) is a function of
-        # the bucket whenever k shares a factor with n_buckets
-        keys.append(F.pmod(F.hash("conv_id"), F.lit(k)))
-    # an explicit partition count, which AQE does not coalesce
-    rows = rows.repartition(p, *keys)
     # The counts are exactly-once only because the observed node sits in the
-    # write's result stage, above the only shuffle: the count rows are map
-    # output, a retried map task regenerates the same ones, and a reducer
-    # reads one attempt's output; a retried or reused map stage does not
-    # reach the observation, and the write sorts locally.  One aggregate
+    # write's only stage, which is its result stage: Spark credits a result
+    # task's accumulator updates once per partition, so a retried or
+    # speculative attempt does not count its rows twice.  A shuffle between
+    # the observation and the write would put the observation in a map
+    # stage, whose resubmitted tasks would count again.  One aggregate
     # whatever the bucket count: observed metrics reject FILTER, but
-    # collect_list skips the nulls the CASE leaves for table rows.  The
-    # count rows are dropped only above the observation.
+    # collect_list skips the nulls the CASE leaves for table rows.  The count
+    # rows are dropped only above the observation.
     obs = Observation()
     rows = rows.observe(
         obs,
@@ -186,12 +169,18 @@ def _bucketed_tables(
 def _bucket_counts(obs: Observation, todo: List[int]) -> Dict[int, List[int]]:
     """``[n_turns, n_tables]`` per todo bucket: the sum of its count rows,
     ``[0, 0]`` for a bucket without turns.  The driver holds at most
-    (map tasks × todo buckets) count rows."""
+    (tasks × todo buckets) count rows."""
     sums = {b: [0, 0] for b in todo}
     for r in obs.get["counts"]:
         sums[r.bucket][0] += r.n_turns
         sums[r.bucket][1] += r.n_tables
     return sums
+
+
+def _new_commit() -> str:
+    """A commit id no other run has: a letter first, so partition inference
+    keeps it a string, then the start time, so ids sort by it."""
+    return f"c{time.time_ns()}{uuid.uuid4().hex[:8]}"
 
 
 def run_with_lineage(
@@ -204,16 +193,15 @@ def run_with_lineage(
 ) -> List[int]:
     """Extract all buckets not yet marked ok; returns the buckets processed.
 
-    Single-pass: one input scan feeds the write of every todo bucket, which
-    also collects the lineage counts (the input is never re-scanned).
-    ``wall_s`` is the run's wall time, recorded on each of the run's lineage
-    rows.
+    Single-pass and one commit: one input scan feeds one flat write of every
+    todo bucket, which also collects the lineage counts (the input is never
+    re-scanned); the lineage rows, which name the commit, are appended
+    after it.  ``wall_s`` is the run's wall time, recorded on each of the
+    run's lineage rows.
 
     Raises ``ValueError`` before any write if ``out_dir`` holds ok buckets
-    of another bucket count, or tables that no ok lineage row records and
-    whose rows an ``n_buckets`` run puts in other buckets (a run with
-    another count whose lineage append was lost): bucket ids do not carry
-    over between counts.
+    of another bucket count (bucket ids do not carry over between counts),
+    or is of the older per-bucket partition layout.
 
     ``fail_after`` caps the run at N buckets (test hook simulating a crash
     between runs).
@@ -226,45 +214,26 @@ def run_with_lineage(
             f"cannot resume it with {n_buckets} buckets"
         )
     done = {r.bucket for r in ok}
-    foreign = _foreign_buckets(spark, out_dir, done, n_buckets)
-    if foreign:
-        raise ValueError(
-            f"{out_dir} holds unrecorded tables in bucket(s) {foreign} that "
-            f"a {n_buckets}-bucket run does not put there; they come from a "
-            f"run with another bucket count, so it cannot be resumed with "
-            f"{n_buckets} buckets"
-        )
     todo = [b for b in range(n_buckets) if b not in done]
     if fail_after is not None:
         todo = todo[:fail_after]
     if not todo:
         return []
     t0 = time.perf_counter()
-    tables, obs = _bucketed_tables(spark, transcripts, todo, n_buckets)
+    tables, obs = _bucketed_tables(transcripts, todo, n_buckets)
     is_cat, tables_t, lin_t = _names(out_dir)
-    overwrite_key = "spark.sql.sources.partitionOverwriteMode"
-    old_mode = spark.conf.get(overwrite_key, None)
-    spark.conf.set(overwrite_key, "dynamic")
-    try:
-        if is_cat:
-            # catalog mode: INSERT OVERWRITE under dynamic partition
-            # overwrite replaces only this run's bucket partitions — on an
-            # Iceberg catalog this is one replace-partitions snapshot commit
-            if not spark.catalog.tableExists(tables_t):
-                tables.write.partitionBy("bucket").saveAsTable(tables_t)
-            else:
-                cols = spark.table(tables_t).columns  # insertInto is positional
-                tables.select(*cols).write.mode("overwrite").insertInto(tables_t)
-        else:
-            tables.write.mode("overwrite").partitionBy("bucket").parquet(tables_t)
-    finally:
-        if old_mode is None:
-            spark.conf.unset(overwrite_key)
-        else:
-            spark.conf.set(overwrite_key, old_mode)
+    commit = _new_commit()
+    if is_cat:
+        # one new partition of a table partitioned by commit; on an Iceberg
+        # catalog this is one append-files snapshot commit
+        tables.withColumn("commit", F.lit(commit)).write.mode("append").partitionBy(
+            "commit"
+        ).saveAsTable(tables_t)
+    else:
+        tables.write.parquet(f"{tables_t}/commit={commit}")
     wall = time.perf_counter() - t0
     counts = _bucket_counts(obs, todo)
-    rows = [(b, n_buckets, "ok", *counts[b], wall, run_id) for b in todo]
+    rows = [(b, n_buckets, "ok", *counts[b], wall, run_id, commit) for b in todo]
     # an Arrow table, which the JVM decodes itself; a list of tuples would
     # run a Python-worker job to build the rows
     schema = StructType.fromDDL(LINEAGE_SCHEMA)
@@ -277,5 +246,19 @@ def run_with_lineage(
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The written table rows with their ``bucket``: for each bucket, the
+    rows of its smallest ok commit.  Commits that no ok lineage row names
+    (a crash before the lineage append) are ignored."""
     is_cat, tables_t, _lin = _names(out_dir)
-    return spark.table(tables_t) if is_cat else spark.read.parquet(tables_t)
+    first: Dict[int, str] = {}
+    for r in _ok_rows(spark, out_dir):
+        first[r.bucket] = min(first.get(r.bucket, r.commit), r.commit)
+    ok = spark.createDataFrame(
+        pa.table({"bucket": pa.array(list(first), pa.int32()),
+                  "commit": pa.array(list(first.values()), pa.string())}),
+        "bucket int, commit string",
+    )
+    tables = spark.table(tables_t) if is_cat else spark.read.parquet(tables_t)
+    # a join condition, not using-columns, which would move the keys first
+    keys = (tables.bucket == ok.bucket) & (tables.commit == ok.commit)
+    return tables.join(ok, keys, "left_semi").drop("commit")

@@ -45,7 +45,7 @@ def test_inline_query_does_one_signature_pass(spark, no_broadcast):
 
 
 def test_persisted_index_side_never_shuffles(spark, no_broadcast, tmp_path):
-    banded = _banded_docs(_hv_docs(spark, SF_DIR), 8, 2)
+    banded = _banded_docs(_hv_docs(spark, SF_DIR))
     is_new = (F.col("doc_id") % _INCR_MOD) == _INCR_REM
     write_bucketed(
         banded.where(~is_new), "tsr_test_incr_idx", ["band", "bucket"], n_buckets=8

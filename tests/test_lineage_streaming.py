@@ -67,11 +67,10 @@ def test_resume_is_noop_when_complete(spark, transcripts, tmp_path):
 
 def test_run_is_single_pass_regardless_of_bucket_count(spark, transcripts, tmp_path):
     """With the input cached, a run into a fresh output launches exactly
-    three Spark jobs in either storage mode, whatever the bucket count: the
-    map stage of the bucket shuffle (its own job under AQE), the write,
-    which also observes the lineage counts, and the lineage append.  No
-    per-bucket scan, no second count scan of the input, no re-read of the
-    output."""
+    two Spark jobs in either storage mode, whatever the bucket count: the
+    write, which also observes the lineage counts, and the lineage append.
+    No shuffle, no per-bucket scan, no second count scan of the input, no
+    re-read of the output."""
     sc = spark.sparkContext
     transcripts.count()  # materialize the cache outside the measured runs
 
@@ -92,7 +91,7 @@ def test_run_is_single_pass_regardless_of_bucket_count(spark, transcripts, tmp_p
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     jobs = {(m, n): jobs_for(m, n) for m in ("path", "catalog") for n in (3, 12)}
-    assert set(jobs.values()) == {3}, jobs
+    assert set(jobs.values()) == {2}, jobs
 
 
 def _plan_nodes(df):
@@ -108,23 +107,22 @@ def _plan_nodes(df):
 
 
 def test_write_plan_scans_once_and_observes_above_the_shuffle(spark, transcripts, tmp_path):
-    """The write's plan reads the input with one scan, runs the kernel below
-    the only shuffle, and observes the counts above it, in the write's
-    result stage, where a retried map stage cannot count a row twice."""
+    """The write's plan reads the input with one scan and has no shuffle:
+    the kernel and the observation above it run in the write's only stage,
+    its result stage, where a retried task cannot count a row twice."""
     from tablestructurerec_spark.plans.lineage import _bucketed_tables
 
     src_dir = str(tmp_path / "src")
     transcripts.repartition(3).write.parquet(src_dir)
-    tables, _obs = _bucketed_tables(spark, spark.read.parquet(src_dir), [0, 2, 5], N_BUCKETS)
+    tables, _obs = _bucketed_tables(spark.read.parquet(src_dir), [0, 2, 5], N_BUCKETS)
     nodes = _plan_nodes(tables)
     assert sum("Scan" in n for n in nodes) == 1, nodes
-    assert nodes.count("Exchange") == 1, nodes
+    assert "Exchange" not in nodes, nodes
     assert nodes.count("CollectMetrics") == 1, nodes
-    shuffle = nodes.index("Exchange")
-    assert nodes.index("CollectMetrics") < shuffle < nodes.index("MapInPandas"), nodes
+    assert nodes.index("CollectMetrics") < nodes.index("MapInPandas"), nodes
     # the observation's width does not grow with the bucket count
     widths = {
-        n: _observed_aggregates(_bucketed_tables(spark, transcripts, list(range(n)), n)[0])
+        n: _observed_aggregates(_bucketed_tables(transcripts, list(range(n)), n)[0])
         for n in (3, 64)
     }
     assert widths[3] == widths[64] > 0, widths
@@ -148,18 +146,20 @@ def _observed_aggregates(df):
 
 
 def test_fresh_run_file_count_is_bounded_by_buckets(spark, transcripts, tmp_path):
-    """Each bucket is written by at most ``ceil(P / n_buckets)`` tasks, so a
-    fresh run writes at most ``n_buckets * ceil(P / n_buckets)`` data files
-    under ``tables/``, however many partitions the input has."""
+    """The kernel's output is written where it runs, so a fresh run writes
+    at most one data file per kernel task under ``tables/``, and as many
+    at 12 buckets as at 3: the file count does not depend on the bucket
+    count."""
     p = spark.sparkContext.defaultParallelism
     src = transcripts.repartition(2 * p).cache()
     try:
         assert src.rdd.getNumPartitions() == 2 * p
+        counts = {}
         for n_buckets in (3, 12):
             out = tmp_path / f"b{n_buckets}"
             run_with_lineage(spark, src, str(out), n_buckets=n_buckets)
-            files = list((out / "tables").glob("bucket=*/*.parquet"))
-            assert 0 < len(files) <= n_buckets * -(-p // n_buckets), (n_buckets, len(files))
+            counts[n_buckets] = len(list((out / "tables").rglob("*.parquet")))
+        assert 0 < counts[3] == counts[12] <= 2 * p, counts
     finally:
         src.unpersist()
 
@@ -184,45 +184,188 @@ def test_resume_with_another_bucket_count_is_refused(spark, transcripts, tmp_pat
             _drop_catalog(spark, out)
 
 
+def _lose_lineage(spark, out):
+    """Delete the lineage of ``out``, as a crash before its append would
+    have left it."""
+    import shutil
+
+    if out.startswith("catalog:"):
+        spark.sql(f"DROP TABLE {out[len('catalog:'):]}_lineage")
+    else:
+        shutil.rmtree(f"{out}/_lineage")
+
+
+def _raw_tables(spark, out):
+    """Every written table row, whichever commit it belongs to."""
+    if out.startswith("catalog:"):
+        return spark.table(f"{out[len('catalog:'):]}_tables")
+    return spark.read.parquet(f"{out}/tables")
+
+
+def _out_rows(spark, out):
+    keys = ("conv_id", "turn_idx", "table_idx", "pred_html", "bucket")
+    return sorted(tuple(r) for r in read_output(spark, out).select(*keys).collect())
+
+
+def _assert_unique_keys(rows):
+    keys = [r[:3] for r in rows]
+    assert len(keys) == len(set(keys)) > 0
+
+
 @pytest.mark.parametrize("mode", ["path", "catalog"])
 def test_resume_after_a_lost_lineage_append_checks_the_bucket_count(
     spark, transcripts, tmp_path, mode
 ):
-    """A crash between the table commit and the lineage append leaves
-    tables that no lineage row records.  A resume with another bucket count
-    would rewrite their rows into other buckets beside them, so it is
-    refused before any write; a resume with the same count rewrites every
-    bucket and equals the one-shot output."""
-    import shutil
-
+    """A crash between the table commit and the lineage append leaves a
+    commit that no lineage row records.  Readers ignore it, so a resume with
+    another bucket count is correct: it rewrites every bucket in a new
+    commit, and the output equals a one-shot run with that count, each
+    table once."""
     out = str(tmp_path / "out") if mode == "path" else "catalog:tsr_test_lost"
     ref = str(tmp_path / "ref")
-
-    def lose_lineage():
-        if mode == "path":
-            shutil.rmtree(f"{out}/_lineage")
-        else:
-            spark.sql(f"DROP TABLE {out[len('catalog:'):]}_lineage")
-
-    def rows(o):
-        keys = ("conv_id", "turn_idx", "table_idx", "pred_html", "bucket")
-        return sorted(tuple(r) for r in read_output(spark, o).select(*keys).collect())
-
     if mode == "catalog":
         _drop_catalog(spark, out)
     try:
-        run_with_lineage(spark, transcripts, ref, n_buckets=8, run_id="ref")
+        run_with_lineage(spark, transcripts, ref, n_buckets=4, run_id="ref")
         run_with_lineage(spark, transcripts, out, n_buckets=8, run_id="r1")
-        lose_lineage()
-        before = rows(out)
-        with pytest.raises(ValueError, match=r"another bucket count.*with 4 buckets"):
-            run_with_lineage(spark, transcripts, out, n_buckets=4, run_id="r2")
-        assert rows(out) == before
+        _lose_lineage(spark, out)
+        assert _out_rows(spark, out) == []
         assert completed_buckets(spark, out) == []
-        assert run_with_lineage(spark, transcripts, out, n_buckets=8, run_id="r3") == list(
-            range(8)
+        assert run_with_lineage(spark, transcripts, out, n_buckets=4, run_id="r2") == list(
+            range(4)
         )
-        assert rows(out) == rows(ref)
+        got = _out_rows(spark, out)
+        assert got == _out_rows(spark, ref)
+        _assert_unique_keys(got)
+        assert _raw_tables(spark, out).count() == 2 * len(got)
+    finally:
+        if mode == "catalog":
+            _drop_catalog(spark, out)
+
+
+@pytest.mark.parametrize("mode", ["path", "catalog"])
+def test_orphan_commit_is_ignored_and_resume_equals_one_shot(
+    spark, transcripts, tmp_path, mode, monkeypatch
+):
+    """A run that crashes after its table commit, in the Arrow lineage
+    append, leaves an orphan commit.  ``read_output`` shows only the
+    buckets the ok rows record, and a resume redoes the rest: its output
+    equals the one-shot output."""
+    from tablestructurerec_spark.plans import lineage
+
+    out = str(tmp_path / "out") if mode == "path" else "catalog:tsr_test_orphan"
+    ref = str(tmp_path / "ref")
+    if mode == "catalog":
+        _drop_catalog(spark, out)
+    try:
+        run_with_lineage(spark, transcripts, ref, n_buckets=N_BUCKETS, run_id="ref")
+        want = _out_rows(spark, ref)
+        first = run_with_lineage(
+            spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r1", fail_after=2
+        )
+
+        def crash(*_args, **_kwargs):
+            raise RuntimeError("crash before the lineage append")
+
+        with monkeypatch.context() as m:
+            m.setattr(lineage.pa, "table", crash)
+            with pytest.raises(RuntimeError, match="lineage append"):
+                run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r2")
+        assert _raw_tables(spark, out).count() == len(want)  # the orphan holds the rest
+        assert completed_buckets(spark, out) == first
+        assert _out_rows(spark, out) == [r for r in want if r[4] in first]
+        second = run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r3")
+        assert sorted(first + second) == list(range(N_BUCKETS))
+        assert _out_rows(spark, out) == want
+    finally:
+        if mode == "catalog":
+            _drop_catalog(spark, out)
+
+
+@pytest.mark.parametrize("mode", ["path", "catalog"])
+def test_two_ok_commits_of_a_bucket_yield_one_copy(spark, transcripts, tmp_path, mode):
+    """When two ok commits cover the same buckets, ``read_output`` returns
+    the rows of one of them: each table once, equal to a single run's
+    output.  The two commits are made by saving the lineage aside,
+    re-running, and appending the saved rows back."""
+    out = str(tmp_path / "out") if mode == "path" else "catalog:tsr_test_twice"
+    if mode == "catalog":
+        _drop_catalog(spark, out)
+    try:
+        run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r1")
+        want = _out_rows(spark, out)
+        saved = _lineage(spark, out).collect()
+        _lose_lineage(spark, out)
+        assert run_with_lineage(
+            spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r2"
+        ) == list(range(N_BUCKETS))
+        append = spark.createDataFrame(saved, LINEAGE_SCHEMA).write.mode("append")
+        if mode == "catalog":
+            append.saveAsTable(f"{out[len('catalog:'):]}_lineage")
+        else:
+            append.parquet(f"{out}/_lineage")
+        lin = _lineage(spark, out)
+        assert lin.select("commit").distinct().count() == 2
+        assert lin.where(F.col("status") == "ok").count() == 2 * N_BUCKETS
+        got = _out_rows(spark, out)
+        assert got == want
+        _assert_unique_keys(got)
+        assert _raw_tables(spark, out).count() == 2 * len(want)
+        assert run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS) == []
+    finally:
+        if mode == "catalog":
+            _drop_catalog(spark, out)
+
+
+@pytest.mark.parametrize("mode", ["path", "catalog"])
+def test_read_output_schema_is_the_tables_schema_and_bucket(spark, transcripts, tmp_path, mode):
+    """``read_output`` returns ``TABLES_SCHEMA`` and ``bucket int``, in
+    that order, without the ``commit`` column."""
+    from tablestructurerec_spark.plans.extract import TABLES_SCHEMA
+
+    out = str(tmp_path / "out") if mode == "path" else "catalog:tsr_test_schema"
+    if mode == "catalog":
+        _drop_catalog(spark, out)
+    try:
+        run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS, fail_after=2)
+        run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS)
+        got = read_output(spark, out).schema.simpleString()
+    finally:
+        if mode == "catalog":
+            _drop_catalog(spark, out)
+    assert got == StructType.fromDDL(TABLES_SCHEMA + ", bucket int").simpleString()
+
+
+@pytest.mark.parametrize("mode", ["path", "catalog"])
+def test_old_layout_out_dir_is_refused(spark, transcripts, tmp_path, mode):
+    """An ``out_dir`` of the older per-bucket layout (tables partitioned by
+    ``bucket``, lineage without ``commit``) is refused by both the run and
+    the reader with a ``ValueError`` that names the old layout, not read as
+    empty or failed inside a join."""
+    from tablestructurerec_spark.plans.extract import extract_tables
+
+    out = str(tmp_path / "out") if mode == "path" else "catalog:tsr_test_old"
+    old_lineage = (
+        "bucket int, n_buckets int, status string, n_turns long, n_tables long, "
+        "wall_s double, run_id string"
+    )
+    tables = extract_tables(transcripts).withColumn("bucket", bucket_col(N_BUCKETS))
+    lin = spark.createDataFrame(
+        [(b, N_BUCKETS, "ok", 1, 1, 1.0, "run0") for b in range(N_BUCKETS)], old_lineage
+    )
+    if mode == "catalog":
+        _drop_catalog(spark, out)
+        prefix = out[len("catalog:"):]
+        tables.write.partitionBy("bucket").saveAsTable(f"{prefix}_tables")
+        lin.write.saveAsTable(f"{prefix}_lineage")
+    else:
+        tables.write.partitionBy("bucket").parquet(f"{out}/tables")
+        lin.write.parquet(f"{out}/_lineage")
+    try:
+        with pytest.raises(ValueError, match="old per-bucket partition layout"):
+            run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS)
+        with pytest.raises(ValueError, match="old per-bucket partition layout"):
+            read_output(spark, out)
     finally:
         if mode == "catalog":
             _drop_catalog(spark, out)
@@ -253,8 +396,8 @@ def test_lineage_counts_equal_input_and_written_rows(spark, transcripts, tmp_pat
     The ``<tablet>`` and unclosed ``<table`` turns pass the prefilter but
     yield no table; they still count as turns.  With the input split into
     ``2 * P`` parts and fewer buckets than ``P``, every bucket spans several
-    map tasks and, through the ``conv_id`` salt, several writer tasks.  The
-    lineage keeps ``LINEAGE_SCHEMA``'s types across the resume's append."""
+    tasks, each of which writes its rows and counts them.  The lineage
+    keeps ``LINEAGE_SCHEMA``'s types across the resume's append."""
     texts = ["no table here", "a <tablet> b", "x <table"]
     plain = spark.createDataFrame(
         [(f"plain-{c}", t, "user", text, None, None)

@@ -22,10 +22,7 @@ def test_containment_join_broadcasts_dim(spark):
 
 
 def test_relational_queries_have_no_python_stage(spark):
-    # registered queries run the native paths; only production-width
-    # MinHash (k >= dedup._VECTORIZE_MIN_HASHES, no registered query) runs
-    # a vectorized Arrow/numpy signature stage, asserted positively below
-    # and pinned byte-equal to the native banding.
+    # registered queries and these modules' components run native paths only
     from tablestructurerec_spark.operators import (
         dedup,
         hygiene,
@@ -46,39 +43,6 @@ def test_relational_queries_have_no_python_stage(spark):
     for name, fn in queries.items():
         plan = _plan(fn(spark, SF))
         assert "EvalPython" not in plan and "MapInPandas" not in plan, name
-
-
-def test_minhash_prod_uses_vectorized_signature_stage(spark):
-    """Production-width MinHash must run its signature kernel as an
-    Arrow-batched pandas_udf stage (not 128 interpreted HOF passes).
-
-    The printed plan nests the signature subtree under BOTH self-join sides
-    whether or not the exchange is reused at runtime, so occurrence count
-    cannot distinguish reuse from re-execution (measured warm wall time at
-    sf0.01 and sf0.1 is identical with the broadcast side forced to a
-    shuffle join, so there is no double-execution cost to pin); what this
-    asserts is only that the kernel IS the vectorized stage and nothing
-    degraded to MapInPandas."""
-    from tablestructurerec_spark.operators.dedup import q_dedup_minhash_lsh
-
-    plan = _plan(q_dedup_minhash_lsh(spark, SF, n_hashes=128, band_rows=8))
-    assert plan.count("ArrowEvalPython") in (1, 2)  # per printed join side
-    assert "MapInPandas" not in plan
-
-
-def test_minhash_vectorized_matches_native_banding(spark):
-    """The numpy signature kernel and the Catalyst HOF path must produce
-    byte-identical (band, bucket) assignments — same pairs at any threshold."""
-    from tablestructurerec_spark.operators import dedup
-
-    native = dedup.q_dedup_minhash_lsh(spark, SF, n_hashes=8, band_rows=2).collect()
-    forced = dedup._VECTORIZE_MIN_HASHES
-    try:
-        dedup._VECTORIZE_MIN_HASHES = 1  # force the Arrow path at k=8
-        vec = dedup.q_dedup_minhash_lsh(spark, SF, n_hashes=8, band_rows=2).collect()
-    finally:
-        dedup._VECTORIZE_MIN_HASHES = forced
-    assert [tuple(r) for r in native] == [tuple(r) for r in vec]
 
 
 def test_filter_pushdown_reaches_scan(spark):
