@@ -28,6 +28,11 @@ __all__ = [
     "quad_to_box",
 ]
 
+# pairs per block of the blocked all-pairs predicates: each float temporary
+# of a block is 0.5 MB, which stays in cache (4,000,000-pair blocks made each
+# 32 MB and a plain 100×100 grid's kernel ~2.4× slower)
+PAIR_BLOCK = 65_536
+
 
 def box_iou(a: Sequence[float], b: Sequence[float]) -> float:
     """Intersection-over-union of two axis-aligned boxes.
@@ -245,7 +250,7 @@ def duplicate_box_indices(boxes: Sequence[Sequence[float]]) -> Set[int]:
     x0, y0, x1, y1 = b[:, 0], b[:, 1], b[:, 2], b[:, 3]
     cand_i: list = []
     cand_j: list = []
-    block = max(1, 4_000_000 // n)
+    block = max(1, PAIR_BLOCK // n)
     for s in range(0, n, block):
         e = min(s + block, n)
         ax0, ay0, ax1, ay1 = (v[s:e][:, None] for v in (x0, y0, x1, y1))
@@ -342,10 +347,10 @@ def match_ocr_to_cells(ocr_rows: list, cell_quads) -> Tuple[dict, list]:
 
     # vectorized pair predicate (hot path: F×C per table); identical math to
     # contained_side(..., 0.6) == 1 or box_iou(...) > 0.8 above.  The OCR
-    # side is processed in blocks so peak memory stays ~tens of MB: a dense
-    # F×C float matrix set is ~15 × 8·F·C bytes, and on fresh pages the
-    # first-touch cost alone made a 4800² table take 38 s (measured) — the
-    # blocked version is identical math at a flat memory footprint.
+    # side is processed in blocks of PAIR_BLOCK pairs: a dense F×C float
+    # matrix set is ~15 × 8·F·C bytes, and on fresh pages the first-touch
+    # cost alone made a 4800² table take 38 s (measured) — the blocked
+    # version is identical math at a flat memory footprint.
     ob = np.asarray(
         [(r[0][0][0], r[0][0][1], r[0][2][0], r[0][2][1]) for r in ocr_rows], dtype=float
     )
@@ -357,7 +362,7 @@ def match_ocr_to_cells(ocr_rows: list, cell_quads) -> Tuple[dict, list]:
 
     pair_i: list = []
     pair_j: list = []
-    block = max(1, 4_000_000 // max(n_cells, 1))
+    block = max(1, PAIR_BLOCK // max(n_cells, 1))
     any_hit = np.zeros(n_ocr, dtype=bool)
     for s in range(0, n_ocr, block):
         e = min(s + block, n_ocr)

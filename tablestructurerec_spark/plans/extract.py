@@ -20,10 +20,17 @@ Shape of the plan (designed for 10^12 turns):
 Column pruning is done MANUALLY before the UDF (select exactly
 conv_id/turn_idx/text, plus bucket for ``extract_turns``) because Catalyst cannot prune through an opaque
 ``mapInPandas`` (SURVEY.md §4).
+
+The kernel's first step in a worker stops the worker from re-reading the
+unchanged zip archives on its import path before each later task
+(:func:`_skip_unchanged_zip_rereads`), so a reused worker's task costs its
+batches, not ~0.2 s of import-cache refresh.
 """
 
 from __future__ import annotations
 
+import os
+import zipimport
 import zlib
 from collections import Counter
 from functools import partial
@@ -75,6 +82,40 @@ def _table_seed(conv_id: str, turn_idx: int, table_idx: int) -> int:
     return zlib.crc32(f"{conv_id}|{turn_idx}|{table_idx}".encode())
 
 
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
+    only when the archive's ``(st_mtime_ns, st_size)`` changed since the
+    importer last read it; idempotent.
+
+    A Python worker calls ``importlib.invalidate_caches()`` before every
+    task, and CPython re-reads the whole central directory of every zip on
+    the import path there, once per importer (one per imported subpackage):
+    ``pyspark.zip``, the py4j zip, the Spark core jar, a ``--py-files`` zip.
+    That cost ~0.2 s per task in a reused worker, more than the kernel of a
+    small task.  The first call per importer, and any call where the stat
+    fails, re-reads as before, so an archive that changes (a re-shipped
+    ``--py-files`` zip) is still re-read.  Called in the worker, by the
+    kernel, so only the worker process is patched.
+    """
+    cls = zipimport.zipimporter
+    reread = cls.invalidate_caches
+    if getattr(reread, "stat_checked", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        if key is None or getattr(self, "_read_stat", None) != key:
+            reread(self)
+            self._read_stat = key
+
+    invalidate_caches.stat_checked = True
+    cls.invalidate_caches = invalidate_caches
+
+
 # the kernel's per-table output columns
 _RESULT = ("table_kind", "pred_html", "cell_bboxes", "logic_points", "n_cells")
 # extract_turns' rows: table rows with their bucket, and count rows
@@ -89,6 +130,7 @@ def _extract_batch(
     one count row per bucket seen follows: ``(bucket, n_turns, n_tables)``
     with every other column null, counting the turns this task read and the
     table rows it emitted."""
+    _skip_unchanged_zip_rereads()
     keys = ("conv_id", "turn_idx", "bucket") if counted else ("conv_id", "turn_idx")
     table_names = [*keys, "table_idx", *_RESULT, "error"]
     names = table_names + ["n_turns", "n_tables"] if counted else table_names

@@ -41,8 +41,12 @@ and metrics tables".  Design (SURVEY.md §4):
   collects the count rows, and the driver sums them per bucket, so the
   observation has one aggregate whatever the bucket count, and the driver
   holds at most (tasks × todo buckets) count rows;
-* the lineage rows are appended from an Arrow table, which the JVM decodes
-  without a Python worker.
+* the lineage rows are one Arrow table.  In path mode the driver writes it
+  as one parquet file per run, ``_lineage/part-<commit>.parquet``, through
+  the session's Hadoop ``FileSystem`` under a ``_tmp-`` name and renames it
+  into place, so a fresh run is one Spark job and a crash before the rename
+  leaves nothing a reader sees.  In catalog mode the JVM decodes the Arrow
+  table without a Python worker and appends it.
 
 Storage is either a directory (``out_dir`` = path: ``<dir>/tables`` +
 ``<dir>/_lineage`` parquet) or a catalog (``out_dir`` = ``catalog:<prefix>``:
@@ -60,8 +64,10 @@ import uuid
 from typing import Dict, List, Tuple
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from .extract import extract_turns
@@ -142,9 +148,9 @@ def _bucketed_tables(
     input's splits, and the observation of their counts: one ``counts`` list
     of ``(bucket, n_turns, n_tables)`` count rows, which
     :func:`_bucket_counts` sums."""
-    src = transcripts.withColumn("bucket", bucket_col(n_buckets)).where(
-        F.col("bucket").isin(todo)
-    )
+    src = transcripts.withColumn("bucket", bucket_col(n_buckets))
+    if len(todo) < n_buckets:  # a filter of every bucket keeps every row
+        src = src.where(F.col("bucket").isin(todo))
     rows = extract_turns(src)
     # The counts are exactly-once only because the observed node sits in the
     # write's only stage, which is its result stage: Spark credits a result
@@ -234,15 +240,36 @@ def run_with_lineage(
     wall = time.perf_counter() - t0
     counts = _bucket_counts(obs, todo)
     rows = [(b, n_buckets, "ok", *counts[b], wall, run_id, commit) for b in todo]
-    # an Arrow table, which the JVM decodes itself; a list of tuples would
-    # run a Python-worker job to build the rows
     schema = StructType.fromDDL(LINEAGE_SCHEMA)
-    lineage = spark.createDataFrame(pa.table(dict(zip(schema.names, zip(*rows)))), schema)
+    lineage = pa.table(dict(zip(schema.names, zip(*rows))), to_arrow_schema(schema))
     if is_cat:
-        lineage.write.mode("append").saveAsTable(lin_t)
+        # an Arrow table, which the JVM decodes itself; a list of tuples
+        # would run a Python-worker job to build the rows
+        spark.createDataFrame(lineage, schema).write.mode("append").saveAsTable(lin_t)
     else:
-        lineage.write.mode("append").parquet(lin_t)
+        _append_file(spark, lin_t, commit, lineage)
     return todo
+
+
+def _append_file(spark: SparkSession, lin_t: str, commit: str, lineage: pa.Table) -> None:
+    """Append ``lineage`` to the parquet directory ``lin_t`` as one file,
+    ``part-<commit>.parquet``, written from the driver through the session's
+    Hadoop ``FileSystem`` (so every scheme a table write takes), without a
+    Spark job.  The file is written as ``_tmp-<commit>.parquet`` and then
+    renamed: readers skip ``_`` files, so a crash before the rename leaves
+    nothing visible, and a resume redoes the run's buckets."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(lineage, buf)
+    jvm = spark._jvm
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{lin_t}/_tmp-{commit}.parquet")
+    fs = tmp.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, jvm.org.apache.hadoop.fs.Path(f"{lin_t}/part-{commit}.parquet")):
+        raise OSError(f"could not rename {tmp} into place")
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -3,6 +3,8 @@
 Every case below is a literal copied from the reference's own parametrized
 unit tests (values only — the implementations under test are ours):
 /root/reference/tests/test_lineless_table_rec.py:48-194.
+The block-size test at the end is not a reference case: it pins that the
+blocked pair predicates do not depend on their block size.
 """
 
 import numpy as np
@@ -126,3 +128,49 @@ def test_reading_order(dt_boxes, expected_boxes, expected_indices):
 )
 def test_duplicate_box_indices(table_boxes, expected_delete_idx):
     assert duplicate_box_indices(table_boxes.tolist()) == expected_delete_idx
+
+
+def _grid_html(n: int, wireless: bool) -> str:
+    first = '<td colspan="2">h{r}</td>' if wireless else "<td>h{r}</td>"
+    rest = n - 2 if wireless else n - 1
+    rows = "".join(
+        "<tr>" + first.format(r=r) + "".join(f"<td>c{r}_{c}</td>" for c in range(rest)) + "</tr>"
+        for r in range(n)
+    )
+    return f"<table>{rows}</table>"
+
+
+@pytest.mark.parametrize("wireless", [False, True])
+def test_pair_blocks_do_not_change_results(monkeypatch, wireless):
+    """The blocked pair predicates give the same result whatever the block
+    size: a table whose pairs span many blocks of the real ``PAIR_BLOCK``
+    equals one computed in a single block, through the whole kernel and
+    on overlapping, duplicated random boxes."""
+    from tablestructurerec_spark.core import geometry
+    from tablestructurerec_spark.core.geometry import match_ocr_to_cells
+    from tablestructurerec_spark.core.pipeline import process_table_html
+
+    rng = np.random.default_rng(3)
+    xy = rng.uniform(0, 400, size=(600, 2))
+    wh = rng.uniform(1, 40, size=(600, 2))
+    boxes = np.hstack([xy, xy + wh])
+    boxes[300:] = boxes[:300] + rng.choice([0.0, 0.5], size=(300, 4))  # near duplicates
+    quads = [[[x0, y0], [x1, y0], [x1, y1], [x0, y1]] for x0, y0, x1, y1 in boxes.tolist()]
+    ocr = [[q, f"t{i}", 1.0] for i, q in enumerate(quads[::-1])]
+    html = _grid_html(30, wireless)
+    n_cells = 30 * 30  # and at least as many OCR fragments
+    assert min(len(boxes) ** 2, n_cells * n_cells) > 4 * geometry.PAIR_BLOCK
+
+    def run():
+        return (
+            process_table_html(html, 5),
+            duplicate_box_indices(boxes.tolist()),
+            match_ocr_to_cells(ocr, quads),
+        )
+
+    blocked = run()
+    monkeypatch.setattr(geometry, "PAIR_BLOCK", 10**12)
+    whole = run()
+    assert blocked == whole
+    assert blocked[0]["table_kind"] == ("wireless" if wireless else "wired")
+    assert blocked[1] and blocked[2][0]

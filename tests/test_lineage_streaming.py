@@ -66,11 +66,12 @@ def test_resume_is_noop_when_complete(spark, transcripts, tmp_path):
 
 
 def test_run_is_single_pass_regardless_of_bucket_count(spark, transcripts, tmp_path):
-    """With the input cached, a run into a fresh output launches exactly
-    two Spark jobs in either storage mode, whatever the bucket count: the
-    write, which also observes the lineage counts, and the lineage append.
-    No shuffle, no per-bucket scan, no second count scan of the input, no
-    re-read of the output."""
+    """With the input cached, a run into a fresh output launches one Spark
+    job in path mode and two in catalog mode, whatever the bucket count:
+    the write, which also observes the lineage counts, and in catalog mode
+    the lineage append (in path mode the driver writes the lineage file
+    itself).  No shuffle, no per-bucket scan, no second count scan of the
+    input, no re-read of the output."""
     sc = spark.sparkContext
     transcripts.count()  # materialize the cache outside the measured runs
 
@@ -91,7 +92,85 @@ def test_run_is_single_pass_regardless_of_bucket_count(spark, transcripts, tmp_p
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     jobs = {(m, n): jobs_for(m, n) for m in ("path", "catalog") for n in (3, 12)}
-    assert set(jobs.values()) == {2}, jobs
+    assert jobs == {("path", 3): 1, ("path", 12): 1, ("catalog", 3): 2, ("catalog", 12): 2}, jobs
+
+
+def _lineage_files(out):
+    """The lineage's data files: what a parquet reader reads."""
+    return sorted(
+        f for f in os.listdir(f"{out}/_lineage") if not f.startswith(("_", "."))
+    )
+
+
+def test_each_path_run_adds_one_lineage_file(spark, transcripts, tmp_path):
+    """A path-mode run appends its lineage rows as exactly one data file,
+    however many buckets it records."""
+    out = str(tmp_path / "out")
+    counts = []
+    for run_id, fail_after in (("r1", 2), ("r2", 5), ("r3", None)):
+        run_with_lineage(
+            spark, transcripts, out, n_buckets=12, run_id=run_id, fail_after=fail_after
+        )
+        counts.append(len(_lineage_files(out)))
+    assert counts == [1, 2, 3]
+    assert completed_buckets(spark, out) == list(range(12))
+
+
+def test_leftover_temporary_lineage_file_is_ignored(spark, transcripts, tmp_path, monkeypatch):
+    """A crash while writing the lineage file leaves ``_tmp-<commit>.parquet``,
+    which readers skip: its buckets count as not done, and the resume's
+    output equals the one-shot output."""
+    from tablestructurerec_spark.plans import lineage
+
+    ref = str(tmp_path / "ref")
+    out = str(tmp_path / "out")
+    run_with_lineage(spark, transcripts, ref, n_buckets=N_BUCKETS, run_id="ref")
+    first = run_with_lineage(
+        spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r1", fail_after=2
+    )
+    append_file = lineage._append_file
+
+    def crash_before_rename(spark_, lin_t, commit, table):
+        """The state a crash between the write and the rename leaves: the
+        file under its temporary name."""
+        append_file(spark_, lin_t, commit, table)
+        jpath = spark_._jvm.org.apache.hadoop.fs.Path
+        part = jpath(f"{lin_t}/part-{commit}.parquet")
+        fs = part.getFileSystem(spark_._jsc.hadoopConfiguration())
+        assert fs.rename(part, jpath(f"{lin_t}/_tmp-{commit}.parquet"))
+        raise RuntimeError("crash before the rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "_append_file", crash_before_rename)
+        with pytest.raises(RuntimeError, match="before the rename"):
+            run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r2")
+    leftovers = [f for f in os.listdir(f"{out}/_lineage") if f.startswith("_tmp-")]
+    assert len(leftovers) == 1
+    assert completed_buckets(spark, out) == first
+    second = run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r3")
+    assert sorted(first + second) == list(range(N_BUCKETS))
+    assert _out_rows(spark, out) == _out_rows(spark, ref)
+
+
+def test_driver_written_lineage_file_reads_with_the_lineage_schema(
+    spark, transcripts, tmp_path
+):
+    """The lineage file the driver writes reads back with ``LINEAGE_SCHEMA``'s
+    exact types, alone and next to a file Spark wrote, and holds the same
+    values as Spark's file of the same rows."""
+    out = str(tmp_path / "out")
+    run_with_lineage(spark, transcripts, out, n_buckets=N_BUCKETS, run_id="r1")
+    want = StructType.fromDDL(LINEAGE_SCHEMA)
+    lin = spark.read.parquet(f"{out}/_lineage")
+    assert lin.schema == want
+    rows = sorted(lin.collect())
+    spark.createDataFrame(rows, want).coalesce(1).write.mode("append").parquet(
+        f"{out}/_lineage"
+    )
+    assert len(_lineage_files(out)) == 2
+    both = spark.read.parquet(f"{out}/_lineage")
+    assert both.schema == want
+    assert sorted(both.collect()) == sorted(rows + rows)
 
 
 def _plan_nodes(df):
@@ -109,7 +188,8 @@ def _plan_nodes(df):
 def test_write_plan_scans_once_and_observes_above_the_shuffle(spark, transcripts, tmp_path):
     """The write's plan reads the input with one scan and has no shuffle:
     the kernel and the observation above it run in the write's only stage,
-    its result stage, where a retried task cannot count a row twice."""
+    its result stage, where a retried task cannot count a row twice.  The
+    bucket filter is planned only when some bucket is done."""
     from tablestructurerec_spark.plans.lineage import _bucketed_tables
 
     src_dir = str(tmp_path / "src")
@@ -120,6 +200,12 @@ def test_write_plan_scans_once_and_observes_above_the_shuffle(spark, transcripts
     assert "Exchange" not in nodes, nodes
     assert nodes.count("CollectMetrics") == 1, nodes
     assert nodes.index("CollectMetrics") < nodes.index("MapInPandas"), nodes
+    assert "Filter" in nodes[nodes.index("MapInPandas"):], nodes
+    # with every bucket todo there is no bucket filter below the kernel
+    every = _plan_nodes(
+        _bucketed_tables(spark.read.parquet(src_dir), list(range(N_BUCKETS)), N_BUCKETS)[0]
+    )
+    assert "Filter" not in every[every.index("MapInPandas"):], every
     # the observation's width does not grow with the bucket count
     widths = {
         n: _observed_aggregates(_bucketed_tables(transcripts, list(range(n)), n)[0])
